@@ -44,6 +44,18 @@ STREAMING_STATE_CONF: dict[str, str] = {
 }
 
 
+def _default_driver_memory() -> str:
+    """The driver heap when SPARK_DRIVER_MEM is unset: 48g, capped at
+    60% of the host's physical memory so the default is safe on the
+    host it runs on (a 48g heap on a 15 GB host invites the OOM
+    killer). Falls back to 48g where the host size is unknown."""
+    try:
+        host = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, ValueError, OSError):
+        return "48g"
+    return f"{min(48 * 1024, host * 6 // 10 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "se_data_pipeline_spark",
     master: str | None = None,
@@ -93,7 +105,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
     )

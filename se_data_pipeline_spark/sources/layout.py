@@ -323,14 +323,18 @@ def _dyn_overwrite(df: DataFrame, cols: list, path: str) -> None:
 def _overlap_writes(*thunks) -> None:
     """Run independent NON-COMMIT store writes from driver threads so
     concurrent jobs back-fill each other's stragglers and the driver
-    round-trips overlap (guide §2.6; the write_ivf_index precedent).
+    round-trips overlap (guide §2.6).
     Callers must keep the commit-point write (ledger/totals) OUT of
     the pool and issue it only after this returns — crash semantics
     are then unchanged: any subset of these writes may exist without
     the commit row, exactly as under the sequential order, and the
-    re-run's overwrite replaces them. SPARK_GRAFT_NO_OVERLAP=1 falls
-    back to sequential execution (the same-JVM A/B instrument — no
-    caching, no behavior change beyond scheduling)."""
+    re-run's overwrite replaces them. Each write is wrapped by
+    pyspark's inheritable_thread_target (InheritableThread's form for
+    executor pools), so its jobs carry the caller's job group, job
+    tags and local properties: cancellable and attributable with the
+    caller's own jobs. SPARK_GRAFT_NO_OVERLAP=1 falls back to
+    sequential execution (the same-JVM A/B instrument — no caching,
+    no behavior change beyond scheduling)."""
     import os
 
     if os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
@@ -339,8 +343,11 @@ def _overlap_writes(*thunks) -> None:
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         for f in futures:
             f.result()
 
@@ -920,33 +927,23 @@ def write_ivf_index(
     # The centroid table, the pq tables and the cells store are
     # INDEPENDENT paths with no ordering constraint between them —
     # only the batches ledger (the commit point) must come last.
-    # Submit the two heavy writes from driver threads so the second
-    # job's tasks back-fill the first's stragglers (guide §2.6, the
-    # hybrid-store precedent); the tiny pq write rides the main
-    # thread alongside them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_centroids() -> None:
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{out_path}/centroids"
-        )
-
-    def _write_cells() -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("cell", "batch_id")
-            .parquet(f"{out_path}/cells")
-        )
-
+    # Overlap them (guide §2.6, _overlap_writes) so the second job's
+    # tasks back-fill the first's stragglers.
     spark = df.sparkSession
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_cent = pool.submit(_write_centroids)
-        f_cells = pool.submit(_write_cells)
-        if cb is not None:
-            _write_pq_tables(spark, out_path, cb, pq_m, pq_sub)
-        f_cent.result()
-        f_cells.result()
+    writes = [
+        lambda: centroids.coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{out_path}/centroids"),
+        lambda: rows.withColumn("batch_id", F.lit(-1))
+        .write.mode("overwrite")
+        .partitionBy("cell", "batch_id")
+        .parquet(f"{out_path}/cells"),
+    ]
+    if cb is not None:
+        writes.append(
+            lambda: _write_pq_tables(spark, out_path, cb, pq_m, pq_sub)
+        )
+    _overlap_writes(*writes)
     # batches commit ledger LAST (r11, harmonizing the IVF store with
     # the postings/positional/shingle stores): readers derive the
     # committed high-water mark from it, so a crashed revision's
@@ -955,10 +952,15 @@ def write_ivf_index(
     # explicit schema for the empty-store case) instead of re-running
     # the whole scan/encode lineage a second time — same value, one
     # input pass saved (r13; the compact_ivf_index count precedent).
+    # The batch_id = -1 partition filter keeps the count to the
+    # partition this build wrote: under partitionOverwriteMode=dynamic
+    # the overwrite leaves a maintained store's batch_id >= 0 cells in
+    # place, and they are not part of this build.
     fs_c, cells_p = _hadoop_path(spark, f"{out_path}/cells")
     n_docs = (
-        spark.read.schema("vec_id bigint")
+        spark.read.schema("vec_id bigint, batch_id int")
         .parquet(f"{out_path}/cells")
+        .filter(F.col("batch_id") == -1)
         .count()
         if fs_c.exists(cells_p)
         else 0  # zero-row build: the partitioned write of an empty
@@ -1014,6 +1016,19 @@ _UNREAD = object()  # "not supplied — read it" sentinel (None is a
 # legitimate high-water value for legacy ledgerless stores)
 
 _IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
+
+
+def _collect_tagged(legs: list) -> dict[str, list]:
+    """Union prologue legs that share one column set, among them a
+    `kind` tag, and collect them at once: {kind: [rows...]}. A
+    union, never a cross join, so an empty leg cannot annihilate the
+    others' answers — shared by _serve_prologue and _ivf_prologue."""
+    from functools import reduce
+
+    by_kind: dict[str, list] = {}
+    for r in reduce(DataFrame.unionByName, legs).collect():
+        by_kind.setdefault(r["kind"], []).append(r)
+    return by_kind
 
 
 def _ivf_prologue(
@@ -1098,13 +1113,7 @@ def _ivf_prologue(
                 *_leg("qcode", a=pack_sign_bits(qlit))
             )
         )
-    probe = legs[0]
-    for leg in legs[1:]:
-        probe = probe.unionByName(leg)
-    rows = probe.collect()
-    by_kind: dict[str, list] = {}
-    for r in rows:
-        by_kind.setdefault(r["kind"], []).append(r)
+    by_kind = _collect_tagged(legs)
     out: dict = {
         "cents": sorted(
             (int(r["a"]), [float(x) for x in r["vec"]])
@@ -2138,12 +2147,14 @@ def _serve_prologue(
 ) -> tuple[int, int | None, list]:
     """The per-serve prologue reads — bucket modulus (meta),
     committed high-water mark (the store's commit-point table), and
-    the query terms' bucket ids — fused into ONE bounded Spark job
-    (r12 "protocol floor": the three separate collects cost a driver
-    job round-trip each, several times per lifecycle query). The
-    K-row term frame cross-joins the 1-row meta read and the 1-row
-    high-water aggregate, so one collect returns all three answers;
-    no state is cached across calls — every serve still reads the
+    the query terms' bucket ids — fused into ONE collect (r12
+    "protocol floor": the three separate collects cost a driver job
+    round-trip each, several times per lifecycle query). The K term
+    rows, the 1-row meta read and the 1-row high-water aggregate are
+    UNIONED under a `kind` tag (_collect_tagged, the _ivf_prologue
+    shape), not cross-joined: 2 jobs under AQE (the aggregate's
+    shuffle stage and the result) where the two cross joins cost 4.
+    No state is cached across calls — every serve still reads the
     store's live commit point. The term rows carry RAW xxhash64
     values and the pmod lands driver-side: for int64 h and positive
     modulus n, Python's ``h % n`` equals Spark's ``pmod(h, n)``
@@ -2162,47 +2173,115 @@ def _serve_prologue(
     _require_postings_meta(spark, out_dir)
     uniq = sorted({str(t) for t in terms})
     if not uniq:
-        # explode of an empty term array yields zero rows and would
-        # annihilate the cross-joined meta/hw answers — the resulting
-        # "meta is empty" error names the wrong cause (ADVICE r12).
-        # No public caller can reach this (phrase/AND require >= 2
-        # terms, bm25's isin(*terms) fails earlier), but fail with
-        # the real reason for future internal callers.
+        # an empty literal array has no element type to hash; no
+        # public caller reaches this (phrase/AND require >= 2 terms,
+        # bm25's isin(*terms) fails earlier), but fail with the real
+        # reason for future internal callers (ADVICE r12)
         raise ValueError("at least one query term required")
-    probe = (
+
+    def _leg(kind: str, a):
+        return [F.lit(kind).alias("kind"), a.cast("long").alias("a")]
+
+    legs = [
         spark.range(1)
         .select(
-            F.explode(F.array(*[F.lit(t) for t in uniq])).alias(
-                "tok"
-            )
+            F.explode(F.array(*[F.lit(t) for t in uniq])).alias("tok")
         )
-        .select(F.xxhash64("tok").alias("h"))
-        .crossJoin(
-            spark.read.schema(_POSTINGS_META_SCHEMA).parquet(
-                f"{out_dir}/meta"
-            )
-        )
-    )
+        .select(*_leg("term", F.xxhash64("tok"))),
+        spark.read.schema(_POSTINGS_META_SCHEMA)
+        .parquet(f"{out_dir}/meta")
+        .select(*_leg("meta", F.col("n_buckets"))),
+    ]
     has_hw = True
     if legacy_ok:
         fs, hw_p = _hadoop_path(spark, f"{out_dir}/{hw_table}")
         has_hw = fs.exists(hw_p)
     if has_hw:
-        probe = probe.crossJoin(
+        legs.append(
             spark.read.schema(hw_schema)
             .parquet(f"{out_dir}/{hw_table}")
             .agg(F.max("batch_id").alias("mx"))
+            .select(*_leg("hw", F.col("mx")))
         )
-    rows = probe.collect()
-    if not rows:
+    by_kind = _collect_tagged(legs)
+    if "meta" not in by_kind:
         raise ValueError(f"{out_dir}/meta is empty")
-    n_buckets = int(rows[0]["n_buckets"])
+    n_buckets = int(by_kind["meta"][0]["a"])
     hw = None
     if has_hw:
-        mx = rows[0]["mx"]
+        mx = by_kind["hw"][0]["a"]
         hw = max(0, (mx if mx is not None else -1) + 1)
-    buckets = sorted({int(r["h"]) % n_buckets for r in rows})
+    buckets = sorted({int(r["a"]) % n_buckets for r in by_kind["term"]})
     return n_buckets, hw, buckets
+
+
+def _pruned_postings(
+    spark: SparkSession,
+    root: str,
+    schema: str,
+    buckets: list,
+    hw: int | None,
+) -> DataFrame:
+    """The committed rows of the bucket directories a query can
+    touch, read from those leaf directories instead of a listing of
+    the whole store — the scan under bm25_from_postings and
+    _pivot_live_positions.
+
+    ``parquet(root)`` lists every ``batch_id=B/tok_bucket=T``
+    directory when the frame is built. A batch dir holds up to
+    n_buckets bucket dirs, so past Spark's parallelPartitionDiscovery
+    threshold (32 paths) that listing runs as a Spark job per batch
+    dir on every serve, and the tok_bucket partition filter applied
+    afterwards cannot avoid it. Here ONE driver-side Hadoop
+    globStatus of ``batch_id=*/tok_bucket={b1,...,bK}`` finds the
+    leaf dirs — O(K x committed batches) paths, listed on the driver
+    while they stay within that threshold — and batch dirs at or
+    above ``hw`` are dropped before the read, so an uncommitted
+    partial batch stays invisible exactly as under the batch_id < hw
+    filter (``hw`` None — a legacy pre-ledger store — keeps every
+    batch). The read keeps basePath = root and the explicit schema,
+    so batch_id/tok_bucket stay partition columns, and the
+    batch_id/tok_bucket filters still reach the scan as
+    PartitionFilters. With no matching dir (a term whose bucket was
+    never written) the result is an empty frame of the same schema
+    that costs no Spark job: a JVM-literal row filtered by lit(false),
+    which the optimizer folds to an empty local relation (not
+    createDataFrame — the claim_offline_batch rule)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    fs, jroot = _hadoop_path(spark, root)
+    alts = ",".join(str(int(b)) for b in buckets)
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{root}/batch_id=*/tok_bucket={{{alts}}}"
+    )
+    leaves = []
+    for st in fs.globStatus(pattern) or []:
+        leaf = st.getPath()
+        b = int(leaf.getParent().getName().split("=", 1)[1])
+        if st.isDirectory() and (hw is None or b < hw):
+            leaves.append(leaf.toString())
+    if leaves:
+        rows = (
+            spark.read.schema(schema)
+            .option("basePath", fs.makeQualified(jroot).toString())
+            .parquet(*leaves)
+        )
+    else:
+        rows = (
+            spark.range(1)
+            .select(
+                *[
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in StructType.fromDDL(schema).fields
+                ]
+            )
+            .filter(F.lit(False))
+        )
+    rows = rows.filter(F.col("tok_bucket").isin(buckets))
+    if hw is not None:
+        rows = rows.filter(F.col("batch_id") < hw)  # committed only
+    return rows
 
 
 def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
@@ -2685,19 +2764,14 @@ def write_positional_postings(
     high-water mark from — the totals table's role in the frequency
     store, without corpus statistics phrase scoring doesn't need."""
     rows, batches = _positional_frames(docs, -1, n_buckets)
-    spark = docs.sparkSession
-    # rows and the 1-row meta are independent non-commit writes —
-    # overlap them (guide §2.6); the batches ledger (commit point)
-    # stays LAST. A crash can now leave meta without rows where the
-    # sequential order guaranteed rows-before-meta, but either way
-    # the store is uncommitted (no ledger) and the re-run's
-    # mode=overwrite build replaces both.
-    _overlap_writes(
-        lambda: rows.write.mode("overwrite")
-        .partitionBy("batch_id", "tok_bucket")
-        .parquet(f"{out_dir}/postings"),
-        lambda: _write_postings_meta(spark, out_dir, n_buckets),
-    )
+    # rows -> meta -> batches ledger, in order: meta existing implies
+    # the rows landed, so a crash mid-rows leaves a store every serve
+    # refuses ("no meta table") rather than one the ledgerless
+    # hw=None path would read as committed (ADVICE r13).
+    rows.write.mode("overwrite").partitionBy(
+        "batch_id", "tok_bucket"
+    ).parquet(f"{out_dir}/postings")
+    _write_postings_meta(docs.sparkSession, out_dir, n_buckets)
     batches.coalesce(1).write.mode("overwrite").partitionBy(
         "batch_id"
     ).parquet(f"{out_dir}/batches")
@@ -2852,7 +2926,10 @@ def _pivot_live_positions(
     drift between query classes. Committed batches only (high-water
     mark from the batches ledger; hw None for a legacy pre-ledger
     store serves append-only — ADVICE r11), <=K bucket-dir partition
-    filter + in-bucket term cut.
+    filter + in-bucket term cut. The scan is built from those bucket
+    dirs alone (_pruned_postings): listing is O(K x committed
+    batches), a driver-side glob, never a listing job over the whole
+    store; the prologue is one union collect (_serve_prologue).
 
     The tombstone kill rule is FUSED INTO the pivot (r13, guide §2.4
     one-exchange-satisfies-both): the tombstone markers are unioned
@@ -2880,19 +2957,16 @@ def _pivot_live_positions(
     from pyspark.sql import functions as F
 
     recover_compacting(spark, out_dir)
-    # ONE fused prologue job: bucket modulus + committed high-water
-    # mark + term bucket ids
+    # ONE fused prologue collect: bucket modulus + committed
+    # high-water mark + term bucket ids
     n_buckets, hw, buckets = _serve_prologue(
         spark, out_dir, list(terms), "batches", _LEDGER_SCHEMA, True
     )
-    p = (
-        spark.read.schema(_POS_POSTINGS_SCHEMA)
-        .parquet(f"{out_dir}/postings")
-        .filter(F.col("tok_bucket").isin(buckets))
-        .filter(F.col("tok").isin(sorted(set(terms))))
-    )
-    if hw is not None:
-        p = p.filter(F.col("batch_id") < hw)  # committed only
+    # <=K bucket dirs of the committed batches, then the exact-term
+    # cut within them (pushed data filter)
+    p = _pruned_postings(
+        spark, f"{out_dir}/postings", _POS_POSTINGS_SCHEMA, buckets, hw
+    ).filter(F.col("tok").isin(sorted(set(terms))))
     fs, tp = _hadoop_path(spark, f"{out_dir}/tombstones")
     if not fs.exists(tp):
         # append-only fast path: the plain pivot, no union
@@ -3730,6 +3804,9 @@ def bm25_from_postings(
     broadcast. Exactly doc_bm25_search's scoring math — the parity
     test pins score-for-score equality against the inline query —
     with corpus-scan work replaced by an O(matching-postings) lookup.
+    The scan is built from the K bucket dirs of the committed batches
+    alone (_pruned_postings): listing is O(K x committed batches), a
+    driver-side glob, never a listing job over the whole store.
 
     avgdl is computed as n_tokens/n_docs from the additively-folded
     totals deltas, which is bit-identical to the inline query's
@@ -3748,8 +3825,8 @@ def bm25_from_postings(
     # rename — finish it before the meta read raises (same entry
     # protocol as refresh_ivf_index)
     recover_compacting(spark, out_dir)
-    # ONE fused prologue job (bucket modulus + committed high-water
-    # mark + term bucket ids). The hw serves the COMMITTED state
+    # ONE fused prologue collect (bucket modulus + committed
+    # high-water mark + term bucket ids). The hw serves the COMMITTED state
     # only (ADVICE r10): totals is every writer's LAST write, so
     # max(totals batch_id)+1 is the committed high-water mark — a
     # revision that crashed after its tombstone write but before its
@@ -3764,15 +3841,11 @@ def bm25_from_postings(
         _POSTINGS_TOTALS_SCHEMA,
         False,
     )
-    p = (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(f"{out_dir}/postings")
-        .filter(F.col("batch_id") < hw)  # committed batches only
-        # partition pruning to <=K bucket dirs ...
-        .filter(F.col("tok_bucket").isin(buckets))
-        # ... then the exact-term cut within them (pushed data filter)
-        .filter(F.col("tok").isin(*terms))
-    )
+    # <=K bucket dirs of the committed batches, then the exact-term
+    # cut within them (pushed data filter)
+    p = _pruned_postings(
+        spark, f"{out_dir}/postings", _POSTINGS_SCHEMA, buckets, hw
+    ).filter(F.col("tok").isin(*terms))
     # revised/deleted docs: drop rows a newer COMMITTED tombstone
     # kills. The join runs over the already-PRUNED postings, and a
     # store with no revisions has no tombstones table — zero cost on

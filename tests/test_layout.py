@@ -822,3 +822,104 @@ def test_ivf_filtered_topk_modes(spark, sf_dir, tmp_path):
         recalls[ov] = len(post & set(truth)) / max(1, len(truth))
     assert recalls[1] <= recalls[4] <= recalls[1_000_000]
     assert recalls[1_000_000] == 1.0
+
+
+def test_positional_meta_absent_when_rows_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """write_positional_postings writes rows -> meta -> ledger in
+    order: a build whose rows write raises leaves no meta, so a serve
+    fails with the no-meta-table error instead of reading the partial
+    rows through the ledgerless (hw None) path."""
+    import os
+
+    from se_data_pipeline_spark.sources import layout as L
+
+    real = L._positional_frames
+
+    def failing(docs, batch_id, n_buckets):
+        rows, batches = real(docs, batch_id, n_buckets)
+        boom = F.assert_true(F.col("doc_id") < 0, "injected rows crash")
+        return rows.filter(boom.isNull()), batches
+
+    monkeypatch.setattr(L, "_positional_frames", failing)
+    out = str(tmp_path / "pos")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma")], "doc_id bigint, text string"
+    )
+    with pytest.raises(Exception, match="injected rows crash"):
+        L.write_positional_postings(docs, out, n_buckets=8)
+    assert not os.path.exists(f"{out}/meta")
+    with pytest.raises(ValueError, match="no meta table"):
+        L.phrase_from_postings(spark, out, ("alpha", "beta"))
+
+
+def test_ivf_rebuild_n_docs_counts_only_its_partition(
+    spark, sf_dir, tmp_path
+):
+    """Under partitionOverwriteMode=dynamic a rebuild over a
+    stream-maintained IVF store leaves the maintainer's batch_id >= 0
+    cells in place; the ledger's n_docs must still count only the
+    batch_id = -1 rows the rebuild wrote."""
+    import os
+
+    from se_data_pipeline_spark.sources.layout import write_ivf_index
+    from se_data_pipeline_spark.streaming.jobs import maintain_ivf_index
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    a = emb.filter(F.col("vec_id") % 2 == 0)
+    idx = str(tmp_path / "ivf")
+    write_ivf_index(a, idx)
+    src = str(tmp_path / "src")
+    emb.filter(F.col("vec_id") % 2 == 1).write.parquet(src)
+    maintain_ivf_index(
+        spark.readStream.schema(emb.schema).parquet(src),
+        idx,
+        str(tmp_path / "ckpt"),
+    ).awaitTermination(120)
+    cells = spark.read.parquet(f"{idx}/cells")
+    assert cells.filter(F.col("batch_id") >= 0).count() > 0
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        write_ivf_index(a, idx)
+    finally:
+        spark.conf.set(key, prev)
+    rebuilt = (
+        spark.read.parquet(f"{idx}/cells")
+        .filter(F.col("batch_id") == -1)
+        .count()
+    )
+    assert rebuilt == a.filter(F.col("embedding").isNotNull()).count()
+    ledger = spark.read.parquet(f"{idx}/batches").filter(
+        F.col("batch_id") == -1
+    )
+    assert [r["n_docs"] for r in ledger.collect()] == [rebuilt]
+
+
+def test_overlapped_writes_keep_callers_job_group(spark, tmp_path):
+    """_overlap_writes runs its writes on InheritableThreads: every
+    job write_posting_lists starts — the overlapped postings and
+    doclens writes included — carries the caller's job group."""
+    from se_data_pipeline_spark.sources.layout import write_posting_lists
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, "b c d")], "doc_id bigint, text string"
+    )
+    sc.setJobGroup("overlap-mark", "mark")
+    spark.range(1).collect()
+    mark = max(st.getJobIdsForGroup("overlap-mark"))
+    sc.setJobGroup("overlap-group", "write_posting_lists")
+    try:
+        write_posting_lists(docs, str(tmp_path / "pl"), n_buckets=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    grouped = set(st.getJobIdsForGroup("overlap-group"))
+    stray = {j for j in st.getJobIdsForGroup(None) if j > mark}
+    assert not stray, f"jobs outside the caller's group: {sorted(stray)}"
+    # postings + doclens (overlapped), totals, meta
+    assert len(grouped) >= 4

@@ -5,8 +5,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 
 n_pairs = int(sys.argv[1])
 names = sys.argv[2:]

@@ -19,8 +19,9 @@ import threading
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 12
 from se_data_pipeline_spark.session import get_spark

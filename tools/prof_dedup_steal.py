@@ -7,8 +7,9 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 
 N = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 

@@ -7,8 +7,9 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
-os.chdir("/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.chdir(ROOT)
 
 from se_data_pipeline_spark.session import get_spark
 
