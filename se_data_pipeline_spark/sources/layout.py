@@ -14,6 +14,7 @@ on every downstream join.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -298,20 +299,30 @@ def _guard_uncommitted_partials(
 
 
 # --------------------------------------------------------------------
-# Shared store-lifecycle machinery (r12, VERDICT r11 next #4): the
-# five materialized stores (frequency postings, positional postings,
-# shingle index, IVF, BQ) run the same protocol — recover a crashed
-# swap, derive the committed high-water mark, refuse unclaimed
-# partials, claim the fence, write rows -> tombstones -> commit row
-# LAST, serve committed tombstone-live rows, compact by whole-dir
-# swap. These helpers are that protocol in one place, parameterized
-# by id column and directory layout, so store #6 cannot fork the
-# semantics (and the next crash-ordering fix lands once).
+# Shared store-lifecycle machinery: every materialized store runs the
+# same commit-point protocol — recover a crashed swap, read the
+# committed high-water mark from the store's commit table
+# (_committed_hw), refuse unclaimed partials, claim the fence, write
+# the non-commit deltas (overlapped) and the commit row LAST, serve
+# committed tombstone-live rows, compact by whole-dir swap. The
+# positional, shingle and MinHash stores run it through ONE
+# implementation driven by a _DocStore spec (build, revise/delete,
+# live view, compaction; the foreachBatch maintainer skeleton is
+# streaming/jobs._maintain_store). The frequency-postings, IVF, BQ and
+# term-stats families compose the same helpers by hand.
+#
+# Fail-loud contract: every writer writes its commit table, so a
+# store without one never committed (or crashed before its first
+# commit). Serves, revisions and compactions of such a store raise
+# the shared missing-commit ValueError instead of serving rows no
+# commit point covers.
 
 
 def _dyn_overwrite(df: DataFrame, cols: list, path: str) -> None:
     """Dynamic partition overwrite: a re-run replaces only ITS OWN
-    partitions — the idempotence every batch writer relies on."""
+    partitions — the idempotence every batch writer relies on. The
+    engine's one per-writer dynamic-mode write (the writer option
+    overrides the session conf without mutating it)."""
     (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -320,10 +331,11 @@ def _dyn_overwrite(df: DataFrame, cols: list, path: str) -> None:
     )
 
 
-def _overlap_writes(*thunks) -> None:
-    """Run independent NON-COMMIT store writes from driver threads so
-    concurrent jobs back-fill each other's stragglers and the driver
-    round-trips overlap (guide §2.6).
+def _overlap_writes(*thunks) -> list:
+    """Run independent thunks — NON-COMMIT store writes, or whole
+    independent store builds — from driver threads so concurrent jobs
+    back-fill each other's stragglers and the driver round-trips
+    overlap (guide §2.6); returns the thunks' results in order.
     Callers must keep the commit-point write (ledger/totals) OUT of
     the pool and issue it only after this returns — crash semantics
     are then unchanged: any subset of these writes may exist without
@@ -338,9 +350,7 @@ def _overlap_writes(*thunks) -> None:
     import os
 
     if os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
-        for t in thunks:
-            t()
-        return
+        return [t() for t in thunks]
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -348,8 +358,7 @@ def _overlap_writes(*thunks) -> None:
     inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(inherit(t)) for t in thunks]
-        for f in futures:
-            f.result()
+        return [f.result() for f in futures]
 
 
 def _ledger_row(
@@ -360,17 +369,64 @@ def _ledger_row(
     1-row rule."""
     from pyspark.sql import functions as F
 
-    (
+    _dyn_overwrite(
         spark.range(1)
         .select(
             F.lit(int(n_docs)).cast("long").alias("n_docs"),
             F.lit(int(batch_id)).cast("int").alias("batch_id"),
         )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(path)
+        .coalesce(1),
+        ["batch_id"],
+        path,
+    )
+
+
+def _commit_rows(
+    spark: SparkSession, out_dir: str, table: str
+) -> DataFrame:
+    """The store's commit table — ``batches`` (the ledger stores) or
+    ``totals`` (the frequency store) — read with its explicit schema.
+    A missing table raises the shared missing-commit error: the path
+    check is the read's own (no extra probe, no job), and an
+    unreadable commit point must never be served as "everything
+    committed"."""
+    from pyspark.errors import AnalysisException
+
+    schema = _POSTINGS_TOTALS_SCHEMA if table == "totals" else _LEDGER_SCHEMA
+    try:
+        return spark.read.schema(schema).parquet(f"{out_dir}/{table}")
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+    raise ValueError(
+        f"store at {out_dir} has no '{table}' commit table: it never "
+        "committed, or its writer crashed before its first commit, so "
+        "no row in it is committed. Remedy: rebuild the store, or "
+        "restart its maintainer from the checkpoint (the replay "
+        "commits the batch)."
+    )
+
+
+def _hw_after(mx) -> int:
+    """One past the newest committed batch id (0 for an empty
+    commit table)."""
+    return max(0, (int(mx) if mx is not None else -1) + 1)
+
+
+def _committed_hw(spark: SparkSession, out_dir: str, table: str) -> int:
+    """The store's committed high-water mark: one past the newest
+    batch its commit table records. The commit row is every writer's
+    LAST write, so batches at or above the mark are uncommitted — a
+    crashed operation's partials, excluded from every read and
+    overwritten when the operation re-runs with the SAME id (the
+    idempotent convergence every offline writer relies on). Serve
+    prologues read the same table inside their fused job."""
+    from pyspark.sql import functions as F
+
+    return _hw_after(
+        _commit_rows(spark, out_dir, table)
+        .agg(F.max("batch_id").alias("b"))
+        .collect()[0]["b"]
     )
 
 
@@ -445,7 +501,7 @@ def _kill_tombstoned(
     rows: DataFrame,
     out_dir: str,
     id_col: str,
-    hw: int | None,
+    hw: int,
 ) -> DataFrame:
     """Apply the tombstone kill rule to `rows` (which must carry
     id_col + batch_id): drop rows a newer committed tombstone kills.
@@ -464,6 +520,190 @@ def _kill_tombstoned(
         )
         .drop("tomb_b")
     )
+
+
+@dataclass(frozen=True)
+class _DocStore:
+    """One document store family on the shared lifecycle: rows under
+    ``out_dir/postings`` partitioned by ``parts``, the ``batches``
+    commit ledger, ``tombstones`` keyed by doc_id, ``offline_fence``.
+    ``frames(docs, batch_id, n_buckets)`` is the family's frame
+    builder, returning (rows, ledger) for one document set. A store
+    whose parts include ``tok_bucket`` is bucketed: it records its
+    modulus in a ``meta`` table, and its compacted rows are
+    repartitioned by bucket (one file per bucket dir)."""
+
+    label: str
+    schema: str
+    parts: tuple
+    frames: Callable
+
+    @property
+    def bucketed(self) -> bool:
+        return "tok_bucket" in self.parts
+
+
+def _store_build(
+    spec: _DocStore, docs: DataFrame, out_dir: str, n_buckets=None
+) -> None:
+    """Batch build: ``batch_id=-1`` rows -> meta (bucketed stores) ->
+    batches ledger, in that order. Meta existing implies the rows
+    landed, so a crash mid-rows leaves a store every serve refuses
+    ("no meta table"), and the ledger LAST makes the build the
+    store's first commit."""
+    rows, ledger = spec.frames(docs, -1, n_buckets)
+    rows.write.mode("overwrite").partitionBy(*spec.parts).parquet(
+        f"{out_dir}/postings"
+    )
+    if spec.bucketed:
+        _write_postings_meta(docs.sparkSession, out_dir, n_buckets)
+    ledger.coalesce(1).write.mode("overwrite").partitionBy(
+        "batch_id"
+    ).parquet(f"{out_dir}/batches")
+
+
+def _store_deltas(
+    spec: _DocStore,
+    docs: DataFrame,
+    out_dir: str,
+    batch_id: int,
+    n_buckets,
+    tombstone: bool,
+) -> Callable[[], None]:
+    """Write one batch's NON-COMMIT deltas — the rows of `docs` at
+    `batch_id`, plus (``tombstone``) a tombstone per doc_id killing
+    its rows from older batches — overlapped (_overlap_writes), and
+    return the batch's commit: the ledger-row write, which the caller
+    runs LAST. Any subset of the deltas may exist without the ledger
+    row; readers only see batches below the committed high-water
+    mark, and a re-run's dynamic overwrite replaces them."""
+    rows, ledger = spec.frames(docs, batch_id, n_buckets)
+    writes = [
+        lambda: _dyn_overwrite(rows, list(spec.parts), f"{out_dir}/postings")
+    ]
+    if tombstone:
+        writes.append(
+            lambda: _tombstone_write(
+                docs, "doc_id", batch_id, f"{out_dir}/tombstones"
+            )
+        )
+    _overlap_writes(*writes)
+    return lambda: _dyn_overwrite(
+        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
+    )
+
+
+def _store_offline(
+    spec: _DocStore,
+    spark: SparkSession,
+    docs: DataFrame,
+    out_dir: str,
+    delete: bool = False,
+) -> int:
+    """An offline revision (UPSERT) or delete, returning the batch id
+    used. A re-crawled CHANGED document changes its rows (positions,
+    shingle set, signature), so stale rows would serve phantom/lost
+    hits: every doc_id in `docs` writes fresh rows AT batch N (not
+    for a delete) and a tombstone (doc_id, N) killing its rows from
+    batches < N; ids absent from the store are no-ops.
+
+    N is the committed high-water mark, so a re-run after any partial
+    write reuses the same id and overwrites its own partitions. The
+    shared offline prologue (_offline_begin) refuses unclaimed
+    partials at N and claims N in the fence before any store write, so
+    a maintenance stream resuming its old checkpoint afterwards fails
+    loudly instead of clobbering this batch (run while the stream is
+    stopped). Rows and tombstones are written concurrently; the
+    ledger row follows them LAST as the commit point."""
+    recover_compacting(spark, out_dir)
+    nb = (
+        _postings_meta_buckets(spark, out_dir)
+        if spec.bucketed and not delete
+        else None
+    )
+    next_b = _committed_hw(spark, out_dir, "batches")
+    _offline_begin(
+        spark,
+        out_dir,
+        f"{'delete' if delete else 'revision'} of the {spec.label} "
+        f"at {out_dir}",
+        next_b,
+        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+    )
+    if delete:
+        _tombstone_write(docs, "doc_id", next_b, f"{out_dir}/tombstones")
+        _ledger_row(spark, f"{out_dir}/batches", next_b)
+    else:
+        commit = _store_deltas(spec, docs, out_dir, next_b, nb, True)
+        commit()
+    return next_b
+
+
+def _store_live(
+    spec: _DocStore, spark: SparkSession, out_dir: str
+) -> DataFrame:
+    """The store's committed, tombstone-live rows — the one view its
+    serves and its compactor read (after finishing a crashed
+    compaction swap). Batches at or above the committed high-water
+    mark are a crashed operation's partials and never serve."""
+    from pyspark.sql import functions as F
+
+    recover_compacting(spark, out_dir)
+    hw = _committed_hw(spark, out_dir, "batches")
+    rows = (
+        spark.read.schema(spec.schema)
+        .parquet(f"{out_dir}/postings")
+        .filter(F.col("batch_id") < hw)
+    )
+    return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
+
+
+def _store_compact(
+    spec: _DocStore, spark: SparkSession, out_dir: str
+) -> None:
+    """Fold the store's per-batch deltas into one ``batch_id=-1`` base
+    and fold its TOMBSTONES OUT — rows killed by a newer tombstone are
+    physically dropped, the ledger folds to one row, and the
+    rewritten store carries no tombstones or fence, so serves are
+    back on the no-join fast path and a fresh-checkpoint stream
+    legitimately restarts at id 0. Folds the COMMITTED state only.
+
+    The WHOLE store directory is rewritten to a temp sibling and
+    swapped by ONE swap_compacted call: folding rows to -1 while live
+    tombstones survive would kill the entire base (-1 < any tombstone
+    batch). The folded ledger's informational n_docs is counted by
+    reading back the compacted rows just written (one column-pruned
+    read with an explicit schema — a zero-row fold writes no data
+    files) instead of evaluating the live view a second time. Run
+    while the maintenance stream is stopped."""
+    from pyspark.sql import functions as F
+
+    rows = _store_live(spec, spark, out_dir)
+    nb = _postings_meta_buckets(spark, out_dir) if spec.bucketed else None
+
+    def _write(tmp: str) -> None:
+        folded = rows.withColumn("batch_id", F.lit(-1))
+        if spec.bucketed:
+            folded = folded.repartition(F.col("tok_bucket"))
+        folded.write.mode("overwrite").partitionBy(*spec.parts).parquet(
+            f"{tmp}/postings"
+        )
+        (
+            spark.read.schema("doc_id bigint")
+            .parquet(f"{tmp}/postings")
+            .select("doc_id")
+            .distinct()
+            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+            .withColumn("batch_id", F.lit(-1))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(f"{tmp}/batches")
+        )
+        if spec.bucketed:
+            _write_postings_meta(spark, tmp, nb)
+
+    swap_compacted(spark, out_dir, _write, spec.label)
 
 
 def write_bucketed_table(
@@ -979,42 +1219,6 @@ def write_ivf_index(
     )
 
 
-_IVF_TOMBSTONES_SCHEMA = "vec_id bigint, batch_id int"
-
-
-def _ivf_committed_hw(
-    spark: SparkSession, index_path: str
-) -> int | None:
-    """One past the newest COMMITTED batch per the store's ledger, or
-    None for a store built before the ledger existed (legacy stores
-    keep the r10 read semantics — no commit-point filter)."""
-    from pyspark.sql import functions as F
-
-    fs, p = _hadoop_path(spark, f"{index_path}/batches")
-    if not fs.exists(p):
-        return None
-    mx = (
-        spark.read.schema(_LEDGER_SCHEMA)
-        .parquet(f"{index_path}/batches")
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
-    )
-    return max(0, (mx if mx is not None else -1) + 1)
-
-
-def _ivf_tombstones(
-    spark: SparkSession, index_path: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """(vec_id, tomb_b) with tomb_b the vector's newest tombstone, or
-    None when the index has never seen a revision (the append-only
-    fast path). Same kill rule as the posting-list store: a
-    tombstone at batch B kills that id's rows from batches < B."""
-    return _tombstones_view(spark, index_path, "vec_id", before_batch)
-
-
-_UNREAD = object()  # "not supplied — read it" sentinel (None is a
-# legitimate high-water value for legacy ledgerless stores)
-
 _IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
 
 
@@ -1051,9 +1255,10 @@ def _ivf_prologue(
     reads the store's live commit point.
 
     Returns {"cents": [(cell, [centroid...])...] sorted by cell,
-    "hw": int | None (None = legacy pre-ledger store, serve
-    append-only), "meta": (m, sub, k) | None, "cb": codebook rows
-    sorted by codeword id | None, "qcode": int | None}.
+    "hw": int (the committed high-water mark; a store without its
+    batches ledger raises the shared missing-commit error), "meta":
+    (m, sub, k) | None, "cb": codebook rows sorted by codeword id |
+    None, "qcode": int | None}.
     ``need_pq=True`` requires the pq tables to exist — callers gate
     on the pq dir probe (_pq_store_meta's fs.exists contract)."""
     from pyspark.sql import functions as F
@@ -1073,17 +1278,11 @@ def _ivf_prologue(
     legs = [
         spark.read.schema(_IVF_CENTROIDS_SCHEMA)
         .parquet(f"{index_path}/centroids")
-        .select(*_leg("cent", a=F.col("cell"), vec=F.col("centroid")))
+        .select(*_leg("cent", a=F.col("cell"), vec=F.col("centroid"))),
+        _commit_rows(spark, index_path, "batches")
+        .agg(F.max("batch_id").alias("mx"))
+        .select(*_leg("hw", a=F.col("mx"))),
     ]
-    fs, p = _hadoop_path(spark, f"{index_path}/batches")
-    has_ledger = fs.exists(p)
-    if has_ledger:
-        legs.append(
-            spark.read.schema(_LEDGER_SCHEMA)
-            .parquet(f"{index_path}/batches")
-            .agg(F.max("batch_id").alias("mx"))
-            .select(*_leg("hw", a=F.col("mx")))
-        )
     if need_pq:
         legs.append(
             spark.read.schema(_PQ_META_SCHEMA)
@@ -1119,14 +1318,11 @@ def _ivf_prologue(
             (int(r["a"]), [float(x) for x in r["vec"]])
             for r in by_kind.get("cent", [])
         ),
-        "hw": None,
+        "hw": _hw_after(by_kind["hw"][0]["a"]),
         "meta": None,
         "cb": None,
         "qcode": None,
     }
-    if has_ledger:
-        mx = by_kind["hw"][0]["a"]
-        out["hw"] = max(0, (int(mx) if mx is not None else -1) + 1)
     if need_pq:
         mrow = by_kind.get("meta", [])
         if not mrow:
@@ -1160,16 +1356,17 @@ def ivf_serve_state(spark: SparkSession, index_path: str) -> dict:
 def _ivf_live(
     spark: SparkSession,
     index_path: str,
-    cells: list | None = None,
-    hw=_UNREAD,
+    cells: list | None,
+    hw: int,
 ) -> DataFrame:
     """The IVF store's committed, tombstone-live cells rows — the
     ONE serve-side live view every probe/funnel/compaction path reads
     (r12 factoring: the hw + tombstone-kill block was previously
-    repeated per reader and could drift). ``cells`` (when given)
+    repeated per reader and could drift). ``cells`` (when not None)
     becomes the cell-IN partition filter — parquet partition pruning,
-    nprobe/n_cells of the store touched. ``hw`` may be passed from a
-    pre-read ivf_serve_state snapshot."""
+    nprobe/n_cells of the store touched. ``hw`` is the committed
+    high-water mark, from a pre-read ivf_serve_state / _ivf_prologue
+    snapshot or _committed_hw."""
     from pyspark.sql import functions as F
 
     probed = spark.read.parquet(f"{index_path}/cells")
@@ -1177,13 +1374,10 @@ def _ivf_live(
         probed = probed.filter(
             F.col("cell").isin([int(c) for c in cells])
         )
-    # committed batches only (ledger-carrying stores, r11): a crashed
-    # revision's partial replacement rows must not serve alongside
-    # the old rows its never-written tombstones would have killed
-    if hw is _UNREAD:
-        hw = _ivf_committed_hw(spark, index_path)
-    if hw is not None:
-        probed = probed.filter(F.col("batch_id") < hw)
+    # committed batches only (r11): a crashed revision's partial
+    # replacement rows must not serve alongside the old rows its
+    # never-written tombstones would have killed
+    probed = probed.filter(F.col("batch_id") < hw)
     return _kill_tombstoned(spark, probed, index_path, "vec_id", hw)
 
 
@@ -1249,13 +1443,12 @@ def revise_ivf_vectors(
     under the frozen quantizer, so the re-run's dynamic overwrite
     hits exactly the crashed attempt's partitions); readers filter
     to committed batches, so the partials never serve meanwhile. A
-    legacy store without a ledger keeps the r10 fresh-id rule (max
-    over cells+tombstones, tombstones kill the partials) and gains a
-    ledger from this revision onward. Run while the maintenance
-    stream is stopped — every claimed id is FENCED
-    (claim_offline_batch), so a stream resuming its old checkpoint
-    afterwards fails loudly instead of silently clobbering the
-    revision (ADVICE r10). Returns the batch id used."""
+    store without its ledger raises the shared missing-commit error.
+    Run while the maintenance stream is stopped — every claimed id
+    is FENCED (claim_offline_batch), so a stream resuming its old
+    checkpoint afterwards fails loudly instead of silently
+    clobbering the revision (ADVICE r10). Returns the batch id
+    used."""
     from pyspark.sql import functions as F
 
     recover_compacting(spark, index_path)
@@ -1272,33 +1465,7 @@ def revise_ivf_vectors(
             f"{index_path}/centroids is empty — build the index with "
             "write_ivf_index before revising"
         )
-    hw = pro["hw"]
-    if hw is not None:
-        next_b = hw
-    else:
-        # legacy store (no ledger): the r10 fresh-id rule
-        mx_cells = (
-            spark.read.parquet(f"{index_path}/cells")
-            .agg(F.max("batch_id").alias("b"))
-            .collect()[0]["b"]
-        )
-        tomb = _ivf_tombstones(spark, index_path)
-        mx_tomb = (
-            tomb.agg(F.max("tomb_b").alias("b")).collect()[0]["b"]
-            if tomb is not None
-            else None
-        )
-        next_b = max(
-            0,
-            max(
-                (mx_cells if mx_cells is not None else -1),
-                (mx_tomb if mx_tomb is not None else -1),
-            )
-            + 1,
-        )
-    # guard + fence claim (the legacy branch's fresh id comes from
-    # the PHYSICAL max already, so its guard is a no-op by
-    # construction)
+    next_b = pro["hw"]
     _offline_begin(
         spark,
         index_path,
@@ -1326,12 +1493,7 @@ def revise_ivf_vectors(
         rows = rows.withColumn(
             "pq_code", _pq_code_expr(pro["cb"], m, sub, "embedding")
         )
-    (
-        rows.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(f"{index_path}/cells")
-    )
+    _dyn_overwrite(rows, ["cell", "batch_id"], f"{index_path}/cells")
     _tombstone_write(
         vecs_v2.select(F.col(id_col).alias("vec_id")),
         "vec_id",
@@ -1707,9 +1869,9 @@ def refresh_ivf_index(
     # revised/deleted ids are dropped by the shared live view BEFORE
     # the latest-wins fold, so a deleted vector does not resurrect
     # through its surviving old row
-    live = _ivf_live(spark, index_path).filter(
-        F.col("embedding").isNotNull()
-    )
+    live = _ivf_live(
+        spark, index_path, None, _committed_hw(spark, index_path, "batches")
+    ).filter(F.col("embedding").isNotNull())
     # attrs ride the fold; code/pq_code/cell are re-derived by the
     # rebuild (write_ivf_index) below
     attr_cols = [
@@ -1834,7 +1996,9 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
             "compact (a maintenance stream whose first batches were "
             "all filtered out never creates the store)"
         )
-    cells = _ivf_live(spark, index_path)
+    cells = _ivf_live(
+        spark, index_path, None, _committed_hw(spark, index_path, "batches")
+    )
     from se_data_pipeline_spark.functions.vectors import pack_sign_bits
 
     # latest-wins fold over ALL data columns (attrs and pq_code ride
@@ -1922,18 +2086,16 @@ def delete_bq_vectors(
     # the BQ index IS a parquet dir (no subdirectory namespace), so
     # its fence lives at a sibling path — compact_bq_index drops it
     claim_offline_batch(spark, _bq_fence_dir(index_path), next_b)
-    (
+    _dyn_overwrite(
         ids.select("vec_id")
         .distinct()
         .select(
             "vec_id",
             F.lit(None).cast("long").alias("code"),
             F.lit(next_b).alias("batch_id"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(index_path)
+        ),
+        ["batch_id"],
+        index_path,
     )
     return next_b
 
@@ -2142,9 +2304,7 @@ def _serve_prologue(
     out_dir: str,
     terms: list,
     hw_table: str,
-    hw_schema: str,
-    legacy_ok: bool,
-) -> tuple[int, int | None, list]:
+) -> tuple[int, int, list]:
     """The per-serve prologue reads — bucket modulus (meta),
     committed high-water mark (the store's commit-point table), and
     the query terms' bucket ids — fused into ONE collect (r12
@@ -2161,13 +2321,11 @@ def _serve_prologue(
     (both are the floored/positive remainder), so the bucket ids are
     bit-identical to the writer's _tok_bucket_col.
 
-    ``hw_table``/``hw_schema``: "totals" for the frequency store
-    (every writer's LAST write), "batches" for the ledger stores.
-    ``legacy_ok=True`` mirrors _ledger_hw: a pre-ledger store (no
-    commit-point dir) serves append-only (hw None) instead of
-    raising; False preserves the frequency store's strict contract
-    (totals must exist — the read raises as _next_postings_batch
-    did). Returns (n_buckets, hw, sorted bucket ids)."""
+    ``hw_table``: the store's commit table — "totals" for the
+    frequency store (every writer's LAST write), "batches" for the
+    ledger stores; the hw leg is _committed_hw's read, so a store
+    without its commit table raises the shared missing-commit error.
+    Returns (n_buckets, hw, sorted bucket ids)."""
     from pyspark.sql import functions as F
 
     _require_postings_meta(spark, out_dir)
@@ -2191,26 +2349,15 @@ def _serve_prologue(
         spark.read.schema(_POSTINGS_META_SCHEMA)
         .parquet(f"{out_dir}/meta")
         .select(*_leg("meta", F.col("n_buckets"))),
+        _commit_rows(spark, out_dir, hw_table)
+        .agg(F.max("batch_id").alias("mx"))
+        .select(*_leg("hw", F.col("mx"))),
     ]
-    has_hw = True
-    if legacy_ok:
-        fs, hw_p = _hadoop_path(spark, f"{out_dir}/{hw_table}")
-        has_hw = fs.exists(hw_p)
-    if has_hw:
-        legs.append(
-            spark.read.schema(hw_schema)
-            .parquet(f"{out_dir}/{hw_table}")
-            .agg(F.max("batch_id").alias("mx"))
-            .select(*_leg("hw", F.col("mx")))
-        )
     by_kind = _collect_tagged(legs)
     if "meta" not in by_kind:
         raise ValueError(f"{out_dir}/meta is empty")
     n_buckets = int(by_kind["meta"][0]["a"])
-    hw = None
-    if has_hw:
-        mx = by_kind["hw"][0]["a"]
-        hw = max(0, (mx if mx is not None else -1) + 1)
+    hw = _hw_after(by_kind["hw"][0]["a"])
     buckets = sorted({int(r["a"]) % n_buckets for r in by_kind["term"]})
     return n_buckets, hw, buckets
 
@@ -2220,7 +2367,7 @@ def _pruned_postings(
     root: str,
     schema: str,
     buckets: list,
-    hw: int | None,
+    hw: int,
 ) -> DataFrame:
     """The committed rows of the bucket directories a query can
     touch, read from those leaf directories instead of a listing of
@@ -2238,8 +2385,7 @@ def _pruned_postings(
     while they stay within that threshold — and batch dirs at or
     above ``hw`` are dropped before the read, so an uncommitted
     partial batch stays invisible exactly as under the batch_id < hw
-    filter (``hw`` None — a legacy pre-ledger store — keeps every
-    batch). The read keeps basePath = root and the explicit schema,
+    filter. The read keeps basePath = root and the explicit schema,
     so batch_id/tok_bucket stay partition columns, and the
     batch_id/tok_bucket filters still reach the scan as
     PartitionFilters. With no matching dir (a term whose bucket was
@@ -2259,7 +2405,7 @@ def _pruned_postings(
     for st in fs.globStatus(pattern) or []:
         leaf = st.getPath()
         b = int(leaf.getParent().getName().split("=", 1)[1])
-        if st.isDirectory() and (hw is None or b < hw):
+        if st.isDirectory() and b < hw:
             leaves.append(leaf.toString())
     if leaves:
         rows = (
@@ -2278,10 +2424,9 @@ def _pruned_postings(
             )
             .filter(F.lit(False))
         )
-    rows = rows.filter(F.col("tok_bucket").isin(buckets))
-    if hw is not None:
-        rows = rows.filter(F.col("batch_id") < hw)  # committed only
-    return rows
+    return rows.filter(F.col("tok_bucket").isin(buckets)).filter(
+        F.col("batch_id") < hw  # committed only
+    )
 
 
 def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
@@ -2377,14 +2522,6 @@ def _doclens_frame(docs: DataFrame, batch_id: int) -> DataFrame:
     )
 
 
-def _max_tombstones(
-    spark: SparkSession, out_dir: str, before_batch: int | None = None
-) -> DataFrame | None:
-    """Document-store view of _tombstones_view (schema
-    _TOMBSTONES_SCHEMA)."""
-    return _tombstones_view(spark, out_dir, "doc_id", before_batch)
-
-
 def _live_doclens(
     spark: SparkSession, out_dir: str, before_batch: int | None = None
 ) -> DataFrame:
@@ -2403,7 +2540,7 @@ def _live_doclens(
         F.max_by("dl", "batch_id").alias("dl"),
         F.max("batch_id").alias("b"),
     )
-    tomb = _max_tombstones(spark, out_dir, before_batch)
+    tomb = _tombstones_view(spark, out_dir, "doc_id", before_batch)
     if tomb is not None:
         latest = (
             latest.join(tomb, "doc_id", "left")
@@ -2502,25 +2639,6 @@ def _totals_from_doclens(
     )
 
 
-def _next_postings_batch(spark: SparkSession, out_dir: str) -> int:
-    """One past the newest batch the store has COMMITTED — derived
-    from the totals table because totals is every writer's LAST
-    write (the commit point): a crashed revision's partial postings/
-    doclens/tombstone partitions at the uncommitted batch id are
-    excluded from prior-state reads (before_batch) and overwritten
-    when the revision re-runs with the SAME id — idempotent
-    convergence without a log."""
-    from pyspark.sql import functions as F
-
-    mx = (
-        spark.read.schema(_POSTINGS_TOTALS_SCHEMA)
-        .parquet(f"{out_dir}/totals")
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
-    )
-    return max(0, (mx if mx is not None else -1) + 1)
-
-
 def _corrected_totals(
     spark: SparkSession,
     out_dir: str,
@@ -2579,7 +2697,8 @@ def revise_posting_lists(
     `docs_v2` (unique within the batch) replaces its previous version
     exactly once; doc_ids new to the store are plain inserts.
 
-    Mechanics — one revision batch N = _next_postings_batch():
+    Mechanics — one revision batch N = the committed high-water
+    mark of the totals table (_committed_hw):
 
     1. new postings/doclens rows land under ``batch_id=N`` (the
        ordinary delta layout, bucket-bounded like any other batch);
@@ -2608,7 +2727,7 @@ def revise_posting_lists(
 
     recover_compacting(spark, out_dir)
     nb = _postings_meta_buckets(spark, out_dir)
-    next_b = _next_postings_batch(spark, out_dir)
+    next_b = _committed_hw(spark, out_dir, "totals")
     _offline_begin(
         spark,
         out_dir,
@@ -2671,7 +2790,7 @@ def delete_posting_docs(
     from pyspark.sql import functions as F
 
     recover_compacting(spark, out_dir)
-    next_b = _next_postings_batch(spark, out_dir)
+    next_b = _committed_hw(spark, out_dir, "totals")
     _offline_begin(
         spark,
         out_dir,
@@ -2747,6 +2866,14 @@ def _positional_frames(
     return rows, batches
 
 
+_POSITIONAL = _DocStore(
+    "positional posting store",
+    _POS_POSTINGS_SCHEMA,
+    ("batch_id", "tok_bucket"),
+    lambda docs, b, nb: _positional_frames(docs, b, nb),
+)
+
+
 def write_positional_postings(
     docs: DataFrame, out_dir: str, n_buckets: int = POSTINGS_TOK_BUCKETS
 ) -> None:
@@ -2763,136 +2890,28 @@ def write_positional_postings(
     written last) is what revision/serve paths derive the committed
     high-water mark from — the totals table's role in the frequency
     store, without corpus statistics phrase scoring doesn't need."""
-    rows, batches = _positional_frames(docs, -1, n_buckets)
-    # rows -> meta -> batches ledger, in order: meta existing implies
-    # the rows landed, so a crash mid-rows leaves a store every serve
-    # refuses ("no meta table") rather than one the ledgerless
-    # hw=None path would read as committed (ADVICE r13).
-    rows.write.mode("overwrite").partitionBy(
-        "batch_id", "tok_bucket"
-    ).parquet(f"{out_dir}/postings")
-    _write_postings_meta(docs.sparkSession, out_dir, n_buckets)
-    batches.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
-
-
-def _ledger_hw(spark: SparkSession, out_dir: str) -> int | None:
-    """One past the newest COMMITTED batch (max over the batches
-    ledger — every writer's LAST write), or None for a store built
-    before the ledger existed (ADVICE r11: the pre-ledger legacy
-    store keeps its original read semantics — no commit-point filter
-    — instead of raising path-not-found at serve time; the
-    _ivf_committed_hw fallback, mirrored)."""
-    from pyspark.sql import functions as F
-
-    fs, p = _hadoop_path(spark, f"{out_dir}/batches")
-    if not fs.exists(p):
-        return None
-    mx = (
-        spark.read.schema(_LEDGER_SCHEMA)
-        .parquet(f"{out_dir}/batches")
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
-    )
-    return max(0, (mx if mx is not None else -1) + 1)
-
-
-def _next_ledger_batch(spark: SparkSession, out_dir: str) -> int:
-    """The batch id an offline WRITER claims next: the committed
-    high-water mark (crashed partials at the uncommitted id are
-    excluded from reads and overwritten when the operation re-runs
-    with the same id — the _next_postings_batch contract, verbatim).
-    A legacy pre-ledger store (no batches dir) falls back to one past
-    the PHYSICAL max batch id across its row/tombstone dirs — those
-    stores are batch-built (batch_id=-1 only; the positional/shingle
-    maintainers have always written a ledger), so the fallback yields
-    0 and the store gains a ledger from this revision onward."""
-    hw = _ledger_hw(spark, out_dir)
-    if hw is not None:
-        return hw
-    mx = -1
-    for sub in ("postings", "tombstones"):
-        ids = _physical_batch_ids(spark, f"{out_dir}/{sub}")
-        if ids:
-            mx = max(mx, max(ids))
-    return max(0, mx + 1)
+    _store_build(_POSITIONAL, docs, out_dir, n_buckets)
 
 
 def revise_positional_postings(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
-    """UPSERT re-ingested documents into a positional posting store —
-    the lifecycle its frequency twin got in r10 (r10 VERDICT next
-    #1): a re-crawled CHANGED document changes its token POSITIONS,
-    so under the append-only contract a phrase query would see both
-    the stale and the fresh position arrays (df-style double counting
-    becomes phantom/lost phrase hits). Same tombstone mechanics as
-    revise_posting_lists: every doc_id in `docs_v2` (unique within
-    the batch) writes fresh position rows AT batch N and a tombstone
-    (doc_id, N) killing its rows from batches < N; no totals
-    correction exists because phrase scoring consults no corpus
-    statistics. Postings and tombstones are written concurrently;
-    the batches ledger row follows them LAST as the commit point
-    (a crash before it leaves the batch uncommitted, whatever subset
-    of the two deltas exists); the claimed id is FENCED
-    against a resumed maintenance stream (claim_offline_batch).
-    Returns the batch id used."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_positional_postings at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    rows, batches = _positional_frames(docs_v2, next_b, nb)
-    # rows and tombstones are independent non-commit deltas below the
-    # ledger commit point — overlap them (guide §2.6, _overlap_writes;
-    # readers only see tombstones below the committed high-water mark)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id", "tok_bucket"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point
-    _dyn_overwrite(
-        batches.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
+    """UPSERT re-ingested documents into a positional posting store:
+    a re-crawled CHANGED document changes its token POSITIONS, so
+    under the append-only contract a phrase query would see both the
+    stale and the fresh position arrays. The shared tombstone
+    revision (_store_offline); no totals correction exists because
+    phrase scoring consults no corpus statistics. Returns the batch
+    id used."""
+    return _store_offline(_POSITIONAL, spark, docs_v2, out_dir)
 
 
 def delete_positional_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
     """Remove documents from a positional posting store: tombstones
-    for the ids (killing ALL their prior rows — no replacement rows
-    follow) plus the commit-ledger row. Ids absent from the store
-    are no-ops. Same commit-point ordering: batches last."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_positional_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    # ledger LAST — the commit point
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
+    for the ids + the commit-ledger row (_store_offline)."""
+    return _store_offline(_POSITIONAL, spark, doc_ids, out_dir, delete=True)
 
 
 def _pivot_positions(p: DataFrame, terms: tuple[str, ...]) -> DataFrame:
@@ -2924,9 +2943,9 @@ def _pivot_live_positions(
     array in its own column (p0..pK-1) — shared by phrase / proximity
     / ordered-near / AND-ranked so the lifecycle semantics cannot
     drift between query classes. Committed batches only (high-water
-    mark from the batches ledger; hw None for a legacy pre-ledger
-    store serves append-only — ADVICE r11), <=K bucket-dir partition
-    filter + in-bucket term cut. The scan is built from those bucket
+    mark from the batches ledger; a store without it raises the
+    shared missing-commit error), <=K bucket-dir partition filter +
+    in-bucket term cut. The scan is built from those bucket
     dirs alone (_pruned_postings): listing is O(K x committed
     batches), a driver-side glob, never a listing job over the whole
     store; the prologue is one union collect (_serve_prologue).
@@ -2960,7 +2979,7 @@ def _pivot_live_positions(
     # ONE fused prologue collect: bucket modulus + committed
     # high-water mark + term bucket ids
     n_buckets, hw, buckets = _serve_prologue(
-        spark, out_dir, list(terms), "batches", _LEDGER_SCHEMA, True
+        spark, out_dir, list(terms), "batches"
     )
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)
@@ -2971,11 +2990,11 @@ def _pivot_live_positions(
     if not fs.exists(tp):
         # append-only fast path: the plain pivot, no union
         return _pivot_positions(p, terms)
-    t = spark.read.schema("doc_id bigint, batch_id int").parquet(
-        f"{out_dir}/tombstones"
+    t = (
+        spark.read.schema("doc_id bigint, batch_id int")
+        .parquet(f"{out_dir}/tombstones")
+        .filter(F.col("batch_id") < hw)  # committed only
     )
-    if hw is not None:
-        t = t.filter(F.col("batch_id") < hw)  # committed only
     u = p.select(
         "doc_id", "tok", "pos", "batch_id", F.lit(False).alias("tomb")
     ).unionByName(
@@ -3243,61 +3262,9 @@ def compact_positional_postings(
     spark: SparkSession, out_dir: str
 ) -> None:
     """Fold a positional posting store's per-batch deltas into a
-    single ``batch_id=-1`` base and fold its TOMBSTONES OUT —
-    position rows killed by a newer tombstone are physically
-    dropped, the commit ledger folds to one row, and the rewritten
-    store carries no tombstones or fence, so serve reads are back on
-    the no-join fast path and a fresh-checkpoint stream legitimately
-    restarts at id 0. The WHOLE store directory is rewritten to a
-    temp sibling and swapped by ONE swap_compacted call (the
-    compact_posting_lists crash-window rationale verbatim: folding
-    rows to -1 while live tombstones survive would kill the entire
-    base). Folds the COMMITTED state only. Run while the maintenance
-    stream is stopped."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy store, fold all
-    p = spark.read.schema(_POS_POSTINGS_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        p = p.filter(F.col("batch_id") < hw)
-    p = _kill_tombstoned(spark, p, out_dir, "doc_id", hw)
-
-    def _write(tmp: str) -> None:
-        (
-            p.withColumn("batch_id", F.lit(-1))
-            .repartition(F.col("tok_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "tok_bucket")
-            .parquet(f"{tmp}/postings")
-        )
-        # informational live-document count for the folded ledger
-        # row, counted from the COMPACTED rows just written: the
-        # previous form re-evaluated the whole live view (pruned
-        # read + tombstone join) a second time; this is one
-        # column-pruned read of the smaller folded store, same value
-        live_docs = (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{tmp}/postings")
-            .select("doc_id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-        _write_postings_meta(spark, tmp, nb)
-
-    swap_compacted(
-        spark, out_dir, _write, "positional posting store"
-    )
+    single ``batch_id=-1`` base, tombstones and fence folded out, by
+    one whole-dir swap (_store_compact)."""
+    _store_compact(_POSITIONAL, spark, out_dir)
 
 
 # shingle (near-dup screening) index store: the materialized corpus
@@ -3346,6 +3313,14 @@ def _shingle_frames(docs: DataFrame, batch_id: int):
     return rows, ledger
 
 
+_SHINGLE = _DocStore(
+    "shingle index",
+    _SHINGLE_INDEX_SCHEMA,
+    ("batch_id",),
+    lambda docs, b, nb: _shingle_frames(docs, b),
+)
+
+
 def write_shingle_index(docs: DataFrame, out_dir: str) -> None:
     """Materialize the near-dup screening index: one (doc_id, m, h)
     row per distinct 5-token shingle hash, ``batch_id=-1`` base +
@@ -3353,77 +3328,25 @@ def write_shingle_index(docs: DataFrame, out_dir: str) -> None:
     key (never the ~40-byte shingle string — the _shingle_index
     rationale); the shingle pass over the corpus text runs ONCE
     here, and every later ingest screen reads this instead."""
-    rows, ledger = _shingle_frames(docs, -1)
-    rows.write.mode("overwrite").partitionBy("batch_id").parquet(
-        f"{out_dir}/postings"
-    )
-    ledger.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
+    _store_build(_SHINGLE, docs, out_dir)
 
 
 def revise_shingle_docs(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
-    """UPSERT re-ingested documents into the shingle index: a
-    re-crawled CHANGED document changes both its shingle set and its
-    m, so stale rows make every Jaccard involving the doc wrong (and
-    split its pair groups in two). Same mechanics as the positional
-    store: fresh rows AT batch N, tombstone (doc_id, N) killing
-    batches < N, ledger row LAST as the commit point, the claimed id
-    fenced against a resumed maintenance stream."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_shingle_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    rows, ledger = _shingle_frames(docs_v2, next_b)
-    # rows and tombstones overlap below the ledger commit point
-    # (guide §2.6, _overlap_writes — the revise_posting_lists argument)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point
-    _dyn_overwrite(
-        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
+    """UPSERT re-ingested documents into the shingle index (a changed
+    document changes both its shingle set and its m, so stale rows
+    make every Jaccard involving it wrong): the shared tombstone
+    revision (_store_offline). Returns the batch id used."""
+    return _store_offline(_SHINGLE, spark, docs_v2, out_dir)
 
 
 def delete_shingle_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
     """Remove documents from the shingle index: tombstones + the
-    commit-ledger row (no replacement rows). Ids absent from the
-    index are no-ops."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_shingle_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    # ledger LAST — the commit point
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
+    commit-ledger row (_store_offline)."""
+    return _store_offline(_SHINGLE, spark, doc_ids, out_dir, delete=True)
 
 
 def near_dups_from_index(
@@ -3448,14 +3371,7 @@ def near_dups_from_index(
     version reports itself at Jaccard 1."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy, no commit filter
-    idx = spark.read.schema(_SHINGLE_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        idx = idx.filter(F.col("batch_id") < hw)  # committed only
-    idx = _kill_tombstoned(spark, idx, out_dir, "doc_id", hw)
+    idx = _store_live(_SHINGLE, spark, out_dir)
     probe_rows, _ = _shingle_frames(new_docs, -1)
     probe = probe_rows.select(
         F.col("doc_id").alias("new_doc"),
@@ -3491,49 +3407,9 @@ def near_dups_from_index(
 
 def compact_shingle_index(spark: SparkSession, out_dir: str) -> None:
     """Fold the shingle index's per-batch deltas into one
-    ``batch_id=-1`` base and fold its tombstones (and fence) OUT —
-    the whole-store atomic-swap contract of the other compactors.
-    Folds the COMMITTED state only; run while the maintenance stream
-    is stopped."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)  # None: legacy store, fold all
-    rows = spark.read.schema(_SHINGLE_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        rows = rows.filter(F.col("batch_id") < hw)
-    rows = _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
-
-    def _write(tmp: str) -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/postings")
-        )
-        # ledger doc count from the COMPACTED rows just written (one
-        # explicit read schema: a zero-row fold writes no files and
-        # schema inference would raise on the empty dir
-        # column-pruned read) instead of a second evaluation of the
-        # live view's pruned read + tombstone join — same value
-        live_docs = (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{tmp}/postings")
-            .select("doc_id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-
-    swap_compacted(spark, out_dir, _write, "shingle index")
+    ``batch_id=-1`` base, tombstones and fence folded out, by one
+    whole-dir swap (_store_compact)."""
+    _store_compact(_SHINGLE, spark, out_dir)
 
 
 # MinHash-LSH band-index store (r12 — store #6, built ENTIRELY on the
@@ -3572,16 +3448,18 @@ def _minhash_frames(docs: DataFrame, batch_id: int):
     return rows, ledger
 
 
+_MINHASH = _DocStore(
+    "minhash band index",
+    _MINHASH_INDEX_SCHEMA,
+    ("batch_id",),
+    lambda docs, b, nb: _minhash_frames(docs, b),
+)
+
+
 def write_minhash_index(docs: DataFrame, out_dir: str) -> None:
     """Materialize the LSH band index: ``batch_id=-1`` base + the
     batches commit ledger (written LAST)."""
-    rows, ledger = _minhash_frames(docs, -1)
-    rows.write.mode("overwrite").partitionBy("batch_id").parquet(
-        f"{out_dir}/postings"
-    )
-    ledger.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
+    _store_build(_MINHASH, docs, out_dir)
 
 
 def revise_minhash_docs(
@@ -3589,68 +3467,17 @@ def revise_minhash_docs(
 ) -> int:
     """UPSERT re-ingested documents (a changed document changes its
     signature, so stale band rows produce phantom/lost candidates):
-    fresh rows AT batch N, tombstone (doc_id, N), ledger row LAST —
-    the shared protocol, via the shared helpers only."""
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_minhash_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    rows, ledger = _minhash_frames(docs_v2, next_b)
-    # rows and tombstones overlap below the ledger commit point
-    # (guide §2.6, _overlap_writes — the revise_posting_lists argument)
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            rows, ["batch_id"], f"{out_dir}/postings"
-        ),
-        lambda: _tombstone_write(
-            docs_v2, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # ledger LAST — the commit point (via the shared helper)
-    _dyn_overwrite(
-        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
-    )
-    return next_b
+    the shared tombstone revision (_store_offline). Returns the
+    batch id used."""
+    return _store_offline(_MINHASH, spark, docs_v2, out_dir)
 
 
 def delete_minhash_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents: tombstones + the ledger commit row."""
-    recover_compacting(spark, out_dir)
-    next_b = _next_ledger_batch(spark, out_dir)
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_minhash_docs at {out_dir}",
-        next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
-    )
-    _tombstone_write(
-        doc_ids, "doc_id", next_b, f"{out_dir}/tombstones"
-    )
-    _ledger_row(spark, f"{out_dir}/batches", next_b)
-    return next_b
-
-
-def _minhash_live(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed, tombstone-live band rows — the store's one serve
-    view (shared-helper composition, no store-specific protocol)."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    hw = _ledger_hw(spark, out_dir)
-    rows = spark.read.schema(_MINHASH_INDEX_SCHEMA).parquet(
-        f"{out_dir}/postings"
-    )
-    if hw is not None:
-        rows = rows.filter(F.col("batch_id") < hw)
-    return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
+    """Remove documents: tombstones + the ledger commit row
+    (_store_offline)."""
+    return _store_offline(_MINHASH, spark, doc_ids, out_dir, delete=True)
 
 
 def lsh_candidates_from_index(
@@ -3666,7 +3493,7 @@ def lsh_candidates_from_index(
     distinct shingle); recall is LSH-probabilistic by design."""
     from pyspark.sql import functions as F
 
-    idx = _minhash_live(spark, out_dir)
+    idx = _store_live(_MINHASH, spark, out_dir)
     probe_rows, _ = _minhash_frames(new_docs, -1)
     return (
         probe_rows.select(
@@ -3685,32 +3512,9 @@ def lsh_candidates_from_index(
 
 
 def compact_minhash_index(spark: SparkSession, out_dir: str) -> None:
-    """Fold deltas into one ``batch_id=-1`` base, tombstones (and
-    fence) OUT — the whole-store atomic-swap contract, entirely via
-    the shared helpers."""
-    from pyspark.sql import functions as F
-
-    rows = _minhash_live(spark, out_dir)
-    live_docs = rows.select("doc_id").distinct().agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-
-    def _write(tmp: str) -> None:
-        (
-            rows.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/postings")
-        )
-        (
-            live_docs.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
-
-    swap_compacted(spark, out_dir, _write, "minhash band index")
+    """Fold deltas into one ``batch_id=-1`` base, tombstones and
+    fence folded out, by one whole-dir swap (_store_compact)."""
+    _store_compact(_MINHASH, spark, out_dir)
 
 
 def compact_posting_lists(spark: SparkSession, out_dir: str) -> None:
@@ -3744,7 +3548,7 @@ def compact_posting_lists(spark: SparkSession, out_dir: str) -> None:
     # fold the COMMITTED state only: a crashed revision's partial
     # postings/tombstones (its totals commit point never landed) must
     # not be folded into the base with their correction missing
-    hw = _next_postings_batch(spark, out_dir)
+    hw = _committed_hw(spark, out_dir, "totals")
     p = (
         spark.read.schema(_POSTINGS_SCHEMA)
         .parquet(f"{out_dir}/postings")
@@ -3834,12 +3638,7 @@ def bm25_from_postings(
     # otherwise drop the old rows while totals still count them)
     # until its re-run lands the commit point.
     n_buckets, hw, buckets = _serve_prologue(
-        spark,
-        out_dir,
-        list(terms),
-        "totals",
-        _POSTINGS_TOTALS_SCHEMA,
-        False,
+        spark, out_dir, list(terms), "totals"
     )
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)

@@ -23,6 +23,24 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from se_data_pipeline_spark.sources.layout import (
+    _MINHASH,
+    _POSITIONAL,
+    _SHINGLE,
+    POSTINGS_TOK_BUCKETS,
+    _corrected_totals,
+    _doclens_frame,
+    _dyn_overwrite,
+    _hadoop_path,
+    _ledger_row,
+    _overlap_writes,
+    _posting_frames,
+    _postings_meta_buckets,
+    _store_deltas,
+    _tombstone_write,
+    _write_postings_meta,
+    guard_stream_batch,
+)
 from se_data_pipeline_spark.sources.publish import CheckpointedPublisher
 
 def _read_store_or_none(spark: SparkSession, path: str):
@@ -210,15 +228,10 @@ def maintain_hourly_rollup(
             # materialize BEFORE the overwrite: Spark (rightly)
             # refuses plans that read the path they overwrite
             merged = keep.unionByName(batch).localCheckpoint()
-        # per-WRITER overwrite mode (r7): the writer option overrides
-        # the session conf without mutating it — no save/set/restore,
-        # no race with concurrent writers pinning the other mode
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("day")
-            .parquet(out_dir)
-        )
+        # per-WRITER overwrite mode (r7, _dyn_overwrite): no
+        # save/set/restore of the session conf, no race with
+        # concurrent writers pinning the other mode
+        _dyn_overwrite(merged, ["day"], out_dir)
 
     return (
         agg.writeStream.outputMode("update")
@@ -280,10 +293,7 @@ def maintain_bq_index(
         # UNABLE_TO_INFER_SCHEMA until real codes land
         if codes.isEmpty():
             return
-        from se_data_pipeline_spark.sources.layout import (
-            _bq_fence_dir,
-            guard_stream_batch,
-        )
+        from se_data_pipeline_spark.sources.layout import _bq_fence_dir
 
         # delete_bq_vectors fences its batch ids (sibling fence dir —
         # the index itself is a flat parquet dir); resuming this
@@ -297,12 +307,7 @@ def maintain_bq_index(
         )
         # per-writer dynamic mode: replace only THIS batch's partition
         # (no session-conf mutation — see maintain_hourly_rollup)
-        (
-            codes.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
+        _dyn_overwrite(codes, ["batch_id"], out_dir)
 
     return (
         vec_stream.writeStream.outputMode("append")
@@ -358,7 +363,6 @@ def maintain_ivf_index(
     cells rows (the filtered-ANN attributes, write_ivf_index's
     contract — pass the SAME columns the store was built with)."""
     from se_data_pipeline_spark.sources.layout import (
-        _hadoop_path,
         _ivf_prologue,
         _nearest_cell_expr,
         _pq_code_expr,
@@ -406,10 +410,6 @@ def maintain_ivf_index(
         # write a zero-row partitioned store
         if rows.isEmpty():
             return
-        from se_data_pipeline_spark.sources.layout import (
-            guard_stream_batch,
-        )
-
         # revise_ivf_vectors fences its batch ids; resuming this
         # stream's old checkpoint past an offline revision would
         # reuse one and clobber its partitions — fail loudly
@@ -419,26 +419,14 @@ def maintain_ivf_index(
             batch_id,
             f"IVF index at {index_path}",
         )
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "batch_id")
-            .parquet(f"{index_path}/cells")
+        _dyn_overwrite(
+            rows, ["cell", "batch_id"], f"{index_path}/cells"
         )
         # batches ledger row LAST — the micro-batch's commit point
         # (r11 ledger harmonization: readers of ledger-carrying
         # stores serve committed batches only)
-        (
-            rows.sparkSession.range(1)
-            .select(
-                F.lit(0).cast("long").alias("n_docs"),
-                F.lit(int(batch_id)).cast("int").alias("batch_id"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{index_path}/batches")
+        _ledger_row(
+            rows.sparkSession, f"{index_path}/batches", batch_id
         )
 
     return (
@@ -1129,10 +1117,6 @@ def maintain_term_stats(
         batch = batch_df.localCheckpoint()  # decouple from the stream
         if batch.isEmpty():
             return
-        from se_data_pipeline_spark.sources.layout import (
-            guard_stream_batch,
-        )
-
         # a resumed checkpoint's next id collides with any offline
         # revise_term_stats run while the stream was stopped — fail
         # loudly instead of clobbering the correction delta
@@ -1175,19 +1159,8 @@ def maintain_term_stats(
         # per-writer dynamic mode: a replayed batch replaces only ITS
         # OWN batch_id partition (no session-conf mutation, no race
         # with concurrent static-pinned writers)
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "bucket")
-            .parquet(terms_dir)
-        )
-        (
-            totals.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(totals_dir)
-        )
+        _dyn_overwrite(delta, ["batch_id", "bucket"], terms_dir)
+        _dyn_overwrite(totals.coalesce(1), ["batch_id"], totals_dir)
 
     return (
         docs_stream.writeStream.outputMode("append")
@@ -1212,6 +1185,110 @@ _TERM_STATS_SCHEMA = (
 _CORPUS_TOTALS_SCHEMA = "n_docs bigint, n_tokens bigint, batch_id int"
 
 
+def _maintain_store(
+    docs_stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    label: str,
+    write_batch,
+    n_buckets: int | None = None,
+):
+    """The foreachBatch skeleton of every document-store maintainer
+    (posting, positional, shingle, MinHash), started as an
+    availableNow query. Per micro-batch: localCheckpoint the batch
+    (decoupled from the stream), skip it when empty, fail LOUDLY when
+    its checkpoint-scoped id collides with an offline-claimed fence id
+    (layout.guard_stream_batch — resuming an old checkpoint after an
+    offline revision would reuse its id and clobber its partitions),
+    then ``write_batch(spark, batch, batch_id, nb)`` writes the
+    batch's non-commit deltas and returns its commit write, which runs
+    LAST — the batch's commit point, the offline writers' crash
+    order. Exactly-once by LAYOUT: a replayed micro-batch overwrites
+    ITS OWN batch_id partitions (dynamic partition overwrite) and
+    nothing else, so a batch that died before its commit is invisible
+    to every reader until the restart from its checkpoint replays and
+    commits it.
+
+    A bucketed store passes its modulus default as ``n_buckets`` (None
+    for an unbucketed store): the modulus comes from the store's meta
+    table when the store exists (a restart with a different argument
+    must NOT fork the layout mid-store), resolved once per run and
+    reused (it is immutable, and offline ops are fenced out while the
+    stream runs), and meta is written ONCE, by the store-creating
+    batch, before its commit row: a per-batch delete+write of the
+    one-row table would open a window where a concurrent serve reads
+    'has no meta table' (ADVICE r10)."""
+    import os
+
+    nb_cache: list[int] = []
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.localCheckpoint()  # decouple from the stream
+        if batch.isEmpty():
+            return
+        spark = batch.sparkSession
+        guard_stream_batch(
+            spark,
+            os.path.join(out_dir, "offline_fence"),
+            batch_id,
+            f"{label} at {out_dir}",
+        )
+        nb = None
+        if n_buckets is not None:
+            if not nb_cache:
+                nb_cache.append(
+                    _postings_meta_buckets(spark, out_dir, default=n_buckets)
+                )
+            nb = nb_cache[0]
+        commit = write_batch(spark, batch, batch_id, nb)
+        if nb is not None:
+            fs, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
+            if not fs.exists(meta_p):
+                _write_postings_meta(spark, out_dir, nb)
+        commit()
+
+    return (
+        docs_stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(upsert)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _maintain_doc_store(
+    spec,
+    docs_stream: DataFrame,
+    out_dir: str,
+    checkpoint_dir: str,
+    n_buckets: int | None,
+    allow_revisions: bool,
+):
+    """The maintainer of a layout._DocStore family: each micro-batch
+    appends its rows under ``batch_id=N`` through the family's frame
+    builder (layout._store_deltas — the builder the batch writer and
+    the offline revision use, so batch-built and stream-maintained
+    stores serve through the same readers) plus the commit-ledger
+    row, LAST. ``allow_revisions=True`` also tombstones every batch
+    doc_id at N, so a re-emitted document's stale rows die for every
+    reader (a changed document changes its rows); the default keeps
+    the append-only-unique-doc_ids contract."""
+    if spec.bucketed:
+        n_buckets = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
+    else:
+        n_buckets = None
+    return _maintain_store(
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        spec.label,
+        lambda spark, batch, batch_id, nb: _store_deltas(
+            spec, batch, out_dir, batch_id, nb, allow_revisions
+        ),
+        n_buckets,
+    )
+
+
 def maintain_posting_lists(
     docs_stream: DataFrame,
     out_dir: str,
@@ -1226,11 +1303,8 @@ def maintain_posting_lists(
     builder (sources/layout._posting_frames, one codepath), so a
     stream-maintained store serves through bm25_from_postings
     unchanged and a periodic compact_posting_lists folds the deltas
-    back to the base. The bucket modulus comes from the store's meta
-    table when the store already exists (a restart with a different
-    `n_buckets` argument must NOT fork the layout mid-store), else
-    from `n_buckets` (default POSTINGS_TOK_BUCKETS) and is recorded
-    in meta on the first delta.
+    back to the base. The bucket modulus follows the _maintain_store
+    meta protocol (default POSTINGS_TOK_BUCKETS).
 
     ``allow_revisions=False`` (default) keeps the append-only-unique-
     doc_ids contract of maintain_term_stats: cheapest path, no
@@ -1242,74 +1316,15 @@ def maintain_posting_lists(
     replaced versions', old dl from the O(n_docs) doclens ledger —
     one bounded fold per micro-batch, the price of upsert semantics).
 
-    Exactly-once by LAYOUT (the maintain_term_stats pattern): dynamic
-    partition overwrite means a replayed micro-batch overwrites ITS
-    OWN batch_id partitions and nothing else — and the revision
-    path's prior-state fold EXCLUDES the current batch id, so a
-    replay recomputes the identical correction. Each delta is sized
-    by the batch's matching postings, never the corpus — and lands in
-    at most min(batch vocabulary, n_buckets) directories, bounding
-    the small-file growth rate per batch."""
+    Exactly-once by LAYOUT (_maintain_store): the revision path's
+    prior-state fold EXCLUDES the current batch id, so a replay
+    recomputes the identical correction. Each delta is sized by the
+    batch's matching postings, never the corpus — and lands in at
+    most min(batch vocabulary, n_buckets) directories, bounding the
+    small-file growth rate per batch. Totals is the commit row."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        POSTINGS_TOK_BUCKETS,
-        _corrected_totals,
-        _doclens_frame,
-        _hadoop_path,
-        _overlap_writes,
-        _posting_frames,
-        _postings_meta_buckets,
-        _write_postings_meta,
-        guard_stream_batch,
-    )
-
-    postings_dir = os.path.join(out_dir, "postings")
-    totals_dir = os.path.join(out_dir, "totals")
-    # the bucket modulus is immutable for the store's lifetime and
-    # offline ops are fenced out while this stream runs — resolve it
-    # on the first batch and reuse (one fewer bounded collect per
-    # micro-batch; per-RUN state only, re-read on every stream start)
-    nb_cache: list[int] = []
-
-    def _dyn(df: DataFrame, cols: list, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*cols)
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        # offline revise/delete fences its batch ids against exactly
-        # this write (sources/layout.guard_stream_batch): resuming an
-        # old checkpoint after an offline revision would reuse its id
-        # and clobber the revision's partitions — fail loudly instead
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"posting-list store at {out_dir}",
-        )
-        if not nb_cache:
-            nb_cache.append(
-                _postings_meta_buckets(
-                    spark,
-                    out_dir,
-                    default=(
-                        POSTINGS_TOK_BUCKETS
-                        if n_buckets is None
-                        else n_buckets
-                    ),
-                )
-            )
-        nb = nb_cache[0]
+    def write_batch(spark, batch, batch_id: int, nb: int):
         fs, dl_path = _hadoop_path(
             spark, os.path.join(out_dir, "doclens")
         )
@@ -1328,13 +1343,14 @@ def maintain_posting_lists(
             )
         # postings/doclens/tombstones are independent non-commit
         # deltas below the batch's commit point (totals, LAST) —
-        # overlap them (guide §2.6, layout._overlap_writes; the
-        # revise_posting_lists argument: readers only see tombstones
-        # below the committed high-water mark, and a replayed batch
-        # dynamic-overwrites its own partitions)
+        # overlapped (guide §2.6, layout._overlap_writes)
         writes = [
-            lambda: _dyn(tf, ["batch_id", "tok_bucket"], postings_dir),
-            lambda: _dyn(
+            lambda: _dyn_overwrite(
+                tf,
+                ["batch_id", "tok_bucket"],
+                os.path.join(out_dir, "postings"),
+            ),
+            lambda: _dyn_overwrite(
                 _doclens_frame(batch, batch_id),
                 ["batch_id"],
                 os.path.join(out_dir, "doclens"),
@@ -1342,34 +1358,27 @@ def maintain_posting_lists(
         ]
         if allow_revisions:
             writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    ["batch_id"],
+                lambda: _tombstone_write(
+                    batch,
+                    "doc_id",
+                    batch_id,
                     os.path.join(out_dir, "tombstones"),
                 )
             )
         _overlap_writes(*writes)
-        # meta is written ONCE, on the store-creating batch: the
-        # modulus never changes, and a per-batch delete+write of the
-        # one-row table opens a window where a concurrent
-        # bm25_from_postings serve reads 'has no meta table' or hits
-        # FileNotFound on listed-then-deleted files (ADVICE r10) —
-        # steady-state micro-batches leave the meta dir untouched
-        fs_m, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
-        if not fs_m.exists(meta_p):
-            _write_postings_meta(spark, out_dir, nb)
-        # totals LAST — the batch's commit point, matching the batch
-        # revision path's crash-ordering contract
-        _dyn(totals.coalesce(1), ["batch_id"], totals_dir)
+        return lambda: _dyn_overwrite(
+            totals.coalesce(1),
+            ["batch_id"],
+            os.path.join(out_dir, "totals"),
+        )
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain_store(
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        "posting-list store",
+        write_batch,
+        POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets,
     )
 
 
@@ -1382,113 +1391,20 @@ def maintain_positional_postings(
 ):
     """Incremental POSITIONAL posting-list maintenance — the
     streaming twin of sources/layout.write_positional_postings /
-    revise_positional_postings, sharing their frame builder
-    (layout._positional_frames) so batch-built and stream-maintained
-    stores serve phrase/proximity/AND queries through the same
-    readers. Each micro-batch appends its (doc, term, positions)
-    rows under ``batch_id=N/tok_bucket=...`` plus the commit-ledger
-    row (written LAST — the batch's commit point); the bucket modulus
-    comes from the store's meta table when the store exists, else
-    from `n_buckets`, recorded on the store-creating batch only
-    (the maintain_posting_lists meta-write-once protocol).
-
-    ``allow_revisions=False`` (default) keeps the append-only-unique-
-    doc_ids contract; ``allow_revisions=True`` tombstones every
-    re-emitted doc_id at this batch id so its stale position arrays
-    die for every reader — a changed document CHANGES ITS POSITIONS,
-    which under append-only would serve phantom/lost phrase hits.
-    Exactly-once by LAYOUT: a replayed micro-batch overwrites ITS OWN
-    partitions via dynamic partition overwrite; micro-batch ids are
-    guarded against offline-claimed fence ids
-    (layout.guard_stream_batch)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        POSTINGS_TOK_BUCKETS,
-        _hadoop_path,
-        _overlap_writes,
-        _positional_frames,
-        _postings_meta_buckets,
-        _write_postings_meta,
-        guard_stream_batch,
-    )
-
-    # modulus immutable mid-run (offline ops fenced while the stream
-    # runs): resolve once per stream start, reuse per batch
-    nb_cache: list[int] = []
-
-    def _dyn(df: DataFrame, cols: list, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*cols)
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"positional posting store at {out_dir}",
-        )
-        if not nb_cache:
-            nb_cache.append(
-                _postings_meta_buckets(
-                    spark,
-                    out_dir,
-                    default=(
-                        POSTINGS_TOK_BUCKETS
-                        if n_buckets is None
-                        else n_buckets
-                    ),
-                )
-            )
-        nb = nb_cache[0]
-        rows, batches = _positional_frames(batch, batch_id, nb)
-        # rows and tombstones are independent non-commit deltas below
-        # the batch's commit point (the ledger row, LAST) — overlap
-        # them (guide §2.6, layout._overlap_writes)
-        writes = [
-            lambda: _dyn(
-                rows,
-                ["batch_id", "tok_bucket"],
-                os.path.join(out_dir, "postings"),
-            )
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    ["batch_id"],
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        fs_m, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
-        if not fs_m.exists(meta_p):
-            _write_postings_meta(spark, out_dir, nb)
-        # ledger row LAST — the batch's commit point
-        _dyn(
-            batches.coalesce(1),
-            ["batch_id"],
-            os.path.join(out_dir, "batches"),
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    revise_positional_postings: each micro-batch appends its
+    (doc, term, positions) rows under ``batch_id=N/tok_bucket=...``
+    plus the commit-ledger row, LAST (_maintain_doc_store); the
+    bucket modulus follows the _maintain_store meta protocol.
+    ``allow_revisions=True`` tombstones every re-emitted doc_id — a
+    changed document CHANGES ITS POSITIONS, which under append-only
+    would serve phantom/lost phrase hits."""
+    return _maintain_doc_store(
+        _POSITIONAL,
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        n_buckets,
+        allow_revisions,
     )
 
 
@@ -1499,74 +1415,19 @@ def maintain_shingle_index(
     allow_revisions: bool = False,
 ):
     """Incremental shingle-index maintenance — the streaming twin of
-    sources/layout.write_shingle_index / revise_shingle_docs,
-    through the SAME frame builder (layout._shingle_frames): each
+    sources/layout.write_shingle_index / revise_shingle_docs: each
     micro-batch of ingested documents appends its (doc_id, m, h)
-    rows under ``batch_id=N`` plus the commit-ledger row (written
-    LAST). This is the continuous-ingest dedup loop closed: a batch
-    is screened via near_dups_from_index, the survivors are ingested,
-    and THIS stream adds their shingles to the index so the next
-    batch screens against them too — the corpus text is never
-    re-shingled.
-
-    ``allow_revisions=True`` tombstones re-emitted doc_ids at the
-    batch id (a changed document changes its shingle set AND its m).
-    Exactly-once by layout; micro-batch ids guarded against
-    offline-claimed fence ids."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        _overlap_writes,
-        _shingle_frames,
-        guard_stream_batch,
-    )
-
-    def _dyn(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"shingle index at {out_dir}",
-        )
-        rows, ledger = _shingle_frames(batch, batch_id)
-        # rows and tombstones overlap below the batch's commit point
-        # (the ledger row, LAST) — guide §2.6, layout._overlap_writes
-        writes = [
-            lambda: _dyn(rows, os.path.join(out_dir, "postings"))
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        # ledger row LAST — the batch's commit point
-        _dyn(ledger.coalesce(1), os.path.join(out_dir, "batches"))
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    rows under ``batch_id=N`` plus the commit-ledger row, LAST
+    (_maintain_doc_store). This is the continuous-ingest dedup loop
+    closed: a batch is screened via near_dups_from_index, the
+    survivors are ingested, and THIS stream adds their shingles to
+    the index so the next batch screens against them too — the
+    corpus text is never re-shingled. ``allow_revisions=True``
+    tombstones re-emitted doc_ids (a changed document changes its
+    shingle set AND its m)."""
+    return _maintain_doc_store(
+        _SHINGLE, docs_stream, out_dir, checkpoint_dir, None,
+        allow_revisions,
     )
 
 
@@ -1577,69 +1438,14 @@ def maintain_minhash_index(
     allow_revisions: bool = False,
 ):
     """Incremental MinHash-band-index maintenance — the streaming
-    twin of sources/layout.write_minhash_index / revise_minhash_docs
-    through the SAME frame builder (layout._minhash_frames): each
-    micro-batch of ingested documents appends its 4 (band, sig) rows
-    per doc under ``batch_id=N`` plus the commit-ledger row (written
-    LAST). Store #6's maintainer is the shingle maintainer's shape
-    verbatim — the r12 shared-lifecycle helpers mean it carries no
-    protocol logic of its own. ``allow_revisions=True`` tombstones
-    re-emitted doc_ids at the batch id; micro-batch ids are guarded
-    against offline-claimed fence ids."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.sources.layout import (
-        _minhash_frames,
-        _overlap_writes,
-        guard_stream_batch,
-    )
-
-    def _dyn(df: DataFrame, path: str) -> None:
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        guard_stream_batch(
-            spark,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"minhash band index at {out_dir}",
-        )
-        rows, ledger = _minhash_frames(batch, batch_id)
-        # rows and tombstones overlap below the batch's commit point
-        # (the ledger row, LAST) — guide §2.6, layout._overlap_writes
-        writes = [
-            lambda: _dyn(rows, os.path.join(out_dir, "postings"))
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _dyn(
-                    batch.select("doc_id")
-                    .distinct()
-                    .withColumn("batch_id", F.lit(batch_id)),
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        # ledger row LAST — the batch's commit point
-        _dyn(ledger.coalesce(1), os.path.join(out_dir, "batches"))
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    twin of sources/layout.write_minhash_index / revise_minhash_docs:
+    each micro-batch appends its 4 (band, sig) rows per doc under
+    ``batch_id=N`` plus the commit-ledger row, LAST
+    (_maintain_doc_store). ``allow_revisions=True`` tombstones
+    re-emitted doc_ids."""
+    return _maintain_doc_store(
+        _MINHASH, docs_stream, out_dir, checkpoint_dir, None,
+        allow_revisions,
     )
 
 
@@ -1781,20 +1587,15 @@ def revise_term_stats(
         )
         .withColumn("batch_id", F.lit(next_b))
     )
-    (
-        delta.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "bucket")
-        .parquet(os.path.join(out_dir, "term_stats"))
+    _dyn_overwrite(
+        delta, ["batch_id", "bucket"], os.path.join(out_dir, "term_stats")
     )
     # totals LAST — the commit point (a crash before it leaves the
     # batch id unclaimed, so a re-run reuses and overwrites it)
-    (
-        totals.coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(os.path.join(out_dir, "corpus_totals"))
+    _dyn_overwrite(
+        totals.coalesce(1),
+        ["batch_id"],
+        os.path.join(out_dir, "corpus_totals"),
     )
     return next_b
 

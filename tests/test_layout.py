@@ -923,3 +923,27 @@ def test_overlapped_writes_keep_callers_job_group(spark, tmp_path):
     assert not stray, f"jobs outside the caller's group: {sorted(stray)}"
     # postings + doclens (overlapped), totals, meta
     assert len(grouped) >= 4
+
+
+def test_serving_pools_keep_callers_job_group(spark, sf_dir):
+    """bm25_phrase_boost_served overlaps its two store builds through
+    _overlap_writes: every job the query starts, built and collected,
+    carries the caller's job group."""
+    from se_data_pipeline_spark.queries.serving import (
+        bm25_phrase_boost_served,
+    )
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    sc.setJobGroup("boost-mark", "mark")
+    spark.range(1).collect()
+    mark = max(st.getJobIdsForGroup("boost-mark"))
+    sc.setJobGroup("boost-group", "bm25_phrase_boost_served")
+    try:
+        rows = bm25_phrase_boost_served(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert rows
+    stray = {j for j in st.getJobIdsForGroup(None) if j > mark}
+    assert not stray, f"jobs outside the caller's group: {sorted(stray)}"
+    assert st.getJobIdsForGroup("boost-group")

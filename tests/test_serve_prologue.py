@@ -2,14 +2,15 @@
 what the three separate reads it replaced returned — bucket modulus,
 committed high-water mark, and term bucket ids — on every store
 state a serve can meet: fresh batch-built, revised (ledger advanced),
-legacy pre-ledger (no commit-point dir), and the frequency store's
-totals-derived high-water mark. The bucket ids additionally pin the
-driver-side pmod: Python's ``h % n`` on the collected raw xxhash64
-values must equal the writer's Catalyst pmod(xxhash64(tok), n) for
-negative hashes too."""
+and the frequency store's totals-derived high-water mark. A store
+without its commit table raises the shared missing-commit error. The
+bucket ids additionally pin the driver-side pmod: Python's ``h % n``
+on the collected raw xxhash64 values must equal the writer's Catalyst
+pmod(xxhash64(tok), n) for negative hashes too."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -34,13 +35,13 @@ def docs(spark):
 
 def _old_triple_positional(spark, store, terms):
     nb = L._postings_meta_buckets(spark, store)
-    hw = L._ledger_hw(spark, store)
+    hw = L._committed_hw(spark, store, "batches")
     return nb, hw, L._term_buckets(spark, sorted(set(terms)), nb)
 
 
 def _old_triple_frequency(spark, store, terms):
     nb = L._postings_meta_buckets(spark, store)
-    hw = L._next_postings_batch(spark, store)
+    hw = L._committed_hw(spark, store, "totals")
     return nb, hw, L._term_buckets(spark, list(terms), nb)
 
 
@@ -48,16 +49,14 @@ def test_fused_equals_triple_positional(spark, docs, tmp_path):
     store = str(tmp_path / "pos_store")
     L.write_positional_postings(docs, store)
     assert L._serve_prologue(
-        spark, store, TERMS, "batches", L._LEDGER_SCHEMA, True
+        spark, store, TERMS, "batches"
     ) == _old_triple_positional(spark, store, TERMS)
     # after a revision the ledger high-water mark moves — the fused
     # read must see the new commit point, not a cached one
     L.revise_positional_postings(
         spark, docs.filter(F.col("doc_id") == 2), store
     )
-    got = L._serve_prologue(
-        spark, store, TERMS, "batches", L._LEDGER_SCHEMA, True
-    )
+    got = L._serve_prologue(spark, store, TERMS, "batches")
     assert got == _old_triple_positional(spark, store, TERMS)
     # the batch build writes at batch_id=-1; the revision claims 0,
     # so the committed high-water mark is 1
@@ -68,35 +67,47 @@ def test_fused_equals_triple_frequency(spark, docs, tmp_path):
     store = str(tmp_path / "freq_store")
     L.write_posting_lists(docs, store)
     assert L._serve_prologue(
-        spark, store, TERMS, "totals", L._POSTINGS_TOTALS_SCHEMA, False
+        spark, store, TERMS, "totals"
     ) == _old_triple_frequency(spark, store, TERMS)
 
 
-def test_fused_legacy_store_serves_append_only(spark, docs, tmp_path):
-    # a pre-ledger positional store (no batches dir) must yield
-    # hw=None — the ADVICE r11 append-only fallback, not an error
-    store = str(tmp_path / "legacy_store")
+def _files(root: str) -> list:
+    return sorted(
+        (
+            os.path.relpath(os.path.join(d, f), root),
+            os.stat(os.path.join(d, f)).st_mtime_ns,
+        )
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def test_fused_store_without_ledger_raises(spark, docs, tmp_path):
+    # a positional store without its batches ledger never committed:
+    # the prologue, the serve, a revision and a compaction all raise
+    # the shared missing-commit error and leave the store untouched
+    store = str(tmp_path / "ledgerless_store")
     L.write_positional_postings(docs, store)
     shutil.rmtree(f"{store}/batches")
-    nb, hw, buckets = L._serve_prologue(
-        spark, store, TERMS, "batches", L._LEDGER_SCHEMA, True
-    )
-    assert hw is None
-    assert (nb, buckets) == (
-        L._postings_meta_buckets(spark, store),
-        L._term_buckets(spark, sorted(set(TERMS)), nb),
-    )
+    before = _files(store)
+    calls = [
+        lambda: L._serve_prologue(spark, store, TERMS, "batches"),
+        lambda: L.phrase_from_postings(spark, store, ("the", "pipeline")),
+        lambda: L.revise_positional_postings(
+            spark, docs.filter(F.col("doc_id") == 2), store
+        ),
+        lambda: L.compact_positional_postings(spark, store),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="no 'batches' commit table"):
+            call()
+    assert _files(store) == before
 
 
 def test_fused_missing_meta_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no meta table"):
         L._serve_prologue(
-            spark,
-            str(tmp_path / "absent"),
-            TERMS,
-            "batches",
-            L._LEDGER_SCHEMA,
-            True,
+            spark, str(tmp_path / "absent"), TERMS, "batches"
         )
 
 

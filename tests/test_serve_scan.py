@@ -7,14 +7,16 @@ one driver-side glob, instead of listing the whole store.
   prologue's jobs and nothing else — no "Listing leaf files" job.
 - On every store state a serve can meet (fresh; revised and deleted;
   an uncommitted partial batch at or above the high-water mark; a
-  legacy positional store without a ledger; a query whose bucket was
-  never written) the served rows equal both the whole-store scan the
-  pruned scan replaced and a DuckDB recomputation over the live
-  corpus.
+  query whose bucket was never written) the served rows equal both
+  the whole-store scan the pruned scan replaced and a DuckDB
+  recomputation over the live corpus.
+- A positional store without its ledger is refused, not served.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import random
 import shutil
 
@@ -202,13 +204,13 @@ def test_serve_frame_costs_only_prologue_jobs(spark, stores):
             L.bm25_from_postings,
             freq,
             BM25_Q[0],
-            ("totals", L._POSTINGS_TOTALS_SCHEMA, False),
+            ("totals",),
         ),
         (
             L.phrase_from_postings,
             pos,
             PHRASES[0],
-            ("batches", L._LEDGER_SCHEMA, True),
+            ("batches",),
         ),
     ]
     for i, (serve, store, terms, hw_args) in enumerate(cases):
@@ -263,24 +265,36 @@ def test_uncommitted_partial_batch_is_invisible(
     # rows every query would match, were the partial batch visible
     text = " ".join(sum(BM25_Q + PHRASES, ()))
     edocs = _frame(spark, {1000 + i: text for i in range(5)})
-    hw = L._next_postings_batch(spark, freq)
+    hw = L._committed_hw(spark, freq, "totals")
     tf, _ = L._posting_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(tf, ["batch_id", "tok_bucket"], f"{freq}/postings")
-    hw = L._ledger_hw(spark, pos)
+    hw = L._committed_hw(spark, pos, "batches")
     rows, _ = L._positional_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(rows, ["batch_id", "tok_bucket"], f"{pos}/postings")
     _serve_all(monkeypatch, spark, freq, pos, corpus)
 
 
-def test_legacy_positional_store_without_ledger(
-    monkeypatch, spark, stores
-):
+def test_positional_store_without_ledger_fails_loud(spark, stores):
     corpus, _, pos = stores
     shutil.rmtree(f"{pos}/batches")
-    for q in PHRASES:
-        assert _check(
-            monkeypatch, _phrase, _duck_phrase, spark, pos, corpus, q
+
+    def files():
+        return sorted(
+            (p, os.stat(p).st_mtime_ns)
+            for p in glob.glob(f"{pos}/**", recursive=True)
         )
+
+    before = files()
+    for call in (
+        lambda: _phrase(spark, pos, PHRASES[0]),
+        lambda: L.revise_positional_postings(
+            spark, _frame(spark, {0: corpus[0]}), pos
+        ),
+        lambda: L.compact_positional_postings(spark, pos),
+    ):
+        with pytest.raises(ValueError, match="no 'batches' commit table"):
+            call()
+    assert files() == before
 
 
 def test_query_bucket_without_directory(monkeypatch, spark, stores):
@@ -302,9 +316,7 @@ def test_query_bucket_without_directory(monkeypatch, spark, stores):
         monkeypatch, _phrase, _duck_phrase, spark, pos, corpus, absent
     ) == {}
     # the empty frame costs no Spark job, neither built nor collected
-    _, hw, buckets = L._serve_prologue(
-        spark, pos, absent, "batches", L._LEDGER_SCHEMA, True
-    )
+    _, hw, buckets = L._serve_prologue(spark, pos, absent, "batches")
     empty = []
     assert not _group_jobs(
         spark,

@@ -561,45 +561,158 @@ def test_ivf_revision_refuses_stream_partials(spark, tmp_path):
         )
 
 
-def test_legacy_positional_store_serves_without_ledger(
+def _files(root: str) -> list:
+    return sorted(
+        (
+            os.path.relpath(os.path.join(d, f), root),
+            os.stat(os.path.join(d, f)).st_mtime_ns,
+        )
+        for d, _, fs in os.walk(root)
+        for f in fs
+    )
+
+
+def test_positional_store_without_ledger_refuses_serve_revise_compact(
     spark, tmp_path
 ):
-    """ADVICE r11 low: a positional store persisted before the
-    batches ledger existed must serve append-only (no commit-point
-    filter) instead of raising path-not-found — and an offline
-    revision on it falls back to the physical max id and writes the
-    store's first ledger row."""
+    """A positional store without its batches ledger never committed
+    (every writer writes the ledger LAST): a serve, an offline
+    revision and a compaction each raise the shared missing-commit
+    error, and none of them touches the store on disk."""
     import shutil
 
     from se_data_pipeline_spark.sources.layout import (
+        compact_positional_postings,
         phrase_from_postings,
         revise_positional_postings,
         write_positional_postings,
     )
 
     docs = _tiny_docs(spark)
-    out = str(tmp_path / "legacy_pos")
+    out = str(tmp_path / "ledgerless_pos")
     write_positional_postings(docs, out, n_buckets=8)
-    shutil.rmtree(os.path.join(out, "batches"))  # pre-ledger layout
-
-    served = phrase_from_postings(
-        spark, out, ("alpha", "beta"), limit=10
-    )
-    assert served.count() == 6  # every doc has the bigram twice
-
-    b = revise_positional_postings(
-        spark,
-        docs.filter("doc_id = 0").withColumn(
-            "text", F.lit("alpha beta only")
+    shutil.rmtree(os.path.join(out, "batches"))
+    before = _files(out)
+    for call in (
+        lambda: phrase_from_postings(spark, out, ("alpha", "beta")),
+        lambda: revise_positional_postings(
+            spark, docs.filter("doc_id = 0"), out
         ),
-        out,
+        lambda: compact_positional_postings(spark, out),
+    ):
+        with pytest.raises(ValueError, match="no 'batches' commit table"):
+            call()
+    assert _files(out) == before
+
+
+_CRASH_TEXTS = [
+    "alpha beta gamma delta epsilon zeta",
+    "eta theta alpha beta iota kappa",
+    "lambda mu nu xi omicron pi",
+]
+
+
+def _crash_family(name: str):
+    """(maintainer, batch writer, revise, compact, serve) of one
+    ledger-store family; serve(spark, out, probe) collects sorted
+    rows."""
+    from se_data_pipeline_spark.sources import layout as L
+    from se_data_pipeline_spark.streaming import jobs as J
+
+    if name == "positional":
+        return (
+            lambda s, o, c: J.maintain_positional_postings(
+                s, o, c, n_buckets=8
+            ),
+            lambda d, o: L.write_positional_postings(d, o, n_buckets=8),
+            L.revise_positional_postings,
+            L.compact_positional_postings,
+            lambda spark, o, probe: sorted(
+                tuple(r)
+                for r in L.phrase_from_postings(
+                    spark, o, ("alpha", "beta"), limit=None
+                ).collect()
+            ),
+        )
+    if name == "shingle":
+        return (
+            J.maintain_shingle_index,
+            L.write_shingle_index,
+            L.revise_shingle_docs,
+            L.compact_shingle_index,
+            lambda spark, o, probe: sorted(
+                tuple(r)
+                for r in L.near_dups_from_index(
+                    spark, o, probe, 0.5
+                ).collect()
+            ),
+        )
+    return (
+        J.maintain_minhash_index,
+        L.write_minhash_index,
+        L.revise_minhash_docs,
+        L.compact_minhash_index,
+        lambda spark, o, probe: sorted(
+            tuple(r)
+            for r in L.lsh_candidates_from_index(spark, o, probe).collect()
+        ),
     )
-    assert b == 0  # physical max is the -1 base -> first free id
-    assert os.path.isdir(os.path.join(out, "batches"))
-    served2 = {
-        r["doc_id"]: r["n_hits"]
-        for r in phrase_from_postings(
-            spark, out, ("alpha", "beta"), limit=10
-        ).collect()
-    }
-    assert served2[0] == 1 and served2[1] == 2
+
+
+@pytest.mark.parametrize("family", ["positional", "shingle", "minhash"])
+def test_crashed_first_micro_batch_is_never_served(
+    spark, tmp_path, monkeypatch, family
+):
+    """A maintainer's first micro-batch that dies after its rows (and,
+    for the bucketed positional store, its meta) landed but before
+    its ledger row leaves rows no commit point covers. The serve, an
+    offline revision and a compaction each raise the shared
+    missing-commit error instead of reading them; the restart from
+    the checkpoint replays and commits the batch, after which the
+    serve equals an offline build of the same documents."""
+    from se_data_pipeline_spark.sources import layout as L
+
+    maintain, build, revise, compact, serve = _crash_family(family)
+    docs = spark.createDataFrame(
+        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    )
+    probe = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(src)
+    out = str(tmp_path / "store")
+    chk = str(tmp_path / "chk")
+    real = L._overlap_writes
+
+    def stream():
+        return spark.readStream.schema(docs.schema).parquet(src)
+
+    def crash_before_commit(*thunks):
+        real(*thunks)
+        if family == "positional":
+            L._write_postings_meta(spark, out, 8)
+        raise RuntimeError("injected crash before the commit row")
+
+    with monkeypatch.context() as m:
+        m.setattr(L, "_overlap_writes", crash_before_commit)
+        q = maintain(stream(), out, chk)
+        with pytest.raises(Exception):
+            q.awaitTermination(120)
+    assert os.path.isdir(os.path.join(out, "postings"))
+    assert not os.path.exists(os.path.join(out, "batches"))
+
+    for call in (
+        lambda: serve(spark, out, probe),
+        lambda: revise(spark, docs.filter("doc_id = 0"), out),
+        lambda: compact(spark, out),
+    ):
+        with pytest.raises(ValueError, match="no 'batches' commit table"):
+            call()
+
+    q = maintain(stream(), out, chk)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    truth = str(tmp_path / "truth")
+    build(docs, truth)
+    want = serve(spark, truth, probe)
+    assert want
+    assert serve(spark, out, probe) == want
