@@ -202,8 +202,8 @@ def guard_stream_batch(
 
 def drop_offline_fence(spark: SparkSession, fence_dir: str) -> None:
     """Remove a store's fence table — called by compactors whose swap
-    does not already delete it (term-stats swaps subdirs; the BQ
-    fence is a sibling of the flat index dir). After compaction every
+    does not already delete it (the BQ fence is a sibling of the flat
+    index dir). After compaction every
     claimed batch is folded into the base, so a fresh-checkpoint
     stream legitimately restarts at id 0."""
     fs, p = _hadoop_path(spark, fence_dir)
@@ -304,12 +304,16 @@ def _guard_uncommitted_partials(
 # committed high-water mark from the store's commit table
 # (_committed_hw), refuse unclaimed partials, claim the fence, write
 # the non-commit deltas (overlapped) and the commit row LAST, serve
-# committed tombstone-live rows, compact by whole-dir swap. The
+# committed tombstone-live rows, compact by whole-dir swap (side
+# tables that never change between builds — bucket meta, IVF
+# centroids and PQ — copied, not rewritten). The frequency-postings,
 # positional, shingle and MinHash stores run it through ONE
 # implementation driven by a _DocStore spec (build, revise/delete,
 # live view, compaction; the foreachBatch maintainer skeleton is
-# streaming/jobs._maintain_store). The frequency-postings, IVF, BQ and
-# term-stats families compose the same helpers by hand.
+# streaming/jobs._maintain_store, shared with the term-stats store,
+# which reads, revises and compacts behind its corpus_totals commit
+# point with the same pieces). The IVF and BQ families compose the
+# same helpers by hand.
 #
 # Fail-loud contract: every writer writes its commit table, so a
 # store without one never committed (or crashed before its first
@@ -361,21 +365,12 @@ def _overlap_writes(*thunks) -> list:
         return [f.result() for f in futures]
 
 
-def _ledger_row(
-    spark: SparkSession, path: str, batch_id: int, n_docs: int = 0
-) -> None:
-    """One commit-ledger row (written LAST by every writer — the
-    commit point). JVM-literal frame per the claim_offline_batch
-    1-row rule."""
-    from pyspark.sql import functions as F
-
+def _ledger_row(spark: SparkSession, path: str, batch_id: int) -> None:
+    """One commit-ledger row for a batch whose count is not recorded
+    (the IVF writers), written LAST by its writer — the commit
+    point."""
     _dyn_overwrite(
-        spark.range(1)
-        .select(
-            F.lit(int(n_docs)).cast("long").alias("n_docs"),
-            F.lit(int(batch_id)).cast("int").alias("batch_id"),
-        )
-        .coalesce(1),
+        _ledger_commit(spark, path, batch_id, None, None).coalesce(1),
         ["batch_id"],
         path,
     )
@@ -384,15 +379,16 @@ def _ledger_row(
 def _commit_rows(
     spark: SparkSession, out_dir: str, table: str
 ) -> DataFrame:
-    """The store's commit table — ``batches`` (the ledger stores) or
-    ``totals`` (the frequency store) — read with its explicit schema.
+    """The store's commit table — ``batches`` (the ledger stores),
+    ``totals`` (the frequency store) or ``corpus_totals`` (the
+    term-stats store) — read with its explicit schema.
     A missing table raises the shared missing-commit error: the path
     check is the read's own (no extra probe, no job), and an
     unreadable commit point must never be served as "everything
     committed"."""
     from pyspark.errors import AnalysisException
 
-    schema = _POSTINGS_TOTALS_SCHEMA if table == "totals" else _LEDGER_SCHEMA
+    schema = _LEDGER_SCHEMA if table == "batches" else _POSTINGS_TOTALS_SCHEMA
     try:
         return spark.read.schema(schema).parquet(f"{out_dir}/{table}")
     except AnalysisException as exc:
@@ -522,21 +518,47 @@ def _kill_tombstoned(
     )
 
 
+def _ledger_commit(
+    spark: SparkSession, out_dir: str, batch_id: int, docs, ids
+) -> DataFrame:
+    """A ledger store's commit row: the batch's document count — a
+    JVM-literal 0 for a delete (``docs`` None; the
+    claim_offline_batch 1-row rule)."""
+    from pyspark.sql import functions as F
+
+    if docs is None:
+        row = spark.range(1).select(F.lit(0).cast("long").alias("n_docs"))
+    else:
+        row = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    return row.withColumn("batch_id", F.lit(int(batch_id)))
+
+
 @dataclass(frozen=True)
 class _DocStore:
     """One document store family on the shared lifecycle: rows under
-    ``out_dir/postings`` partitioned by ``parts``, the ``batches``
-    commit ledger, ``tombstones`` keyed by doc_id, ``offline_fence``.
-    ``frames(docs, batch_id, n_buckets)`` is the family's frame
-    builder, returning (rows, ledger) for one document set. A store
-    whose parts include ``tok_bucket`` is bucketed: it records its
-    modulus in a ``meta`` table, and its compacted rows are
-    repartitioned by bucket (one file per bucket dir)."""
+    ``out_dir/postings`` partitioned by ``parts``, the commit table
+    ``commit``, ``tombstones`` keyed by doc_id, ``offline_fence``.
+    ``frames(docs, batch_id, n_buckets)`` is the family's row builder
+    for one document set. ``deltas`` lists extra per-batch tables as
+    (name, frame(docs, batch_id), live(spark, out_dir, before_batch)):
+    written with the rows, and folded by compaction from their
+    committed live view. ``commit_row(spark, out_dir, batch_id, docs,
+    ids)`` builds a batch's commit row once its deltas have landed
+    (``docs`` None for a delete, ``ids`` the tombstoned doc_ids or
+    None). A ``totals`` commit table holds additive corpus statistics,
+    which compaction sums; a ledger's informational n_docs is
+    recounted from the compacted rows. A store whose parts include
+    ``tok_bucket`` is bucketed: it records its modulus in a ``meta``
+    table, and its compacted rows are repartitioned by bucket (one
+    file per bucket dir)."""
 
     label: str
     schema: str
     parts: tuple
     frames: Callable
+    commit: str = "batches"
+    deltas: tuple = ()
+    commit_row: Callable = _ledger_commit
 
     @property
     def bucketed(self) -> bool:
@@ -546,20 +568,36 @@ class _DocStore:
 def _store_build(
     spec: _DocStore, docs: DataFrame, out_dir: str, n_buckets=None
 ) -> None:
-    """Batch build: ``batch_id=-1`` rows -> meta (bucketed stores) ->
-    batches ledger, in that order. Meta existing implies the rows
-    landed, so a crash mid-rows leaves a store every serve refuses
-    ("no meta table"), and the ledger LAST makes the build the
-    store's first commit."""
-    rows, ledger = spec.frames(docs, -1, n_buckets)
-    rows.write.mode("overwrite").partitionBy(*spec.parts).parquet(
-        f"{out_dir}/postings"
+    """Batch build: ``batch_id=-1`` rows and extra deltas (overlapped)
+    -> meta (bucketed stores) -> commit row, in that order. Meta
+    existing implies the rows landed, so a crash mid-rows leaves a
+    store every serve refuses ("no meta table"), and the commit row
+    LAST makes the build the store's first commit."""
+    spark = docs.sparkSession
+
+    def _write(df: DataFrame, parts, name: str) -> None:
+        df.write.mode("overwrite").partitionBy(*parts).parquet(
+            f"{out_dir}/{name}"
+        )
+
+    _overlap_writes(
+        lambda: _write(
+            spec.frames(docs, -1, n_buckets), spec.parts, "postings"
+        ),
+        *[
+            lambda name=name, frame=frame: _write(
+                frame(docs, -1), ["batch_id"], name
+            )
+            for name, frame, _ in spec.deltas
+        ],
     )
     if spec.bucketed:
-        _write_postings_meta(docs.sparkSession, out_dir, n_buckets)
-    ledger.coalesce(1).write.mode("overwrite").partitionBy(
-        "batch_id"
-    ).parquet(f"{out_dir}/batches")
+        _write_postings_meta(spark, out_dir, n_buckets)
+    _write(
+        spec.commit_row(spark, out_dir, -1, docs, None).coalesce(1),
+        ["batch_id"],
+        spec.commit,
+    )
 
 
 def _store_deltas(
@@ -569,18 +607,32 @@ def _store_deltas(
     batch_id: int,
     n_buckets,
     tombstone: bool,
+    rows: bool = True,
 ) -> Callable[[], None]:
-    """Write one batch's NON-COMMIT deltas — the rows of `docs` at
-    `batch_id`, plus (``tombstone``) a tombstone per doc_id killing
-    its rows from older batches — overlapped (_overlap_writes), and
-    return the batch's commit: the ledger-row write, which the caller
-    runs LAST. Any subset of the deltas may exist without the ledger
-    row; readers only see batches below the committed high-water
-    mark, and a re-run's dynamic overwrite replaces them."""
-    rows, ledger = spec.frames(docs, batch_id, n_buckets)
-    writes = [
-        lambda: _dyn_overwrite(rows, list(spec.parts), f"{out_dir}/postings")
-    ]
+    """Write one batch's NON-COMMIT deltas — the rows and extra deltas
+    of `docs` at `batch_id` (unless ``rows`` is False: a delete), plus
+    (``tombstone``) a tombstone per doc_id killing its rows from older
+    batches — overlapped (_overlap_writes), and return the batch's
+    commit: the commit-row write, which the caller runs LAST and which
+    builds the row only then, over the landed deltas. Any subset of
+    the deltas may exist without the commit row; readers only see
+    batches below the committed high-water mark, and a re-run's
+    dynamic overwrite replaces them."""
+    writes = []
+    if rows:
+        writes.append(
+            lambda: _dyn_overwrite(
+                spec.frames(docs, batch_id, n_buckets),
+                list(spec.parts),
+                f"{out_dir}/postings",
+            )
+        )
+        writes += [
+            lambda name=name, frame=frame: _dyn_overwrite(
+                frame(docs, batch_id), ["batch_id"], f"{out_dir}/{name}"
+            )
+            for name, frame, _ in spec.deltas
+        ]
     if tombstone:
         writes.append(
             lambda: _tombstone_write(
@@ -588,8 +640,13 @@ def _store_deltas(
             )
         )
     _overlap_writes(*writes)
+    ids = docs.select("doc_id").distinct() if tombstone else None
     return lambda: _dyn_overwrite(
-        ledger.coalesce(1), ["batch_id"], f"{out_dir}/batches"
+        spec.commit_row(
+            docs.sparkSession, out_dir, batch_id, docs if rows else None, ids
+        ).coalesce(1),
+        ["batch_id"],
+        f"{out_dir}/{spec.commit}",
     )
 
 
@@ -602,10 +659,10 @@ def _store_offline(
 ) -> int:
     """An offline revision (UPSERT) or delete, returning the batch id
     used. A re-crawled CHANGED document changes its rows (positions,
-    shingle set, signature), so stale rows would serve phantom/lost
-    hits: every doc_id in `docs` writes fresh rows AT batch N (not
-    for a delete) and a tombstone (doc_id, N) killing its rows from
-    batches < N; ids absent from the store are no-ops.
+    shingle set, signature, term counts), so stale rows would serve
+    phantom/lost hits: every doc_id in `docs` writes fresh rows AT
+    batch N (not for a delete) and a tombstone (doc_id, N) killing its
+    rows from batches < N; ids absent from the store are no-ops.
 
     N is the committed high-water mark, so a re-run after any partial
     write reuses the same id and overwrites its own partitions. The
@@ -613,43 +670,45 @@ def _store_offline(
     partials at N and claims N in the fence before any store write, so
     a maintenance stream resuming its old checkpoint afterwards fails
     loudly instead of clobbering this batch (run while the stream is
-    stopped). Rows and tombstones are written concurrently; the
-    ledger row follows them LAST as the commit point."""
+    stopped). Rows, extra deltas and tombstones are written
+    concurrently; the commit row follows them LAST as the commit
+    point."""
     recover_compacting(spark, out_dir)
     nb = (
         _postings_meta_buckets(spark, out_dir)
         if spec.bucketed and not delete
         else None
     )
-    next_b = _committed_hw(spark, out_dir, "batches")
+    next_b = _committed_hw(spark, out_dir, spec.commit)
     _offline_begin(
         spark,
         out_dir,
         f"{'delete' if delete else 'revision'} of the {spec.label} "
         f"at {out_dir}",
         next_b,
-        [f"{out_dir}/postings", f"{out_dir}/tombstones"],
+        [
+            f"{out_dir}/{name}"
+            for name in ("postings", *[d[0] for d in spec.deltas])
+        ]
+        + [f"{out_dir}/tombstones"],
     )
-    if delete:
-        _tombstone_write(docs, "doc_id", next_b, f"{out_dir}/tombstones")
-        _ledger_row(spark, f"{out_dir}/batches", next_b)
-    else:
-        commit = _store_deltas(spec, docs, out_dir, next_b, nb, True)
-        commit()
+    _store_deltas(spec, docs, out_dir, next_b, nb, True, rows=not delete)()
     return next_b
 
 
 def _store_live(
-    spec: _DocStore, spark: SparkSession, out_dir: str
+    spec: _DocStore, spark: SparkSession, out_dir: str, hw=None
 ) -> DataFrame:
     """The store's committed, tombstone-live rows — the one view its
-    serves and its compactor read (after finishing a crashed
-    compaction swap). Batches at or above the committed high-water
-    mark are a crashed operation's partials and never serve."""
+    serves and its compactor read. Batches at or above the committed
+    high-water mark are a crashed operation's partials and never
+    serve. Without ``hw`` the view finishes a crashed compaction swap
+    and reads the mark itself."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, out_dir)
-    hw = _committed_hw(spark, out_dir, "batches")
+    if hw is None:
+        recover_compacting(spark, out_dir)
+        hw = _committed_hw(spark, out_dir, spec.commit)
     rows = (
         spark.read.schema(spec.schema)
         .parquet(f"{out_dir}/postings")
@@ -658,12 +717,29 @@ def _store_live(
     return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
 
 
+def _copy_tables(
+    spark: SparkSession, src_dir: str, dst_dir: str, names: list
+) -> None:
+    """Copy side tables that never change between builds (bucket
+    meta, IVF centroids and PQ tables — maintainers and revisions
+    freeze them) from a live store into its compaction's temp sibling:
+    a driver-side Hadoop FileUtil.copy of their files, no Spark job."""
+    fs, _ = _hadoop_path(spark, src_dir)
+    conf = spark._jsc.hadoopConfiguration()
+    util = spark._jvm.org.apache.hadoop.fs.FileUtil
+    for name in names:
+        _, src = _hadoop_path(spark, f"{src_dir}/{name}")
+        _, dst = _hadoop_path(spark, f"{dst_dir}/{name}")
+        if not util.copy(fs, src, fs, dst, False, conf):
+            raise IOError(f"could not copy {src_dir}/{name} to {dst_dir}")
+
+
 def _store_compact(
     spec: _DocStore, spark: SparkSession, out_dir: str
 ) -> None:
     """Fold the store's per-batch deltas into one ``batch_id=-1`` base
     and fold its TOMBSTONES OUT — rows killed by a newer tombstone are
-    physically dropped, the ledger folds to one row, and the
+    physically dropped, the commit table folds to one row, and the
     rewritten store carries no tombstones or fence, so serves are
     back on the no-join fast path and a fresh-checkpoint stream
     legitimately restarts at id 0. Folds the COMMITTED state only.
@@ -671,37 +747,49 @@ def _store_compact(
     The WHOLE store directory is rewritten to a temp sibling and
     swapped by ONE swap_compacted call: folding rows to -1 while live
     tombstones survive would kill the entire base (-1 < any tombstone
-    batch). The folded ledger's informational n_docs is counted by
-    reading back the compacted rows just written (one column-pruned
-    read with an explicit schema — a zero-row fold writes no data
-    files) instead of evaluating the live view a second time. Run
-    while the maintenance stream is stopped."""
+    batch). A totals commit table folds to the sum of its committed
+    rows; a ledger's informational n_docs is counted by reading back
+    the compacted rows just written (one column-pruned read with an
+    explicit schema — a zero-row fold writes no data files) instead
+    of evaluating the live view a second time. Meta is copied, not
+    rewritten. Run while the maintenance stream is stopped."""
     from pyspark.sql import functions as F
 
-    rows = _store_live(spec, spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir) if spec.bucketed else None
+    recover_compacting(spark, out_dir)
+    hw = _committed_hw(spark, out_dir, spec.commit)
+    if spec.bucketed:
+        _require_postings_meta(spark, out_dir)
+    rows = _store_live(spec, spark, out_dir, hw)
 
     def _write(tmp: str) -> None:
-        folded = rows.withColumn("batch_id", F.lit(-1))
-        if spec.bucketed:
-            folded = folded.repartition(F.col("tok_bucket"))
-        folded.write.mode("overwrite").partitionBy(*spec.parts).parquet(
-            f"{tmp}/postings"
+        def _fold(df: DataFrame, parts, name: str) -> None:
+            df.withColumn("batch_id", F.lit(-1)).write.mode(
+                "overwrite"
+            ).partitionBy(*parts).parquet(f"{tmp}/{name}")
+
+        _fold(
+            rows.repartition(F.col("tok_bucket")) if spec.bucketed else rows,
+            spec.parts,
+            "postings",
         )
-        (
-            spark.read.schema("doc_id bigint")
-            .parquet(f"{tmp}/postings")
-            .select("doc_id")
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-            .withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
+        for name, _, live in spec.deltas:
+            _fold(live(spark, out_dir, hw), ["batch_id"], name)
+        if spec.commit == "totals":
+            commit = _commit_rows(spark, out_dir, "totals").agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("n_tokens").cast("long").alias("n_tokens"),
+            )
+        else:
+            commit = (
+                spark.read.schema("doc_id bigint")
+                .parquet(f"{tmp}/postings")
+                .select("doc_id")
+                .distinct()
+                .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+            )
+        _fold(commit.coalesce(1), ["batch_id"], spec.commit)
         if spec.bucketed:
-            _write_postings_meta(spark, tmp, nb)
+            _copy_tables(spark, out_dir, tmp, ["meta"])
 
     swap_compacted(spark, out_dir, _write, spec.label)
 
@@ -985,20 +1073,6 @@ def _pq_store_meta(
         raise ValueError(f"{index_path}/pq/meta is empty")
     r = rows[0]
     return int(r["m"]), int(r["sub"]), int(r["k"])
-
-
-def _pq_codebook(spark: SparkSession, index_path: str) -> list:
-    """The store's K seed vectors ordered by codeword id — a bounded
-    K-row collect (K x dims doubles, the centroid-table precedent)."""
-    rows = (
-        spark.read.schema(_PQ_CODEBOOK_SCHEMA)
-        .parquet(f"{index_path}/pq/codebook")
-        .collect()
-    )
-    return [
-        [float(x) for x in r["e"]]
-        for r in sorted(rows, key=lambda r: r["k"])
-    ]
 
 
 def _pq_code_expr(cb: list, m: int, sub: int, vec_col: str):
@@ -1413,6 +1487,42 @@ def _cos_sim_expr(q_vec: list):
     return F.when(denom != 0, dot / denom)
 
 
+def _ivf_rows(
+    vecs: DataFrame,
+    pro: dict,
+    batch_id: int,
+    vec_col: str,
+    id_col: str,
+    attr_cols: tuple,
+) -> DataFrame:
+    """The cells rows of one vector batch under the store's FROZEN
+    quantizers (``pro``: an _ivf_prologue result) — vec_id,
+    embedding, packed sign code, nearest cell, batch_id and the
+    attribute columns, plus, for a pq-carrying store, the pq_code
+    under the frozen codebook (so ivf_pq_funnel's ADC scan stays
+    valid across revisions and stream appends). NULL vectors are
+    unsearchable and dropped. Shared by revise_ivf_vectors and
+    streaming/jobs.maintain_ivf_index so the two cannot drift."""
+    from pyspark.sql import functions as F
+
+    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
+
+    rows = vecs.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("vec_id"),
+        F.col(vec_col).alias("embedding"),
+        pack_sign_bits(F.col(vec_col)).alias("code"),
+        _nearest_cell_expr(pro["cents"], vec_col).alias("cell"),
+        F.lit(batch_id).alias("batch_id"),
+        *[F.col(a) for a in attr_cols],
+    )
+    if pro["meta"] is not None:
+        m, sub, _k = pro["meta"]
+        rows = rows.withColumn(
+            "pq_code", _pq_code_expr(pro["cb"], m, sub, "embedding")
+        )
+    return rows
+
+
 def revise_ivf_vectors(
     spark: SparkSession,
     vecs_v2: DataFrame,
@@ -1459,8 +1569,7 @@ def revise_ivf_vectors(
     fs_pq, pq_p = _hadoop_path(spark, f"{index_path}/pq")
     has_pq = fs_pq.exists(pq_p)
     pro = _ivf_prologue(spark, index_path, need_pq=has_pq)
-    cents = pro["cents"]
-    if not cents:
+    if not pro["cents"]:
         raise ValueError(
             f"{index_path}/centroids is empty — build the index with "
             "write_ivf_index before revising"
@@ -1474,26 +1583,13 @@ def revise_ivf_vectors(
         [f"{index_path}/tombstones"],
         nested_paths=[f"{index_path}/cells"],
     )
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
-
-    rows = vecs_v2.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        pack_sign_bits(F.col(vec_col)).alias("code"),
-        _nearest_cell_expr(cents, vec_col).alias("cell"),
-        F.lit(next_b).alias("batch_id"),
-        *[F.col(a) for a in attr_cols],
+    # replacement rows under the FROZEN quantizers that came with the
+    # fused prologue above
+    _dyn_overwrite(
+        _ivf_rows(vecs_v2, pro, next_b, vec_col, id_col, attr_cols),
+        ["cell", "batch_id"],
+        f"{index_path}/cells",
     )
-    # PQ-carrying store: encode the replacement rows under the FROZEN
-    # codebook (same frozen-epoch rule as the coarse quantizer) so
-    # ivf_pq_funnel's ADC scan stays valid across revisions — meta +
-    # codebook came with the fused prologue above
-    if has_pq:
-        m, sub, _k = pro["meta"]
-        rows = rows.withColumn(
-            "pq_code", _pq_code_expr(pro["cb"], m, sub, "embedding")
-        )
-    _dyn_overwrite(rows, ["cell", "batch_id"], f"{index_path}/cells")
     _tombstone_write(
         vecs_v2.select(F.col(id_col).alias("vec_id")),
         "vec_id",
@@ -1976,8 +2072,9 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     batch_id second — together they implement exactly the
     revise_ivf_vectors read contract, materialized.
 
-    Crash-safety: the WHOLE index directory (centroids + folded
-    cells, sans tombstones) is rewritten to a temp sibling and
+    Crash-safety: the WHOLE index directory (folded cells sans
+    tombstones, the centroid and PQ tables copied) is written to a
+    temp sibling and
     swapped by ONE swap_compacted call — cells and tombstones must
     change together atomically (folding cells to batch_id=-1 while
     live tombstones survive would kill the entire base: -1 < any
@@ -2019,23 +2116,17 @@ def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
         .withColumn("code", pack_sign_bits(F.col("embedding")))
         .withColumn("batch_id", F.lit(-1))
     )
-    centroids = spark.read.parquet(f"{index_path}/centroids")
-    pq_meta = _pq_store_meta(spark, index_path)
-    pq_cb = _pq_codebook(spark, index_path) if pq_meta else None
+    # the frozen quantizers survive compaction verbatim (folded cells
+    # and pq_codes were assigned under them): copied, not rewritten
+    side = ["centroids"]
+    if fs.exists(_hadoop_path(spark, f"{index_path}/pq")[1]):
+        side.append("pq")
 
     def _write(tmp: str) -> None:
         folded.write.mode("overwrite").partitionBy(
             "cell", "batch_id"
         ).parquet(f"{tmp}/cells")
-        centroids.coalesce(1).write.mode("overwrite").parquet(
-            f"{tmp}/centroids"
-        )
-        if pq_meta is not None:
-            # the frozen codebook survives compaction verbatim —
-            # folded pq_codes were encoded under it
-            _write_pq_tables(
-                spark, tmp, pq_cb, pq_meta[0], pq_meta[1]
-            )
+        _copy_tables(spark, index_path, tmp, side)
         # ledger count from the COMPACTED cells just written (one
         # column-pruned read) instead of re-running the whole
         # latest-wins fold a second time — same value
@@ -2430,9 +2521,10 @@ def _pruned_postings(
 
 
 def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
-    """(postings, totals) delta frames for one document set — shared
-    by the batch builder and the streaming maintainer so the two
-    paths cannot drift."""
+    """The (term, doc_id, tf, dl) posting rows of one document set —
+    the frequency store's row builder (_FREQUENCY), shared by the
+    batch builder, the offline revision and the streaming maintainer
+    so the paths cannot drift."""
     from pyspark.sql import functions as F
 
     # Split ONCE into a carried array, then size()/explode() the
@@ -2448,7 +2540,7 @@ def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
         F.size("toks").alias("dl"),
         F.explode("toks").alias("tok"),
     )
-    tf = (
+    return (
         toks.groupBy("tok", "doc_id", "dl")
         .agg(F.count(F.lit(1)).alias("c"))
         .withColumn("batch_id", F.lit(batch_id))
@@ -2463,13 +2555,6 @@ def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
         # directory count.
         .repartition(F.col("tok_bucket"))
     )
-    totals = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("long").alias(
-            "n_tokens"
-        ),
-    ).withColumn("batch_id", F.lit(batch_id))
-    return tf, totals
 
 
 def _postings_meta_buckets(
@@ -2478,8 +2563,9 @@ def _postings_meta_buckets(
     """The store's bucket modulus, from its one-row meta table. Write
     and read MUST agree on the modulus or pruning reads the wrong
     buckets — which is why it is recorded in the store itself rather
-    than trusted to call-site defaults. `default` (when given) covers
-    a store created before the meta table existed."""
+    than trusted to call-site defaults. `default` (when given) is the
+    modulus of a store that does not exist yet — a maintainer's first
+    micro-batch creates the store and writes its meta."""
     fs, meta = _hadoop_path(spark, f"{out_dir}/meta")
     if not fs.exists(meta):
         if default is not None:
@@ -2553,55 +2639,6 @@ def _live_doclens(
     return latest.select("doc_id", "dl")
 
 
-def write_posting_lists(
-    docs: DataFrame, out_dir: str, n_buckets: int = POSTINGS_TOK_BUCKETS
-) -> None:
-    """Materialize the BM25 serving layout that doc_bm25_search's
-    docstring promises ("at 100 TB the tf table IS the posting list —
-    materialize it partitioned by term and this query becomes a
-    posting-list lookup"): the (term, doc_id, tf, dl) table written
-    PARTITIONED BY (batch_id, tok_bucket) — tok_bucket =
-    pmod(xxhash64(tok), n_buckets), `tok` itself a DATA column — with
-    a ``batch_id=-1`` base partition, plus a corpus-totals table
-    (n_docs, n_tokens) in the same delta layout and a one-row meta
-    table recording the bucket modulus. A query for K terms prunes to
-    at most K bucket directories per batch partition (parquet
-    partition pruning — executed-plan-asserted in the test) and
-    filters tok WITHIN them (parquet data-filter pushdown); document
-    frequency per query term falls out of the pruned read itself, so
-    no global vocabulary table is consulted at serve time. The
-    bounded bucket key space is the point: directory count is
-    O(n_buckets), never O(vocabulary) — partition-per-term on a
-    Zipfian 100 TB vocabulary is millions of near-empty directories
-    (r9 VERDICT). The layout is IDENTICAL to what
-    streaming/jobs.maintain_posting_lists appends (``batch_id>=0``
-    deltas), so batch-built and stream-maintained stores serve
-    through the same reader."""
-    tf, _ = _posting_frames(docs, -1, n_buckets)
-    spark = docs.sparkSession
-    # postings and doclens are INDEPENDENT non-commit writes over the
-    # same input — overlap them (guide §2.6, _overlap_writes); totals
-    # (the effective commit point) and meta follow, ordered.
-    _overlap_writes(
-        lambda: tf.write.mode("overwrite")
-        .partitionBy("batch_id", "tok_bucket")
-        .parquet(f"{out_dir}/postings"),
-        lambda: _doclens_frame(docs, -1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{out_dir}/doclens"),
-    )
-    # totals from the doclens ledger JUST WRITTEN (r13): n_docs is its
-    # row count and n_tokens the sum of its dl column — dl is the
-    # same size(split(text)) expression, so the values are identical
-    # to aggregating the corpus again, minus the third full tokenize
-    # pass the build paid (tf, totals, doclens each re-scanned docs).
-    _totals_from_doclens(spark, out_dir, -1).coalesce(1).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").parquet(f"{out_dir}/totals")
-    _write_postings_meta(spark, out_dir, n_buckets)
-
-
 def _totals_from_doclens(
     spark: SparkSession, out_dir: str, batch_id: int
 ) -> DataFrame:
@@ -2614,7 +2651,8 @@ def _totals_from_doclens(
     SUM(dl) reproduce the old values bit-for-bit (integer sums are
     order-independent; SUM skips the NULL dl a NULL-text document
     writes, exactly as SUM(size(split(NULL))) did). Callers must
-    have written the batch's doclens partition first."""
+    have written the batch's doclens partition first; a batch
+    without one (a delete) reads back (0, NULL)."""
     from pyspark.sql import functions as F
 
     fs, p = _hadoop_path(spark, f"{out_dir}/doclens")
@@ -2685,6 +2723,64 @@ def _corrected_totals(
     )
 
 
+def _totals_commit(
+    spark: SparkSession, out_dir: str, batch_id: int, docs, ids
+) -> DataFrame:
+    """The frequency store's commit row: the batch's totals read back
+    from the doclens partition it just wrote (none for a delete),
+    corrected by the replaced versions' counts when the batch writes
+    tombstones (``ids``) — so n_docs/avgdl fold additively to exactly
+    the rebuilt-corpus values. The old-side fold excludes this batch
+    (before_batch), so a crashed re-run recomputes the identical
+    correction."""
+    totals = (
+        None
+        if docs is None
+        else _totals_from_doclens(spark, out_dir, batch_id)
+    )
+    if ids is None:
+        return totals
+    return _corrected_totals(spark, out_dir, ids, batch_id, totals)
+
+
+_FREQUENCY = _DocStore(
+    "posting-list store",
+    _POSTINGS_SCHEMA,
+    ("batch_id", "tok_bucket"),
+    lambda docs, b, nb: _posting_frames(docs, b, nb),
+    commit="totals",
+    deltas=(("doclens", _doclens_frame, _live_doclens),),
+    commit_row=_totals_commit,
+)
+
+
+def write_posting_lists(
+    docs: DataFrame, out_dir: str, n_buckets: int = POSTINGS_TOK_BUCKETS
+) -> None:
+    """Materialize the BM25 serving layout that doc_bm25_search's
+    docstring promises ("at 100 TB the tf table IS the posting list —
+    materialize it partitioned by term and this query becomes a
+    posting-list lookup"): the (term, doc_id, tf, dl) table written
+    PARTITIONED BY (batch_id, tok_bucket) — tok_bucket =
+    pmod(xxhash64(tok), n_buckets), `tok` itself a DATA column — with
+    a ``batch_id=-1`` base partition, plus a doclens ledger, a
+    one-row meta table recording the bucket modulus and the
+    corpus-totals table (n_docs, n_tokens) in the same delta layout,
+    written LAST (_store_build). A query for K terms prunes to at most
+    K bucket directories per batch partition (parquet partition
+    pruning — executed-plan-asserted in the test) and filters tok
+    WITHIN them (parquet data-filter pushdown); document frequency per
+    query term falls out of the pruned read itself, so no global
+    vocabulary table is consulted at serve time. The bounded bucket
+    key space is the point: directory count is O(n_buckets), never
+    O(vocabulary) — partition-per-term on a Zipfian 100 TB vocabulary
+    is millions of near-empty directories (r9 VERDICT). The layout is
+    IDENTICAL to what streaming/jobs.maintain_posting_lists appends
+    (``batch_id>=0`` deltas), so batch-built and stream-maintained
+    stores serve through the same reader."""
+    _store_build(_FREQUENCY, docs, out_dir, n_buckets)
+
+
 def revise_posting_lists(
     spark: SparkSession, docs_v2: DataFrame, out_dir: str
 ) -> int:
@@ -2693,89 +2789,16 @@ def revise_posting_lists(
     own workflow re-probes and re-ingests channels (its ledger exists
     precisely because reruns happen, data_pipeline.py:559-577), and
     a re-crawled CHANGED document under the append-only contract
-    double-counts in postings and totals. Semantics: every doc_id in
-    `docs_v2` (unique within the batch) replaces its previous version
-    exactly once; doc_ids new to the store are plain inserts.
-
-    Mechanics — one revision batch N = the committed high-water
-    mark of the totals table (_committed_hw):
-
-    1. new postings/doclens rows land under ``batch_id=N`` (the
-       ordinary delta layout, bucket-bounded like any other batch);
-    2. a TOMBSTONE (doc_id, N) is written for every revised id —
-       readers drop that doc's rows from batches < N, so the old
-       version disappears and the new one (written AT N) serves;
-    3. a totals CORRECTION delta rides the same batch: new counts
-       minus the replaced versions' counts (old dl from the
-       O(n_docs) doclens ledger — the postings themselves are never
-       scanned), so n_docs/avgdl additively fold to exactly the
-       rebuilt-corpus values.
-
-    Postings/doclens/tombstones are independent deltas written
-    concurrently (guide §2.6); totals follows them and is the COMMIT
-    POINT: a crash before totals lands leaves the batch uncommitted
-    (whatever subset of the three deltas exists), prior-state reads
-    exclude it (before_batch=N), and a re-run reuses id N,
-    overwriting the partial partitions. Run while any maintenance stream on this
-    store is stopped — the claimed id is FENCED
-    (claim_offline_batch), so a stream resuming its old checkpoint
-    afterwards fails loudly instead of clobbering this revision's
-    partitions with its colliding micro-batch id (ADVICE r10; the
-    remedy is compact + fresh checkpoint). Returns the batch id
-    used."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    next_b = _committed_hw(spark, out_dir, "totals")
-    _offline_begin(
-        spark,
-        out_dir,
-        f"revise_posting_lists at {out_dir}",
-        next_b,
-        [
-            f"{out_dir}/postings",
-            f"{out_dir}/doclens",
-            f"{out_dir}/tombstones",
-        ],
-    )
-    ids = docs_v2.select("doc_id").distinct()
-    tf, _ = _posting_frames(docs_v2, next_b, nb)
-    # postings, doclens and tombstones are independent non-commit
-    # deltas BELOW the commit point (totals, last): overlap them
-    # (guide §2.6, _overlap_writes) — a crash inside any subset leaves
-    # the batch uncommitted exactly as the sequential order did, and
-    # the re-run's dynamic overwrite replaces all three partitions.
-    _overlap_writes(
-        lambda: _dyn_overwrite(
-            tf, ["batch_id", "tok_bucket"], f"{out_dir}/postings"
-        ),
-        lambda: _dyn_overwrite(
-            _doclens_frame(docs_v2, next_b),
-            ["batch_id"],
-            f"{out_dir}/doclens",
-        ),
-        lambda: _tombstone_write(
-            ids, "doc_id", next_b, f"{out_dir}/tombstones"
-        ),
-    )
-    # totals LAST — the commit point. The new-side counts read the
-    # doclens partition JUST WRITTEN (r13, _totals_from_doclens) —
-    # same values as re-aggregating docs_v2, one tokenize pass
-    # saved; the old-side fold still excludes this batch
-    # (before_batch=next_b), so a crashed re-run recomputes the
-    # identical correction.
-    totals_delta = _corrected_totals(
-        spark,
-        out_dir,
-        ids,
-        next_b,
-        _totals_from_doclens(spark, out_dir, next_b).drop("batch_id"),
-    )
-    _dyn_overwrite(
-        totals_delta.coalesce(1), ["batch_id"], f"{out_dir}/totals"
-    )
-    return next_b
+    double-counts in postings and totals. Every doc_id in `docs_v2`
+    (unique within the batch) replaces its previous version exactly
+    once; doc_ids new to the store are plain inserts. The shared
+    tombstone revision (_store_offline): postings and doclens rows at
+    batch N plus a tombstone per revised id, then the totals
+    CORRECTION as the commit row — new counts minus the replaced
+    versions' counts, old dl from the O(n_docs) doclens ledger (the
+    postings themselves are never scanned). Run while any maintenance
+    stream on this store is stopped. Returns the batch id used."""
+    return _store_offline(_FREQUENCY, spark, docs_v2, out_dir)
 
 
 def delete_posting_docs(
@@ -2783,33 +2806,11 @@ def delete_posting_docs(
 ) -> int:
     """Remove documents from a posting-list store: tombstones for the
     ids (killing ALL their prior rows — no replacement rows follow)
-    plus the negative totals correction, derived from the doclens
-    ledger like revise_posting_lists. Ids absent from the store are
-    no-ops (their tombstone kills nothing and contributes nothing to
-    the correction). Same commit-point ordering: totals last."""
-    from pyspark.sql import functions as F
-
-    recover_compacting(spark, out_dir)
-    next_b = _committed_hw(spark, out_dir, "totals")
-    _offline_begin(
-        spark,
-        out_dir,
-        f"delete_posting_docs at {out_dir}",
-        next_b,
-        [
-            f"{out_dir}/postings",
-            f"{out_dir}/doclens",
-            f"{out_dir}/tombstones",
-        ],
-    )
-    ids = doc_ids.select("doc_id").distinct()
-    totals_delta = _corrected_totals(spark, out_dir, ids, next_b, None)
-    _tombstone_write(ids, "doc_id", next_b, f"{out_dir}/tombstones")
-    # totals LAST — the commit point
-    _dyn_overwrite(
-        totals_delta.coalesce(1), ["batch_id"], f"{out_dir}/totals"
-    )
-    return next_b
+    plus the negative totals correction as the commit row
+    (_store_offline). Ids absent from the store are no-ops (their
+    tombstone kills nothing and contributes nothing to the
+    correction)."""
+    return _store_offline(_FREQUENCY, spark, doc_ids, out_dir, delete=True)
 
 
 # positional postings: the phrase/proximity-query layout (positions
@@ -2835,7 +2836,7 @@ _LEDGER_SCHEMA = "n_docs bigint, batch_id int"
 def _positional_frames(
     docs: DataFrame, batch_id: int, n_buckets: int
 ):
-    """(postings, batches) delta frames for one document set — shared
+    """The (doc, term, positions) rows of one document set — shared
     by the batch builder, the offline revision path, and the
     streaming maintainer so the three cannot drift."""
     from pyspark.sql import functions as F
@@ -2849,7 +2850,7 @@ def _positional_frames(
     # position travels either way), so nothing is lost by shuffling
     # the raw occurrence rows. File layout unchanged: each bucket
     # still lands whole in one task → one file per bucket dir.
-    rows = (
+    return (
         docs.select(
             "doc_id",
             F.posexplode(F.split("text", " ")).alias("pos", "tok"),
@@ -2860,10 +2861,6 @@ def _positional_frames(
         .agg(F.sort_array(F.collect_list("pos")).alias("pos"))
         .withColumn("batch_id", F.lit(batch_id))
     )
-    batches = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, batches
 
 
 _POSITIONAL = _DocStore(
@@ -3279,14 +3276,13 @@ _SHINGLE_INDEX_SCHEMA = "doc_id bigint, m int, h bigint, batch_id int"
 
 
 def _shingle_frames(docs: DataFrame, batch_id: int):
-    """(rows, ledger) delta frames for one document set: rows =
-    (doc_id, m, h) with h the xxhash64 of each distinct 5-token
-    shingle and m the doc's distinct-shingle count carried alongside
-    (so Jaccard needs no join back to the documents — the
-    queries/text._shingle_index convention). Shared by the batch
-    builder, the revision path, the probe side, and the streaming
-    maintainer. Short docs (no shingles) contribute no rows but
-    still count in the ledger."""
+    """The rows of one document set: (doc_id, m, h) with h the
+    xxhash64 of each distinct 5-token shingle and m the doc's
+    distinct-shingle count carried alongside (so Jaccard needs no
+    join back to the documents — the queries/text._shingle_index
+    convention). Shared by the batch builder, the revision path, the
+    probe side, and the streaming maintainer. Short docs (no
+    shingles) contribute no rows but still count in the ledger."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.text import word_shingles_udf
@@ -3298,7 +3294,7 @@ def _shingle_frames(docs: DataFrame, batch_id: int):
             lambda x: F.xxhash64(x),
         ).alias("hset"),
     )
-    rows = (
+    return (
         sets.filter(F.size("hset") > 0)
         .select(
             "doc_id",
@@ -3307,10 +3303,6 @@ def _shingle_frames(docs: DataFrame, batch_id: int):
         )
         .withColumn("batch_id", F.lit(batch_id))
     )
-    ledger = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, ledger
 
 
 _SHINGLE = _DocStore(
@@ -3372,7 +3364,7 @@ def near_dups_from_index(
     from pyspark.sql import functions as F
 
     idx = _store_live(_SHINGLE, spark, out_dir)
-    probe_rows, _ = _shingle_frames(new_docs, -1)
+    probe_rows = _shingle_frames(new_docs, -1)
     probe = probe_rows.select(
         F.col("doc_id").alias("new_doc"),
         F.col("m").alias("ma"),
@@ -3430,7 +3422,7 @@ _MINHASH_INDEX_SCHEMA = (
 
 
 def _minhash_frames(docs: DataFrame, batch_id: int):
-    """(rows, ledger) delta frames for one document set — one
+    """The (doc_id, band, sig) rows of one document set — one
     Arrow-batched signature pass (the minhash_lsh_candidates kernel),
     shared by the batch builder, the revision path, the probe side,
     and the streaming maintainer. Docs with <5 tokens contribute no
@@ -3439,13 +3431,9 @@ def _minhash_frames(docs: DataFrame, batch_id: int):
 
     from se_data_pipeline_spark.queries.text import _mh_band_rows
 
-    rows = docs.select("doc_id", "text").mapInPandas(
+    return docs.select("doc_id", "text").mapInPandas(
         _mh_band_rows, "doc_id long, band long, sig string"
     ).withColumn("batch_id", F.lit(batch_id))
-    ledger = docs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    ).withColumn("batch_id", F.lit(batch_id))
-    return rows, ledger
 
 
 _MINHASH = _DocStore(
@@ -3494,7 +3482,7 @@ def lsh_candidates_from_index(
     from pyspark.sql import functions as F
 
     idx = _store_live(_MINHASH, spark, out_dir)
-    probe_rows, _ = _minhash_frames(new_docs, -1)
+    probe_rows = _minhash_frames(new_docs, -1)
     return (
         probe_rows.select(
             F.col("doc_id").alias("new_doc"), "band", "sig"
@@ -3519,75 +3507,13 @@ def compact_minhash_index(spark: SparkSession, out_dir: str) -> None:
 
 def compact_posting_lists(spark: SparkSession, out_dir: str) -> None:
     """Fold a posting-list store's per-batch deltas back into a
-    single ``batch_id=-1`` base — and fold its TOMBSTONES OUT:
-    postings/doclens rows killed by a newer tombstone are physically
-    dropped, totals deltas (including revision corrections) sum into
-    one row, and the rewritten store carries no tombstones at all,
-    so serve-time reads are back on the no-join fast path.
-
-    The WHOLE store directory (postings + doclens + totals + meta,
-    sans tombstones) is rewritten to a temp sibling and swapped into
-    place by ONE swap_compacted call — tombstones and the rows they
-    kill must change together atomically: swapping postings and
-    tombstones separately has a crash window where live tombstones
-    point at the already-folded base (batch_id=-1 < tomb batch) and
-    would delete every revised document from reads (the
-    refresh_ivf_index whole-dir-swap precedent). Run ONLY while the
-    maintenance stream is stopped; committed batch ids never replay,
-    and a restarted stream appends fresh ``batch_id>=0`` deltas next
-    to the folded base."""
-    from pyspark.sql import functions as F
-
-    # a prior compaction may have died between delete and rename,
-    # leaving the store only at <out_dir>.compacting — recover BEFORE
-    # the meta read raises 'has no meta table' (whose advice to
-    # rebuild would overwrite the only surviving copy; ADVICE r10).
-    # swap_compacted's own recovery runs too late for that read.
-    recover_compacting(spark, out_dir)
-    nb = _postings_meta_buckets(spark, out_dir)
-    # fold the COMMITTED state only: a crashed revision's partial
-    # postings/tombstones (its totals commit point never landed) must
-    # not be folded into the base with their correction missing
-    hw = _committed_hw(spark, out_dir, "totals")
-    p = (
-        spark.read.schema(_POSTINGS_SCHEMA)
-        .parquet(f"{out_dir}/postings")
-        .filter(F.col("batch_id") < hw)
-    )
-    p = _kill_tombstoned(spark, p, out_dir, "doc_id", hw)
-    live_dl = _live_doclens(spark, out_dir, before_batch=hw)
-    totals = (
-        spark.read.schema(_POSTINGS_TOTALS_SCHEMA)
-        .parquet(f"{out_dir}/totals")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
-
-    def _write(tmp: str) -> None:
-        (
-            p.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "tok_bucket")
-            .parquet(f"{tmp}/postings")
-        )
-        (
-            live_dl.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/doclens")
-        )
-        (
-            totals.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/totals")
-        )
-        _write_postings_meta(spark, tmp, nb)
-
-    swap_compacted(spark, out_dir, _write, "posting-list store")
+    single ``batch_id=-1`` base — postings and doclens rows killed by
+    a newer tombstone physically dropped, the committed totals rows
+    (revision corrections included) summed into one — by one
+    whole-dir swap with no tombstones or fence (_store_compact).
+    Run ONLY while the maintenance stream is stopped; a restarted
+    stream appends fresh ``batch_id>=0`` deltas next to the base."""
+    _store_compact(_FREQUENCY, spark, out_dir)
 
 
 def bm25_from_postings(

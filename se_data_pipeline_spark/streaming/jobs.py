@@ -24,20 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from se_data_pipeline_spark.sources.layout import (
+    _FREQUENCY,
     _MINHASH,
     _POSITIONAL,
     _SHINGLE,
     POSTINGS_TOK_BUCKETS,
-    _corrected_totals,
-    _doclens_frame,
     _dyn_overwrite,
     _hadoop_path,
     _ledger_row,
-    _overlap_writes,
-    _posting_frames,
     _postings_meta_buckets,
     _store_deltas,
-    _tombstone_write,
     _write_postings_meta,
     guard_stream_batch,
 )
@@ -61,7 +57,7 @@ def _read_store_or_none(spark: SparkSession, path: str):
         # an unrelated AnalysisException whose message merely mentions
         # the token (e.g. a nested cause) as "first batch" and let the
         # next overwrite silently reset the store (ADVICE r7).
-        if exc.getErrorClass() == "PATH_NOT_FOUND":
+        if exc.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
 
@@ -362,11 +358,7 @@ def maintain_ivf_index(
     ``attr_cols`` carries the stream's metadata columns into the
     cells rows (the filtered-ANN attributes, write_ivf_index's
     contract — pass the SAME columns the store was built with)."""
-    from se_data_pipeline_spark.sources.layout import (
-        _ivf_prologue,
-        _nearest_cell_expr,
-        _pq_code_expr,
-    )
+    from se_data_pipeline_spark.sources.layout import _ivf_prologue, _ivf_rows
 
     spark = vec_stream.sparkSession
     # ONE fused job-start read (r13): centroids + (for a pq-carrying
@@ -375,37 +367,15 @@ def maintain_ivf_index(
     fs_pq, pq_p = _hadoop_path(spark, f"{index_path}/pq")
     has_pq = fs_pq.exists(pq_p)
     pro = _ivf_prologue(spark, index_path, need_pq=has_pq)
-    cents = pro["cents"]
-    if not cents:
+    if not pro["cents"]:
         raise ValueError(
             f"{index_path}/centroids is empty — run write_ivf_index "
             "first (the streaming job maintains a frozen quantizer, "
             "it does not train one)"
         )
-    cell_of = _nearest_cell_expr(cents, vec_col)
-    pq_meta = pro["meta"]
-    pq_cb = pro["cb"]
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        from se_data_pipeline_spark.functions.vectors import (
-            pack_sign_bits,
-        )
-
-        rows = batch_df.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            pack_sign_bits(F.col(vec_col)).alias("code"),
-            cell_of.alias("cell"),
-            F.lit(batch_id).alias("batch_id"),
-            *[F.col(a) for a in attr_cols],
-        )
-        if pq_meta is not None:
-            rows = rows.withColumn(
-                "pq_code",
-                _pq_code_expr(
-                    pq_cb, pq_meta[0], pq_meta[1], "embedding"
-                ),
-            )
+        rows = _ivf_rows(batch_df, pro, batch_id, vec_col, id_col, attr_cols)
         # same all-NULL-first-batch guard as maintain_bq_index: never
         # write a zero-row partitioned store
         if rows.isEmpty():
@@ -1093,86 +1063,36 @@ def maintain_term_stats(
     the statistics BM25 / TF-IDF scoring needs (queries/text.py
     doc_bm25_search), kept fresh without ever rescanning the corpus.
 
-    Exactly-once by LAYOUT, not by read-modify-write: deltas land in
-    a `batch_id=N` partition via dynamic partition overwrite, so a
-    replayed micro-batch overwrites ITS OWN partition and nothing
-    else — idempotent under Structured Streaming's batch-replay
-    contract with zero read-side work per batch. Readers
-    (read_term_stats) fold the delta partitions with one additive
-    groupBy; a periodic compact_table pass over old batch partitions
-    bounds their count. The idempotence assumes the SAME checkpoint
-    directory across restarts (batch ids are checkpoint-scoped);
-    re-pointing an existing store at a fresh checkpoint restarts ids
-    at 0 and overwrites old deltas — use a new out_dir with a new
-    checkpoint. Each delta is VOCABULARY-sized (the corpus-
-    sized token stream collapses in the batch-local groupBy), and
-    `bucket` = pmod(xxhash64(term), n_buckets) sub-partitions terms
-    so the reader's fold and any bucket-targeted lookup prune files."""
-    import os
-
-    terms_dir = os.path.join(out_dir, "term_stats")
-    totals_dir = os.path.join(out_dir, "corpus_totals")
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.localCheckpoint()  # decouple from the stream
-        if batch.isEmpty():
-            return
-        # a resumed checkpoint's next id collides with any offline
-        # revise_term_stats run while the stream was stopped — fail
-        # loudly instead of clobbering the correction delta
-        guard_stream_batch(
-            batch.sparkSession,
-            os.path.join(out_dir, "offline_fence"),
-            batch_id,
-            f"term-stats store at {out_dir}",
-        )
-        toks = batch.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        ).filter(F.col("tok") != "")
-        delta = (
-            toks.groupBy("tok")
-            .agg(
-                F.countDistinct("doc_id").alias("doc_freq"),
-                F.count(F.lit(1)).alias("coll_freq"),
-            )
-            .select(
-                "tok",
-                "doc_freq",
-                "coll_freq",
-                F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).alias(
-                    "bucket"
-                ),
-                F.lit(batch_id).alias("batch_id"),
-            )
-        )
-        # n_docs counts every batch document (a token-less doc still
-        # raises BM25's N), so it comes from batch, not toks
-        totals = (
-            batch.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-            .crossJoin(
-                toks.agg(
-                    F.count(F.lit(1)).cast("long").alias("n_tokens")
-                )
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        # per-writer dynamic mode: a replayed batch replaces only ITS
-        # OWN batch_id partition (no session-conf mutation, no race
-        # with concurrent static-pinned writers)
-        _dyn_overwrite(delta, ["batch_id", "bucket"], terms_dir)
-        _dyn_overwrite(totals.coalesce(1), ["batch_id"], totals_dir)
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    Exactly-once by LAYOUT on the shared maintainer skeleton
+    (_maintain_store): the terms delta lands in a `batch_id=N`
+    partition first and the corpus_totals row — the store's commit
+    point — LAST, both via dynamic partition overwrite, so a replayed
+    micro-batch overwrites ITS OWN partitions and nothing else, and a
+    batch that died before its totals row is invisible to
+    read_term_stats until the replay commits it. A periodic
+    compact_term_stats bounds the partition count. The idempotence
+    assumes the SAME checkpoint directory across restarts (batch ids
+    are checkpoint-scoped); re-pointing an existing store at a fresh
+    checkpoint restarts ids at 0 and overwrites old deltas — use a
+    new out_dir with a new checkpoint (or compact first). Each delta
+    is VOCABULARY-sized (the corpus-sized token stream collapses in
+    the batch-local groupBy), and `bucket` = pmod(xxhash64(term),
+    n_buckets) sub-partitions terms so the reader's fold and any
+    bucket-targeted lookup prune files."""
+    return _maintain_store(
+        docs_stream,
+        out_dir,
+        checkpoint_dir,
+        "term-stats store",
+        lambda spark, batch, batch_id, nb: _term_stats_deltas(
+            out_dir, n_buckets, batch_id, *_term_stats_frames(batch)
+        ),
     )
 
 
-# Explicit store schemas (data columns + the batch_id/bucket
-# partition columns): passing them to the reader avoids the footer-
+# Explicit store schema (data columns + the batch_id/bucket partition
+# columns; corpus_totals is a commit table, read by layout._commit_rows
+# with the totals schema): passing it to the reader avoids the footer-
 # inference job on a many-partition store AND keeps a zero-data-file
 # directory readable as an empty frame — a first micro-batch of
 # token-less documents legitimately writes a zero-row terms delta
@@ -1182,7 +1102,65 @@ _TERM_STATS_SCHEMA = (
     "tok string, doc_freq bigint, coll_freq bigint, "
     "batch_id int, bucket bigint"
 )
-_CORPUS_TOTALS_SCHEMA = "n_docs bigint, n_tokens bigint, batch_id int"
+
+
+def _term_stats_frames(docs: DataFrame, sign: int = 1):
+    """(per-term, totals) statistics of one document set, scaled by
+    `sign` (-1 subtracts a replaced version): per term its document
+    and collection frequency, and one (n_docs, n_tokens) row. n_docs
+    counts every document (a token-less doc still raises BM25's N),
+    so it comes from docs, not toks."""
+    toks = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+    ).filter(F.col("tok") != "")
+    per_term = toks.groupBy("tok").agg(
+        (F.countDistinct("doc_id") * sign).alias("doc_freq"),
+        (F.count(F.lit(1)) * sign).alias("coll_freq"),
+    )
+    totals = docs.agg(
+        (F.count(F.lit(1)) * sign).cast("long").alias("n_docs")
+    ).crossJoin(
+        toks.agg((F.count(F.lit(1)) * sign).cast("long").alias("n_tokens"))
+    )
+    return per_term, totals
+
+
+def _bucketed_terms(terms: DataFrame, n_buckets: int, batch_id: int):
+    return terms.select(
+        "tok",
+        "doc_freq",
+        "coll_freq",
+        F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).alias("bucket"),
+        F.lit(batch_id).alias("batch_id"),
+    )
+
+
+def _term_stats_deltas(
+    out_dir: str,
+    n_buckets: int,
+    batch_id: int,
+    per_term: DataFrame,
+    totals: DataFrame,
+):
+    """Write one term-stats batch's terms delta — the non-commit step,
+    through layout._overlap_writes like every store writer's — and
+    return its commit: the corpus_totals row write, run LAST."""
+    # resolved per call, not at import: layout's one overlap point
+    # (and a fault injected there) covers this writer too
+    from se_data_pipeline_spark.sources.layout import _overlap_writes
+
+    _overlap_writes(
+        lambda: _dyn_overwrite(
+            _bucketed_terms(per_term, n_buckets, batch_id),
+            ["batch_id", "bucket"],
+            f"{out_dir}/term_stats",
+        )
+    )
+    return lambda: _dyn_overwrite(
+        totals.withColumn("batch_id", F.lit(batch_id)).coalesce(1),
+        ["batch_id"],
+        f"{out_dir}/corpus_totals",
+    )
 
 
 def _maintain_store(
@@ -1194,7 +1172,8 @@ def _maintain_store(
     n_buckets: int | None = None,
 ):
     """The foreachBatch skeleton of every document-store maintainer
-    (posting, positional, shingle, MinHash), started as an
+    (posting, positional, shingle, MinHash) and the term-stats
+    maintainer, started as an
     availableNow query. Per micro-batch: localCheckpoint the batch
     (decoupled from the stream), skip it when empty, fail LOUDLY when
     its checkpoint-scoped id collides with an offline-claimed fence id
@@ -1299,86 +1278,31 @@ def maintain_posting_lists(
     """Incremental BM25 posting-list maintenance: each micro-batch of
     documents appends its (term, doc_id, tf, dl) rows under a
     ``batch_id=N/tok_bucket=...`` partition plus a doclens-ledger
-    delta and a one-row totals delta — the SAME frames as the batch
-    builder (sources/layout._posting_frames, one codepath), so a
+    delta, then its one-row totals delta LAST (_maintain_doc_store —
+    the SAME spec as the batch builder, layout._FREQUENCY), so a
     stream-maintained store serves through bm25_from_postings
     unchanged and a periodic compact_posting_lists folds the deltas
     back to the base. The bucket modulus follows the _maintain_store
     meta protocol (default POSTINGS_TOK_BUCKETS).
 
     ``allow_revisions=False`` (default) keeps the append-only-unique-
-    doc_ids contract of maintain_term_stats: cheapest path, no
-    read-side work per batch. ``allow_revisions=True`` is the
-    streaming twin of sources/layout.revise_posting_lists: a batch
-    may RE-EMIT doc_ids already in the store — each gets a tombstone
-    at this batch id (killing its older rows for every reader) and
-    the totals delta becomes a CORRECTION (new counts minus the
-    replaced versions', old dl from the O(n_docs) doclens ledger —
-    one bounded fold per micro-batch, the price of upsert semantics).
-
-    Exactly-once by LAYOUT (_maintain_store): the revision path's
-    prior-state fold EXCLUDES the current batch id, so a replay
-    recomputes the identical correction. Each delta is sized by the
-    batch's matching postings, never the corpus — and lands in at
-    most min(batch vocabulary, n_buckets) directories, bounding the
-    small-file growth rate per batch. Totals is the commit row."""
-    import os
-
-    def write_batch(spark, batch, batch_id: int, nb: int):
-        fs, dl_path = _hadoop_path(
-            spark, os.path.join(out_dir, "doclens")
-        )
-        tf, totals = _posting_frames(batch, batch_id, nb)
-        if allow_revisions and fs.exists(dl_path):
-            # totals correction: subtract the replaced versions'
-            # contribution (replay-safe: the fold excludes THIS
-            # batch) — one lazy plan, no driver round-trips
-            # (layout._corrected_totals)
-            totals = _corrected_totals(
-                spark,
-                out_dir,
-                batch.select("doc_id").distinct(),
-                batch_id,
-                totals,
-            )
-        # postings/doclens/tombstones are independent non-commit
-        # deltas below the batch's commit point (totals, LAST) —
-        # overlapped (guide §2.6, layout._overlap_writes)
-        writes = [
-            lambda: _dyn_overwrite(
-                tf,
-                ["batch_id", "tok_bucket"],
-                os.path.join(out_dir, "postings"),
-            ),
-            lambda: _dyn_overwrite(
-                _doclens_frame(batch, batch_id),
-                ["batch_id"],
-                os.path.join(out_dir, "doclens"),
-            ),
-        ]
-        if allow_revisions:
-            writes.append(
-                lambda: _tombstone_write(
-                    batch,
-                    "doc_id",
-                    batch_id,
-                    os.path.join(out_dir, "tombstones"),
-                )
-            )
-        _overlap_writes(*writes)
-        return lambda: _dyn_overwrite(
-            totals.coalesce(1),
-            ["batch_id"],
-            os.path.join(out_dir, "totals"),
-        )
-
-    return _maintain_store(
+    doc_ids contract: no read-side work per batch.
+    ``allow_revisions=True`` is the streaming twin of
+    sources/layout.revise_posting_lists: a batch may RE-EMIT doc_ids
+    already in the store — each gets a tombstone at this batch id
+    (killing its older rows for every reader) and the totals delta
+    becomes a CORRECTION (new counts minus the replaced versions',
+    old dl from the O(n_docs) doclens ledger — one bounded fold per
+    micro-batch, the price of upsert semantics; the fold excludes the
+    current batch id, so a replay recomputes the identical
+    correction)."""
+    return _maintain_doc_store(
+        _FREQUENCY,
         docs_stream,
         out_dir,
         checkpoint_dir,
-        "posting-list store",
-        write_batch,
-        POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets,
+        n_buckets,
+        allow_revisions,
     )
 
 
@@ -1450,26 +1374,37 @@ def maintain_minhash_index(
 
 
 def read_term_stats(spark: SparkSession, out_dir: str):
-    """Fold the maintain_term_stats delta partitions into current
-    statistics: returns (term_stats_df with one row per term, totals
-    row with n_docs/n_tokens). The fold is one additive groupBy over
-    vocabulary-sized deltas — never touches the corpus. Reads with
-    the explicit store schemas (no inference job; empty-delta dirs
-    fold as empty). Terms whose folded doc_freq reaches 0 (every
-    containing document revised away via revise_term_stats' negative
-    deltas) leave the vocabulary, matching a rebuild."""
-    import os
-
-    from se_data_pipeline_spark.sources.layout import recover_compacting
+    """Fold the COMMITTED term-stats deltas into current statistics:
+    returns (term_stats_df with one row per term, totals row with
+    n_docs/n_tokens). corpus_totals is the store's commit table (every
+    writer's LAST write), so its rows are the committed batches and
+    the terms delta of a batch at or above their high-water mark is a
+    crashed write's partial, never read. The commit rows — one per
+    batch since the last compaction — are read in one bounded collect
+    (layout._commit_rows; a store without them raises the shared
+    missing-commit error), which yields both the mark and the folded
+    totals; the terms fold is one additive groupBy over
+    vocabulary-sized deltas, read with the explicit schema (no
+    inference job; empty-delta dirs fold as empty). Terms whose
+    folded doc_freq reaches 0 (every containing document revised away
+    via revise_term_stats' negative deltas) leave the vocabulary,
+    matching a rebuild."""
+    from se_data_pipeline_spark.sources.layout import (
+        _commit_rows,
+        _hw_after,
+        recover_compacting,
+    )
 
     # a compact_term_stats swap may have died between delete and
-    # rename on either sub-store — finish it before the reads raise
-    # (the swappable-store entry protocol, ADVICE r10)
-    recover_compacting(spark, os.path.join(out_dir, "term_stats"))
-    recover_compacting(spark, os.path.join(out_dir, "corpus_totals"))
+    # rename — finish it before the reads raise (the swappable-store
+    # entry protocol, ADVICE r10)
+    recover_compacting(spark, out_dir)
+    commits = _commit_rows(spark, out_dir, "corpus_totals").collect()
+    hw = _hw_after(max((r["batch_id"] for r in commits), default=None))
     terms = (
         spark.read.schema(_TERM_STATS_SCHEMA)
-        .parquet(os.path.join(out_dir, "term_stats"))
+        .parquet(f"{out_dir}/term_stats")
+        .filter(F.col("batch_id") < hw)
         .groupBy("tok")
         .agg(
             F.sum("doc_freq").alias("doc_freq"),
@@ -1477,14 +1412,12 @@ def read_term_stats(spark: SparkSession, out_dir: str):
         )
         .filter(F.col("doc_freq") > 0)
     )
-    totals = (
-        spark.read.schema(_CORPUS_TOTALS_SCHEMA)
-        .parquet(os.path.join(out_dir, "corpus_totals"))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-    )
+
+    def _sum(col: str):
+        vals = [r[col] for r in commits if r[col] is not None]
+        return F.lit(sum(vals) if vals else None).cast("long").alias(col)
+
+    totals = spark.range(1).select(_sum("n_docs"), _sum("n_tokens"))
     return terms, totals
 
 
@@ -1513,52 +1446,30 @@ def revise_term_stats(
     store cannot check a version it never kept) — that is the price
     of an O(vocabulary) store; the posting-list store keeps a
     doclens ledger and needs no old text. `n_buckets` must match the
-    store's modulus (maintain_term_stats default 64). Run while the
-    maintenance stream is stopped — the batch id is FENCED against
-    the stream resuming its old checkpoint (claim_offline_batch);
-    returns the batch id used."""
-    import os
-
+    store's modulus (maintain_term_stats default 64). The batch id is
+    the committed high-water mark of corpus_totals; the shared
+    offline prologue (layout._offline_begin) refuses a crashed
+    micro-batch's unclaimed terms delta at that id and FENCES the id
+    against the stream resuming its old checkpoint (run while the
+    stream is stopped); the corpus_totals row is the commit, LAST.
+    Returns the batch id used."""
     from se_data_pipeline_spark.sources.layout import (
-        claim_offline_batch,
+        _committed_hw,
+        _offline_begin,
         recover_compacting,
     )
 
-    recover_compacting(spark, os.path.join(out_dir, "term_stats"))
-    recover_compacting(spark, os.path.join(out_dir, "corpus_totals"))
-
-    def _sided(docs: DataFrame, sign: int):
-        toks = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("tok")
-        ).filter(F.col("tok") != "")
-        per_term = toks.groupBy("tok").agg(
-            (F.countDistinct("doc_id") * sign).alias("doc_freq"),
-            (F.count(F.lit(1)) * sign).alias("coll_freq"),
-        )
-        totals = docs.agg(
-            (F.count(F.lit(1)) * sign).cast("long").alias("n_docs")
-        ).crossJoin(
-            toks.agg(
-                (F.count(F.lit(1)) * sign).cast("long").alias(
-                    "n_tokens"
-                )
-            )
-        )
-        return per_term, totals
-
-    mx = (
-        spark.read.schema(_CORPUS_TOTALS_SCHEMA)
-        .parquet(os.path.join(out_dir, "corpus_totals"))
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
+    recover_compacting(spark, out_dir)
+    next_b = _committed_hw(spark, out_dir, "corpus_totals")
+    _offline_begin(
+        spark,
+        out_dir,
+        f"revise_term_stats at {out_dir}",
+        next_b,
+        [f"{out_dir}/term_stats"],
     )
-    next_b = max(0, (mx if mx is not None else -1) + 1)
-    claim_offline_batch(
-        spark, os.path.join(out_dir, "offline_fence"), next_b
-    )
-
-    new_t, new_tot = _sided(new_docs, 1)
-    old_t, old_tot = _sided(old_docs, -1)
+    new_t, new_tot = _term_stats_frames(new_docs, 1)
+    old_t, old_tot = _term_stats_frames(old_docs, -1)
     delta = (
         new_t.unionByName(old_t)
         .groupBy("tok")
@@ -1569,41 +1480,19 @@ def revise_term_stats(
         .filter(
             (F.col("doc_freq") != 0) | (F.col("coll_freq") != 0)
         )
-        .select(
-            "tok",
-            "doc_freq",
-            "coll_freq",
-            F.pmod(F.xxhash64("tok"), F.lit(n_buckets)).alias(
-                "bucket"
-            ),
-            F.lit(next_b).alias("batch_id"),
-        )
     )
-    totals = (
-        new_tot.unionByName(old_tot)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .withColumn("batch_id", F.lit(next_b))
+    totals = new_tot.unionByName(old_tot).agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("n_tokens"),
     )
-    _dyn_overwrite(
-        delta, ["batch_id", "bucket"], os.path.join(out_dir, "term_stats")
-    )
-    # totals LAST — the commit point (a crash before it leaves the
-    # batch id unclaimed, so a re-run reuses and overwrites it)
-    _dyn_overwrite(
-        totals.coalesce(1),
-        ["batch_id"],
-        os.path.join(out_dir, "corpus_totals"),
-    )
+    _term_stats_deltas(out_dir, n_buckets, next_b, delta, totals)()
     return next_b
 
 
 def compact_term_stats(
     spark: SparkSession, out_dir: str, n_buckets: int = 64
 ) -> None:
-    """Fold all maintain_term_stats delta partitions into a single
+    """Fold the committed term-stats deltas into a single
     `batch_id=-1` base partition (totals likewise), bounding the
     partition count that accrues one-per-micro-batch. Run ONLY while
     the stream is stopped: committed batches never replay (their ids
@@ -1614,82 +1503,23 @@ def compact_term_stats(
     of compact_table's small-file pass, but fold-aware: it shrinks
     ROWS to one per (term, bucket), not just files.
 
-    Each store is folded to a temp SIBLING path and swapped into place
-    (sources/layout.swap_compacted), replacing the old in-place
-    overwrite whose localCheckpoint() held the only copy in
-    non-replicated executor storage while the source was being deleted
-    (ADVICE r8 — the compact_ivf_index finding applies here too). The
-    per-store swap also makes the old static-vs-dynamic
-    partitionOverwriteMode hazard moot: the tmp dir starts empty, so
-    no stale delta partition can survive the write. The two stores
-    swap independently; a crash between them leaves term_stats folded
-    and corpus_totals un-folded — both states read correctly through
-    read_term_stats' additive fold."""
-    import os
+    The WHOLE store directory is written to a temp sibling and
+    swapped into place by ONE sources/layout.swap_compacted call, so
+    both tables change together and the offline fence (not copied)
+    goes with the swap; a crashed uncommitted delta is dropped, never
+    folded. The temp dir starts empty, so the static-vs-dynamic
+    partitionOverwriteMode hazard of an in-place overwrite is moot:
+    no stale delta partition can survive the write."""
+    from se_data_pipeline_spark.sources.layout import swap_compacted
 
-    from pyspark.sql import functions as F
+    terms, totals = read_term_stats(spark, out_dir)
 
-    from se_data_pipeline_spark.sources.layout import (
-        drop_offline_fence,
-        recover_compacting,
-        swap_compacted,
-    )
+    def _write(tmp: str) -> None:
+        _bucketed_terms(terms, n_buckets, -1).write.mode(
+            "overwrite"
+        ).partitionBy("batch_id", "bucket").parquet(f"{tmp}/term_stats")
+        totals.withColumn("batch_id", F.lit(-1)).coalesce(1).write.mode(
+            "overwrite"
+        ).partitionBy("batch_id").parquet(f"{tmp}/corpus_totals")
 
-    # finish any crashed prior swap on EITHER sub-store before the
-    # first _write's read_term_stats touches both paths (the second
-    # swap's own recovery would run only after that read raised)
-    recover_compacting(spark, os.path.join(out_dir, "term_stats"))
-    recover_compacting(spark, os.path.join(out_dir, "corpus_totals"))
-
-    def _write_terms(tmp: str) -> None:
-        terms, _ = read_term_stats(spark, out_dir)
-        (
-            terms.select(
-                "tok",
-                "doc_freq",
-                "coll_freq",
-                F.pmod(
-                    F.xxhash64("tok"), F.lit(n_buckets)
-                ).alias("bucket"),
-                F.lit(-1).alias("batch_id"),
-            )
-            .write.mode("overwrite")
-            .partitionBy("batch_id", "bucket")
-            .parquet(tmp)
-        )
-
-    def _write_totals(tmp: str) -> None:
-        _, totals = read_term_stats(spark, out_dir)
-        (
-            totals.withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
-        )
-
-    swap_compacted(
-        spark,
-        os.path.join(out_dir, "term_stats"),
-        _write_terms,
-        "term-stats store",
-    )
-    # this store swaps SUBDIRS, so the fence must be dropped
-    # explicitly — inside the LAST swap's commit window (after both
-    # folds are durable, before the final live delete; ADVICE r11:
-    # dropping it after the swap left a crash window whose stale
-    # claimed ids spuriously fence a fresh-checkpoint stream). It
-    # must not drop any earlier: between the two swaps the claimed
-    # revision deltas still live unfolded in corpus_totals, where a
-    # resumed old-checkpoint stream would clobber them. Narrowed
-    # contract: an interrupted compaction must be re-run before any
-    # stream restarts.
-    swap_compacted(
-        spark,
-        os.path.join(out_dir, "corpus_totals"),
-        _write_totals,
-        "corpus-totals store",
-        pre_commit=lambda: drop_offline_fence(
-            spark, os.path.join(out_dir, "offline_fence")
-        ),
-    )
+    swap_compacted(spark, out_dir, _write, "term-stats store")

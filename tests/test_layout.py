@@ -838,9 +838,8 @@ def test_positional_meta_absent_when_rows_write_fails(
     real = L._positional_frames
 
     def failing(docs, batch_id, n_buckets):
-        rows, batches = real(docs, batch_id, n_buckets)
         boom = F.assert_true(F.col("doc_id") < 0, "injected rows crash")
-        return rows.filter(boom.isNull()), batches
+        return real(docs, batch_id, n_buckets).filter(boom.isNull())
 
     monkeypatch.setattr(L, "_positional_frames", failing)
     out = str(tmp_path / "pos")

@@ -266,10 +266,10 @@ def test_uncommitted_partial_batch_is_invisible(
     text = " ".join(sum(BM25_Q + PHRASES, ()))
     edocs = _frame(spark, {1000 + i: text for i in range(5)})
     hw = L._committed_hw(spark, freq, "totals")
-    tf, _ = L._posting_frames(edocs, hw, N_BUCKETS)
+    tf = L._posting_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(tf, ["batch_id", "tok_bucket"], f"{freq}/postings")
     hw = L._committed_hw(spark, pos, "batches")
-    rows, _ = L._positional_frames(edocs, hw, N_BUCKETS)
+    rows = L._positional_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(rows, ["batch_id", "tok_bucket"], f"{pos}/postings")
     _serve_all(monkeypatch, spark, freq, pos, corpus)
 

@@ -452,7 +452,7 @@ def test_offline_revision_refuses_stream_partials(spark, tmp_path):
     write_positional_postings(docs, out, n_buckets=8)
 
     # simulate the crashed stream micro-batch: rows at id 0, NO ledger
-    stray_rows, _ = _positional_frames(
+    stray_rows = _positional_frames(
         docs.filter("doc_id = 0").withColumn(
             "text", F.lit("alpha beta stray")
         ),
@@ -487,7 +487,7 @@ def test_offline_revision_refuses_stream_partials(spark, tmp_path):
 
     # a crashed OFFLINE revision's partials are exempt: claim the id
     # first, leave partial rows, re-run with the same input
-    stray2, _ = _positional_frames(revised, 1, 8)
+    stray2 = _positional_frames(revised, 1, 8)
     claim_offline_batch(spark, os.path.join(out, "offline_fence"), 1)
     (
         stray2.write.mode("overwrite")
@@ -613,12 +613,50 @@ _CRASH_TEXTS = [
 
 
 def _crash_family(name: str):
-    """(maintainer, batch writer, revise, compact, serve) of one
-    ledger-store family; serve(spark, out, probe) collects sorted
-    rows."""
+    """(maintainer, batch writer, revise, compact, serve, commit table)
+    of one store family; serve(spark, out, probe) collects sorted
+    rows (term stats: the read_term_stats fold)."""
     from se_data_pipeline_spark.sources import layout as L
     from se_data_pipeline_spark.streaming import jobs as J
 
+    if name == "frequency":
+        return (
+            lambda s, o, c: J.maintain_posting_lists(s, o, c, n_buckets=8),
+            lambda d, o: L.write_posting_lists(d, o, n_buckets=8),
+            L.revise_posting_lists,
+            L.compact_posting_lists,
+            lambda spark, o, probe: sorted(
+                tuple(r)
+                for r in L.bm25_from_postings(
+                    spark, o, ("alpha", "beta", "mu")
+                ).collect()
+            ),
+            "totals",
+        )
+    if name == "term_stats":
+
+        def fold(spark, o, probe):
+            terms, totals = J.read_term_stats(spark, o)
+            return sorted(tuple(r) for r in terms.collect()), [
+                tuple(r) for r in totals.collect()
+            ]
+
+        def build(docs, o):
+            # the maintainer over a fresh checkpoint: one batch of all
+            # the documents
+            src = o + "_src"
+            docs.coalesce(1).write.parquet(src)
+            s = docs.sparkSession.readStream.schema(docs.schema).parquet(src)
+            J.maintain_term_stats(s, o, o + "_chk").awaitTermination(120)
+
+        return (
+            J.maintain_term_stats,
+            build,
+            lambda spark, d, o: J.revise_term_stats(spark, o, d.limit(0), d),
+            J.compact_term_stats,
+            fold,
+            "corpus_totals",
+        )
     if name == "positional":
         return (
             lambda s, o, c: J.maintain_positional_postings(
@@ -633,6 +671,7 @@ def _crash_family(name: str):
                     spark, o, ("alpha", "beta"), limit=None
                 ).collect()
             ),
+            "batches",
         )
     if name == "shingle":
         return (
@@ -646,6 +685,7 @@ def _crash_family(name: str):
                     spark, o, probe, 0.5
                 ).collect()
             ),
+            "batches",
         )
     return (
         J.maintain_minhash_index,
@@ -656,39 +696,72 @@ def _crash_family(name: str):
             tuple(r)
             for r in L.lsh_candidates_from_index(spark, o, probe).collect()
         ),
+        "batches",
     )
 
 
-@pytest.mark.parametrize("family", ["positional", "shingle", "minhash"])
+_CRASH_FAMILIES = [
+    "positional",
+    "shingle",
+    "minhash",
+    "frequency",
+    "term_stats",
+]
+
+
+@pytest.mark.parametrize(
+    "family,crashed",
+    [pytest.param(f, 0, id=f) for f in _CRASH_FAMILIES]
+    + [pytest.param(f, 1, id=f"{f}-second") for f in _CRASH_FAMILIES],
+)
 def test_crashed_first_micro_batch_is_never_served(
-    spark, tmp_path, monkeypatch, family
+    spark, tmp_path, monkeypatch, family, crashed
 ):
-    """A maintainer's first micro-batch that dies after its rows (and,
-    for the bucketed positional store, its meta) landed but before
-    its ledger row leaves rows no commit point covers. The serve, an
-    offline revision and a compaction each raise the shared
-    missing-commit error instead of reading them; the restart from
-    the checkpoint replays and commits the batch, after which the
-    serve equals an offline build of the same documents."""
+    """A maintainer's micro-batch that dies after its non-commit
+    writes (and, for the bucketed stores, the meta a store-creating
+    batch writes) but before its commit row leaves rows no commit
+    point covers. The crash is injected at the one write step every
+    maintainer shares (layout._overlap_writes).
+
+    Crashed FIRST batch: the serve, an offline revision and a
+    compaction each raise the shared missing-commit error instead of
+    reading them. Crashed SECOND batch: the serve still equals the
+    state after the first batch, and an offline revision refuses the
+    unclaimed partials with the store's files unchanged. Either way
+    the restart from the checkpoint replays and commits the batch,
+    after which the serve equals an offline build of every batch's
+    documents."""
     from se_data_pipeline_spark.sources import layout as L
 
-    maintain, build, revise, compact, serve = _crash_family(family)
+    maintain, build, revise, compact, serve, commit = _crash_family(family)
     docs = spark.createDataFrame(
         list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
     )
     probe = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
     src = str(tmp_path / "src")
-    docs.coalesce(1).write.parquet(src)
     out = str(tmp_path / "store")
     chk = str(tmp_path / "chk")
+    rows_dir = "term_stats" if family == "term_stats" else "postings"
     real = L._overlap_writes
 
     def stream():
         return spark.readStream.schema(docs.schema).parquet(src)
 
+    if crashed:
+        docs.filter("doc_id < 2").coalesce(1).write.parquet(src)
+        q = maintain(stream(), out, chk)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        before = serve(spark, out, probe)
+        docs.filter("doc_id >= 2").coalesce(1).write.mode("append").parquet(
+            src
+        )
+    else:
+        docs.coalesce(1).write.parquet(src)
+
     def crash_before_commit(*thunks):
         real(*thunks)
-        if family == "positional":
+        if family in ("positional", "frequency") and not crashed:
             L._write_postings_meta(spark, out, 8)
         raise RuntimeError("injected crash before the commit row")
 
@@ -697,16 +770,25 @@ def test_crashed_first_micro_batch_is_never_served(
         q = maintain(stream(), out, chk)
         with pytest.raises(Exception):
             q.awaitTermination(120)
-    assert os.path.isdir(os.path.join(out, "postings"))
-    assert not os.path.exists(os.path.join(out, "batches"))
+    assert os.path.isdir(os.path.join(out, rows_dir, f"batch_id={crashed}"))
 
-    for call in (
-        lambda: serve(spark, out, probe),
-        lambda: revise(spark, docs.filter("doc_id = 0"), out),
-        lambda: compact(spark, out),
-    ):
-        with pytest.raises(ValueError, match="no 'batches' commit table"):
-            call()
+    if crashed:
+        assert serve(spark, out, probe) == before
+        files = _files(out)
+        with pytest.raises(RuntimeError, match="uncommitted rows"):
+            revise(spark, docs.filter("doc_id = 0"), out)
+        assert _files(out) == files
+    else:
+        assert not os.path.exists(os.path.join(out, commit))
+        for call in (
+            lambda: serve(spark, out, probe),
+            lambda: revise(spark, docs.filter("doc_id = 0"), out),
+            lambda: compact(spark, out),
+        ):
+            with pytest.raises(
+                ValueError, match=f"no '{commit}' commit table"
+            ):
+                call()
 
     q = maintain(stream(), out, chk)
     q.awaitTermination(120)
