@@ -830,22 +830,20 @@ def _bq_served_oracle() -> str:
 
 @query("bq_served_topk", oracle=_bq_served_oracle())
 def bq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The two-stage BQ funnel served from a MATERIALIZED delta-layout
-    index after a DELETE cycle (r10 VERDICT next #3 — the last store
-    without a serving-oracle entry): write_bq_index(delta=True) packs
-    the sign codes once, delete_bq_vectors knocks out every
-    vec_id % 7 == 3 via in-band NULL-code markers at a fresh batch
-    id, then bq_candidates' latest-wins fold ranks Hamming stage-1
-    over the LIVE codes only and the exact cosine rerank keeps the
-    top-20. The oracle replays codes, Hamming cut, and rerank in SQL
-    over the post-delete corpus — a deleted vector resurrecting
-    through a stale code partition (or a marker knocking out the
-    wrong id) enters/leaves the candidate set and fails the hash.
+    """The two-stage BQ funnel served from a MATERIALIZED index after
+    a DELETE cycle: write_bq_index packs the sign codes once,
+    delete_bq_vectors tombstones every vec_id % 7 == 3 at the next
+    committed batch id, then bq_candidates ranks Hamming stage-1 over
+    the committed, tombstone-live codes only and the exact cosine
+    rerank keeps the top-20. The oracle replays codes, Hamming cut,
+    and rerank in SQL over the post-delete corpus — a deleted vector
+    resurrecting through a stale code (or a tombstone knocking out
+    the wrong id) enters/leaves the candidate set and fails the hash.
 
     Scale: stage 1 reads 8 bytes/vector (id+code; parquet column
     pruning keeps the floats on disk), TakeOrderedAndProject heaps
     per partition; the rerank touches exactly 100 candidate vectors;
-    the delete is one tiny marker partition, folded away by
+    the delete is one tiny tombstone partition, folded away by
     compact_bq_index."""
     from se_data_pipeline_spark.functions.vectors import pack_sign_bits
     from se_data_pipeline_spark.queries.vectors import (
@@ -876,9 +874,7 @@ def bq_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "vec_id bigint, hamming int, cos_sim double"
         )
     store = _scratch("bq_served")
-    write_bq_index(
-        emb.select("vec_id", "embedding"), store, delta=True
-    )
+    write_bq_index(emb.select("vec_id", "embedding"), store)
     delete_bq_vectors(
         spark, emb.filter("vec_id % 7 = 3").select("vec_id"), store
     )

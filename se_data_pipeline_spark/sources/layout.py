@@ -60,7 +60,6 @@ def swap_compacted(
     live_path: str,
     write_fn: Callable[[str], None],
     what: str = "store",
-    pre_commit: Callable[[], None] | None = None,
 ) -> None:
     """Crash-safe store compaction (ADVICE r8): write the folded base
     to a temp SIBLING path, then swap it into place. The live store is
@@ -79,17 +78,9 @@ def swap_compacted(
     posix; on S3A it is object copies, still recoverable because the
     sibling persists until the rename returns true).
 
-    ``pre_commit`` (optional) runs after ``write_fn`` has made the
-    folded copy fully durable at the sibling path and immediately
-    before the live delete — i.e. inside the swap's commit window.
-    Compactors whose offline fence lives OUTSIDE the swapped
-    directory drop it here (ADVICE r11): dropping it after the swap
-    leaves a crash window where stale claimed ids spuriously fence a
-    fresh-checkpoint stream. The trade is a narrowed contract, which
-    callers must document: once pre_commit runs, an INTERRUPTED
-    compaction must be re-run to completion before any maintenance
-    stream restarts — the claimed-id fence no longer guards the
-    unfolded live copy during that recovery window."""
+    Every store keeps its offline fence inside the swapped directory,
+    so the swap folds the claimed batches and drops the fence in the
+    same rename."""
     fs, live = _hadoop_path(spark, live_path)
     tmp_str = live_path.rstrip("/") + ".compacting"
     _, tmp = _hadoop_path(spark, tmp_str)
@@ -102,8 +93,6 @@ def swap_compacted(
     if fs.exists(tmp):
         fs.delete(tmp, True)  # stale leftover from a failed WRITE
     write_fn(tmp_str)
-    if pre_commit is not None:
-        pre_commit()
     fs.delete(live, True)
     if not fs.rename(tmp, live):
         raise IOError(
@@ -201,11 +190,10 @@ def guard_stream_batch(
 
 
 def drop_offline_fence(spark: SparkSession, fence_dir: str) -> None:
-    """Remove a store's fence table — called by compactors whose swap
-    does not already delete it (the BQ fence is a sibling of the flat
-    index dir). After compaction every
-    claimed batch is folded into the base, so a fresh-checkpoint
-    stream legitimately restarts at id 0."""
+    """Remove a store's fence table. Every compactor's whole-dir swap
+    already drops its store's fence; after compaction every claimed
+    batch is folded into the base, so a fresh-checkpoint stream
+    legitimately restarts at id 0."""
     fs, p = _hadoop_path(spark, fence_dir)
     if fs.exists(p):
         fs.delete(p, True)
@@ -307,13 +295,12 @@ def _guard_uncommitted_partials(
 # committed tombstone-live rows, compact by whole-dir swap (side
 # tables that never change between builds — bucket meta, IVF
 # centroids and PQ — copied, not rewritten). The frequency-postings,
-# positional, shingle and MinHash stores run it through ONE
+# positional, shingle, MinHash, IVF and BQ stores run it through ONE
 # implementation driven by a _DocStore spec (build, revise/delete,
 # live view, compaction; the foreachBatch maintainer skeleton is
 # streaming/jobs._maintain_store, shared with the term-stats store,
 # which reads, revises and compacts behind its corpus_totals commit
-# point with the same pieces). The IVF and BQ families compose the
-# same helpers by hand.
+# point with the same pieces).
 #
 # Fail-loud contract: every writer writes its commit table, so a
 # store without one never committed (or crashed before its first
@@ -348,13 +335,7 @@ def _overlap_writes(*thunks) -> list:
     pyspark's inheritable_thread_target (InheritableThread's form for
     executor pools), so its jobs carry the caller's job group, job
     tags and local properties: cancellable and attributable with the
-    caller's own jobs. SPARK_GRAFT_NO_OVERLAP=1 falls back to
-    sequential execution (the same-JVM A/B instrument — no caching,
-    no behavior change beyond scheduling)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_OVERLAP") == "1":
-        return [t() for t in thunks]
+    caller's own jobs."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -363,17 +344,6 @@ def _overlap_writes(*thunks) -> list:
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futures = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futures]
-
-
-def _ledger_row(spark: SparkSession, path: str, batch_id: int) -> None:
-    """One commit-ledger row for a batch whose count is not recorded
-    (the IVF writers), written LAST by its writer — the commit
-    point."""
-    _dyn_overwrite(
-        _ledger_commit(spark, path, batch_id, None, None).coalesce(1),
-        ["batch_id"],
-        path,
-    )
 
 
 def _commit_rows(
@@ -394,7 +364,13 @@ def _commit_rows(
     except AnalysisException as exc:
         if exc.getCondition() != "PATH_NOT_FOUND":
             raise
-    raise ValueError(
+    raise _no_commit(out_dir, table)
+
+
+def _no_commit(out_dir: str, table: str) -> ValueError:
+    """The shared missing-commit error of a store without its commit
+    table."""
+    return ValueError(
         f"store at {out_dir} has no '{table}' commit table: it never "
         "committed, or its writer crashed before its first commit, so "
         "no row in it is committed. Remedy: rebuild the store, or "
@@ -416,11 +392,14 @@ def _committed_hw(spark: SparkSession, out_dir: str, table: str) -> int:
     crashed operation's partials, excluded from every read and
     overwritten when the operation re-runs with the SAME id (the
     idempotent convergence every offline writer relies on). Serve
-    prologues read the same table inside their fused job."""
+    prologues read the same table inside their fused job. The table
+    holds one row per batch, so it is read in one task: the max then
+    needs no exchange, and the read is one job instead of two."""
     from pyspark.sql import functions as F
 
     return _hw_after(
         _commit_rows(spark, out_dir, table)
+        .coalesce(1)
         .agg(F.max("batch_id").alias("b"))
         .collect()[0]["b"]
     )
@@ -535,44 +514,68 @@ def _ledger_commit(
 
 @dataclass(frozen=True)
 class _DocStore:
-    """One document store family on the shared lifecycle: rows under
-    ``out_dir/postings`` partitioned by ``parts``, the commit table
-    ``commit``, ``tombstones`` keyed by doc_id, ``offline_fence``.
-    ``frames(docs, batch_id, n_buckets)`` is the family's row builder
-    for one document set. ``deltas`` lists extra per-batch tables as
-    (name, frame(docs, batch_id), live(spark, out_dir, before_batch)):
+    """One store family on the shared lifecycle: rows under
+    ``out_dir/<rows>`` partitioned by ``parts``, the commit table
+    ``commit``, ``tombstones`` keyed by ``id_col``, ``offline_fence``.
+    ``frames(docs, batch_id, state)`` is the family's row builder for
+    one document (or vector) set under the store's frozen layout
+    ``state`` — the bucket modulus of a bucketed store, the IVF
+    quantizers, else None. ``state(spark, out_dir, commit)``, when
+    set, reads that state together with the committed high-water mark
+    (an offline revision; the IVF maintainer, once at job start).
+    ``schema`` is the rows' explicit read
+    schema, or None when it is inferred (IVF: its attribute columns
+    and vector element type vary per store); a ``batch_id`` below
+    another partition column (IVF's ``cell=C/batch_id=N``) nests the
+    batch dirs. ``deltas`` lists extra per-batch tables as (name,
+    frame(docs, batch_id), live(spark, out_dir, before_batch)):
     written with the rows, and folded by compaction from their
-    committed live view. ``commit_row(spark, out_dir, batch_id, docs,
-    ids)`` builds a batch's commit row once its deltas have landed
-    (``docs`` None for a delete, ``ids`` the tombstoned doc_ids or
-    None). A ``totals`` commit table holds additive corpus statistics,
-    which compaction sums; a ledger's informational n_docs is
-    recounted from the compacted rows. A store whose parts include
-    ``tok_bucket`` is bucketed: it records its modulus in a ``meta``
-    table, and its compacted rows are repartitioned by bucket (one
-    file per bucket dir)."""
+    committed live view. ``side`` names the tables that never change
+    between builds (bucket meta, IVF centroids and PQ): compaction
+    copies them. ``commit_row(spark, out_dir, batch_id, docs, ids)``
+    builds a batch's commit row once its deltas have landed (``docs``
+    None for a delete, ``ids`` the tombstoned ids or None). A
+    ``totals`` commit table holds additive corpus statistics, which
+    compaction sums; a ledger's informational n_docs is recounted from
+    the compacted rows. A store whose parts include ``tok_bucket`` is
+    bucketed: it records its modulus in a ``meta`` table. Compacted
+    rows are repartitioned by the first partition column other than
+    batch_id, so each leaf dir holds one file."""
 
     label: str
-    schema: str
+    schema: str | None
     parts: tuple
     frames: Callable
     commit: str = "batches"
     deltas: tuple = ()
     commit_row: Callable = _ledger_commit
+    rows: str = "postings"
+    id_col: str = "doc_id"
+    side: tuple = ()
+    state: Callable | None = None
 
     @property
     def bucketed(self) -> bool:
         return "tok_bucket" in self.parts
 
+    @property
+    def nested(self) -> bool:
+        return self.parts[0] != "batch_id"
+
 
 def _store_build(
-    spec: _DocStore, docs: DataFrame, out_dir: str, n_buckets=None
+    spec: _DocStore,
+    docs: DataFrame,
+    out_dir: str,
+    state=None,
+    side: tuple = (),
 ) -> None:
-    """Batch build: ``batch_id=-1`` rows and extra deltas (overlapped)
-    -> meta (bucketed stores) -> commit row, in that order. Meta
-    existing implies the rows landed, so a crash mid-rows leaves a
-    store every serve refuses ("no meta table"), and the commit row
-    LAST makes the build the store's first commit."""
+    """Batch build: ``batch_id=-1`` rows, extra deltas and the
+    ``side`` table writes (IVF centroids and PQ) overlapped -> meta
+    (bucketed stores) -> commit row, in that order. Meta existing
+    implies the rows landed, so a crash mid-rows leaves a store every
+    serve refuses ("no meta table"), and the commit row LAST makes the
+    build the store's first commit."""
     spark = docs.sparkSession
 
     def _write(df: DataFrame, parts, name: str) -> None:
@@ -581,18 +584,17 @@ def _store_build(
         )
 
     _overlap_writes(
-        lambda: _write(
-            spec.frames(docs, -1, n_buckets), spec.parts, "postings"
-        ),
+        lambda: _write(spec.frames(docs, -1, state), spec.parts, spec.rows),
         *[
             lambda name=name, frame=frame: _write(
                 frame(docs, -1), ["batch_id"], name
             )
             for name, frame, _ in spec.deltas
         ],
+        *side,
     )
     if spec.bucketed:
-        _write_postings_meta(spark, out_dir, n_buckets)
+        _write_postings_meta(spark, out_dir, state)
     _write(
         spec.commit_row(spark, out_dir, -1, docs, None).coalesce(1),
         ["batch_id"],
@@ -605,13 +607,13 @@ def _store_deltas(
     docs: DataFrame,
     out_dir: str,
     batch_id: int,
-    n_buckets,
+    state,
     tombstone: bool,
     rows: bool = True,
 ) -> Callable[[], None]:
     """Write one batch's NON-COMMIT deltas — the rows and extra deltas
     of `docs` at `batch_id` (unless ``rows`` is False: a delete), plus
-    (``tombstone``) a tombstone per doc_id killing its rows from older
+    (``tombstone``) a tombstone per id killing its rows from older
     batches — overlapped (_overlap_writes), and return the batch's
     commit: the commit-row write, which the caller runs LAST and which
     builds the row only then, over the landed deltas. Any subset of
@@ -622,9 +624,9 @@ def _store_deltas(
     if rows:
         writes.append(
             lambda: _dyn_overwrite(
-                spec.frames(docs, batch_id, n_buckets),
+                spec.frames(docs, batch_id, state),
                 list(spec.parts),
-                f"{out_dir}/postings",
+                f"{out_dir}/{spec.rows}",
             )
         )
         writes += [
@@ -636,11 +638,11 @@ def _store_deltas(
     if tombstone:
         writes.append(
             lambda: _tombstone_write(
-                docs, "doc_id", batch_id, f"{out_dir}/tombstones"
+                docs, spec.id_col, batch_id, f"{out_dir}/tombstones"
             )
         )
     _overlap_writes(*writes)
-    ids = docs.select("doc_id").distinct() if tombstone else None
+    ids = docs.select(spec.id_col).distinct() if tombstone else None
     return lambda: _dyn_overwrite(
         spec.commit_row(
             docs.sparkSession, out_dir, batch_id, docs if rows else None, ids
@@ -659,9 +661,9 @@ def _store_offline(
 ) -> int:
     """An offline revision (UPSERT) or delete, returning the batch id
     used. A re-crawled CHANGED document changes its rows (positions,
-    shingle set, signature, term counts), so stale rows would serve
-    phantom/lost hits: every doc_id in `docs` writes fresh rows AT
-    batch N (not for a delete) and a tombstone (doc_id, N) killing its
+    shingle set, signature, term counts, vector), so stale rows would
+    serve phantom/lost hits: every id in `docs` writes fresh rows AT
+    batch N (not for a delete) and a tombstone (id, N) killing its
     rows from batches < N; ids absent from the store are no-ops.
 
     N is the committed high-water mark, so a re-run after any partial
@@ -674,25 +676,24 @@ def _store_offline(
     concurrently; the commit row follows them LAST as the commit
     point."""
     recover_compacting(spark, out_dir)
-    nb = (
-        _postings_meta_buckets(spark, out_dir)
-        if spec.bucketed and not delete
-        else None
+    state, next_b = (
+        spec.state(spark, out_dir, spec.commit)
+        if spec.state is not None and not delete
+        else (None, _committed_hw(spark, out_dir, spec.commit))
     )
-    next_b = _committed_hw(spark, out_dir, spec.commit)
+    rows = [f"{out_dir}/{spec.rows}"]
     _offline_begin(
         spark,
         out_dir,
         f"{'delete' if delete else 'revision'} of the {spec.label} "
         f"at {out_dir}",
         next_b,
-        [
-            f"{out_dir}/{name}"
-            for name in ("postings", *[d[0] for d in spec.deltas])
-        ]
-        + [f"{out_dir}/tombstones"],
+        [f"{out_dir}/{d[0]}" for d in spec.deltas]
+        + [f"{out_dir}/tombstones"]
+        + ([] if spec.nested else rows),
+        rows if spec.nested else [],
     )
-    _store_deltas(spec, docs, out_dir, next_b, nb, True, rows=not delete)()
+    _store_deltas(spec, docs, out_dir, next_b, state, True, rows=not delete)()
     return next_b
 
 
@@ -709,28 +710,28 @@ def _store_live(
     if hw is None:
         recover_compacting(spark, out_dir)
         hw = _committed_hw(spark, out_dir, spec.commit)
-    rows = (
-        spark.read.schema(spec.schema)
-        .parquet(f"{out_dir}/postings")
-        .filter(F.col("batch_id") < hw)
+    read = spark.read if spec.schema is None else spark.read.schema(spec.schema)
+    rows = read.parquet(f"{out_dir}/{spec.rows}").filter(
+        F.col("batch_id") < hw
     )
-    return _kill_tombstoned(spark, rows, out_dir, "doc_id", hw)
+    return _kill_tombstoned(spark, rows, out_dir, spec.id_col, hw)
 
 
 def _copy_tables(
-    spark: SparkSession, src_dir: str, dst_dir: str, names: list
+    spark: SparkSession, src_dir: str, dst_dir: str, names: tuple
 ) -> None:
     """Copy side tables that never change between builds (bucket
     meta, IVF centroids and PQ tables — maintainers and revisions
     freeze them) from a live store into its compaction's temp sibling:
-    a driver-side Hadoop FileUtil.copy of their files, no Spark job."""
+    a driver-side Hadoop FileUtil.copy of their files, no Spark job.
+    Absent tables (a store without PQ) are skipped."""
     fs, _ = _hadoop_path(spark, src_dir)
     conf = spark._jsc.hadoopConfiguration()
     util = spark._jvm.org.apache.hadoop.fs.FileUtil
     for name in names:
         _, src = _hadoop_path(spark, f"{src_dir}/{name}")
         _, dst = _hadoop_path(spark, f"{dst_dir}/{name}")
-        if not util.copy(fs, src, fs, dst, False, conf):
+        if fs.exists(src) and not util.copy(fs, src, fs, dst, False, conf):
             raise IOError(f"could not copy {src_dir}/{name} to {dst_dir}")
 
 
@@ -751,27 +752,25 @@ def _store_compact(
     rows; a ledger's informational n_docs is counted by reading back
     the compacted rows just written (one column-pruned read with an
     explicit schema — a zero-row fold writes no data files) instead
-    of evaluating the live view a second time. Meta is copied, not
-    rewritten. Run while the maintenance stream is stopped."""
+    of evaluating the live view a second time. Side tables are
+    copied, not rewritten. Run while the maintenance stream is
+    stopped."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, out_dir)
-    hw = _committed_hw(spark, out_dir, spec.commit)
-    if spec.bucketed:
-        _require_postings_meta(spark, out_dir)
-    rows = _store_live(spec, spark, out_dir, hw)
+    leaf = [p for p in spec.parts if p != "batch_id"][:1]
 
     def _write(tmp: str) -> None:
+        hw = _committed_hw(spark, out_dir, spec.commit)
+        if spec.bucketed:
+            _require_postings_meta(spark, out_dir)
+        rows = _store_live(spec, spark, out_dir, hw)
+
         def _fold(df: DataFrame, parts, name: str) -> None:
             df.withColumn("batch_id", F.lit(-1)).write.mode(
                 "overwrite"
             ).partitionBy(*parts).parquet(f"{tmp}/{name}")
 
-        _fold(
-            rows.repartition(F.col("tok_bucket")) if spec.bucketed else rows,
-            spec.parts,
-            "postings",
-        )
+        _fold(rows.repartition(*leaf) if leaf else rows, spec.parts, spec.rows)
         for name, _, live in spec.deltas:
             _fold(live(spark, out_dir, hw), ["batch_id"], name)
         if spec.commit == "totals":
@@ -781,15 +780,14 @@ def _store_compact(
             )
         else:
             commit = (
-                spark.read.schema("doc_id bigint")
-                .parquet(f"{tmp}/postings")
-                .select("doc_id")
+                spark.read.schema(f"{spec.id_col} bigint")
+                .parquet(f"{tmp}/{spec.rows}")
+                .select(spec.id_col)
                 .distinct()
                 .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
             )
         _fold(commit.coalesce(1), ["batch_id"], spec.commit)
-        if spec.bucketed:
-            _copy_tables(spark, out_dir, tmp, ["meta"])
+        _copy_tables(spark, out_dir, tmp, spec.side)
 
     swap_compacted(spark, out_dir, _write, spec.label)
 
@@ -953,42 +951,23 @@ def write_bq_index(
     df: DataFrame,
     out_path: str,
     vec_col: str = "embedding",
-    delta: bool = False,
 ) -> None:
-    """Materialize a binary-quantization ANN index: the input frame
-    plus a packed 64-bit sign-code column (`code`,
-    functions.vectors.pack_sign_bits). Pay the code computation ONCE
-    at write time; every later stage-1 candidate scan then reads
-    (id, code) only — 8 bytes of index per vector instead of the
-    full float payload, and parquet column pruning keeps the vector
-    bytes on disk entirely (the layout test asserts the pruned
-    ReadSchema on the executed plan).
+    """Materialize a binary-quantization ANN index: a packed 64-bit
+    sign code (`code`, functions.vectors.pack_sign_bits) per `vec_id`.
+    Pay the code computation ONCE at write time; every later stage-1
+    candidate scan then reads (vec_id, code) only — 8 bytes of index
+    per vector instead of the full float payload (the layout test
+    asserts the pruned ReadSchema on the executed plan).
 
-    ``delta=True`` writes the DELTA layout (a ``batch_id=-1`` base
-    partition — the shape maintain_bq_index appends to), which is
-    what delete_bq_vectors requires: a flat store has no batch
-    dimension to version its in-band NULL-code delete markers
-    against. Use it when the index will live (deletes/streaming
-    appends); the flat default stays for one-shot rebuild stores."""
+    Layout: ``out_path/codes`` (vec_id, code) rows under a
+    ``batch_id=-1`` base — the shape maintain_bq_index appends to and
+    delete_bq_vectors tombstones — and the ``batches`` commit row,
+    written LAST (_store_build). NULL vectors are excluded."""
     from pyspark.sql import functions as F
 
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
-
-    codes = (
-        df.filter(F.col(vec_col).isNotNull())  # NULL vector -> no code:
-        # unsearchable entries don't belong in the index (and a NULL
-        # code would sort FIRST in the ascending Hamming scan)
-        .withColumn("code", pack_sign_bits(F.col(vec_col)))
+    _store_build(
+        _BQ, df.select("vec_id", F.col(vec_col).alias("embedding")), out_path
     )
-    if delta:
-        (
-            codes.withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-    else:
-        codes.write.mode("overwrite").parquet(out_path)
 
 
 def _nearest_cell_expr(centroids: list[tuple[int, list[float]]], vec_col):
@@ -1051,28 +1030,6 @@ def _nearest_cell_expr(centroids: list[tuple[int, list[float]]], vec_col):
 # lowest codeword id.
 _PQ_META_SCHEMA = "m int, sub int, k int"
 _PQ_CODEBOOK_SCHEMA = "k int, e array<double>"
-
-
-def _pq_store_meta(
-    spark: SparkSession, index_path: str
-) -> tuple | None:
-    """(m, sub, k) from the store's pq meta table, or None when the
-    store carries no PQ codes (one fs.exists probe on the fast
-    path). Recorded in the store — write and read must agree on the
-    subspace split or ADC reads garbage (the postings bucket-modulus
-    rationale)."""
-    fs, p = _hadoop_path(spark, f"{index_path}/pq")
-    if not fs.exists(p):
-        return None
-    rows = (
-        spark.read.schema(_PQ_META_SCHEMA)
-        .parquet(f"{index_path}/pq/meta")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"{index_path}/pq/meta is empty")
-    r = rows[0]
-    return int(r["m"]), int(r["sub"]), int(r["k"])
 
 
 def _pq_code_expr(cb: list, m: int, sub: int, vec_col: str):
@@ -1166,7 +1123,8 @@ def write_ivf_index(
     bytes/row inside the probed cells and never touches the float
     column, r11 ivf_bq_funnel). NULL vectors are excluded
     (unsearchable). One grouped pass for the centroids + one
-    cell-partitioned write.
+    cell-partitioned write, then the ``batches`` commit row LAST (the
+    shared build, _store_build).
 
     ``attr_cols`` carries metadata columns (label, source, date, …)
     into the cells rows for filtered ANN (ivf_filtered_topk): the
@@ -1182,22 +1140,24 @@ def write_ivf_index(
     compact_ivf_index) encodes under this FROZEN codebook."""
     from pyspark.sql import functions as F
 
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
-
-    rows = df.filter(F.col(vec_col).isNotNull()).select(
+    spark = df.sparkSession
+    vecs = df.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
-        pack_sign_bits(F.col(vec_col)).alias("code"),
         F.col(cell_col).cast("int").alias("cell"),
         *[F.col(a) for a in attr_cols],
     )
-    cb = None
+    pro = {"meta": None, "cb": None}
+    # the centroid table and the pq tables are side tables of the
+    # shared build: written concurrently with the cells rows, before
+    # the batches commit row
+    side = []
     if pq:
         seeds = (
-            df.filter(F.col(vec_col).isNotNull())
-            .orderBy(id_col)
+            vecs.filter(F.col("embedding").isNotNull())
+            .orderBy("vec_id")
             .limit(pq_k)
-            .select(F.col(vec_col).alias("e"))
+            .select("embedding")
             .collect()  # bounded: pq_k rows (the codebook itself)
         )
         if len(seeds) < pq_k:
@@ -1206,26 +1166,26 @@ def write_ivf_index(
                 f"vectors; got {len(seeds)} — build without pq or "
                 "lower pq_k"
             )
-        cb = [[float(x) for x in r["e"]] for r in seeds]
+        cb = [[float(x) for x in r["embedding"]] for r in seeds]
         if any(len(v) != pq_m * pq_sub for v in cb):
             raise ValueError(
                 f"PQ split {pq_m}x{pq_sub} does not match the "
                 f"vector dimensionality {len(cb[0])}"
             )
+        pro = {"meta": (pq_m, pq_sub, len(cb)), "cb": cb}
+        side.append(lambda: _write_pq_tables(spark, out_path, cb, pq_m, pq_sub))
         # Encode ABOVE a cell-keyed exchange: the input is typically
         # one scan split, so the m x k argmin expression would
         # otherwise run single-task. Hash on cell keeps one file per
         # cell dir in the partitioned write; the explicit partition
         # count (scale-adaptive, not a constant) stops AQE from
         # coalescing the tiny exchange back to one task at small sf.
-        rows = rows.repartition(
-            max(rows.sparkSession.sparkContext.defaultParallelism, 8),
-            "cell",
-        ).withColumn(
-            "pq_code", _pq_code_expr(cb, pq_m, pq_sub, "embedding")
+        vecs = vecs.repartition(
+            max(spark.sparkContext.defaultParallelism, 8), "cell"
         )
     centroids = (
-        rows.select("cell", F.posexplode("embedding").alias("pos", "v"))
+        vecs.filter(F.col("embedding").isNotNull())
+        .select("cell", F.posexplode("embedding").alias("pos", "v"))
         .groupBy("cell", "pos")
         .agg(F.avg(F.col("v").cast("double")).alias("ctr"))
         .groupBy("cell")
@@ -1237,60 +1197,12 @@ def write_ivf_index(
             ).alias("centroid")
         )
     )
-
-    # The centroid table, the pq tables and the cells store are
-    # INDEPENDENT paths with no ordering constraint between them —
-    # only the batches ledger (the commit point) must come last.
-    # Overlap them (guide §2.6, _overlap_writes) so the second job's
-    # tasks back-fill the first's stragglers.
-    spark = df.sparkSession
-    writes = [
+    side.append(
         lambda: centroids.coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{out_path}/centroids"),
-        lambda: rows.withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("cell", "batch_id")
-        .parquet(f"{out_path}/cells"),
-    ]
-    if cb is not None:
-        writes.append(
-            lambda: _write_pq_tables(spark, out_path, cb, pq_m, pq_sub)
-        )
-    _overlap_writes(*writes)
-    # batches commit ledger LAST (r11, harmonizing the IVF store with
-    # the postings/positional/shingle stores): readers derive the
-    # committed high-water mark from it, so a crashed revision's
-    # partial replacement rows stay invisible until its re-run commits.
-    # The doc count reads the cells rows JUST WRITTEN (column-pruned,
-    # explicit schema for the empty-store case) instead of re-running
-    # the whole scan/encode lineage a second time — same value, one
-    # input pass saved (r13; the compact_ivf_index count precedent).
-    # The batch_id = -1 partition filter keeps the count to the
-    # partition this build wrote: under partitionOverwriteMode=dynamic
-    # the overwrite leaves a maintained store's batch_id >= 0 cells in
-    # place, and they are not part of this build.
-    fs_c, cells_p = _hadoop_path(spark, f"{out_path}/cells")
-    n_docs = (
-        spark.read.schema("vec_id bigint, batch_id int")
-        .parquet(f"{out_path}/cells")
-        .filter(F.col("batch_id") == -1)
-        .count()
-        if fs_c.exists(cells_p)
-        else 0  # zero-row build: the partitioned write of an empty
-        # frame may not materialize the directory at all
+        .parquet(f"{out_path}/centroids")
     )
-    (
-        spark.range(1)
-        .select(
-            F.lit(int(n_docs)).cast("long").alias("n_docs"),
-            F.lit(-1).cast("int").alias("batch_id"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(f"{out_path}/batches")
-    )
+    _store_build(_IVF, vecs, out_path, pro, side)
 
 
 _IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
@@ -1334,7 +1246,7 @@ def _ivf_prologue(
     (m, sub, k) | None, "cb": codebook rows sorted by codeword id |
     None, "qcode": int | None}.
     ``need_pq=True`` requires the pq tables to exist — callers gate
-    on the pq dir probe (_pq_store_meta's fs.exists contract)."""
+    on the pq dir probe (_ivf_state's fs.exists check)."""
     from pyspark.sql import functions as F
 
     nul_l = F.lit(None).cast("long")
@@ -1427,34 +1339,6 @@ def ivf_serve_state(spark: SparkSession, index_path: str) -> dict:
     return {"cents": pro["cents"], "hw": pro["hw"]}
 
 
-def _ivf_live(
-    spark: SparkSession,
-    index_path: str,
-    cells: list | None,
-    hw: int,
-) -> DataFrame:
-    """The IVF store's committed, tombstone-live cells rows — the
-    ONE serve-side live view every probe/funnel/compaction path reads
-    (r12 factoring: the hw + tombstone-kill block was previously
-    repeated per reader and could drift). ``cells`` (when not None)
-    becomes the cell-IN partition filter — parquet partition pruning,
-    nprobe/n_cells of the store touched. ``hw`` is the committed
-    high-water mark, from a pre-read ivf_serve_state / _ivf_prologue
-    snapshot or _committed_hw."""
-    from pyspark.sql import functions as F
-
-    probed = spark.read.parquet(f"{index_path}/cells")
-    if cells is not None:
-        probed = probed.filter(
-            F.col("cell").isin([int(c) for c in cells])
-        )
-    # committed batches only (r11): a crashed revision's partial
-    # replacement rows must not serve alongside the old rows its
-    # never-written tombstones would have killed
-    probed = probed.filter(F.col("batch_id") < hw)
-    return _kill_tombstoned(spark, probed, index_path, "vec_id", hw)
-
-
 def _cos_sim_expr(q_vec: list):
     """Exact cosine of the row's `embedding` against the literal
     query vector, NULL for a zero-norm stored vector (the ANSI
@@ -1487,33 +1371,49 @@ def _cos_sim_expr(q_vec: list):
     return F.when(denom != 0, dot / denom)
 
 
-def _ivf_rows(
-    vecs: DataFrame,
-    pro: dict,
-    batch_id: int,
-    vec_col: str,
-    id_col: str,
-    attr_cols: tuple,
+def _vec_commit(
+    spark: SparkSession, out_dir: str, batch_id: int, vecs, ids
 ) -> DataFrame:
-    """The cells rows of one vector batch under the store's FROZEN
-    quantizers (``pro``: an _ivf_prologue result) — vec_id,
-    embedding, packed sign code, nearest cell, batch_id and the
-    attribute columns, plus, for a pq-carrying store, the pq_code
-    under the frozen codebook (so ivf_pq_funnel's ADC scan stays
-    valid across revisions and stream appends). NULL vectors are
-    unsearchable and dropped. Shared by revise_ivf_vectors and
-    streaming/jobs.maintain_ivf_index so the two cannot drift."""
+    """The IVF and BQ stores' commit row: a build records its
+    searchable (non-NULL) vector count, the rows it wrote; a delta
+    batch records n_docs 0, so a micro-batch or revision commits with
+    one literal write (compaction recounts the folded rows)."""
+    from pyspark.sql import functions as F
+
+    built = (
+        vecs.filter(F.col("embedding").isNotNull())
+        if vecs is not None and batch_id < 0
+        else None
+    )
+    return _ledger_commit(spark, out_dir, batch_id, built, ids)
+
+
+def _ivf_frames(vecs: DataFrame, batch_id: int, pro: dict) -> DataFrame:
+    """The cells rows of one vector set — vec_id, embedding, packed
+    sign code, cell, batch_id and the attribute columns, plus, for a
+    pq-carrying store, the pq_code under the frozen codebook (so
+    ivf_pq_funnel's ADC scan stays valid across revisions and stream
+    appends). ``vecs`` carries vec_id, embedding and the attributes;
+    a build adds its trained ``cell`` labels, and without them each
+    vector goes to its nearest cell under the frozen quantizer
+    (``pro``: an _ivf_prologue result). NULL vectors are unsearchable
+    and dropped."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.vectors import pack_sign_bits
 
-    rows = vecs.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("embedding"),
-        pack_sign_bits(F.col(vec_col)).alias("code"),
-        _nearest_cell_expr(pro["cents"], vec_col).alias("cell"),
+    cell = (
+        F.col("cell")
+        if "cell" in vecs.columns
+        else _nearest_cell_expr(pro["cents"], "embedding")
+    )
+    rows = vecs.filter(F.col("embedding").isNotNull()).select(
+        "vec_id",
+        "embedding",
+        pack_sign_bits(F.col("embedding")).alias("code"),
+        cell.alias("cell"),
         F.lit(batch_id).alias("batch_id"),
-        *[F.col(a) for a in attr_cols],
+        *[c for c in vecs.columns if c not in ("vec_id", "embedding", "cell")],
     )
     if pro["meta"] is not None:
         m, sub, _k = pro["meta"]
@@ -1521,6 +1421,41 @@ def _ivf_rows(
             "pq_code", _pq_code_expr(pro["cb"], m, sub, "embedding")
         )
     return rows
+
+
+def _ivf_state(spark: SparkSession, index_path: str, _commit=None):
+    """The IVF store's frozen quantizers (centroids and, for a
+    pq-carrying store, the codebook and its meta) and its committed
+    high-water mark, from ONE fused _ivf_prologue job. Revisions and
+    the maintainer assign cells under these quantizers; they never
+    train one."""
+    fs, pq_p = _hadoop_path(spark, f"{index_path}/pq")
+    pro = _ivf_prologue(spark, index_path, need_pq=fs.exists(pq_p))
+    if not pro["cents"]:
+        raise ValueError(
+            f"{index_path}/centroids is empty — build the index with "
+            "write_ivf_index first (revisions and the maintainer keep "
+            "its frozen quantizer, they do not train one)"
+        )
+    return pro, pro["hw"]
+
+
+# The IVF store on the shared lifecycle: cells rows under
+# cell=C/batch_id=N, tombstones keyed by vec_id (a revised vector's
+# stale row dies in whatever cell it sits), the centroid and PQ tables
+# as frozen side tables. The row schema is inferred: attribute columns
+# and the vector element type vary per store.
+_IVF = _DocStore(
+    "IVF cells store",
+    None,
+    ("cell", "batch_id"),
+    _ivf_frames,
+    commit_row=_vec_commit,
+    rows="cells",
+    id_col="vec_id",
+    side=("centroids", "pq"),
+    state=_ivf_state,
+)
 
 
 def revise_ivf_vectors(
@@ -1531,96 +1466,48 @@ def revise_ivf_vectors(
     id_col: str = "vec_id",
     attr_cols: tuple = (),
 ) -> int:
-    """UPSERT re-emitted vectors into an IVF index — the operation
-    maintain_ivf_index's new-ids-only HARD precondition forbids on
-    the streaming path (r9 VERDICT missing #2): a re-crawled CHANGED
-    document's embedding may belong in a DIFFERENT cell, so its stale
-    row in the old cell is invisible to any read-side dedupe inside
-    the probed cells. Tombstones fix that: every id in `vecs_v2`
-    (unique within the call) gets a marker at this revision's batch
-    id, killing its rows from ALL older batches for every reader —
-    ivf_candidates, refresh_ivf_index, compact_ivf_index — while the
-    replacement row, assigned to its nearest cell under the LIVE
-    frozen quantizer, serves from the same batch. A NULL `vec_col`
-    means DELETE: tombstone without a replacement row (the
-    write_ivf_index NULL-is-unsearchable rule, now with teeth).
+    """UPSERT re-emitted vectors into an IVF index: a re-crawled
+    CHANGED document's embedding may belong in a DIFFERENT cell, so
+    its stale row in the old cell is invisible to any read-side
+    dedupe inside the probed cells. Tombstones fix that: every id in
+    `vecs_v2` (unique within the call) gets a marker at this
+    revision's batch id, killing its rows from ALL older batches for
+    every reader — ivf_candidates, refresh_ivf_index,
+    compact_ivf_index — while the replacement row, assigned to its
+    nearest cell under the LIVE frozen quantizer, serves from the same
+    batch. A NULL `vec_col` means DELETE: a tombstone without a
+    replacement row (the write_ivf_index NULL-is-unsearchable rule).
 
-    Crash ordering (r11, the ledger harmonization): rows, then
-    tombstones, then the batches LEDGER row LAST — the commit point.
-    The batch id is the ledger-derived committed high-water mark, so
-    a re-run after any partial write reuses the SAME id and
-    overwrites its own partitions (cell assignment is deterministic
-    under the frozen quantizer, so the re-run's dynamic overwrite
-    hits exactly the crashed attempt's partitions); readers filter
-    to committed batches, so the partials never serve meanwhile. A
-    store without its ledger raises the shared missing-commit error.
-    Run while the maintenance stream is stopped — every claimed id
-    is FENCED (claim_offline_batch), so a stream resuming its old
-    checkpoint afterwards fails loudly instead of silently
-    clobbering the revision (ADVICE r10). Returns the batch id
-    used."""
+    The shared offline revision (_store_offline): the quantizers and
+    the committed high-water mark come from one fused prologue job;
+    rows and tombstones are written concurrently and the batches
+    commit row LAST. A re-run after any partial write reuses the SAME
+    id and overwrites its own partitions (cell assignment is
+    deterministic under the frozen quantizer). Run while the
+    maintenance stream is stopped — the claimed id is FENCED, so a
+    stream resuming its old checkpoint afterwards fails loudly
+    instead of clobbering the revision. Returns the batch id used."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, index_path)
-    # ONE fused prologue job (r13): centroids + committed high-water
-    # mark + (for a pq-carrying store) the frozen codebook and its
-    # meta — previously up to four separate bounded collects per
-    # revision, each a driver job round-trip
-    fs_pq, pq_p = _hadoop_path(spark, f"{index_path}/pq")
-    has_pq = fs_pq.exists(pq_p)
-    pro = _ivf_prologue(spark, index_path, need_pq=has_pq)
-    if not pro["cents"]:
-        raise ValueError(
-            f"{index_path}/centroids is empty — build the index with "
-            "write_ivf_index before revising"
-        )
-    next_b = pro["hw"]
-    _offline_begin(
+    return _store_offline(
+        _IVF,
         spark,
+        vecs_v2.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("embedding"),
+            *attr_cols,
+        ),
         index_path,
-        f"revise_ivf_vectors at {index_path}",
-        next_b,
-        [f"{index_path}/tombstones"],
-        nested_paths=[f"{index_path}/cells"],
     )
-    # replacement rows under the FROZEN quantizers that came with the
-    # fused prologue above
-    _dyn_overwrite(
-        _ivf_rows(vecs_v2, pro, next_b, vec_col, id_col, attr_cols),
-        ["cell", "batch_id"],
-        f"{index_path}/cells",
-    )
-    _tombstone_write(
-        vecs_v2.select(F.col(id_col).alias("vec_id")),
-        "vec_id",
-        next_b,
-        f"{index_path}/tombstones",
-    )
-    # ledger row LAST — the commit point
-    _ledger_row(spark, f"{index_path}/batches", next_b)
-    return next_b
 
 
-def _probe_cells(
-    spark: SparkSession,
-    index_path: str,
-    q_vec: list[float],
-    nprobe: int,
-    cents: list | None = None,
-) -> list[int]:
+def _probe_cells(q_vec: list[float], nprobe: int, cents: list) -> list[int]:
     """The nprobe nearest cells to the query, picked DRIVER-SIDE from
     the bounded (n_cells x dims) centroid table — (d2, cell)
     lexicographic order, the _nearest_cell_expr tie-break. Shared by
     ivf_candidates and the funnels; ``cents`` is the
     [(cell, centroid)...] list from a pre-read _ivf_prologue /
     ivf_serve_state snapshot."""
-    if cents is None:
-        cents = [
-            (r["cell"], list(r["centroid"]))
-            for r in spark.read.schema(_IVF_CENTROIDS_SCHEMA)
-            .parquet(f"{index_path}/centroids")
-            .collect()
-        ]
     by_d2 = sorted(
         (
             sum((c - q) ** 2 for c, q in zip(cvec, q_vec)),
@@ -1651,11 +1538,10 @@ def ivf_candidates(
 
     if state is None:
         state = ivf_serve_state(spark, index_path)
-    cells = _probe_cells(
-        spark, index_path, q_vec, nprobe, cents=state["cents"]
-    )
+    cells = _probe_cells(q_vec, nprobe, state["cents"])
     return (
-        _ivf_live(spark, index_path, cells, hw=state["hw"])
+        _store_live(_IVF, spark, index_path, state["hw"])
+        .filter(F.col("cell").isin(cells))
         .select(
             "vec_id",
             "cell",
@@ -1701,12 +1587,12 @@ def ivf_bq_funnel(
 
     recover_compacting(spark, index_path)
     pro = _ivf_prologue(spark, index_path, q_vec=q_vec)
-    cells = _probe_cells(
-        spark, index_path, q_vec, nprobe, cents=pro["cents"]
-    )
+    cells = _probe_cells(q_vec, nprobe, pro["cents"])
     q_code = pro["qcode"]
 
-    probed = _ivf_live(spark, index_path, cells, hw=pro["hw"])
+    probed = _store_live(_IVF, spark, index_path, pro["hw"]).filter(
+        F.col("cell").isin(cells)
+    )
     # stage 1: the 8-byte cut — vec_id + code only (column pruning
     # keeps the embedding bytes on disk for every non-candidate)
     cand = (
@@ -1759,7 +1645,7 @@ def ivf_pq_funnel(
     those rows. This is how FAISS-style IVFPQ deployments serve:
     nprobe/n_cells of M-byte codes + n_candidates float vectors per
     query. Committed batches only; the tombstone kill rule applies
-    to both stages (the shared _ivf_live view).
+    to both stages (the shared _store_live view).
 
     All double math mirrors queries/vectors.embedding_pq_adc_topk's
     fold order (sequential over sub dims and over m), so the DuckDB
@@ -1781,9 +1667,7 @@ def ivf_pq_funnel(
     pro = _ivf_prologue(spark, index_path, need_pq=True)
     m, sub, _k = pro["meta"]
     cb = pro["cb"]
-    cells = _probe_cells(
-        spark, index_path, q_vec, nprobe, cents=pro["cents"]
-    )
+    cells = _probe_cells(q_vec, nprobe, pro["cents"])
     # LUT[mi][ki] = ||q_sub[mi] - codeword[ki, mi]||^2, driver-side
     # over the bounded codebook; sequential fold over the sub dims —
     # the oracle's list_sum order
@@ -1803,7 +1687,9 @@ def ivf_pq_funnel(
             for row in lut
         ]
     )
-    probed = _ivf_live(spark, index_path, cells, hw=pro["hw"])
+    probed = _store_live(_IVF, spark, index_path, pro["hw"]).filter(
+        F.col("cell").isin(cells)
+    )
     # stage 1: the ADC cut — vec_id + pq_code only (column pruning
     # keeps embedding AND the 8-byte sign code on disk)
     est = F.aggregate(
@@ -1876,10 +1762,10 @@ def ivf_filtered_topk(
         raise ValueError("mode must be 'prefilter' or 'postfilter'")
     if state is None:
         state = ivf_serve_state(spark, index_path)
-    cells = _probe_cells(
-        spark, index_path, q_vec, nprobe, cents=state["cents"]
+    cells = _probe_cells(q_vec, nprobe, state["cents"])
+    probed = _store_live(_IVF, spark, index_path, state["hw"]).filter(
+        F.col("cell").isin(cells)
     )
-    probed = _ivf_live(spark, index_path, cells, hw=state["hw"])
     if mode == "prefilter":
         return (
             probed.filter(F.expr(where))
@@ -1955,19 +1841,16 @@ def refresh_ivf_index(
             f"IVF index at {index_path} has no cells store — build it "
             "with write_ivf_index before refreshing"
         )
-    cents = [
-        (r["cell"], list(r["centroid"]))
-        for r in spark.read.parquet(f"{index_path}/centroids").collect()
-    ]
-    if not cents:
-        raise ValueError(f"{index_path}/centroids is empty")
+    # centroids, committed high-water mark and PQ meta in one job
+    pro, hw = _ivf_state(spark, index_path)
+    cents = pro["cents"]
 
     # revised/deleted ids are dropped by the shared live view BEFORE
     # the latest-wins fold, so a deleted vector does not resurrect
     # through its surviving old row
-    live = _ivf_live(
-        spark, index_path, None, _committed_hw(spark, index_path, "batches")
-    ).filter(F.col("embedding").isNotNull())
+    live = _store_live(_IVF, spark, index_path, hw).filter(
+        F.col("embedding").isNotNull()
+    )
     # attrs ride the fold; code/pq_code/cell are re-derived by the
     # rebuild (write_ivf_index) below
     attr_cols = [
@@ -1993,7 +1876,7 @@ def refresh_ivf_index(
         # set instead of re-reading + re-shuffling the store per step
         .cache()
     )
-    pq_meta = _pq_store_meta(spark, index_path)
+    pq_meta = pro["meta"]
     try:
         for _ in range(max(0, n_iters)):
             new = (
@@ -2057,201 +1940,70 @@ def refresh_ivf_index(
 def compact_ivf_index(spark: SparkSession, index_path: str) -> None:
     """Fold a stream-maintained IVF cells store (maintain_ivf_index's
     ``cell=C/batch_id=N`` layout) into one ``batch_id=-1`` base
-    partition per cell — and fold its TOMBSTONES OUT (rows killed by
-    a newer revise_ivf_vectors marker are physically dropped, and
-    the rewritten index carries no tombstones, so probes are back on
-    the no-join fast path). A long-running maintenance stream grows
-    one directory per cell PER MICRO-BATCH — n_cells x n_batches
-    leaf dirs whose listing cost every probe pays before pruning;
-    after compaction the store is back to n_cells dirs and probes
-    list O(n_cells) paths again.
+    partition per cell, one file each, and fold its TOMBSTONES OUT
+    (rows a newer revise_ivf_vectors marker kills are physically
+    dropped) by one whole-dir swap with the centroid and PQ tables
+    copied (_store_compact). A long-running maintenance stream grows
+    one directory per cell PER MICRO-BATCH — n_cells x n_batches leaf
+    dirs whose listing cost every probe pays before pruning; after
+    compaction the store is back to n_cells dirs. Streamed ids are new
+    by maintain_ivf_index's contract and revisions are tombstoned, so
+    the live rows are unique per id. Run while the maintenance stream
+    is stopped; a restarted stream appends fresh ``batch_id>=0``
+    partitions next to the base."""
+    _store_compact(_IVF, spark, index_path)
 
-    Streamed ids are unique by maintain_ivf_index's new-ids-only
-    HARD precondition; revised ids are reconciled by the tombstone
-    filter first and a latest-wins (embedding, cell) fold by
-    batch_id second — together they implement exactly the
-    revise_ivf_vectors read contract, materialized.
 
-    Crash-safety: the WHOLE index directory (folded cells sans
-    tombstones, the centroid and PQ tables copied) is written to a
-    temp sibling and
-    swapped by ONE swap_compacted call — cells and tombstones must
-    change together atomically (folding cells to batch_id=-1 while
-    live tombstones survive would kill the entire base: -1 < any
-    tombstone batch; the refresh_ivf_index whole-dir precedent).
-    Same run-only-while-stopped contract as compact_bq_index /
-    compact_term_stats: committed batch ids never replay, and a
-    restarted stream appends fresh ``batch_id>=0`` partitions next
-    to the base."""
+_BQ_CODES_SCHEMA = "vec_id bigint, code bigint, batch_id int"
+
+
+def _bq_frames(vecs: DataFrame, batch_id: int, _state=None) -> DataFrame:
+    """The codes rows of one vector set: (vec_id, packed 64-bit sign
+    code). A NULL vector has no code — unsearchable entries don't
+    belong in the index (and a NULL code would sort FIRST in the
+    ascending Hamming scan)."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, index_path)
-    fs, live_cells = _hadoop_path(spark, f"{index_path}/cells")
-    if not fs.exists(live_cells):
-        raise ValueError(
-            f"no IVF cells store at {index_path} — nothing to "
-            "compact (a maintenance stream whose first batches were "
-            "all filtered out never creates the store)"
-        )
-    cells = _ivf_live(
-        spark, index_path, None, _committed_hw(spark, index_path, "batches")
-    )
     from se_data_pipeline_spark.functions.vectors import pack_sign_bits
 
-    # latest-wins fold over ALL data columns (attrs and pq_code ride
-    # the same struct — a store with filtered-ANN attributes compacts
-    # without losing them); `code` is recomputed rather than carried
-    # so a pre-code legacy store compacts into a code-carrying one
-    data_cols = [
-        c for c in cells.columns
-        if c not in ("vec_id", "batch_id", "code")
-    ]
-    folded = (
-        cells.groupBy("vec_id")
-        .agg(F.max_by(F.struct(*data_cols), "batch_id").alias("s"))
-        .select(
-            "vec_id",
-            *[F.col(f"s.{c}").alias(c) for c in data_cols],
-        )
-        .withColumn("code", pack_sign_bits(F.col("embedding")))
-        .withColumn("batch_id", F.lit(-1))
+    return vecs.filter(F.col("embedding").isNotNull()).select(
+        "vec_id",
+        pack_sign_bits(F.col("embedding")).alias("code"),
+        F.lit(batch_id).alias("batch_id"),
     )
-    # the frozen quantizers survive compaction verbatim (folded cells
-    # and pq_codes were assigned under them): copied, not rewritten
-    side = ["centroids"]
-    if fs.exists(_hadoop_path(spark, f"{index_path}/pq")[1]):
-        side.append("pq")
 
-    def _write(tmp: str) -> None:
-        folded.write.mode("overwrite").partitionBy(
-            "cell", "batch_id"
-        ).parquet(f"{tmp}/cells")
-        _copy_tables(spark, index_path, tmp, side)
-        # ledger count from the COMPACTED cells just written (one
-        # column-pruned read) instead of re-running the whole
-        # latest-wins fold a second time — same value
-        (
-            spark.read.schema("vec_id bigint")
-            .parquet(f"{tmp}/cells")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-            .withColumn("batch_id", F.lit(-1))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(f"{tmp}/batches")
-        )
 
-    swap_compacted(spark, index_path, _write, "IVF index")
+# The BQ store on the shared lifecycle: (vec_id, code) rows under
+# codes/batch_id=N, tombstones keyed by vec_id, the batches ledger as
+# its commit point.
+_BQ = _DocStore(
+    "BQ index",
+    _BQ_CODES_SCHEMA,
+    ("batch_id",),
+    _bq_frames,
+    commit_row=_vec_commit,
+    rows="codes",
+    id_col="vec_id",
+)
 
 
 def delete_bq_vectors(
     spark: SparkSession, ids: DataFrame, index_path: str
 ) -> int:
-    """Remove vectors from a delta-layout BQ index (r10, completing
-    the tombstone story across all four stores): deletion is an
-    IN-BAND marker — a NULL-code row for the id at a fresh batch_id.
-    bq_candidates' latest-wins fold picks the newest row per id, so
-    the NULL marker knocks out every older code and is itself
-    dropped by the final code-IS-NOT-NULL cut; a vector re-emitted
-    by the maintenance stream in a still-later batch simply wins
-    again. No sibling tombstone table means no cross-directory crash
-    window: the marker rides the same dynamic-partition-overwrite
-    protocol as every other delta (an interrupted delete re-runs
-    with the same batch id and overwrites its own partition).
-
-    Requires the batch_id delta layout (maintain_bq_index / a
-    compacted store); a flat write_bq_index store has no batch
-    dimension to version against — rebuild it without the rows
-    instead. Returns the batch id used."""
-    from pyspark.sql import functions as F
-
-    idx = spark.read.parquet(index_path)
-    if "batch_id" not in idx.columns:
-        raise ValueError(
-            f"BQ index at {index_path} is a flat rebuild store "
-            "(no batch_id layout) — deletes need the delta layout; "
-            "rebuild with write_bq_index minus the rows instead"
-        )
-    mx = idx.agg(F.max("batch_id").alias("b")).collect()[0]["b"]
-    next_b = max(0, (mx if mx is not None else -1) + 1)
-    # the BQ index IS a parquet dir (no subdirectory namespace), so
-    # its fence lives at a sibling path — compact_bq_index drops it
-    claim_offline_batch(spark, _bq_fence_dir(index_path), next_b)
-    _dyn_overwrite(
-        ids.select("vec_id")
-        .distinct()
-        .select(
-            "vec_id",
-            F.lit(None).cast("long").alias("code"),
-            F.lit(next_b).alias("batch_id"),
-        ),
-        ["batch_id"],
-        index_path,
-    )
-    return next_b
-
-
-def _bq_fence_dir(index_path: str) -> str:
-    """The BQ store's offline-fence location: a SIBLING of the flat
-    index dir (a subdir would break spark.read.parquet's partition
-    discovery on the index itself)."""
-    return index_path.rstrip("/") + ".fence"
+    """Remove vectors from a BQ index: tombstones for the ids (`ids`
+    carries vec_id) plus the batches commit row, at the committed
+    high-water mark (_store_offline). Returns the batch id used."""
+    return _store_offline(_BQ, spark, ids, index_path, delete=True)
 
 
 def compact_bq_index(spark: SparkSession, index_path: str) -> None:
-    """Fold a stream-maintained BQ index (maintain_bq_index's
-    one-partition-per-micro-batch layout) into a single
-    ``batch_id=-1`` base partition, keeping ONLY the latest code per
-    vec_id (max_by batch_id) — stale codes from re-emitted vectors
-    are physically dropped, ids whose latest row is a NULL-code
-    delete marker (delete_bq_vectors) are dropped ENTIRELY (marker
-    and history fold away together — no tombstone survives
-    compaction), and the partition count stops growing
-    one-per-batch. Same contract as streaming/jobs.compact_term_stats:
-    run ONLY while the stream is stopped (committed batch ids never
-    replay, so folding them cannot duplicate; a restarted stream
-    appends fresh ``batch_id>=0`` partitions next to the base and
-    bq_candidates' latest-wins read stays correct). Crash-safe via
-    swap_compacted: the folded base goes to a temp sibling first, so
-    the live index survives a failed write (ADVICE r8)."""
-    from pyspark.sql import functions as F
-
-    def _write(tmp: str) -> None:
-        (
-            spark.read.parquet(index_path)
-            .groupBy("vec_id")
-            # struct-wrapped: max_by must return the NEWEST row even
-            # when its code is NULL (a delete marker) — the struct is
-            # never null, so null-code rows can win the fold
-            .agg(
-                F.max_by(F.struct("code"), "batch_id").alias("s")
-            )
-            .select("vec_id", F.col("s.code").alias("code"))
-            .filter(F.col("code").isNotNull())  # folded-out deletes
-            .withColumn("batch_id", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(tmp)
-        )
-
-    # the fence (a SIBLING dir the whole-dir swap cannot drop for us)
-    # is removed inside the swap's commit window — after the fold is
-    # durable at the sibling, before the live delete (ADVICE r11:
-    # dropping it after the swap left a crash window whose stale
-    # claimed ids spuriously fence a fresh-checkpoint stream at those
-    # ids with a misleading 'compact the store' remedy). Narrowed
-    # contract: an interrupted compaction must be re-run before any
-    # stream restarts (the next compact/recover call completes the
-    # swap; every claimed batch is in the durable fold).
-    swap_compacted(
-        spark,
-        index_path,
-        _write,
-        "BQ index",
-        pre_commit=lambda: drop_offline_fence(
-            spark, _bq_fence_dir(index_path)
-        ),
-    )
+    """Fold a BQ index's per-batch codes into one ``batch_id=-1`` base,
+    dropping the codes tombstones kill (stale codes of re-emitted
+    vectors, deleted vectors), with tombstones and fence folded out,
+    by one whole-dir swap (_store_compact). Run while the maintenance
+    stream is stopped; a restarted stream appends fresh
+    ``batch_id>=0`` batches next to the base."""
+    _store_compact(_BQ, spark, index_path)
 
 
 def bq_candidates(
@@ -2259,56 +2011,31 @@ def bq_candidates(
     index_path: str,
     q_code: int,
     n: int = 100,
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Stage-1 ANN candidate cut over a materialized BQ index:
     Hamming distance = bit_count(code ^ q_code) over the 8-byte code
-    column, top-n via TakeOrderedAndProject (per-partition heap).
-    Selects ONLY (id, code) so the scan never touches the vector
+    column of the committed, tombstone-live codes (_store_live),
+    top-n via TakeOrderedAndProject (per-partition heap). The index
+    holds (vec_id, code) only, so the scan never touches a vector
     column; rerank the returned ids against full vectors afterwards
     (see queries/vectors.py embedding_binary_quant_rerank for the
-    inline twin of the full two-stage shape).
-
-    A stream-maintained index (batch_id column present) is deduped
-    on read — latest batch_id wins per id — so an updated embedding
-    re-emitted in a later micro-batch cannot rank both its stale and
-    fresh codes (ADVICE r7); compact_bq_index folds the partitions
-    to keep that dedupe cheap."""
+    inline twin of the full two-stage shape). A re-emitted vector's
+    stale code and a deleted vector's code are tombstoned, so each id
+    ranks at most once, by its latest code."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.vectors import hamming_codes
 
-    idx = spark.read.parquet(index_path)
-    sel = idx.select(id_col, "code", *(
-        ["batch_id"] if "batch_id" in idx.columns else []
-    ))
-    if "batch_id" in idx.columns:
-        # stream-maintained index (maintain_bq_index): a vec re-emitted
-        # with an updated embedding lands a NEW code in a LATER
-        # batch_id partition while the stale one survives in the old
-        # partition — rank only the latest code per id (ADVICE r7),
-        # matching the batch write_bq_index rebuild semantics. One
-        # extra 16-byte-row shuffle on the index, never the vectors;
-        # fold old partitions with compact_bq_index to drop it.
-        # struct-wrapped max_by so a NULL-code DELETE marker
-        # (delete_bq_vectors) can win the fold and knock out older
-        # codes; the notNull cut below then drops the deleted id.
-        sel = sel.groupBy(id_col).agg(
-            F.max_by(F.struct("code"), "batch_id")["code"].alias(
-                "code"
-            )
-        )
-    # drops delete markers that won the fold — and, defensively, a
-    # foreign index's NULL codes, which must not rank unsearchable
-    # rows first (Spark sorts NULLS FIRST ascending)
-    sel = sel.filter(F.col("code").isNotNull())
     return (
-        sel
-        .withColumn(
-            "hamming",
-            hamming_codes(F.col("code"), F.lit(q_code).cast("long")),
+        _store_live(_BQ, spark, index_path)
+        .select(
+            "vec_id",
+            "code",
+            hamming_codes(F.col("code"), F.lit(q_code).cast("long")).alias(
+                "hamming"
+            ),
         )
-        .orderBy(F.asc("hamming"), F.asc(id_col))
+        .orderBy(F.asc("hamming"), F.asc("vec_id"))
         .limit(n)
     )
 
@@ -2595,6 +2322,14 @@ def _write_postings_meta(
     )
 
 
+def _bucket_state(spark: SparkSession, out_dir: str, commit: str):
+    """A bucketed store's frozen layout state, its bucket modulus, and
+    its committed high-water mark."""
+    return _postings_meta_buckets(spark, out_dir), _committed_hw(
+        spark, out_dir, commit
+    )
+
+
 def _doclens_frame(docs: DataFrame, batch_id: int) -> DataFrame:
     """(doc_id, dl, batch_id) ledger rows — dl is the SAME expression
     _posting_frames uses, so ledger and postings can never disagree
@@ -2751,6 +2486,8 @@ _FREQUENCY = _DocStore(
     commit="totals",
     deltas=(("doclens", _doclens_frame, _live_doclens),),
     commit_row=_totals_commit,
+    side=("meta",),
+    state=_bucket_state,
 )
 
 
@@ -2868,6 +2605,8 @@ _POSITIONAL = _DocStore(
     _POS_POSTINGS_SCHEMA,
     ("batch_id", "tok_bucket"),
     lambda docs, b, nb: _positional_frames(docs, b, nb),
+    side=("meta",),
+    state=_bucket_state,
 )
 
 

@@ -24,14 +24,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from se_data_pipeline_spark.sources.layout import (
+    _BQ,
     _FREQUENCY,
+    _IVF,
     _MINHASH,
     _POSITIONAL,
     _SHINGLE,
     POSTINGS_TOK_BUCKETS,
     _dyn_overwrite,
     _hadoop_path,
-    _ledger_row,
+    _no_commit,
     _postings_meta_buckets,
     _store_deltas,
     _write_postings_meta,
@@ -245,72 +247,37 @@ def maintain_bq_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ):
-    """Streaming maintenance of the binary-quantization ANN index
-    (r7): the foreachBatch twin of sources/layout.write_bq_index.
-    Each micro-batch of new vectors packs its 64-bit sign codes
+    """Streaming maintenance of the binary-quantization ANN index: the
+    foreachBatch twin of sources/layout.write_bq_index on the shared
+    maintainer skeleton (_maintain_doc_store, layout._BQ). Each
+    micro-batch packs its vectors' 64-bit sign codes
     (functions/vectors.pack_sign_bits — one Catalyst expression, no
-    UDF) and lands them in a `batch_id=N` partition via dynamic
-    partition overwrite — the same exactly-once-by-LAYOUT protocol as
-    maintain_term_stats: a replayed micro-batch overwrites ITS OWN
-    partition, so restarts never duplicate codes and no read-side
-    work happens per batch.
+    UDF) into ``out_dir/codes/batch_id=N`` and writes the batches
+    commit row LAST: a replayed micro-batch overwrites ITS OWN
+    partitions, and a batch that died before its commit row serves
+    nothing until the replay commits it.
 
-    The index stores (id, code) ONLY — 8 bytes of searchable state
-    per vector; the full float payloads stay in the source table and
-    are touched only by the stage-2 exact rerank
+    The index stores (vec_id, code) ONLY — 8 bytes of searchable
+    state per vector; the full float payloads stay in the source
+    table and are touched only by the stage-2 exact rerank
     (queries/vectors.embedding_binary_quant_rerank).
 
     Re-emitted ids (an UPDATED embedding arriving in a later
-    micro-batch): the new code lands in the newer batch_id partition
-    while the stale one survives in the older partition — appends
-    here never rewrite foreign partitions. Readers therefore keep
-    ONLY the latest batch_id per id (sources/layout.bq_candidates
-    dedupes on read whenever the batch_id column is present, ADVICE
-    r7), and sources/layout.compact_bq_index physically drops the
-    stale codes by folding all partitions into a batch_id=-1 base
-    (run while the stream is stopped, like compact_term_stats).
-    DELETES ride the same fold: sources/layout.delete_bq_vectors
-    (r10) writes a NULL-code marker at a fresh batch id, which wins
-    the latest-wins read and is dropped by the final notNull cut."""
-
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        codes = batch_df.filter(F.col(vec_col).isNotNull()).select(
-            # NULL vector -> no code: unsearchable entries stay out of
-            # the index (same rule as write_bq_index)
-            F.col(id_col),
-            pack_sign_bits(F.col(vec_col)).alias("code"),
-            F.lit(batch_id).alias("batch_id"),
-        )
-        # emptiness checked AFTER the filter: an all-NULL first batch
-        # must not write a zero-row partitioned store (only _SUCCESS,
-        # no schema-bearing files) that breaks every reader with
-        # UNABLE_TO_INFER_SCHEMA until real codes land
-        if codes.isEmpty():
-            return
-        from se_data_pipeline_spark.sources.layout import _bq_fence_dir
-
-        # delete_bq_vectors fences its batch ids (sibling fence dir —
-        # the index itself is a flat parquet dir); resuming this
-        # stream's old checkpoint past an offline delete would reuse
-        # the marker's id and resurrect the deleted vectors
-        guard_stream_batch(
-            codes.sparkSession,
-            _bq_fence_dir(out_dir),
-            batch_id,
-            f"BQ index at {out_dir}",
-        )
-        # per-writer dynamic mode: replace only THIS batch's partition
-        # (no session-conf mutation — see maintain_hourly_rollup)
-        _dyn_overwrite(codes, ["batch_id"], out_dir)
-
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    micro-batch): latest code wins. Every id of the batch gets a
+    tombstone at the batch id, so its older codes die for every
+    reader (bq_candidates) and sources/layout.compact_bq_index drops
+    them physically (run while the stream is stopped). A NULL vector
+    therefore DELETES its id: a tombstone with no code (the
+    revise_ivf_vectors rule)."""
+    return _maintain_doc_store(
+        _BQ,
+        vec_stream.select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+        ),
+        out_dir,
+        checkpoint_dir,
+        None,
+        True,
     )
 
 
@@ -322,89 +289,51 @@ def maintain_ivf_index(
     id_col: str = "vec_id",
     attr_cols: tuple = (),
 ):
-    """Streaming maintenance of the IVF ANN index (r8; the IVF twin
-    of maintain_bq_index, r7 VERDICT optional #8): new vectors are
-    assigned to their nearest coarse-quantizer cell and appended to
-    ``index_path/cells`` under a ``cell=C/batch_id=N`` partition via
-    per-writer dynamic partition overwrite — a replayed micro-batch
-    overwrites ITS OWN partitions, so restarts never duplicate rows
-    (exactly-once by LAYOUT, the maintain_term_stats protocol), and
+    """Streaming maintenance of the IVF ANN index on the shared
+    maintainer skeleton (_maintain_doc_store, layout._IVF): new
+    vectors are assigned to their nearest coarse-quantizer cell and
+    appended to ``index_path/cells`` under a ``cell=C/batch_id=N``
+    partition via per-writer dynamic partition overwrite, then the
+    batches commit row LAST — a replayed micro-batch overwrites ITS
+    OWN partitions, so restarts never duplicate rows, and
     ivf_candidates' cell-IN(...) partition pruning is oblivious to
     the batch_id split below the cell directories.
 
     Cell assignment is SHUFFLE-FREE: the centroid table (bounded,
     n_cells x dims — built once by sources/layout.write_ivf_index,
-    which MUST have run first) is collected once at job start and
-    folded into a single row-local Catalyst argmin expression
-    (layout._nearest_cell_expr) — no UDF, no join, each micro-batch
-    is scan -> project -> partitioned write.
+    which MUST have run first) is read once at job start and folded
+    into a single row-local Catalyst argmin expression
+    (layout._nearest_cell_expr) — no UDF, no join.
 
-    HARD PRECONDITION — new ids only: like every append-by-layout
-    store, a RE-EMITTED id (updated embedding) leaves its stale row
-    alive in the old (cell, batch_id) partition, and because the new
-    embedding may land in a DIFFERENT cell, a read-side latest-wins
-    dedupe inside the probed cells cannot see the newer copy parked
-    elsewhere — so updates go through sources/layout.
+    PRECONDITION — new ids only: a RE-EMITTED id (updated embedding)
+    would leave its stale row alive in the old (cell, batch_id)
+    partition, and because the new embedding may land in a DIFFERENT
+    cell, no read-side dedupe inside the probed cells can see the
+    newer copy — so updates go through sources/layout.
     revise_ivf_vectors (tombstone + replacement row, run while this
-    stream is stopped; r10), a rebuild (write_ivf_index), or
-    refresh_ivf_index — never a streamed re-emit. The quantizer is
-    likewise frozen at job start: re-training centroids invalidates
-    the cell layout and is a rebuild, not maintenance (standard IVF
-    practice: retrain + reindex offline, serve the frozen epoch).
-    A pq-carrying store (write_ivf_index(pq=True)) likewise freezes
-    its PQ codebook: each micro-batch's rows are ADC-encoded with
-    the same row-local Catalyst argmin as the batch writers, so the
-    ivf_pq_funnel serves stream-appended vectors unchanged.
-    ``attr_cols`` carries the stream's metadata columns into the
-    cells rows (the filtered-ANN attributes, write_ivf_index's
+    stream is stopped), a rebuild (write_ivf_index), or
+    refresh_ivf_index — never a streamed re-emit. A NULL vector is
+    unsearchable and skipped. The quantizer is likewise frozen at job
+    start: re-training centroids invalidates the cell layout and is a
+    rebuild, not maintenance (retrain + reindex offline, serve the
+    frozen epoch). A pq-carrying store (write_ivf_index(pq=True))
+    likewise freezes its PQ codebook: each micro-batch's rows are
+    ADC-encoded with the same row-local Catalyst argmin as the batch
+    writers, so the ivf_pq_funnel serves stream-appended vectors
+    unchanged. ``attr_cols`` carries the stream's metadata columns
+    into the cells rows (the filtered-ANN attributes, write_ivf_index's
     contract — pass the SAME columns the store was built with)."""
-    from se_data_pipeline_spark.sources.layout import _ivf_prologue, _ivf_rows
-
-    spark = vec_stream.sparkSession
-    # ONE fused job-start read (r13): centroids + (for a pq-carrying
-    # store) the frozen codebook and its meta — previously three
-    # separate bounded collects before the first micro-batch
-    fs_pq, pq_p = _hadoop_path(spark, f"{index_path}/pq")
-    has_pq = fs_pq.exists(pq_p)
-    pro = _ivf_prologue(spark, index_path, need_pq=has_pq)
-    if not pro["cents"]:
-        raise ValueError(
-            f"{index_path}/centroids is empty — run write_ivf_index "
-            "first (the streaming job maintains a frozen quantizer, "
-            "it does not train one)"
-        )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        rows = _ivf_rows(batch_df, pro, batch_id, vec_col, id_col, attr_cols)
-        # same all-NULL-first-batch guard as maintain_bq_index: never
-        # write a zero-row partitioned store
-        if rows.isEmpty():
-            return
-        # revise_ivf_vectors fences its batch ids; resuming this
-        # stream's old checkpoint past an offline revision would
-        # reuse one and clobber its partitions — fail loudly
-        guard_stream_batch(
-            rows.sparkSession,
-            f"{index_path}/offline_fence",
-            batch_id,
-            f"IVF index at {index_path}",
-        )
-        _dyn_overwrite(
-            rows, ["cell", "batch_id"], f"{index_path}/cells"
-        )
-        # batches ledger row LAST — the micro-batch's commit point
-        # (r11 ledger harmonization: readers of ledger-carrying
-        # stores serve committed batches only)
-        _ledger_row(
-            rows.sparkSession, f"{index_path}/batches", batch_id
-        )
-
-    return (
-        vec_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return _maintain_doc_store(
+        _IVF,
+        vec_stream.select(
+            F.col(id_col).alias("vec_id"),
+            F.col(vec_col).alias("embedding"),
+            *attr_cols,
+        ),
+        index_path,
+        checkpoint_dir,
+        None,
+        False,
     )
 
 
@@ -1084,6 +1013,8 @@ def maintain_term_stats(
         out_dir,
         checkpoint_dir,
         "term-stats store",
+        "term_stats/batch_id=-1",
+        "corpus_totals",
         lambda spark, batch, batch_id, nb: _term_stats_deltas(
             out_dir, n_buckets, batch_id, *_term_stats_frames(batch)
         ),
@@ -1168,13 +1099,14 @@ def _maintain_store(
     out_dir: str,
     checkpoint_dir: str,
     label: str,
+    base: str,
+    commit: str,
     write_batch,
     n_buckets: int | None = None,
 ):
-    """The foreachBatch skeleton of every document-store maintainer
-    (posting, positional, shingle, MinHash) and the term-stats
-    maintainer, started as an
-    availableNow query. Per micro-batch: localCheckpoint the batch
+    """The foreachBatch skeleton of every store maintainer (posting,
+    positional, shingle, MinHash, IVF, BQ and term stats), started as
+    an availableNow query. Per micro-batch: localCheckpoint the batch
     (decoupled from the stream), skip it when empty, fail LOUDLY when
     its checkpoint-scoped id collides with an offline-claimed fence id
     (layout.guard_stream_batch — resuming an old checkpoint after an
@@ -1196,9 +1128,21 @@ def _maintain_store(
     stream runs), and meta is written ONCE, by the store-creating
     batch, before its commit row: a per-batch delete+write of the
     one-row table would open a window where a concurrent serve reads
-    'has no meta table' (ADVICE r10)."""
+    'has no meta table' (ADVICE r10).
+
+    A store holding build rows (``base``: the glob of its
+    ``batch_id=-1`` dirs under out_dir) without its ``commit`` table
+    is a crashed build, and the maintainer refuses to start with the
+    shared missing-commit error: its first commit would otherwise
+    make the build's rows serve. The check is a driver-side glob, no
+    Spark job; the maintainer's own uncommitted batches (ids >= 0)
+    are its checkpoint replay's to overwrite and never block it."""
     import os
 
+    fs, built = _hadoop_path(docs_stream.sparkSession, f"{out_dir}/{base}")
+    _, committed = _hadoop_path(docs_stream.sparkSession, f"{out_dir}/{commit}")
+    if list(fs.globStatus(built) or []) and not fs.exists(committed):
+        raise _no_commit(out_dir, commit)
     nb_cache: list[int] = []
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -1247,22 +1191,34 @@ def _maintain_doc_store(
     appends its rows under ``batch_id=N`` through the family's frame
     builder (layout._store_deltas — the builder the batch writer and
     the offline revision use, so batch-built and stream-maintained
-    stores serve through the same readers) plus the commit-ledger
-    row, LAST. ``allow_revisions=True`` also tombstones every batch
-    doc_id at N, so a re-emitted document's stale rows die for every
-    reader (a changed document changes its rows); the default keeps
-    the append-only-unique-doc_ids contract."""
+    stores serve through the same readers) plus the commit row, LAST.
+    ``allow_revisions=True`` also tombstones every batch id at N, so a
+    re-emitted document's or vector's stale rows die for every reader
+    (a changed document changes its rows); the default keeps the
+    append-only-unique-ids contract. A bucketed store resolves its
+    modulus through the _maintain_store meta protocol; the IVF store
+    reads its frozen quantizers once, at job start."""
+    frozen = None
     if spec.bucketed:
         n_buckets = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
     else:
         n_buckets = None
+        if spec.state is not None:
+            frozen = spec.state(docs_stream.sparkSession, out_dir, spec.commit)[0]
     return _maintain_store(
         docs_stream,
         out_dir,
         checkpoint_dir,
         spec.label,
+        f"{spec.rows}/{'*/' if spec.nested else ''}batch_id=-1",
+        spec.commit,
         lambda spark, batch, batch_id, nb: _store_deltas(
-            spec, batch, out_dir, batch_id, nb, allow_revisions
+            spec,
+            batch,
+            out_dir,
+            batch_id,
+            frozen if nb is None else nb,
+            allow_revisions,
         ),
         n_buckets,
     )

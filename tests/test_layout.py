@@ -238,8 +238,8 @@ def test_bq_index_scan_prunes_vector_column(spark, sf_dir, tmp_path):
 
 def test_bq_index_excludes_null_vectors(spark, sf_dir, tmp_path):
     """A NULL vector has no code: it must not enter the index, and a
-    foreign index carrying NULL codes must not rank them FIRST in the
-    ascending Hamming scan (Spark sorts NULLS FIRST)."""
+    foreign index (no commit table) is refused with the shared
+    missing-commit error instead of ranking its rows."""
     from se_data_pipeline_spark.sources.layout import (
         bq_candidates,
         write_bq_index,
@@ -254,21 +254,19 @@ def test_bq_index_excludes_null_vectors(spark, sf_dir, tmp_path):
     )
     out = str(tmp_path / "bq_null")
     write_bq_index(with_null, out)
-    idx = spark.read.parquet(out)
+    idx = spark.read.parquet(f"{out}/codes")
     assert idx.filter(F.col("code").isNull()).count() == 0
     assert idx.filter(F.col("vec_id") == 999_999).count() == 0
 
-    # foreign index with a NULL code row: the scan must skip it
+    # foreign index with a NULL code row and no commit table: refused
     idx.unionByName(
         spark.createDataFrame(
-            [(888_888, None, None, None)],
-            "vec_id bigint, embedding array<float>, label int, code long",
+            [(888_888, None, None)],
+            "vec_id bigint, code long, batch_id int",
         )
     ).write.mode("overwrite").parquet(str(tmp_path / "bq_foreign"))
-    rows = bq_candidates(spark, str(tmp_path / "bq_foreign"), 0, n=5).collect()
-    ids = [r["vec_id"] for r in rows]
-    assert 888_888 not in ids and len(ids) == 5
-    assert all(r["hamming"] is not None for r in rows)
+    with pytest.raises(ValueError, match="no 'batches' commit table"):
+        bq_candidates(spark, str(tmp_path / "bq_foreign"), 0, n=5)
 
 
 def test_swap_compacted_failed_write_leaves_live_store(spark, tmp_path):

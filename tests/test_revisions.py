@@ -455,36 +455,25 @@ def test_revise_term_stats_corrects_statistics(
     )
 
 
-def test_delete_bq_vectors_in_band_markers(spark, tmp_path):
-    """BQ deletes are IN-BAND NULL-code markers: the latest-wins read
-    drops the id, compaction folds marker AND history away
-    physically, and a later re-emit (newer batch) restores it —
-    completing the tombstone story across all four stores."""
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
+def test_delete_bq_vectors_tombstones(spark, tmp_path):
+    """BQ deletes are tombstones at the next committed batch id: the
+    live read drops the id, compaction folds the code and its
+    tombstone away physically, and a later re-emit by the maintenance
+    stream (a newer batch) restores it."""
     from se_data_pipeline_spark.sources.layout import (
         bq_candidates,
         compact_bq_index,
         delete_bq_vectors,
         write_bq_index,
     )
+    from se_data_pipeline_spark.streaming.jobs import maintain_bq_index
 
     idx = str(tmp_path / "bq")
     vecs = spark.createDataFrame(
         [(i, [float((i + j) % 5 - 2) for j in range(64)]) for i in range(8)],
         "vec_id long, embedding array<float>",
     )
-    (
-        vecs.select(
-            "vec_id",
-            pack_sign_bits(F.col("embedding")).alias("code"),
-            F.lit(0).alias("batch_id"),
-        )
-        .write.partitionBy("batch_id")
-        .parquet(idx)
-    )
+    write_bq_index(vecs, idx)
     q_code = 0
     base = {r["vec_id"] for r in bq_candidates(spark, idx, q_code).collect()}
     assert base == set(range(8))
@@ -492,7 +481,7 @@ def test_delete_bq_vectors_in_band_markers(spark, tmp_path):
     b = delete_bq_vectors(
         spark, spark.createDataFrame([(3,)], "vec_id long"), idx
     )
-    assert b == 1
+    assert b == 0
     got = {r["vec_id"] for r in bq_candidates(spark, idx, q_code).collect()}
     assert got == base - {3}
 
@@ -500,38 +489,27 @@ def test_delete_bq_vectors_in_band_markers(spark, tmp_path):
     assert {
         r["vec_id"] for r in bq_candidates(spark, idx, q_code).collect()
     } == base - {3}
-    store = spark.read.parquet(idx)
+    store = spark.read.parquet(os.path.join(idx, "codes"))
     assert store.filter("vec_id = 3").count() == 0, (
-        "marker and history must fold away physically"
+        "the deleted code must fold away physically"
     )
     assert {
         r["batch_id"] for r in store.select("batch_id").distinct().collect()
     } == {-1}
+    assert not os.path.exists(os.path.join(idx, "tombstones"))
 
-    # re-emit id 3 at a newer batch (what the maintenance stream
-    # does): it serves again
-    (
-        vecs.filter("vec_id = 3")
-        .select(
-            "vec_id",
-            pack_sign_bits(F.col("embedding")).alias("code"),
-            F.lit(0).alias("batch_id"),
-        )
-        .write.mode("append")
-        .partitionBy("batch_id")
-        .parquet(idx)
-    )
+    # re-emit id 3 through the maintenance stream (a newer batch): it
+    # serves again
+    src = str(tmp_path / "src")
+    vecs.filter("vec_id = 3").coalesce(1).write.parquet(src)
+    maintain_bq_index(
+        spark.readStream.schema(vecs.schema).parquet(src),
+        idx,
+        str(tmp_path / "chk"),
+    ).awaitTermination(120)
     assert {
         r["vec_id"] for r in bq_candidates(spark, idx, q_code).collect()
     } == base
-
-    # a flat rebuild store has no batch dimension — deletes refuse
-    flat = str(tmp_path / "bq_flat")
-    write_bq_index(vecs, flat)
-    with _pytest.raises(ValueError, match="flat rebuild"):
-        delete_bq_vectors(
-            spark, spark.createDataFrame([(1,)], "vec_id long"), flat
-        )
 
 
 def test_posting_store_interrupted_whole_swap_recovers(

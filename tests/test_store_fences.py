@@ -341,43 +341,32 @@ def test_compact_posting_lists_recovers_crashed_swap(
 
 def test_bq_and_term_stats_fences_claimed(spark, tmp_path):
     """delete_bq_vectors and revise_term_stats claim their batch ids
-    (BQ's fence at a SIBLING path — the flat index dir cannot hold a
-    subdir), guard_stream_batch raises on the claimed id, and
-    compact_bq_index / compact_term_stats clear the fences."""
+    in the store's own offline_fence dir, guard_stream_batch raises on
+    the claimed id, and compact_bq_index / compact_term_stats clear
+    the fences."""
     from se_data_pipeline_spark.sources.layout import (
-        _bq_fence_dir,
         compact_bq_index,
         delete_bq_vectors,
         guard_stream_batch,
         offline_claimed_ids,
+        write_bq_index,
     )
     from se_data_pipeline_spark.streaming.jobs import (
         compact_term_stats,
         revise_term_stats,
     )
 
-    # BQ: delta-layout store, one delete
+    # BQ: a built store, one delete
     idx = str(tmp_path / "bq_idx")
     vecs = spark.createDataFrame(
         [(i, [float(i), -1.0]) for i in range(8)],
         "vec_id long, embedding array<float>",
     )
-    from se_data_pipeline_spark.functions.vectors import pack_sign_bits
-
-    (
-        vecs.select(
-            "vec_id",
-            pack_sign_bits(F.col("embedding")).alias("code"),
-            F.lit(-1).alias("batch_id"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("batch_id")
-        .parquet(idx)
-    )
+    write_bq_index(vecs, idx)
     b = delete_bq_vectors(
         spark, vecs.filter("vec_id = 3").select("vec_id"), idx
     )
-    fence = _bq_fence_dir(idx)
+    fence = os.path.join(idx, "offline_fence")
     assert offline_claimed_ids(spark, fence) == {b}
     with pytest.raises(RuntimeError, match="collides with an offline"):
         guard_stream_batch(spark, fence, b, "BQ index")
@@ -610,12 +599,24 @@ _CRASH_TEXTS = [
     "eta theta alpha beta iota kappa",
     "lambda mu nu xi omicron pi",
 ]
+# the vector families' three inputs, and the IVF seed build that
+# trains the quantizer its maintainer keeps frozen
+_CRASH_VECS = [[1.0, 0.5], [0.9, -0.2], [-1.0, 0.3]]
+_IVF_SEED = [
+    (10, [1.0, 1.0], 0),
+    (11, [1.2, 0.8], 0),
+    (12, [-1.0, -1.0], 1),
+    (13, [-0.8, -1.2], 1),
+]
+_VEC_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 
 
 def _crash_family(name: str):
-    """(maintainer, batch writer, revise, compact, serve, commit table)
-    of one store family; serve(spark, out, probe) collects sorted
-    rows (term stats: the read_term_stats fold)."""
+    """(maintainer, batch writer, revise, compact, serve, commit table,
+    rows dir, seed) of one store family; serve(spark, out, probe)
+    collects sorted rows (term stats: the read_term_stats fold), and
+    seed(spark, out), when not None, builds the store the maintainer
+    needs before its first micro-batch (IVF: the trained quantizer)."""
     from se_data_pipeline_spark.sources import layout as L
     from se_data_pipeline_spark.streaming import jobs as J
 
@@ -632,6 +633,8 @@ def _crash_family(name: str):
                 ).collect()
             ),
             "totals",
+            "postings",
+            None,
         )
     if name == "term_stats":
 
@@ -656,6 +659,8 @@ def _crash_family(name: str):
             J.compact_term_stats,
             fold,
             "corpus_totals",
+            "term_stats",
+            None,
         )
     if name == "positional":
         return (
@@ -672,6 +677,8 @@ def _crash_family(name: str):
                 ).collect()
             ),
             "batches",
+            "postings",
+            None,
         )
     if name == "shingle":
         return (
@@ -686,6 +693,53 @@ def _crash_family(name: str):
                 ).collect()
             ),
             "batches",
+            "postings",
+            None,
+        )
+    if name == "ivf":
+
+        def seed(spark, o):
+            L.write_ivf_index(
+                spark.createDataFrame(_IVF_SEED, _VEC_SCHEMA), o
+            )
+
+        def build(vecs, o):
+            # seed and batches in one build; the all-cells serve below
+            # does not depend on the cell assignment
+            L.write_ivf_index(
+                vecs.sparkSession.createDataFrame(
+                    _IVF_SEED, _VEC_SCHEMA
+                ).unionByName(vecs),
+                o,
+            )
+
+        return (
+            J.maintain_ivf_index,
+            build,
+            L.revise_ivf_vectors,
+            L.compact_ivf_index,
+            lambda spark, o, probe: sorted(
+                (r["vec_id"], r["cos_sim"])
+                for r in L.ivf_candidates(
+                    spark, o, [1.0, 0.0], nprobe=8, n=100
+                ).collect()
+            ),
+            "batches",
+            "cells",
+            seed,
+        )
+    if name == "bq":
+        return (
+            J.maintain_bq_index,
+            L.write_bq_index,
+            L.delete_bq_vectors,
+            L.compact_bq_index,
+            lambda spark, o, probe: sorted(
+                tuple(r) for r in L.bq_candidates(spark, o, 0).collect()
+            ),
+            "batches",
+            "codes",
+            None,
         )
     return (
         J.maintain_minhash_index,
@@ -697,6 +751,8 @@ def _crash_family(name: str):
             for r in L.lsh_candidates_from_index(spark, o, probe).collect()
         ),
         "batches",
+        "postings",
+        None,
     )
 
 
@@ -706,6 +762,8 @@ _CRASH_FAMILIES = [
     "minhash",
     "frequency",
     "term_stats",
+    "ivf",
+    "bq",
 ]
 
 
@@ -723,39 +781,52 @@ def test_crashed_first_micro_batch_is_never_served(
     point covers. The crash is injected at the one write step every
     maintainer shares (layout._overlap_writes).
 
-    Crashed FIRST batch: the serve, an offline revision and a
-    compaction each raise the shared missing-commit error instead of
-    reading them. Crashed SECOND batch: the serve still equals the
-    state after the first batch, and an offline revision refuses the
-    unclaimed partials with the store's files unchanged. Either way
-    the restart from the checkpoint replays and commits the batch,
-    after which the serve equals an offline build of every batch's
-    documents."""
+    Crashed FIRST batch of a store the maintainer creates: the serve,
+    an offline revision and a compaction each raise the shared
+    missing-commit error instead of reading them. Crashed SECOND
+    batch, or first batch over a built store (IVF, whose maintainer
+    keeps the build's quantizer): the serve still equals the state
+    before the batch, and an offline revision (BQ: a delete) refuses
+    the unclaimed partials with the store's files unchanged. Either
+    way the restart from the checkpoint replays and commits the
+    batch, after which the serve equals an offline build of every
+    batch's documents."""
     from se_data_pipeline_spark.sources import layout as L
 
-    maintain, build, revise, compact, serve, commit = _crash_family(family)
-    docs = spark.createDataFrame(
-        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    maintain, build, revise, compact, serve, commit, rows_dir, seed = (
+        _crash_family(family)
     )
-    probe = docs.select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    if family in ("ivf", "bq"):
+        docs = spark.createDataFrame(
+            [(i, v, i % 2) for i, v in enumerate(_CRASH_VECS)], _VEC_SCHEMA
+        )
+        id_col = "vec_id"
+    else:
+        docs = spark.createDataFrame(
+            list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+        )
+        id_col = "doc_id"
+    probe = docs.withColumn(id_col, F.col(id_col) + 100)
     src = str(tmp_path / "src")
     out = str(tmp_path / "store")
     chk = str(tmp_path / "chk")
-    rows_dir = "term_stats" if family == "term_stats" else "postings"
     real = L._overlap_writes
 
     def stream():
         return spark.readStream.schema(docs.schema).parquet(src)
 
+    if seed is not None:
+        seed(spark, out)
+        before = serve(spark, out, probe)
     if crashed:
-        docs.filter("doc_id < 2").coalesce(1).write.parquet(src)
+        docs.filter(f"{id_col} < 2").coalesce(1).write.parquet(src)
         q = maintain(stream(), out, chk)
         q.awaitTermination(120)
         assert q.exception() is None
         before = serve(spark, out, probe)
-        docs.filter("doc_id >= 2").coalesce(1).write.mode("append").parquet(
-            src
-        )
+        docs.filter(f"{id_col} >= 2").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
     else:
         docs.coalesce(1).write.parquet(src)
 
@@ -770,19 +841,22 @@ def test_crashed_first_micro_batch_is_never_served(
         q = maintain(stream(), out, chk)
         with pytest.raises(Exception):
             q.awaitTermination(120)
-    assert os.path.isdir(os.path.join(out, rows_dir, f"batch_id={crashed}"))
+    assert glob.glob(
+        os.path.join(out, rows_dir, "**", f"batch_id={crashed}"),
+        recursive=True,
+    )
 
-    if crashed:
+    if crashed or seed is not None:
         assert serve(spark, out, probe) == before
         files = _files(out)
         with pytest.raises(RuntimeError, match="uncommitted rows"):
-            revise(spark, docs.filter("doc_id = 0"), out)
+            revise(spark, docs.filter(f"{id_col} = 0"), out)
         assert _files(out) == files
     else:
         assert not os.path.exists(os.path.join(out, commit))
         for call in (
             lambda: serve(spark, out, probe),
-            lambda: revise(spark, docs.filter("doc_id = 0"), out),
+            lambda: revise(spark, docs.filter(f"{id_col} = 0"), out),
             lambda: compact(spark, out),
         ):
             with pytest.raises(
@@ -798,3 +872,34 @@ def test_crashed_first_micro_batch_is_never_served(
     want = serve(spark, truth, probe)
     assert want
     assert serve(spark, out, probe) == want
+
+
+def test_maintainer_refuses_crashed_build(spark, tmp_path):
+    """A batch build that crashed before its commit row leaves
+    ``batch_id=-1`` rows no commit point covers. A maintainer started
+    over it must refuse with the shared missing-commit error: its
+    first commit would otherwise raise the high-water mark past -1 and
+    serve the build's rows. The serve keeps refusing too."""
+    import shutil
+
+    from se_data_pipeline_spark.sources import layout as L
+    from se_data_pipeline_spark.streaming import jobs as J
+
+    docs = spark.createDataFrame(
+        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    )
+    out = str(tmp_path / "store")
+    L.write_shingle_index(docs.filter("doc_id < 2"), out)
+    # the build's state when it crashed before its commit row
+    shutil.rmtree(os.path.join(out, "batches"))
+    src = str(tmp_path / "src")
+    docs.filter("doc_id = 2").coalesce(1).write.parquet(src)
+    with pytest.raises(ValueError, match="no 'batches' commit table"):
+        J.maintain_shingle_index(
+            spark.readStream.schema(docs.schema).parquet(src),
+            out,
+            str(tmp_path / "chk"),
+        ).awaitTermination(120)
+    assert not os.path.exists(os.path.join(out, "batches"))
+    with pytest.raises(ValueError, match="no 'batches' commit table"):
+        L.near_dups_from_index(spark, out, docs, 0.5)

@@ -1154,7 +1154,7 @@ def test_maintain_bq_index_matches_batch_and_serves_candidates(
     }
     got = {
         (r["vec_id"], r["code"])
-        for r in spark.read.parquet(idx_dir).select("vec_id", "code").collect()
+        for r in spark.read.parquet(f"{idx_dir}/codes").select("vec_id", "code").collect()
     }
     assert got == expected
 
@@ -1162,14 +1162,14 @@ def test_maintain_bq_index_matches_batch_and_serves_candidates(
     run_stream()
     got2 = {
         (r["vec_id"], r["code"])
-        for r in spark.read.parquet(idx_dir).select("vec_id", "code").collect()
+        for r in spark.read.parquet(f"{idx_dir}/codes").select("vec_id", "code").collect()
     }
     assert got2 == expected
 
     # candidate serving parity vs a batch-built index
     batch_idx = str(tmp_path / "bq_index_batch")
     write_bq_index(emb, batch_idx)
-    q_code = spark.read.parquet(batch_idx).select("code").first()["code"]
+    q_code = spark.read.parquet(f"{batch_idx}/codes").select("code").first()["code"]
     from_stream = [
         (r["vec_id"], r["hamming"])
         for r in bq_candidates(spark, idx_dir, q_code, n=25).collect()
@@ -1230,7 +1230,7 @@ def test_maintain_bq_index_reemitted_id_latest_code_wins(
     ).parquet(src)
     run()
 
-    raw = spark.read.parquet(idx_dir)
+    raw = spark.read.parquet(f"{idx_dir}/codes")
     assert raw.count() == 5, "stale code should still be on disk"
     new_code = (
         spark.createDataFrame(updated, schema)
@@ -1252,7 +1252,7 @@ def test_maintain_bq_index_reemitted_id_latest_code_wins(
 
     # compaction drops the stale row; serving results are unchanged
     compact_bq_index(spark, idx_dir)
-    folded = spark.read.parquet(idx_dir)
+    folded = spark.read.parquet(f"{idx_dir}/codes")
     assert folded.count() == 4
     assert [r["batch_id"] for r in folded.select("batch_id").distinct().collect()] == [-1]
     assert serve() == served
@@ -1430,9 +1430,10 @@ def test_maintain_bq_index_all_null_first_batch_writes_nothing(
 
     run()
     # nothing schema-bearing was written: either no dir or no files
+    codes_dir = os.path.join(idx_dir, "codes")
     files = (
-        [f for f in os.listdir(idx_dir) if f.startswith("batch_id=")]
-        if os.path.isdir(idx_dir)
+        [f for f in os.listdir(codes_dir) if f.startswith("batch_id=")]
+        if os.path.isdir(codes_dir)
         else []
     )
     assert files == [], files
@@ -1442,7 +1443,7 @@ def test_maintain_bq_index_all_null_first_batch_writes_nothing(
         [(3, [1.0, -1.0, 0.5, -0.5], 0)], schema
     ).coalesce(1).write.mode("append").parquet(src)
     run()
-    got = spark.read.parquet(idx_dir).select("vec_id", "code").collect()
+    got = spark.read.parquet(codes_dir).select("vec_id", "code").collect()
     assert [r["vec_id"] for r in got] == [3]
     assert got[0]["code"] is not None
 

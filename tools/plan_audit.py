@@ -134,8 +134,8 @@ EAGER_OK = {
     "ivf_revised_recall": "store lifecycle under test: index build "
     "+ revise writes + bounded collects (query vector, centroids, "
     "1-row batch-max scalars)",
-    "bq_served_topk": "store lifecycle under test: delta index "
-    "build + delete marker write + 1-row qcode collect",
+    "bq_served_topk": "store lifecycle under test: index build "
+    "+ delete tombstone write + 1-row qcode collect",
     "hybrid_served_recall": "store lifecycle under test: both leg "
     "stores built per call + bounded collects (query vector, "
     "centroids); 3 probe/fusion rounds over the same stores",
