@@ -189,16 +189,6 @@ def guard_stream_batch(
         )
 
 
-def drop_offline_fence(spark: SparkSession, fence_dir: str) -> None:
-    """Remove a store's fence table. Every compactor's whole-dir swap
-    already drops its store's fence; after compaction every claimed
-    batch is folded into the base, so a fresh-checkpoint stream
-    legitimately restarts at id 0."""
-    fs, p = _hadoop_path(spark, fence_dir)
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
 def _physical_batch_ids(
     spark: SparkSession, path: str, nested: bool = False
 ) -> set:
@@ -289,8 +279,10 @@ def _guard_uncommitted_partials(
 # --------------------------------------------------------------------
 # Shared store-lifecycle machinery: every materialized store runs the
 # same commit-point protocol — recover a crashed swap, read the
-# committed high-water mark from the store's commit table
-# (_committed_hw), refuse unclaimed partials, claim the fence, write
+# committed state (high-water mark, summed totals, frozen side tables
+# and any per-query legs) in one collect through the one reader of
+# commit and side tables (_committed_state), refuse unclaimed
+# partials, claim the fence, write
 # the non-commit deltas (overlapped) and the commit row LAST, serve
 # committed tombstone-live rows, compact by whole-dir swap (side
 # tables that never change between builds — bucket meta, IVF
@@ -346,27 +338,6 @@ def _overlap_writes(*thunks) -> list:
         return [f.result() for f in futures]
 
 
-def _commit_rows(
-    spark: SparkSession, out_dir: str, table: str
-) -> DataFrame:
-    """The store's commit table — ``batches`` (the ledger stores),
-    ``totals`` (the frequency store) or ``corpus_totals`` (the
-    term-stats store) — read with its explicit schema.
-    A missing table raises the shared missing-commit error: the path
-    check is the read's own (no extra probe, no job), and an
-    unreadable commit point must never be served as "everything
-    committed"."""
-    from pyspark.errors import AnalysisException
-
-    schema = _LEDGER_SCHEMA if table == "batches" else _POSTINGS_TOTALS_SCHEMA
-    try:
-        return spark.read.schema(schema).parquet(f"{out_dir}/{table}")
-    except AnalysisException as exc:
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
-    raise _no_commit(out_dir, table)
-
-
 def _no_commit(out_dir: str, table: str) -> ValueError:
     """The shared missing-commit error of a store without its commit
     table."""
@@ -379,29 +350,161 @@ def _no_commit(out_dir: str, table: str) -> ValueError:
     )
 
 
-def _hw_after(mx) -> int:
-    """One past the newest committed batch id (0 for an empty
-    commit table)."""
-    return max(0, (int(mx) if mx is not None else -1) + 1)
+def _committed_state(
+    spark: SparkSession,
+    out_dir: str,
+    commit: str | None,
+    side: tuple = (),
+    terms: list | None = None,
+    q_vec: list | None = None,
+) -> dict:
+    """The store's committed state in ONE collect: the only reader of
+    a commit table and of the frozen side tables. Its legs are raw
+    rows UNIONED under a ``kind`` tag — never cross-joined, so an
+    empty leg cannot annihilate the others, and never aggregated, so
+    no shuffle splits the read into a second job:
 
+    - ``commit``: the commit table's rows as they are on disk —
+      ``batches`` (the ledger stores), ``totals`` (the frequency
+      store) or ``corpus_totals`` (term stats), one row per batch
+      since the last compaction. None reads the side tables alone (a
+      maintainer resolving its frozen state, which may precede the
+      store's first commit);
+    - ``side``: the frozen side tables among ``meta`` (the bucket
+      modulus), ``centroids`` and ``pq`` (the IVF quantizers; the PQ
+      tables only when the store carries them);
+    - ``terms``: query terms, as RAW xxhash64 values whose pmod lands
+      driver-side — for int64 h and positive modulus n, Python's
+      ``h % n`` equals Spark's ``pmod(h, n)``, so the bucket ids are
+      bit-identical to the writer's _tok_bucket_col;
+    - ``q_vec``: a query vector, packed to its sign code by the SAME
+      pack_sign_bits expression the writers use.
 
-def _committed_hw(spark: SparkSession, out_dir: str, table: str) -> int:
-    """The store's committed high-water mark: one past the newest
-    batch its commit table records. The commit row is every writer's
-    LAST write, so batches at or above the mark are uncommitted — a
-    crashed operation's partials, excluded from every read and
-    overwritten when the operation re-runs with the SAME id (the
-    idempotent convergence every offline writer relies on). Serve
-    prologues read the same table inside their fused job. The table
-    holds one row per batch, so it is read in one task: the max then
-    needs no exchange, and the read is one job instead of two."""
+    The commit row is every writer's LAST write, so every commit row
+    is committed: the high-water mark (one past the newest batch id,
+    0 for an empty table — batches at or above it are a crashed
+    operation's partials, excluded from every read and overwritten
+    when the operation re-runs with the SAME id) and the summed
+    totals come from one consistent snapshot. A sum skips NULLs and
+    is None when no row has a value (SQL SUM). A missing commit table
+    raises the shared missing-commit error, a missing meta table the
+    no-meta-table error: the path check is the read's own (no extra
+    probe, no job). No state is cached across calls.
+
+    Returns {"hw", "n_docs", "n_tokens"} (None without ``commit``),
+    "n_buckets", "cents" ([(cell, centroid)...] sorted by cell), "pq"
+    ((m, sub, k) or None), "cb" (codebook rows by codeword id),
+    "buckets" (sorted term bucket ids) and "qcode"."""
+    from functools import reduce
+
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
-    return _hw_after(
-        _commit_rows(spark, out_dir, table)
-        .coalesce(1)
-        .agg(F.max("batch_id").alias("b"))
-        .collect()[0]["b"]
+    def _read(name: str, schema: str, missing: Exception | None = None):
+        try:
+            return spark.read.schema(schema).parquet(f"{out_dir}/{name}")
+        except AnalysisException as exc:
+            if missing is None or exc.getCondition() != "PATH_NOT_FOUND":
+                raise
+        raise missing
+
+    def _leg(df: DataFrame, kind: str, a, b=None, c=None, vec=None):
+        nul = F.lit(None)
+        return df.select(
+            F.lit(kind).alias("kind"),
+            *[
+                (nul if x is None else x).cast("long").alias(n)
+                for n, x in zip("abc", (a, b, c))
+            ],
+            (nul if vec is None else vec).cast("array<double>").alias("vec"),
+        )
+
+    legs = []
+    if "meta" in side:
+        no_meta = ValueError(
+            f"posting-list store at {out_dir} has no meta table — "
+            "build it with write_posting_lists / maintain_posting_lists"
+        )
+        meta = _read("meta", _POSTINGS_META_SCHEMA, no_meta)
+        legs.append(_leg(meta, "meta", F.col("n_buckets")))
+    if "centroids" in side:
+        cents = _read("centroids", _IVF_CENTROIDS_SCHEMA)
+        legs.append(_leg(cents, "cent", F.col("cell"), vec=F.col("centroid")))
+    if "pq" in side:
+        fs, pq = _hadoop_path(spark, f"{out_dir}/pq")
+        if fs.exists(pq):
+            pq_meta = _read("pq/meta", _PQ_META_SCHEMA)
+            cb = _read("pq/codebook", _PQ_CODEBOOK_SCHEMA)
+            legs += [
+                _leg(pq_meta, "pq", *[F.col(c) for c in ("m", "sub", "k")]),
+                _leg(cb, "cb", F.col("k"), vec=F.col("e")),
+            ]
+    if commit is not None:
+        # one schema for every commit table: a ledger's rows read
+        # n_tokens as NULL
+        rows = _read(
+            commit, _POSTINGS_TOTALS_SCHEMA, _no_commit(out_dir, commit)
+        )
+        cols = ("batch_id", "n_docs", "n_tokens")
+        legs.append(_leg(rows, "commit", *[F.col(c) for c in cols]))
+    if terms is not None:
+        uniq = sorted({str(t) for t in terms})
+        if not uniq:
+            # an empty literal array has no element type to hash
+            raise ValueError("at least one query term required")
+        toks = spark.range(1).select(
+            F.explode(F.array(*[F.lit(t) for t in uniq])).alias("tok")
+        )
+        legs.append(_leg(toks, "term", F.xxhash64("tok")))
+    if q_vec is not None:
+        from se_data_pipeline_spark.functions.vectors import pack_sign_bits
+
+        qlit = F.array(*[F.lit(float(x)) for x in q_vec])
+        legs.append(_leg(spark.range(1), "qcode", pack_sign_bits(qlit)))
+
+    by: dict[str, list] = {}
+    for r in reduce(DataFrame.unionByName, legs).collect():
+        by.setdefault(r["kind"], []).append(r)
+    commits = by.get("commit", [])
+
+    def _sum(col: str):
+        vals = [r[col] for r in commits if r[col] is not None]
+        return sum(vals) if vals else None
+
+    if "meta" in side and "meta" not in by:
+        raise ValueError(f"{out_dir}/meta is empty")
+    nb = int(by["meta"][0]["a"]) if "meta" in by else None
+    pq = by["pq"][0] if "pq" in by else None
+    return {
+        "hw": None
+        if commit is None
+        else max((int(r["a"]) for r in commits), default=-1) + 1,
+        "n_docs": _sum("b"),
+        "n_tokens": _sum("c"),
+        "n_buckets": nb,
+        "cents": sorted(
+            (int(r["a"]), [float(x) for x in r["vec"]])
+            for r in by.get("cent", [])
+        ),
+        "pq": None if pq is None else tuple(int(pq[c]) for c in "abc"),
+        "cb": [
+            [float(x) for x in r["vec"]]
+            for r in sorted(by.get("cb", []), key=lambda r: r["a"])
+        ],
+        "buckets": None
+        if terms is None
+        else sorted({int(r["a"]) % nb for r in by["term"]}),
+        "qcode": None if q_vec is None else int(by["qcode"][0]["a"]),
+    }
+
+
+def _totals_row(spark: SparkSession, st: dict) -> DataFrame:
+    """The summed (n_docs, n_tokens) of a _committed_state snapshot as
+    a 1-row frame of JVM literals (the claim_offline_batch rule)."""
+    from pyspark.sql import functions as F
+
+    return spark.range(1).select(
+        *[F.lit(st[c]).cast("long").alias(c) for c in ("n_docs", "n_tokens")]
     )
 
 
@@ -519,11 +622,9 @@ class _DocStore:
     ``commit``, ``tombstones`` keyed by ``id_col``, ``offline_fence``.
     ``frames(docs, batch_id, state)`` is the family's row builder for
     one document (or vector) set under the store's frozen layout
-    ``state`` — the bucket modulus of a bucketed store, the IVF
-    quantizers, else None. ``state(spark, out_dir, commit)``, when
-    set, reads that state together with the committed high-water mark
-    (an offline revision; the IVF maintainer, once at job start).
-    ``schema`` is the rows' explicit read
+    ``state``: the bucket modulus of a bucketed store, else the
+    _committed_state snapshot of its ``side`` tables (the IVF
+    quantizers). ``schema`` is the rows' explicit read
     schema, or None when it is inferred (IVF: its attribute columns
     and vector element type vary per store); a ``batch_id`` below
     another partition column (IVF's ``cell=C/batch_id=N``) nests the
@@ -531,16 +632,19 @@ class _DocStore:
     frame(docs, batch_id), live(spark, out_dir, before_batch)):
     written with the rows, and folded by compaction from their
     committed live view. ``side`` names the tables that never change
-    between builds (bucket meta, IVF centroids and PQ): compaction
-    copies them. ``commit_row(spark, out_dir, batch_id, docs, ids)``
+    between builds (bucket meta, IVF centroids and PQ): the frozen
+    layout state, read with the commit rows in one collect
+    (_committed_state) and copied by compaction.
+    ``commit_row(spark, out_dir, batch_id, docs, ids)``
     builds a batch's commit row once its deltas have landed (``docs``
     None for a delete, ``ids`` the tombstoned ids or None). A
     ``totals`` commit table holds additive corpus statistics, which
-    compaction sums; a ledger's informational n_docs is recounted from
-    the compacted rows. A store whose parts include ``tok_bucket`` is
-    bucketed: it records its modulus in a ``meta`` table. Compacted
-    rows are repartitioned by the first partition column other than
-    batch_id, so each leaf dir holds one file."""
+    compaction folds to their committed sums; a ledger's informational
+    n_docs is recounted from the compacted rows. A store whose parts
+    include ``tok_bucket`` is bucketed: it records its modulus in a
+    ``meta`` table. Compacted rows are repartitioned by the first
+    partition column other than batch_id, so each leaf dir holds one
+    file."""
 
     label: str
     schema: str | None
@@ -552,7 +656,6 @@ class _DocStore:
     rows: str = "postings"
     id_col: str = "doc_id"
     side: tuple = ()
-    state: Callable | None = None
 
     @property
     def bucketed(self) -> bool:
@@ -672,15 +775,16 @@ def _store_offline(
     partials at N and claims N in the fence before any store write, so
     a maintenance stream resuming its old checkpoint afterwards fails
     loudly instead of clobbering this batch (run while the stream is
-    stopped). Rows, extra deltas and tombstones are written
-    concurrently; the commit row follows them LAST as the commit
-    point."""
+    stopped). N and, for a revision, the frozen layout state its
+    rows are built under come from one _committed_state collect.
+    Rows, extra deltas and tombstones are written concurrently; the
+    commit row follows them LAST as the commit point."""
     recover_compacting(spark, out_dir)
-    state, next_b = (
-        spec.state(spark, out_dir, spec.commit)
-        if spec.state is not None and not delete
-        else (None, _committed_hw(spark, out_dir, spec.commit))
+    st = _committed_state(
+        spark, out_dir, spec.commit, () if delete else spec.side
     )
+    next_b = st["hw"]
+    state = st["n_buckets"] if spec.bucketed else st
     rows = [f"{out_dir}/{spec.rows}"]
     _offline_begin(
         spark,
@@ -709,7 +813,7 @@ def _store_live(
 
     if hw is None:
         recover_compacting(spark, out_dir)
-        hw = _committed_hw(spark, out_dir, spec.commit)
+        hw = _committed_state(spark, out_dir, spec.commit)["hw"]
     read = spark.read if spec.schema is None else spark.read.schema(spec.schema)
     rows = read.parquet(f"{out_dir}/{spec.rows}").filter(
         F.col("batch_id") < hw
@@ -748,21 +852,22 @@ def _store_compact(
     The WHOLE store directory is rewritten to a temp sibling and
     swapped by ONE swap_compacted call: folding rows to -1 while live
     tombstones survive would kill the entire base (-1 < any tombstone
-    batch). A totals commit table folds to the sum of its committed
-    rows; a ledger's informational n_docs is counted by reading back
-    the compacted rows just written (one column-pruned read with an
-    explicit schema — a zero-row fold writes no data files) instead
-    of evaluating the live view a second time. Side tables are
-    copied, not rewritten. Run while the maintenance stream is
-    stopped."""
+    batch). The high-water mark and a totals commit table's sums come
+    from one _committed_state collect, which also refuses a bucketed
+    store without its meta table; the folded totals row is written
+    from those sums as literals. A ledger's informational n_docs is
+    counted by reading back the compacted rows just written (one
+    column-pruned read with an explicit schema — a zero-row fold
+    writes no data files) instead of evaluating the live view a
+    second time. Side tables are copied, not rewritten. Run while the
+    maintenance stream is stopped."""
     from pyspark.sql import functions as F
 
     leaf = [p for p in spec.parts if p != "batch_id"][:1]
 
     def _write(tmp: str) -> None:
-        hw = _committed_hw(spark, out_dir, spec.commit)
-        if spec.bucketed:
-            _require_postings_meta(spark, out_dir)
+        st = _committed_state(spark, out_dir, spec.commit, spec.side)
+        hw = st["hw"]
         rows = _store_live(spec, spark, out_dir, hw)
 
         def _fold(df: DataFrame, parts, name: str) -> None:
@@ -774,10 +879,7 @@ def _store_compact(
         for name, _, live in spec.deltas:
             _fold(live(spark, out_dir, hw), ["batch_id"], name)
         if spec.commit == "totals":
-            commit = _commit_rows(spark, out_dir, "totals").agg(
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("n_tokens"),
-            )
+            commit = _totals_row(spark, st)
         else:
             commit = (
                 spark.read.schema(f"{spec.id_col} bigint")
@@ -984,10 +1086,19 @@ def _nearest_cell_expr(centroids: list[tuple[int, list[float]]], vec_col):
     Deliberately LINEAR-size: an earlier running-best WHEN-fold
     referenced the accumulated struct twice per centroid, doubling
     the analyzed expression tree per cell (2^n_cells blowup — the
-    plan never finished analyzing at 10 cells)."""
+    plan never finished analyzing at 10 cells). An empty table (an
+    IVF store built from no searchable vector) raises: revisions, the
+    maintainer and refresh keep the build's frozen quantizer, they do
+    not train one."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
+    if not centroids:
+        raise ValueError(
+            "the IVF centroid table is empty — build the index with "
+            "write_ivf_index first (revisions, the maintainer and "
+            "refresh keep its frozen quantizer, they do not train one)"
+        )
     vcol = F.col(vec_col) if not isinstance(vec_col, Column) else vec_col
     cells_lit = F.array(
         *[
@@ -1147,7 +1258,7 @@ def write_ivf_index(
         F.col(cell_col).cast("int").alias("cell"),
         *[F.col(a) for a in attr_cols],
     )
-    pro = {"meta": None, "cb": None}
+    pro = {"pq": None, "cb": None}
     # the centroid table and the pq tables are side tables of the
     # shared build: written concurrently with the cells rows, before
     # the batches commit row
@@ -1172,7 +1283,7 @@ def write_ivf_index(
                 f"PQ split {pq_m}x{pq_sub} does not match the "
                 f"vector dimensionality {len(cb[0])}"
             )
-        pro = {"meta": (pq_m, pq_sub, len(cb)), "cb": cb}
+        pro = {"pq": (pq_m, pq_sub, len(cb)), "cb": cb}
         side.append(lambda: _write_pq_tables(spark, out_path, cb, pq_m, pq_sub))
         # Encode ABOVE a cell-keyed exchange: the input is typically
         # one scan split, so the m x k argmin expression would
@@ -1208,135 +1319,17 @@ def write_ivf_index(
 _IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
 
 
-def _collect_tagged(legs: list) -> dict[str, list]:
-    """Union prologue legs that share one column set, among them a
-    `kind` tag, and collect them at once: {kind: [rows...]}. A
-    union, never a cross join, so an empty leg cannot annihilate the
-    others' answers — shared by _serve_prologue and _ivf_prologue."""
-    from functools import reduce
-
-    by_kind: dict[str, list] = {}
-    for r in reduce(DataFrame.unionByName, legs).collect():
-        by_kind.setdefault(r["kind"], []).append(r)
-    return by_kind
-
-
-def _ivf_prologue(
-    spark: SparkSession,
-    index_path: str,
-    need_pq: bool = False,
-    q_vec: list | None = None,
-) -> dict:
-    """Every bounded serve/revise-side read of an IVF store fused
-    into ONE Spark job (r13; the _serve_prologue precedent — each
-    separate collect costs a driver job round-trip, and an IVF
-    funnel paid 3-4 of them per call): the centroid table, the
-    committed high-water mark, the PQ meta + frozen codebook (when
-    ``need_pq``), and the query vector's packed sign code (when
-    ``q_vec`` is given — the SAME pack_sign_bits Catalyst expression
-    the writers use, riding a 1-row leg of this job instead of its
-    own collect). The legs are UNIONED under a `kind` tag, never
-    cross-joined, so an empty centroid table cannot annihilate the
-    scalar answers. No state is cached across calls — every call
-    reads the store's live commit point.
-
-    Returns {"cents": [(cell, [centroid...])...] sorted by cell,
-    "hw": int (the committed high-water mark; a store without its
-    batches ledger raises the shared missing-commit error), "meta":
-    (m, sub, k) | None, "cb": codebook rows sorted by codeword id |
-    None, "qcode": int | None}.
-    ``need_pq=True`` requires the pq tables to exist — callers gate
-    on the pq dir probe (_ivf_state's fs.exists check)."""
-    from pyspark.sql import functions as F
-
-    nul_l = F.lit(None).cast("long")
-    nul_v = F.lit(None).cast("array<double>")
-
-    def _leg(kind, a=nul_l, b=nul_l, c=nul_l, vec=nul_v):
-        return [
-            F.lit(kind).alias("kind"),
-            a.cast("long").alias("a"),
-            b.cast("long").alias("b"),
-            c.cast("long").alias("c"),
-            vec.alias("vec"),
-        ]
-
-    legs = [
-        spark.read.schema(_IVF_CENTROIDS_SCHEMA)
-        .parquet(f"{index_path}/centroids")
-        .select(*_leg("cent", a=F.col("cell"), vec=F.col("centroid"))),
-        _commit_rows(spark, index_path, "batches")
-        .agg(F.max("batch_id").alias("mx"))
-        .select(*_leg("hw", a=F.col("mx"))),
-    ]
-    if need_pq:
-        legs.append(
-            spark.read.schema(_PQ_META_SCHEMA)
-            .parquet(f"{index_path}/pq/meta")
-            .select(
-                *_leg(
-                    "meta",
-                    a=F.col("m"),
-                    b=F.col("sub"),
-                    c=F.col("k"),
-                )
-            )
-        )
-        legs.append(
-            spark.read.schema(_PQ_CODEBOOK_SCHEMA)
-            .parquet(f"{index_path}/pq/codebook")
-            .select(*_leg("cb", a=F.col("k"), vec=F.col("e")))
-        )
-    if q_vec is not None:
-        from se_data_pipeline_spark.functions.vectors import (
-            pack_sign_bits,
-        )
-
-        qlit = F.array(*[F.lit(float(x)) for x in q_vec])
-        legs.append(
-            spark.range(1).select(
-                *_leg("qcode", a=pack_sign_bits(qlit))
-            )
-        )
-    by_kind = _collect_tagged(legs)
-    out: dict = {
-        "cents": sorted(
-            (int(r["a"]), [float(x) for x in r["vec"]])
-            for r in by_kind.get("cent", [])
-        ),
-        "hw": _hw_after(by_kind["hw"][0]["a"]),
-        "meta": None,
-        "cb": None,
-        "qcode": None,
-    }
-    if need_pq:
-        mrow = by_kind.get("meta", [])
-        if not mrow:
-            raise ValueError(f"{index_path}/pq/meta is empty")
-        m = mrow[0]
-        out["meta"] = (int(m["a"]), int(m["b"]), int(m["c"]))
-        out["cb"] = [
-            [float(x) for x in r["vec"]]
-            for r in sorted(by_kind.get("cb", []), key=lambda r: r["a"])
-        ]
-    if q_vec is not None:
-        out["qcode"] = int(by_kind["qcode"][0]["a"])
-    return out
-
-
 def ivf_serve_state(spark: SparkSession, index_path: str) -> dict:
     """Pre-read serve-time state for SEVERAL probes of the same
-    committed store inside one query body: crash-swap recovery, the
-    bounded centroid table, and the committed high-water mark — the
-    latter two in ONE fused job (_ivf_prologue, r13; previously a
-    collect each). A recall report probes the same store three times
-    (brute + nprobe=1,2); without this each ivf_candidates call
-    re-ran the recovery probe, the centroid collect, and the ledger
+    committed store inside one query body: crash-swap recovery, then
+    the bounded centroid table ("cents") and the committed high-water
+    mark ("hw") in one _committed_state collect. A recall report
+    probes the same store three times (brute + nprobe=1,2); without
+    this each ivf_candidates call re-ran the recovery probe and the
     read. The state is a SNAPSHOT — never reuse it across writes to
     the store."""
     recover_compacting(spark, index_path)
-    pro = _ivf_prologue(spark, index_path)
-    return {"cents": pro["cents"], "hw": pro["hw"]}
+    return _committed_state(spark, index_path, "batches", ("centroids",))
 
 
 def _cos_sim_expr(q_vec: list):
@@ -1396,8 +1389,8 @@ def _ivf_frames(vecs: DataFrame, batch_id: int, pro: dict) -> DataFrame:
     appends). ``vecs`` carries vec_id, embedding and the attributes;
     a build adds its trained ``cell`` labels, and without them each
     vector goes to its nearest cell under the frozen quantizer
-    (``pro``: an _ivf_prologue result). NULL vectors are unsearchable
-    and dropped."""
+    (``pro``: a _committed_state snapshot of the side tables). NULL
+    vectors are unsearchable and dropped."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.vectors import pack_sign_bits
@@ -1415,29 +1408,12 @@ def _ivf_frames(vecs: DataFrame, batch_id: int, pro: dict) -> DataFrame:
         F.lit(batch_id).alias("batch_id"),
         *[c for c in vecs.columns if c not in ("vec_id", "embedding", "cell")],
     )
-    if pro["meta"] is not None:
-        m, sub, _k = pro["meta"]
+    if pro["pq"] is not None:
+        m, sub, _k = pro["pq"]
         rows = rows.withColumn(
             "pq_code", _pq_code_expr(pro["cb"], m, sub, "embedding")
         )
     return rows
-
-
-def _ivf_state(spark: SparkSession, index_path: str, _commit=None):
-    """The IVF store's frozen quantizers (centroids and, for a
-    pq-carrying store, the codebook and its meta) and its committed
-    high-water mark, from ONE fused _ivf_prologue job. Revisions and
-    the maintainer assign cells under these quantizers; they never
-    train one."""
-    fs, pq_p = _hadoop_path(spark, f"{index_path}/pq")
-    pro = _ivf_prologue(spark, index_path, need_pq=fs.exists(pq_p))
-    if not pro["cents"]:
-        raise ValueError(
-            f"{index_path}/centroids is empty — build the index with "
-            "write_ivf_index first (revisions and the maintainer keep "
-            "its frozen quantizer, they do not train one)"
-        )
-    return pro, pro["hw"]
 
 
 # The IVF store on the shared lifecycle: cells rows under
@@ -1454,7 +1430,6 @@ _IVF = _DocStore(
     rows="cells",
     id_col="vec_id",
     side=("centroids", "pq"),
-    state=_ivf_state,
 )
 
 
@@ -1479,7 +1454,8 @@ def revise_ivf_vectors(
     replacement row (the write_ivf_index NULL-is-unsearchable rule).
 
     The shared offline revision (_store_offline): the quantizers and
-    the committed high-water mark come from one fused prologue job;
+    the committed high-water mark come from one _committed_state
+    collect;
     rows and tombstones are written concurrently and the batches
     commit row LAST. A re-run after any partial write reuses the SAME
     id and overwrites its own partitions (cell assignment is
@@ -1506,8 +1482,8 @@ def _probe_cells(q_vec: list[float], nprobe: int, cents: list) -> list[int]:
     the bounded (n_cells x dims) centroid table — (d2, cell)
     lexicographic order, the _nearest_cell_expr tie-break. Shared by
     ivf_candidates and the funnels; ``cents`` is the
-    [(cell, centroid)...] list from a pre-read _ivf_prologue /
-    ivf_serve_state snapshot."""
+    [(cell, centroid)...] list of a _committed_state snapshot
+    (ivf_serve_state)."""
     by_d2 = sorted(
         (
             sum((c - q) ** 2 for c, q in zip(cvec, q_vec)),
@@ -1577,16 +1553,16 @@ def ivf_bq_funnel(
 
     The query's code is evaluated with the SAME Catalyst expression
     the writers use (pack_sign_bits has no public driver-side twin)
-    — riding a 1-row leg of the fused prologue job (r13) instead of
-    its own collect, alongside the centroid table and the committed
-    high-water mark (previously three separate driver round-trips
-    per funnel call)."""
+    — riding a 1-row leg of the _committed_state collect instead of
+    its own, alongside the centroid table and the commit rows."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.vectors import hamming_codes
 
     recover_compacting(spark, index_path)
-    pro = _ivf_prologue(spark, index_path, q_vec=q_vec)
+    pro = _committed_state(
+        spark, index_path, "batches", ("centroids",), q_vec=q_vec
+    )
     cells = _probe_cells(q_vec, nprobe, pro["cents"])
     q_code = pro["qcode"]
 
@@ -1655,17 +1631,14 @@ def ivf_pq_funnel(
     from pyspark.sql import functions as F
 
     recover_compacting(spark, index_path)
-    fs_pq, pq_p = _hadoop_path(spark, f"{index_path}/pq")
-    if not fs_pq.exists(pq_p):
+    # one collect: pq meta + frozen codebook + centroids + commit rows
+    pro = _committed_state(spark, index_path, "batches", _IVF.side)
+    if pro["pq"] is None:
         raise ValueError(
             f"IVF index at {index_path} carries no PQ codes — build "
             "it with write_ivf_index(pq=True) for the ADC funnel"
         )
-    # ONE fused prologue job (r13): pq meta + frozen codebook +
-    # centroids + committed high-water mark — previously four
-    # separate bounded collects per funnel call
-    pro = _ivf_prologue(spark, index_path, need_pq=True)
-    m, sub, _k = pro["meta"]
+    m, sub, _k = pro["pq"]
     cb = pro["cb"]
     cells = _probe_cells(q_vec, nprobe, pro["cents"])
     # LUT[mi][ki] = ||q_sub[mi] - codeword[ki, mi]||^2, driver-side
@@ -1841,9 +1814,9 @@ def refresh_ivf_index(
             f"IVF index at {index_path} has no cells store — build it "
             "with write_ivf_index before refreshing"
         )
-    # centroids, committed high-water mark and PQ meta in one job
-    pro, hw = _ivf_state(spark, index_path)
-    cents = pro["cents"]
+    # centroids, PQ meta and the commit rows in one collect
+    pro = _committed_state(spark, index_path, "batches", _IVF.side)
+    hw, cents = pro["hw"], pro["cents"]
 
     # revised/deleted ids are dropped by the shared live view BEFORE
     # the latest-wins fold, so a deleted vector does not resurrect
@@ -1876,7 +1849,7 @@ def refresh_ivf_index(
         # set instead of re-reading + re-shuffling the store per step
         .cache()
     )
-    pq_meta = pro["meta"]
+    pq_meta = pro["pq"]
     try:
         for _ in range(max(0, n_iters)):
             new = (
@@ -2103,83 +2076,6 @@ def _term_buckets(
     return sorted({r["b"] for r in rows})
 
 
-def _require_postings_meta(spark: SparkSession, out_dir: str) -> None:
-    """Raise the shared no-meta-table error when the store lacks its
-    meta dir — one copy of the existence check + message for
-    _serve_prologue and _postings_meta_buckets (ADVICE r12: the two
-    verbatim copies could drift)."""
-    fs, meta_p = _hadoop_path(spark, f"{out_dir}/meta")
-    if not fs.exists(meta_p):
-        raise ValueError(
-            f"posting-list store at {out_dir} has no meta table — "
-            "build it with write_posting_lists / "
-            "maintain_posting_lists"
-        )
-
-
-def _serve_prologue(
-    spark: SparkSession,
-    out_dir: str,
-    terms: list,
-    hw_table: str,
-) -> tuple[int, int, list]:
-    """The per-serve prologue reads — bucket modulus (meta),
-    committed high-water mark (the store's commit-point table), and
-    the query terms' bucket ids — fused into ONE collect (r12
-    "protocol floor": the three separate collects cost a driver job
-    round-trip each, several times per lifecycle query). The K term
-    rows, the 1-row meta read and the 1-row high-water aggregate are
-    UNIONED under a `kind` tag (_collect_tagged, the _ivf_prologue
-    shape), not cross-joined: 2 jobs under AQE (the aggregate's
-    shuffle stage and the result) where the two cross joins cost 4.
-    No state is cached across calls — every serve still reads the
-    store's live commit point. The term rows carry RAW xxhash64
-    values and the pmod lands driver-side: for int64 h and positive
-    modulus n, Python's ``h % n`` equals Spark's ``pmod(h, n)``
-    (both are the floored/positive remainder), so the bucket ids are
-    bit-identical to the writer's _tok_bucket_col.
-
-    ``hw_table``: the store's commit table — "totals" for the
-    frequency store (every writer's LAST write), "batches" for the
-    ledger stores; the hw leg is _committed_hw's read, so a store
-    without its commit table raises the shared missing-commit error.
-    Returns (n_buckets, hw, sorted bucket ids)."""
-    from pyspark.sql import functions as F
-
-    _require_postings_meta(spark, out_dir)
-    uniq = sorted({str(t) for t in terms})
-    if not uniq:
-        # an empty literal array has no element type to hash; no
-        # public caller reaches this (phrase/AND require >= 2 terms,
-        # bm25's isin(*terms) fails earlier), but fail with the real
-        # reason for future internal callers (ADVICE r12)
-        raise ValueError("at least one query term required")
-
-    def _leg(kind: str, a):
-        return [F.lit(kind).alias("kind"), a.cast("long").alias("a")]
-
-    legs = [
-        spark.range(1)
-        .select(
-            F.explode(F.array(*[F.lit(t) for t in uniq])).alias("tok")
-        )
-        .select(*_leg("term", F.xxhash64("tok"))),
-        spark.read.schema(_POSTINGS_META_SCHEMA)
-        .parquet(f"{out_dir}/meta")
-        .select(*_leg("meta", F.col("n_buckets"))),
-        _commit_rows(spark, out_dir, hw_table)
-        .agg(F.max("batch_id").alias("mx"))
-        .select(*_leg("hw", F.col("mx"))),
-    ]
-    by_kind = _collect_tagged(legs)
-    if "meta" not in by_kind:
-        raise ValueError(f"{out_dir}/meta is empty")
-    n_buckets = int(by_kind["meta"][0]["a"])
-    hw = _hw_after(by_kind["hw"][0]["a"])
-    buckets = sorted({int(r["a"]) % n_buckets for r in by_kind["term"]})
-    return n_buckets, hw, buckets
-
-
 def _pruned_postings(
     spark: SparkSession,
     root: str,
@@ -2284,30 +2180,6 @@ def _posting_frames(docs: DataFrame, batch_id: int, n_buckets: int):
     )
 
 
-def _postings_meta_buckets(
-    spark: SparkSession, out_dir: str, default: int | None = None
-) -> int:
-    """The store's bucket modulus, from its one-row meta table. Write
-    and read MUST agree on the modulus or pruning reads the wrong
-    buckets — which is why it is recorded in the store itself rather
-    than trusted to call-site defaults. `default` (when given) is the
-    modulus of a store that does not exist yet — a maintainer's first
-    micro-batch creates the store and writes its meta."""
-    fs, meta = _hadoop_path(spark, f"{out_dir}/meta")
-    if not fs.exists(meta):
-        if default is not None:
-            return int(default)
-        _require_postings_meta(spark, out_dir)
-    rows = (
-        spark.read.schema(_POSTINGS_META_SCHEMA)
-        .parquet(f"{out_dir}/meta")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"{out_dir}/meta is empty")
-    return int(rows[0]["n_buckets"])
-
-
 def _write_postings_meta(
     spark: SparkSession, out_dir: str, n_buckets: int
 ) -> None:
@@ -2319,14 +2191,6 @@ def _write_postings_meta(
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{out_dir}/meta")
-    )
-
-
-def _bucket_state(spark: SparkSession, out_dir: str, commit: str):
-    """A bucketed store's frozen layout state, its bucket modulus, and
-    its committed high-water mark."""
-    return _postings_meta_buckets(spark, out_dir), _committed_hw(
-        spark, out_dir, commit
     )
 
 
@@ -2487,7 +2351,6 @@ _FREQUENCY = _DocStore(
     deltas=(("doclens", _doclens_frame, _live_doclens),),
     commit_row=_totals_commit,
     side=("meta",),
-    state=_bucket_state,
 )
 
 
@@ -2563,11 +2426,11 @@ _POS_POSTINGS_SCHEMA = (
     "doc_id bigint, pos array<int>, tok string, "
     "batch_id int, tok_bucket bigint"
 )
-# commit ledger: one row per committed batch, written LAST — the
-# totals-table commit-point role for stores that need no corpus
-# statistics (positional postings, shingle index); the ledger carries
-# only the commit marker + an informational doc count
-_LEDGER_SCHEMA = "n_docs bigint, batch_id int"
+# commit ledger (``batches``): one row per committed batch, written
+# LAST — the totals-table commit-point role for stores that need no
+# corpus statistics (positional postings, shingle index); the ledger
+# carries only the commit marker + an informational doc count, read
+# by _committed_state with the totals schema (n_tokens NULL)
 
 
 def _positional_frames(
@@ -2606,7 +2469,6 @@ _POSITIONAL = _DocStore(
     ("batch_id", "tok_bucket"),
     lambda docs, b, nb: _positional_frames(docs, b, nb),
     side=("meta",),
-    state=_bucket_state,
 )
 
 
@@ -2684,7 +2546,7 @@ def _pivot_live_positions(
     in-bucket term cut. The scan is built from those bucket
     dirs alone (_pruned_postings): listing is O(K x committed
     batches), a driver-side glob, never a listing job over the whole
-    store; the prologue is one union collect (_serve_prologue).
+    store; the prologue is one _committed_state collect.
 
     The tombstone kill rule is FUSED INTO the pivot (r13, guide §2.4
     one-exchange-satisfies-both): the tombstone markers are unioned
@@ -2712,15 +2574,13 @@ def _pivot_live_positions(
     from pyspark.sql import functions as F
 
     recover_compacting(spark, out_dir)
-    # ONE fused prologue collect: bucket modulus + committed
-    # high-water mark + term bucket ids
-    n_buckets, hw, buckets = _serve_prologue(
-        spark, out_dir, list(terms), "batches"
-    )
+    # ONE collect: bucket modulus + commit rows + term bucket ids
+    st = _committed_state(spark, out_dir, "batches", ("meta",), terms)
+    hw = st["hw"]
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)
     p = _pruned_postings(
-        spark, f"{out_dir}/postings", _POS_POSTINGS_SCHEMA, buckets, hw
+        spark, f"{out_dir}/postings", _POS_POSTINGS_SCHEMA, st["buckets"], hw
     ).filter(F.col("tok").isin(sorted(set(terms))))
     fs, tp = _hadoop_path(spark, f"{out_dir}/tombstones")
     if not fs.exists(tp):
@@ -3269,21 +3129,23 @@ def bm25_from_postings(
     FILTER on the postings layout — the scan touches at most K bucket
     directories for a K-term query — and the tok equality filter cuts
     within them as a pushed parquet data filter; df per term is a
-    tiny aggregate over the pruned rows, corpus totals ride a 1-row
-    broadcast. Exactly doc_bm25_search's scoring math — the parity
-    test pins score-for-score equality against the inline query —
-    with corpus-scan work replaced by an O(matching-postings) lookup.
-    The scan is built from the K bucket dirs of the committed batches
-    alone (_pruned_postings): listing is O(K x committed batches), a
-    driver-side glob, never a listing job over the whole store.
+    tiny aggregate over the pruned rows, and the corpus totals enter
+    the plan as literals. Exactly doc_bm25_search's scoring math — the
+    parity test pins score-for-score equality against the inline
+    query — with corpus-scan work replaced by an O(matching-postings)
+    lookup. The scan is built from the K bucket dirs of the committed
+    batches alone (_pruned_postings): listing is O(K x committed
+    batches), a driver-side glob, never a listing job over the whole
+    store.
 
-    avgdl is computed as n_tokens/n_docs from the additively-folded
-    totals deltas, which is bit-identical to the inline query's
-    AVG(size(split(text))) (Spark's AVG is the same long-sum /
-    long-count double divide). Works unchanged on a batch-built
-    store (one batch_id=-1 partition) and a stream-maintained one
-    (many deltas): postings rows are unique per (doc, term) by the
-    append-only-unique-docs contract, and totals fold by sum."""
+    avgdl is n_tokens/n_docs over the additively-folded totals
+    deltas, kept as a Spark division of the two long literals, which
+    is bit-identical to the inline query's AVG(size(split(text)))
+    (Spark's AVG is the same long-sum / long-count double divide).
+    Works unchanged on a batch-built store (one batch_id=-1
+    partition) and a stream-maintained one (many deltas): postings
+    rows are unique per (doc, term) by the append-only-unique-docs
+    contract, and totals fold by sum."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.text import BM25_B, BM25_K1
@@ -3294,21 +3156,20 @@ def bm25_from_postings(
     # rename — finish it before the meta read raises (same entry
     # protocol as refresh_ivf_index)
     recover_compacting(spark, out_dir)
-    # ONE fused prologue collect (bucket modulus + committed
-    # high-water mark + term bucket ids). The hw serves the COMMITTED state
-    # only (ADVICE r10): totals is every writer's LAST write, so
-    # max(totals batch_id)+1 is the committed high-water mark — a
-    # revision that crashed after its tombstone write but before its
-    # totals correction must stay invisible (its tombstones would
-    # otherwise drop the old rows while totals still count them)
-    # until its re-run lands the commit point.
-    n_buckets, hw, buckets = _serve_prologue(
-        spark, out_dir, list(terms), "totals"
-    )
+    # ONE collect: bucket modulus + totals rows + term bucket ids.
+    # totals is every writer's LAST write, so its rows are exactly the
+    # committed batches: the high-water mark and the
+    # summed totals are one consistent snapshot — a revision that
+    # crashed after its tombstone write but before its totals
+    # correction stays invisible until its re-run lands the commit
+    # point, and a micro-batch committing mid-serve can never pair
+    # batch-N totals with batch-<N postings.
+    st = _committed_state(spark, out_dir, "totals", ("meta",), terms)
+    hw = st["hw"]
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)
     p = _pruned_postings(
-        spark, f"{out_dir}/postings", _POSTINGS_SCHEMA, buckets, hw
+        spark, f"{out_dir}/postings", _POSTINGS_SCHEMA, st["buckets"], hw
     ).filter(F.col("tok").isin(*terms))
     # revised/deleted docs: drop rows a newer COMMITTED tombstone
     # kills. The join runs over the already-PRUNED postings, and a
@@ -3320,37 +3181,18 @@ def bm25_from_postings(
     dfreq = p.groupBy("tok").agg(
         F.count(F.lit(1)).alias("df")
     )
-    totals = (
-        spark.read.schema(_POSTINGS_TOTALS_SCHEMA)
-        .parquet(f"{out_dir}/totals")
-        # the SAME committed prefix as the postings read (r12,
-        # VERDICT r11 next #3): this aggregate runs as a separate
-        # job, so a micro-batch committing mid-serve would otherwise
-        # pair batch-N totals with batch-<N postings — a mixed-state
-        # avgdl/n_docs no committed prefix ever had. With the filter,
-        # every serve is a consistent snapshot at the hw it read
-        # first, even while a maintenance stream is appending.
-        .filter(F.col("batch_id") < hw)
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .select(
-            "n_docs",
-            (F.col("n_tokens") / F.col("n_docs")).alias("avgdl"),
-        )
-    )
+    n_docs = F.lit(st["n_docs"]).cast("long")
+    avgdl = F.lit(st["n_tokens"]).cast("long") / n_docs
     idf = F.log(
         1
-        + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+        + (n_docs - F.col("df") + F.lit(0.5))
         / (F.col("df") + F.lit(0.5))
     )
     sat = (F.col("c") * (k1 + 1)) / (
-        F.col("c") + k1 * (1 - b + b * F.col("dl") / F.col("avgdl"))
+        F.col("c") + k1 * (1 - b + b * F.col("dl") / avgdl)
     )
     return (
         p.join(F.broadcast(dfreq), "tok")
-        .crossJoin(F.broadcast(totals))
         .groupBy("doc_id")
         .agg(F.round(F.sum(idf * sat), 6).alias("bm25"))
         .orderBy(F.desc("bm25"), F.asc("doc_id"))

@@ -31,11 +31,12 @@ from se_data_pipeline_spark.sources.layout import (
     _POSITIONAL,
     _SHINGLE,
     POSTINGS_TOK_BUCKETS,
+    _committed_state,
     _dyn_overwrite,
     _hadoop_path,
     _no_commit,
-    _postings_meta_buckets,
     _store_deltas,
+    _totals_row,
     _write_postings_meta,
     guard_stream_batch,
 )
@@ -1015,15 +1016,15 @@ def maintain_term_stats(
         "term-stats store",
         "term_stats/batch_id=-1",
         "corpus_totals",
-        lambda spark, batch, batch_id, nb: _term_stats_deltas(
+        lambda spark, batch, batch_id: _term_stats_deltas(
             out_dir, n_buckets, batch_id, *_term_stats_frames(batch)
         ),
     )
 
 
 # Explicit store schema (data columns + the batch_id/bucket partition
-# columns; corpus_totals is a commit table, read by layout._commit_rows
-# with the totals schema): passing it to the reader avoids the footer-
+# columns; corpus_totals is a commit table, read by
+# layout._committed_state): passing it to the reader avoids the footer-
 # inference job on a many-partition store AND keeps a zero-data-file
 # directory readable as an empty frame — a first micro-batch of
 # token-less documents legitimately writes a zero-row terms delta
@@ -1102,7 +1103,6 @@ def _maintain_store(
     base: str,
     commit: str,
     write_batch,
-    n_buckets: int | None = None,
 ):
     """The foreachBatch skeleton of every store maintainer (posting,
     positional, shingle, MinHash, IVF, BQ and term stats), started as
@@ -1111,7 +1111,7 @@ def _maintain_store(
     its checkpoint-scoped id collides with an offline-claimed fence id
     (layout.guard_stream_batch — resuming an old checkpoint after an
     offline revision would reuse its id and clobber its partitions),
-    then ``write_batch(spark, batch, batch_id, nb)`` writes the
+    then ``write_batch(spark, batch, batch_id)`` writes the
     batch's non-commit deltas and returns its commit write, which runs
     LAST — the batch's commit point, the offline writers' crash
     order. Exactly-once by LAYOUT: a replayed micro-batch overwrites
@@ -1119,16 +1119,6 @@ def _maintain_store(
     nothing else, so a batch that died before its commit is invisible
     to every reader until the restart from its checkpoint replays and
     commits it.
-
-    A bucketed store passes its modulus default as ``n_buckets`` (None
-    for an unbucketed store): the modulus comes from the store's meta
-    table when the store exists (a restart with a different argument
-    must NOT fork the layout mid-store), resolved once per run and
-    reused (it is immutable, and offline ops are fenced out while the
-    stream runs), and meta is written ONCE, by the store-creating
-    batch, before its commit row: a per-batch delete+write of the
-    one-row table would open a window where a concurrent serve reads
-    'has no meta table' (ADVICE r10).
 
     A store holding build rows (``base``: the glob of its
     ``batch_id=-1`` dirs under out_dir) without its ``commit`` table
@@ -1143,7 +1133,6 @@ def _maintain_store(
     _, committed = _hadoop_path(docs_stream.sparkSession, f"{out_dir}/{commit}")
     if list(fs.globStatus(built) or []) and not fs.exists(committed):
         raise _no_commit(out_dir, commit)
-    nb_cache: list[int] = []
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.localCheckpoint()  # decouple from the stream
@@ -1156,19 +1145,7 @@ def _maintain_store(
             batch_id,
             f"{label} at {out_dir}",
         )
-        nb = None
-        if n_buckets is not None:
-            if not nb_cache:
-                nb_cache.append(
-                    _postings_meta_buckets(spark, out_dir, default=n_buckets)
-                )
-            nb = nb_cache[0]
-        commit = write_batch(spark, batch, batch_id, nb)
-        if nb is not None:
-            fs, meta_p = _hadoop_path(spark, os.path.join(out_dir, "meta"))
-            if not fs.exists(meta_p):
-                _write_postings_meta(spark, out_dir, nb)
-        commit()
+        write_batch(spark, batch, batch_id)()
 
     return (
         docs_stream.writeStream.outputMode("append")
@@ -1195,16 +1172,36 @@ def _maintain_doc_store(
     ``allow_revisions=True`` also tombstones every batch id at N, so a
     re-emitted document's or vector's stale rows die for every reader
     (a changed document changes its rows); the default keeps the
-    append-only-unique-ids contract. A bucketed store resolves its
-    modulus through the _maintain_store meta protocol; the IVF store
-    reads its frozen quantizers once, at job start."""
-    frozen = None
-    if spec.bucketed:
-        n_buckets = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
+    append-only-unique-ids contract.
+
+    The frozen layout state is resolved once, at job start (it is
+    immutable, and offline ops are fenced out while the stream runs):
+    a store's side tables through layout._committed_state — the IVF
+    quantizers, or a bucketed store's modulus once its meta table
+    exists, so a restart with a different ``n_buckets`` cannot fork
+    the layout mid-store. Otherwise the store-creating batch uses
+    ``n_buckets`` (default POSTINGS_TOK_BUCKETS) and writes meta ONCE,
+    after its rows and before its commit row: a per-batch
+    delete+write of the one-row table would open a window where a
+    concurrent serve reads 'has no meta table'."""
+    spark = docs_stream.sparkSession
+    fs, meta = _hadoop_path(spark, f"{out_dir}/meta")
+    if spec.bucketed and not fs.exists(meta):
+        frozen = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
+    elif spec.side:
+        st = _committed_state(spark, out_dir, None, spec.side)
+        frozen = st["n_buckets"] if spec.bucketed else st
     else:
-        n_buckets = None
-        if spec.state is not None:
-            frozen = spec.state(docs_stream.sparkSession, out_dir, spec.commit)[0]
+        frozen = None
+
+    def write_batch(spark, batch, batch_id):
+        commit = _store_deltas(
+            spec, batch, out_dir, batch_id, frozen, allow_revisions
+        )
+        if spec.bucketed and not fs.exists(meta):
+            _write_postings_meta(spark, out_dir, frozen)
+        return commit
+
     return _maintain_store(
         docs_stream,
         out_dir,
@@ -1212,15 +1209,7 @@ def _maintain_doc_store(
         spec.label,
         f"{spec.rows}/{'*/' if spec.nested else ''}batch_id=-1",
         spec.commit,
-        lambda spark, batch, batch_id, nb: _store_deltas(
-            spec,
-            batch,
-            out_dir,
-            batch_id,
-            frozen if nb is None else nb,
-            allow_revisions,
-        ),
-        n_buckets,
+        write_batch,
     )
 
 
@@ -1336,31 +1325,27 @@ def read_term_stats(spark: SparkSession, out_dir: str):
     writer's LAST write), so its rows are the committed batches and
     the terms delta of a batch at or above their high-water mark is a
     crashed write's partial, never read. The commit rows — one per
-    batch since the last compaction — are read in one bounded collect
-    (layout._commit_rows; a store without them raises the shared
-    missing-commit error), which yields both the mark and the folded
-    totals; the terms fold is one additive groupBy over
+    batch since the last compaction — are read in the store's one
+    committed-state collect (layout._committed_state; a store without
+    them raises the shared missing-commit error), which yields both
+    the mark and the summed totals, returned as a 1-row literal
+    frame; the terms fold is one additive groupBy over
     vocabulary-sized deltas, read with the explicit schema (no
     inference job; empty-delta dirs fold as empty). Terms whose
     folded doc_freq reaches 0 (every containing document revised away
     via revise_term_stats' negative deltas) leave the vocabulary,
     matching a rebuild."""
-    from se_data_pipeline_spark.sources.layout import (
-        _commit_rows,
-        _hw_after,
-        recover_compacting,
-    )
+    from se_data_pipeline_spark.sources.layout import recover_compacting
 
     # a compact_term_stats swap may have died between delete and
     # rename — finish it before the reads raise (the swappable-store
     # entry protocol, ADVICE r10)
     recover_compacting(spark, out_dir)
-    commits = _commit_rows(spark, out_dir, "corpus_totals").collect()
-    hw = _hw_after(max((r["batch_id"] for r in commits), default=None))
+    st = _committed_state(spark, out_dir, "corpus_totals")
     terms = (
         spark.read.schema(_TERM_STATS_SCHEMA)
         .parquet(f"{out_dir}/term_stats")
-        .filter(F.col("batch_id") < hw)
+        .filter(F.col("batch_id") < st["hw"])
         .groupBy("tok")
         .agg(
             F.sum("doc_freq").alias("doc_freq"),
@@ -1368,13 +1353,7 @@ def read_term_stats(spark: SparkSession, out_dir: str):
         )
         .filter(F.col("doc_freq") > 0)
     )
-
-    def _sum(col: str):
-        vals = [r[col] for r in commits if r[col] is not None]
-        return F.lit(sum(vals) if vals else None).cast("long").alias(col)
-
-    totals = spark.range(1).select(_sum("n_docs"), _sum("n_tokens"))
-    return terms, totals
+    return terms, _totals_row(spark, st)
 
 
 def revise_term_stats(
@@ -1410,13 +1389,12 @@ def revise_term_stats(
     stream is stopped); the corpus_totals row is the commit, LAST.
     Returns the batch id used."""
     from se_data_pipeline_spark.sources.layout import (
-        _committed_hw,
         _offline_begin,
         recover_compacting,
     )
 
     recover_compacting(spark, out_dir)
-    next_b = _committed_hw(spark, out_dir, "corpus_totals")
+    next_b = _committed_state(spark, out_dir, "corpus_totals")["hw"]
     _offline_begin(
         spark,
         out_dir,

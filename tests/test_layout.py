@@ -386,12 +386,9 @@ def test_bm25_from_postings_matches_inline_and_prunes_partitions(
     )
     # the pruned scan must physically touch at most K bucket dirs —
     # replicate the serve path's read and inspect the files it hits
-    from se_data_pipeline_spark.sources.layout import (
-        _postings_meta_buckets,
-        _tok_bucket_col,
-    )
+    from se_data_pipeline_spark.sources.layout import _tok_bucket_col
 
-    nb = _postings_meta_buckets(spark, out)
+    nb = spark.read.parquet(f"{out}/meta").collect()[0]["n_buckets"]
     want = {
         r["b"]
         for r in spark.createDataFrame(

@@ -1,11 +1,12 @@
-"""The fused serve prologue (r12 optimization) must return exactly
-what the three separate reads it replaced returned — bucket modulus,
-committed high-water mark, and term bucket ids — on every store
-state a serve can meet: fresh batch-built, revised (ledger advanced),
-and the frequency store's totals-derived high-water mark. A store
-without its commit table raises the shared missing-commit error. The
-bucket ids additionally pin the driver-side pmod: Python's ``h % n``
-on the collected raw xxhash64 values must equal the writer's Catalyst
+"""The committed-state read of a serve (layout._committed_state with
+the meta table and the query terms) must return exactly what three
+separate reads return — bucket modulus, committed high-water mark,
+and term bucket ids — on every store state a serve can meet: fresh
+batch-built, revised (ledger advanced), and the frequency store's
+totals-derived high-water mark. A store without its commit table
+raises the shared missing-commit error. The bucket ids additionally
+pin the driver-side pmod: Python's ``h % n`` on the collected raw
+xxhash64 values must equal the writer's Catalyst
 pmod(xxhash64(tok), n) for negative hashes too."""
 
 from __future__ import annotations
@@ -33,31 +34,31 @@ def docs(spark):
     )
 
 
-def _old_triple_positional(spark, store, terms):
-    nb = L._postings_meta_buckets(spark, store)
-    hw = L._committed_hw(spark, store, "batches")
+def _serve_state(spark, store, terms, commit):
+    st = L._committed_state(spark, store, commit, ("meta",), terms)
+    return st["n_buckets"], st["hw"], st["buckets"]
+
+
+def _old_triple(spark, store, terms, commit):
+    nb = spark.read.parquet(f"{store}/meta").collect()[0]["n_buckets"]
+    mx = spark.read.parquet(f"{store}/{commit}").agg(F.max("batch_id"))
+    hw = mx.collect()[0][0] + 1
     return nb, hw, L._term_buckets(spark, sorted(set(terms)), nb)
-
-
-def _old_triple_frequency(spark, store, terms):
-    nb = L._postings_meta_buckets(spark, store)
-    hw = L._committed_hw(spark, store, "totals")
-    return nb, hw, L._term_buckets(spark, list(terms), nb)
 
 
 def test_fused_equals_triple_positional(spark, docs, tmp_path):
     store = str(tmp_path / "pos_store")
     L.write_positional_postings(docs, store)
-    assert L._serve_prologue(
+    assert _serve_state(spark, store, TERMS, "batches") == _old_triple(
         spark, store, TERMS, "batches"
-    ) == _old_triple_positional(spark, store, TERMS)
+    )
     # after a revision the ledger high-water mark moves — the fused
     # read must see the new commit point, not a cached one
     L.revise_positional_postings(
         spark, docs.filter(F.col("doc_id") == 2), store
     )
-    got = L._serve_prologue(spark, store, TERMS, "batches")
-    assert got == _old_triple_positional(spark, store, TERMS)
+    got = _serve_state(spark, store, TERMS, "batches")
+    assert got == _old_triple(spark, store, TERMS, "batches")
     # the batch build writes at batch_id=-1; the revision claims 0,
     # so the committed high-water mark is 1
     assert got[1] == 1
@@ -66,9 +67,9 @@ def test_fused_equals_triple_positional(spark, docs, tmp_path):
 def test_fused_equals_triple_frequency(spark, docs, tmp_path):
     store = str(tmp_path / "freq_store")
     L.write_posting_lists(docs, store)
-    assert L._serve_prologue(
+    assert _serve_state(spark, store, TERMS, "totals") == _old_triple(
         spark, store, TERMS, "totals"
-    ) == _old_triple_frequency(spark, store, TERMS)
+    )
 
 
 def _files(root: str) -> list:
@@ -91,7 +92,7 @@ def test_fused_store_without_ledger_raises(spark, docs, tmp_path):
     shutil.rmtree(f"{store}/batches")
     before = _files(store)
     calls = [
-        lambda: L._serve_prologue(spark, store, TERMS, "batches"),
+        lambda: _serve_state(spark, store, TERMS, "batches"),
         lambda: L.phrase_from_postings(spark, store, ("the", "pipeline")),
         lambda: L.revise_positional_postings(
             spark, docs.filter(F.col("doc_id") == 2), store
@@ -106,15 +107,13 @@ def test_fused_store_without_ledger_raises(spark, docs, tmp_path):
 
 def test_fused_missing_meta_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no meta table"):
-        L._serve_prologue(
-            spark, str(tmp_path / "absent"), TERMS, "batches"
-        )
+        _serve_state(spark, str(tmp_path / "absent"), TERMS, "batches")
 
 
 def test_driver_pmod_matches_catalyst_on_negative_hashes(spark):
     # find tokens whose xxhash64 is negative and assert the Python %
-    # equals Catalyst pmod for them (the fused prologue's driver-side
-    # bucket computation)
+    # equals Catalyst pmod for them (the committed-state read's
+    # driver-side bucket computation)
     toks = [f"tok{i}" for i in range(64)]
     rows = (
         spark.range(1)

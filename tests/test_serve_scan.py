@@ -5,6 +5,9 @@ one driver-side glob, instead of listing the whole store.
 - Building a serve frame over a store with more than 32 bucket dirs
   per batch (Spark's parallelPartitionDiscovery threshold) costs the
   prologue's jobs and nothing else — no "Listing leaf files" job.
+- The prologue is one job: the commit rows, the frozen side tables
+  and the query legs are one union collect, and BM25's corpus totals
+  ride it as literals — a BM25 collect scans no ``totals`` table.
 - On every store state a serve can meet (fresh; revised and deleted;
   an uncommitted partial batch at or above the high-water mark; a
   query whose bucket was never written) the served rows equal both
@@ -204,22 +207,24 @@ def test_serve_frame_costs_only_prologue_jobs(spark, stores):
             L.bm25_from_postings,
             freq,
             BM25_Q[0],
-            ("totals",),
+            "totals",
         ),
         (
             L.phrase_from_postings,
             pos,
             PHRASES[0],
-            ("batches",),
+            "batches",
         ),
     ]
-    for i, (serve, store, terms, hw_args) in enumerate(cases):
+    for i, (serve, store, terms, commit) in enumerate(cases):
         pro = _group_jobs(
             spark,
             f"scan-pro-{i}",
-            lambda: L._serve_prologue(spark, store, list(terms), *hw_args),
+            lambda: L._committed_state(
+                spark, store, commit, ("meta",), list(terms)
+            ),
         )
-        assert len(pro) <= 2, "the union prologue is two jobs"
+        assert len(pro) == 1, "the committed-state read is one job"
         got = _group_jobs(
             spark, f"scan-build-{i}", lambda: serve(spark, store, terms)
         )
@@ -265,10 +270,10 @@ def test_uncommitted_partial_batch_is_invisible(
     # rows every query would match, were the partial batch visible
     text = " ".join(sum(BM25_Q + PHRASES, ()))
     edocs = _frame(spark, {1000 + i: text for i in range(5)})
-    hw = L._committed_hw(spark, freq, "totals")
+    hw = L._committed_state(spark, freq, "totals")["hw"]
     tf = L._posting_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(tf, ["batch_id", "tok_bucket"], f"{freq}/postings")
-    hw = L._committed_hw(spark, pos, "batches")
+    hw = L._committed_state(spark, pos, "batches")["hw"]
     rows = L._positional_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(rows, ["batch_id", "tok_bucket"], f"{pos}/postings")
     _serve_all(monkeypatch, spark, freq, pos, corpus)
@@ -316,7 +321,7 @@ def test_query_bucket_without_directory(monkeypatch, spark, stores):
         monkeypatch, _phrase, _duck_phrase, spark, pos, corpus, absent
     ) == {}
     # the empty frame costs no Spark job, neither built nor collected
-    _, hw, buckets = L._serve_prologue(spark, pos, absent, "batches")
+    st = L._committed_state(spark, pos, "batches", ("meta",), absent)
     empty = []
     assert not _group_jobs(
         spark,
@@ -324,8 +329,50 @@ def test_query_bucket_without_directory(monkeypatch, spark, stores):
         lambda: empty.extend(
             L._pruned_postings(
                 spark, f"{pos}/postings", L._POS_POSTINGS_SCHEMA,
-                buckets, hw,
+                st["buckets"], st["hw"],
             ).collect()
         ),
     )
     assert empty == []
+
+
+def test_serve_prologues_cost_one_job(spark, stores, tmp_path):
+    """The BM25 and phrase serve frames and the IVF serve state are
+    one job each, and a BM25 serve reads no totals table: its corpus
+    totals came with the prologue's commit rows. The ivf_candidates
+    frame adds the one job that infers the cells schema (IVF rows
+    carry per-store attribute columns)."""
+    _, freq, pos = stores
+    rnd = random.Random(5)
+    ivf = str(tmp_path / "ivf")
+    L.write_ivf_index(
+        spark.createDataFrame(
+            [
+                (i, [rnd.uniform(-1, 1) for _ in range(4)], i % 3)
+                for i in range(60)
+            ],
+            "vec_id bigint, embedding array<double>, label int",
+        ),
+        ivf,
+    )
+    q = [0.5, -0.5, 0.1, 0.0]
+    served = {}
+    cases = [
+        ("bm25", lambda: L.bm25_from_postings(spark, freq, BM25_Q[0]), 1),
+        ("phrase", lambda: L.phrase_from_postings(spark, pos, PHRASES[0]), 1),
+        ("ivf_state", lambda: L.ivf_serve_state(spark, ivf), 1),
+        ("ivf", lambda: L.ivf_candidates(spark, ivf, q, nprobe=2), 2),
+    ]
+    for name, build, want in cases:
+        got = _group_jobs(
+            spark, f"one-job-{name}", lambda: served.update({name: build()})
+        )
+        assert len(got) == want, f"{name}: {len(got)} jobs, want {want}"
+    assert served["ivf_state"]["hw"] == 0
+    assert len(served["ivf_state"]["cents"]) == 3
+    assert served["ivf"].collect()
+    bm25 = served["bm25"]
+    assert bm25.collect(), "the query must match something"
+    read = bm25.inputFiles()
+    assert any("/postings/" in f for f in read)
+    assert not [f for f in read if "/totals/" in f]
