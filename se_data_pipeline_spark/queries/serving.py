@@ -376,7 +376,7 @@ def _ghost_docs(spark: SparkSession) -> DataFrame:
     top-10, so a tombstone that fails to kill them (or a delete that
     leaks through compaction) breaks the hash loudly rather than
     perturbing a low rank. Built range-based, not createDataFrame —
-    the layout.claim_offline_batch 1-row rule (a python-list local
+    the layout._totals_row JVM-literal rule (a python-list local
     relation taxes every job its plan participates in)."""
     return spark.range(4).select(
         (F.col("id") + 1_000_000_000).alias("doc_id"),

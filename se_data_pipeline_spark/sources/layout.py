@@ -35,11 +35,12 @@ def recover_compacting(spark: SparkSession, live_path: str) -> bool:
     (the only window swap_compacted can die in after deleting the
     live copy), rename the sibling into place. Returns True when the
     live path exists afterwards (recovered or never lost), False when
-    there is nothing at either path. Every entry point that pre-checks
-    a swappable store's existence must call this FIRST — otherwise its
-    own pre-check raises before recovery can run (the r9 review find
-    on refresh_ivf_index, which swaps the WHOLE index dir and then
-    could never get past its own 'has no cells store' guard)."""
+    there is nothing at either path. It runs at three places only:
+    first in _committed_state, which every serve, offline write and
+    compaction reads the store through before any other check;
+    first at maintainer start (streaming/jobs._maintain_store), which
+    would otherwise create a fresh store beside the orphaned sibling;
+    and in swap_compacted itself."""
     fs, live = _hadoop_path(spark, live_path)
     tmp_str = live_path.rstrip("/") + ".compacting"
     _, tmp = _hadoop_path(spark, tmp_str)
@@ -114,56 +115,48 @@ def swap_compacted(
 # document loss. The two counters are independent by design (the
 # stream's replay idempotence REQUIRES checkpoint-scoped ids), so the
 # collision cannot be renumbered away without breaking crash
-# convergence; instead every offline writer CLAIMS its batch id in a
-# tiny fence table before touching the store, and every maintainer
-# checks its micro-batch id against the fence and fails LOUDLY on a
-# claimed id, with the remedy in the message (compact — which folds
-# the claimed batches into the base and clears the fence — then
-# restart from a fresh checkpoint).
-_OFFLINE_FENCE_SCHEMA = "batch_id int"
+# convergence; instead every offline writer CLAIMS its batch id before
+# touching the store, as an empty ``offline_fence/batch_id=N``
+# directory — the representation of every data partition, listed by
+# the same _physical_batch_ids — and every maintainer checks its
+# micro-batch id against the fence and fails LOUDLY on a claimed id,
+# with the remedy in the message (compact — which folds the claimed
+# batches into the base and drops the fence with the swap — then
+# restart from a fresh checkpoint). No fence step runs a Spark job.
 
 
 def claim_offline_batch(
     spark: SparkSession, fence_dir: str, batch_id: int
 ) -> None:
-    """Record an offline revision/delete's claim on `batch_id` —
-    written BEFORE any other write of that batch, so even a crashed
-    (uncommitted) revision's id stays fenced against a resumed
-    maintenance stream. Append-only; a re-run's duplicate row is
-    harmless (the fence is read as a set).
-
-    NB the row is built with range().select(lit) and NOT
-    createDataFrame([...]): a python-list local relation pays a
-    5-7 s RDD-serialization round-trip PER WRITE on this runtime
-    (measured r11), while the JVM-literal frame writes in ~0.3 s —
-    the same rule applies to every 1-row ledger/meta write below."""
-    from pyspark.sql import functions as F
-
-    (
-        spark.range(1)
-        .select(F.lit(int(batch_id)).cast("int").alias("batch_id"))
-        .coalesce(1)
-        .write.mode("append")
-        .parquet(fence_dir)
-    )
+    """Record an offline revision/delete's claim on `batch_id` — one
+    Hadoop mkdirs of ``fence_dir/batch_id=N``, made BEFORE any other
+    write of that batch, so even a crashed (uncommitted) revision's
+    id stays fenced against a resumed maintenance stream. A re-run's
+    claim of the same id is a no-op."""
+    fs, p = _hadoop_path(spark, f"{fence_dir}/batch_id={int(batch_id)}")
+    if not fs.mkdirs(p):
+        raise IOError(f"could not claim batch {batch_id} in {fence_dir}")
 
 
 def offline_claimed_ids(
     spark: SparkSession, fence_dir: str
 ) -> frozenset:
     """The set of batch ids offline writers have claimed on this
-    store — empty for a store that has never been revised offline
-    (the common path: one fs.exists probe, no read). Bounded by the
-    number of offline operations since the last compaction."""
+    store — one directory listing, empty for a store that has never
+    been revised offline. Bounded by the number of offline operations
+    since the last compaction. A fence dir holding files is the
+    parquet fence table of older code, which this listing cannot
+    read: refused, so that no claimed id is missed."""
     fs, p = _hadoop_path(spark, fence_dir)
-    if not fs.exists(p):
-        return frozenset()
-    return frozenset(
-        r["batch_id"]
-        for r in spark.read.schema(_OFFLINE_FENCE_SCHEMA)
-        .parquet(fence_dir)
-        .collect()
-    )
+    if fs.exists(p) and any(st.isFile() for st in fs.listStatus(p)):
+        raise ValueError(
+            f"offline fence at {fence_dir} holds files: it is the "
+            "fence table of an older format, whose claimed batch ids "
+            "cannot be listed. Remedy: compact the store (the swap "
+            "drops the fence without reading it), then restart its "
+            "maintenance stream from a FRESH checkpoint directory."
+        )
+    return frozenset(_physical_batch_ids(spark, fence_dir))
 
 
 def guard_stream_batch(
@@ -195,10 +188,10 @@ def _physical_batch_ids(
     """Batch ids PHYSICALLY present in a store directory's partition
     layout — a filesystem listing (one listStatus per directory
     level), never a data read. ``nested=False`` for stores
-    partitioned by batch_id first (postings/doclens/tombstones);
-    ``nested=True`` for the IVF cells layout (cell=C/batch_id=N —
-    bounded by n_cells directories). Empty set when the path does
-    not exist."""
+    partitioned by batch_id first (postings/doclens/tombstones, the
+    offline fence); ``nested=True`` for the IVF cells layout
+    (cell=C/batch_id=N — bounded by n_cells directories). Empty set
+    when the path does not exist."""
     fs, p = _hadoop_path(spark, path)
     if not fs.exists(p):
         return set()
@@ -223,67 +216,16 @@ def _physical_batch_ids(
     return out
 
 
-def _guard_uncommitted_partials(
-    spark: SparkSession,
-    what: str,
-    hw: int,
-    fence_dir: str,
-    flat_paths: list,
-    nested_paths: list = (),
-) -> None:
-    """Refuse an offline revision/delete when PHYSICAL rows exist at
-    or above the committed high-water mark that no offline operation
-    claimed (ADVICE r11, medium): those rows are a maintenance
-    stream's crashed micro-batch (rows written, ledger/totals commit
-    row not). Deriving next_b from the ledger alone would reuse that
-    id — the revision's dynamic overwrite replaces only ITS OWN
-    partitions, so the stream's leftover rows in other partitions
-    survive, and the revision's ledger commit makes them COMMITTED
-    without their tombstones: re-emitted documents then serve both
-    stale and fresh rows, and compaction bakes the stale rows into
-    the base. Ids the offline fence already claims are exempt — a
-    crashed OFFLINE revision legitimately re-runs with its own id
-    (same input → same partitions → full overwrite). The check is a
-    handful of directory listings; the fence is read only when
-    strays are found."""
-    stray = set()
-    for p in flat_paths:
-        stray |= {
-            b for b in _physical_batch_ids(spark, p) if b >= hw
-        }
-    for p in nested_paths:
-        stray |= {
-            b
-            for b in _physical_batch_ids(spark, p, nested=True)
-            if b >= hw
-        }
-    if not stray:
-        return
-    stray -= offline_claimed_ids(spark, fence_dir)
-    if stray:
-        raise RuntimeError(
-            f"{what}: uncommitted rows exist at batch id(s) "
-            f"{sorted(stray)}, at or above the committed high-water "
-            f"mark {hw}, and no offline operation claimed them — a "
-            "maintenance stream crashed mid-batch (rows written, "
-            "commit row not). An offline batch committed now would "
-            "make those partial rows serve WITHOUT their tombstones "
-            "(silent stale/duplicate documents). Remedy: restart the "
-            "maintenance stream from its checkpoint (its replay "
-            "overwrites and commits the partial batch), or compact "
-            "the store (folds committed state only and physically "
-            "drops the partials)."
-        )
-
-
 # --------------------------------------------------------------------
 # Shared store-lifecycle machinery: every materialized store runs the
-# same commit-point protocol — recover a crashed swap, read the
-# committed state (high-water mark, summed totals, frozen side tables
-# and any per-query legs) in one collect through the one reader of
-# commit and side tables (_committed_state), refuse unclaimed
-# partials, claim the fence, write
-# the non-commit deltas (overlapped) and the commit row LAST, serve
+# same commit-point protocol — read the committed state (high-water
+# mark, summed totals, frozen side tables and any per-query legs) in
+# one collect through the one reader of commit and side tables
+# (_committed_state, which first finishes a crashed compaction swap,
+# so no entry point can skip the recovery; a maintainer recovers at
+# its start), refuse unclaimed partials and claim the fence
+# (_offline_begin: directory listings and one mkdirs), write the
+# non-commit deltas (overlapped) and the commit row LAST, serve
 # committed tombstone-live rows, compact by whole-dir swap (side
 # tables that never change between builds — bucket meta, IVF
 # centroids and PQ — copied, not rewritten). The frequency-postings,
@@ -387,9 +329,14 @@ def _committed_state(
     when the operation re-runs with the SAME id) and the summed
     totals come from one consistent snapshot. A sum skips NULLs and
     is None when no row has a value (SQL SUM). A missing commit table
-    raises the shared missing-commit error, a missing meta table the
-    no-meta-table error: the path check is the read's own (no extra
-    probe, no job). No state is cached across calls.
+    raises the shared missing-commit error, a missing meta or
+    centroid table its own no-table error: the path check is the
+    read's own (no extra probe, no job). No state is cached across calls.
+
+    Before anything is read, a compaction swap that died between its
+    delete and its rename is finished (recover_compacting): every
+    serve, offline write and compaction reads the store through here
+    first, so none of them can miss the recovery.
 
     Returns {"hw", "n_docs", "n_tokens"} (None without ``commit``),
     "n_buckets", "cents" ([(cell, centroid)...] sorted by cell), "pq"
@@ -399,6 +346,8 @@ def _committed_state(
 
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
+
+    recover_compacting(spark, out_dir)
 
     def _read(name: str, schema: str, missing: Exception | None = None):
         try:
@@ -428,7 +377,11 @@ def _committed_state(
         meta = _read("meta", _POSTINGS_META_SCHEMA, no_meta)
         legs.append(_leg(meta, "meta", F.col("n_buckets")))
     if "centroids" in side:
-        cents = _read("centroids", _IVF_CENTROIDS_SCHEMA)
+        no_cents = ValueError(
+            f"IVF index at {out_dir} has no centroids table — build it "
+            "with write_ivf_index"
+        )
+        cents = _read("centroids", _IVF_CENTROIDS_SCHEMA, no_cents)
         legs.append(_leg(cents, "cent", F.col("cell"), vec=F.col("centroid")))
     if "pq" in side:
         fs, pq = _hadoop_path(spark, f"{out_dir}/pq")
@@ -500,7 +453,13 @@ def _committed_state(
 
 def _totals_row(spark: SparkSession, st: dict) -> DataFrame:
     """The summed (n_docs, n_tokens) of a _committed_state snapshot as
-    a 1-row frame of JVM literals (the claim_offline_batch rule)."""
+    a 1-row frame of JVM literals.
+
+    NB built with range().select(lit) and NOT createDataFrame([...]):
+    a python-list local relation pays a 5-7 s RDD-serialization
+    round-trip PER WRITE on this runtime (measured r11), while the
+    JVM-literal frame writes in ~0.3 s — the JVM-literal rule every
+    1-row commit or meta write follows."""
     from pyspark.sql import functions as F
 
     return spark.range(1).select(
@@ -533,21 +492,48 @@ def _offline_begin(
     flat_paths: list,
     nested_paths: list = (),
 ) -> None:
-    """The shared offline-writer prologue, AFTER the store-specific
-    high-water derivation: refuse unclaimed partial batches at/above
-    next_b (a crashed stream micro-batch — committing over it would
-    serve rows without their tombstones), then claim the fence
-    BEFORE any store write so even a crashed run's id stays fenced
-    against a resumed maintenance stream."""
-    _guard_uncommitted_partials(
-        spark,
-        what,
-        next_b,
-        f"{out_dir}/offline_fence",
-        flat_paths,
-        nested_paths,
-    )
-    claim_offline_batch(spark, f"{out_dir}/offline_fence", next_b)
+    """The shared offline-writer prologue, AFTER the store's
+    committed-state read gave its high-water mark ``next_b``: list the
+    batch ids PHYSICALLY present at or above next_b in the store's
+    delta dirs (``nested_paths``: the IVF cells layout) and in its
+    offline fence, refuse the unclaimed ones, then claim next_b in the
+    fence BEFORE any store write, so even a crashed run's id stays
+    fenced against a resumed maintenance stream. Directory listings
+    and one mkdirs: no Spark job.
+
+    Unclaimed ids at or above the mark are a maintenance stream's
+    crashed micro-batch (rows written, commit row not; ADVICE r11,
+    medium). The revision's dynamic overwrite replaces only ITS OWN
+    partitions, so that batch's rows in other partitions would
+    survive, and the revision's commit would make them COMMITTED
+    without their tombstones: re-emitted documents would then serve
+    both stale and fresh rows, and compaction would bake the stale
+    rows into the base. Ids the fence already claims are exempt — a
+    crashed OFFLINE revision legitimately re-runs with its own id
+    (same input, same partitions, full overwrite). A fence in the
+    older parquet format is refused before anything is written
+    (offline_claimed_ids)."""
+    fence = f"{out_dir}/offline_fence"
+    listed = [_physical_batch_ids(spark, p) for p in flat_paths] + [
+        _physical_batch_ids(spark, p, nested=True) for p in nested_paths
+    ]
+    stray = {b for ids in listed for b in ids if b >= next_b}
+    stray -= offline_claimed_ids(spark, fence)
+    if stray:
+        raise RuntimeError(
+            f"{what}: uncommitted rows exist at batch id(s) "
+            f"{sorted(stray)}, at or above the committed high-water "
+            f"mark {next_b}, and no offline operation claimed them — a "
+            "maintenance stream crashed mid-batch (rows written, "
+            "commit row not). An offline batch committed now would "
+            "make those partial rows serve WITHOUT their tombstones "
+            "(silent stale/duplicate documents). Remedy: restart the "
+            "maintenance stream from its checkpoint (its replay "
+            "overwrites and commits the partial batch), or compact "
+            "the store (folds committed state only and physically "
+            "drops the partials)."
+        )
+    claim_offline_batch(spark, fence, next_b)
 
 
 def _tombstones_view(
@@ -604,8 +590,8 @@ def _ledger_commit(
     spark: SparkSession, out_dir: str, batch_id: int, docs, ids
 ) -> DataFrame:
     """A ledger store's commit row: the batch's document count — a
-    JVM-literal 0 for a delete (``docs`` None; the
-    claim_offline_batch 1-row rule)."""
+    JVM-literal 0 for a delete (``docs`` None; the _totals_row
+    JVM-literal rule)."""
     from pyspark.sql import functions as F
 
     if docs is None:
@@ -776,10 +762,12 @@ def _store_offline(
     a maintenance stream resuming its old checkpoint afterwards fails
     loudly instead of clobbering this batch (run while the stream is
     stopped). N and, for a revision, the frozen layout state its
-    rows are built under come from one _committed_state collect.
-    Rows, extra deltas and tombstones are written concurrently; the
-    commit row follows them LAST as the commit point."""
-    recover_compacting(spark, out_dir)
+    rows are built under come from one _committed_state collect,
+    which first finishes a crashed compaction swap. The prologue is
+    that one job; the fence steps are directory listings and one
+    mkdirs. Rows, extra deltas and tombstones are written
+    concurrently; the commit row follows them LAST as the commit
+    point."""
     st = _committed_state(
         spark, out_dir, spec.commit, () if delete else spec.side
     )
@@ -807,12 +795,10 @@ def _store_live(
     """The store's committed, tombstone-live rows — the one view its
     serves and its compactor read. Batches at or above the committed
     high-water mark are a crashed operation's partials and never
-    serve. Without ``hw`` the view finishes a crashed compaction swap
-    and reads the mark itself."""
+    serve. Without ``hw`` the view reads the mark itself."""
     from pyspark.sql import functions as F
 
     if hw is None:
-        recover_compacting(spark, out_dir)
         hw = _committed_state(spark, out_dir, spec.commit)["hw"]
     read = spark.read if spec.schema is None else spark.read.schema(spec.schema)
     rows = read.parquet(f"{out_dir}/{spec.rows}").filter(
@@ -1174,7 +1160,7 @@ def _write_pq_tables(
     an ARROW-backed pandas local relation (~0.2 s): the previous
     literal-expression frame paid ~1-2 s of Catalyst analysis on its
     k x dims literal tree per write, and a python-list relation pays
-    a 6-7 s RDD round-trip (measured r12 — the claim_offline_batch
+    a 6-7 s RDD round-trip (measured r12 — the _totals_row JVM-literal
     rule is about LIST relations; pandas+Arrow local relations are
     the fast path and carry bit-identical float64 values). The 1-row
     meta stays a JVM-literal frame (three scalars, no analysis
@@ -1321,14 +1307,12 @@ _IVF_CENTROIDS_SCHEMA = "cell int, centroid array<double>"
 
 def ivf_serve_state(spark: SparkSession, index_path: str) -> dict:
     """Pre-read serve-time state for SEVERAL probes of the same
-    committed store inside one query body: crash-swap recovery, then
-    the bounded centroid table ("cents") and the committed high-water
-    mark ("hw") in one _committed_state collect. A recall report
-    probes the same store three times (brute + nprobe=1,2); without
-    this each ivf_candidates call re-ran the recovery probe and the
-    read. The state is a SNAPSHOT — never reuse it across writes to
-    the store."""
-    recover_compacting(spark, index_path)
+    committed store inside one query body: the bounded centroid table
+    ("cents") and the committed high-water mark ("hw") in one
+    _committed_state collect. A recall report probes the same store
+    three times (brute + nprobe=1,2); without this each
+    ivf_candidates call re-ran the read. The state is a SNAPSHOT —
+    never reuse it across writes to the store."""
     return _committed_state(spark, index_path, "batches", ("centroids",))
 
 
@@ -1477,21 +1461,33 @@ def revise_ivf_vectors(
     )
 
 
-def _probe_cells(q_vec: list[float], nprobe: int, cents: list) -> list[int]:
-    """The nprobe nearest cells to the query, picked DRIVER-SIDE from
-    the bounded (n_cells x dims) centroid table — (d2, cell)
-    lexicographic order, the _nearest_cell_expr tie-break. Shared by
-    ivf_candidates and the funnels; ``cents`` is the
-    [(cell, centroid)...] list of a _committed_state snapshot
-    (ivf_serve_state)."""
+def _probed_rows(
+    spark: SparkSession,
+    index_path: str,
+    q_vec: list[float],
+    nprobe: int,
+    state: dict,
+) -> DataFrame:
+    """The committed, tombstone-live cells rows of the nprobe cells
+    nearest the query — the read every IVF serve ranks. The cells are
+    picked DRIVER-SIDE from the bounded (n_cells x dims) centroid
+    table of a _committed_state snapshot (``state``: its "cents" and
+    "hw") in (d2, cell) lexicographic order, the _nearest_cell_expr
+    tie-break, and become a cell IN (...) partition filter on the
+    shared live view."""
+    from pyspark.sql import functions as F
+
     by_d2 = sorted(
         (
             sum((c - q) ** 2 for c, q in zip(cvec, q_vec)),
             cell,
         )
-        for cell, cvec in cents
+        for cell, cvec in state["cents"]
     )
-    return [cell for _, cell in by_d2[:nprobe]]
+    cells = [cell for _, cell in by_d2[:nprobe]]
+    return _store_live(_IVF, spark, index_path, state["hw"]).filter(
+        F.col("cell").isin(cells)
+    )
 
 
 def ivf_candidates(
@@ -1514,10 +1510,8 @@ def ivf_candidates(
 
     if state is None:
         state = ivf_serve_state(spark, index_path)
-    cells = _probe_cells(q_vec, nprobe, state["cents"])
     return (
-        _store_live(_IVF, spark, index_path, state["hw"])
-        .filter(F.col("cell").isin(cells))
+        _probed_rows(spark, index_path, q_vec, nprobe, state)
         .select(
             "vec_id",
             "cell",
@@ -1559,16 +1553,12 @@ def ivf_bq_funnel(
 
     from se_data_pipeline_spark.functions.vectors import hamming_codes
 
-    recover_compacting(spark, index_path)
     pro = _committed_state(
         spark, index_path, "batches", ("centroids",), q_vec=q_vec
     )
-    cells = _probe_cells(q_vec, nprobe, pro["cents"])
     q_code = pro["qcode"]
 
-    probed = _store_live(_IVF, spark, index_path, pro["hw"]).filter(
-        F.col("cell").isin(cells)
-    )
+    probed = _probed_rows(spark, index_path, q_vec, nprobe, pro)
     # stage 1: the 8-byte cut — vec_id + code only (column pruning
     # keeps the embedding bytes on disk for every non-candidate)
     cand = (
@@ -1630,7 +1620,6 @@ def ivf_pq_funnel(
     (write_ivf_index(pq=True))."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, index_path)
     # one collect: pq meta + frozen codebook + centroids + commit rows
     pro = _committed_state(spark, index_path, "batches", _IVF.side)
     if pro["pq"] is None:
@@ -1640,7 +1629,6 @@ def ivf_pq_funnel(
         )
     m, sub, _k = pro["pq"]
     cb = pro["cb"]
-    cells = _probe_cells(q_vec, nprobe, pro["cents"])
     # LUT[mi][ki] = ||q_sub[mi] - codeword[ki, mi]||^2, driver-side
     # over the bounded codebook; sequential fold over the sub dims —
     # the oracle's list_sum order
@@ -1660,9 +1648,7 @@ def ivf_pq_funnel(
             for row in lut
         ]
     )
-    probed = _store_live(_IVF, spark, index_path, pro["hw"]).filter(
-        F.col("cell").isin(cells)
-    )
+    probed = _probed_rows(spark, index_path, q_vec, nprobe, pro)
     # stage 1: the ADC cut — vec_id + pq_code only (column pruning
     # keeps embedding AND the 8-byte sign code on disk)
     est = F.aggregate(
@@ -1735,10 +1721,7 @@ def ivf_filtered_topk(
         raise ValueError("mode must be 'prefilter' or 'postfilter'")
     if state is None:
         state = ivf_serve_state(spark, index_path)
-    cells = _probe_cells(q_vec, nprobe, state["cents"])
-    probed = _store_live(_IVF, spark, index_path, state["hw"]).filter(
-        F.col("cell").isin(cells)
-    )
+    probed = _probed_rows(spark, index_path, q_vec, nprobe, state)
     if mode == "prefilter":
         return (
             probed.filter(F.expr(where))
@@ -1803,20 +1786,18 @@ def refresh_ivf_index(
        cell assignments."""
     from pyspark.sql import functions as F
 
-    # a prior refresh may have died between swap_compacted's delete
-    # and rename, leaving the whole index at <index_path>.compacting —
-    # finish that swap BEFORE the existence pre-checks (which would
-    # otherwise raise and make the crash unrecoverable from here)
-    recover_compacting(spark, index_path)
+    # centroids, PQ meta and the commit rows in one collect, which
+    # first finishes a prior refresh's swap that died between its
+    # delete and rename (the whole index then sits at
+    # <index_path>.compacting) — so it runs BEFORE the cells check
+    pro = _committed_state(spark, index_path, "batches", _IVF.side)
+    hw, cents = pro["hw"], pro["cents"]
     fs, live_cells = _hadoop_path(spark, f"{index_path}/cells")
     if not fs.exists(live_cells):
         raise ValueError(
             f"IVF index at {index_path} has no cells store — build it "
             "with write_ivf_index before refreshing"
         )
-    # centroids, PQ meta and the commit rows in one collect
-    pro = _committed_state(spark, index_path, "batches", _IVF.side)
-    hw, cents = pro["hw"], pro["cents"]
 
     # revised/deleted ids are dropped by the shared live view BEFORE
     # the latest-wins fold, so a deleted vector does not resurrect
@@ -1849,7 +1830,12 @@ def refresh_ivf_index(
         # set instead of re-reading + re-shuffling the store per step
         .cache()
     )
-    pq_meta = pro["pq"]
+    # a pq-carrying store re-seeds its codebook from the refreshed
+    # contents (refresh IS the full re-index — retraining PQ alongside
+    # the coarse quantizer is the standard offline epoch roll)
+    pq = {}
+    if pro["pq"] is not None:
+        pq = dict(zip(("pq_m", "pq_sub", "pq_k"), pro["pq"]), pq=True)
     try:
         for _ in range(max(0, n_iters)):
             new = (
@@ -1884,28 +1870,14 @@ def refresh_ivf_index(
             *attr_cols,
         )
 
-        def _write(tmp: str) -> None:
-            # a pq-carrying store re-seeds its codebook from the
-            # refreshed contents (refresh IS the full re-index —
-            # retraining PQ alongside the coarse quantizer is the
-            # standard offline epoch roll); attrs carry through
-            if pq_meta is not None:
-                m, sub, k = pq_meta
-                write_ivf_index(
-                    final,
-                    tmp,
-                    attr_cols=tuple(attr_cols),
-                    pq=True,
-                    pq_m=m,
-                    pq_sub=sub,
-                    pq_k=k,
-                )
-            else:
-                write_ivf_index(
-                    final, tmp, attr_cols=tuple(attr_cols)
-                )
-
-        swap_compacted(spark, index_path, _write, "IVF index")
+        swap_compacted(
+            spark,
+            index_path,
+            lambda tmp: write_ivf_index(
+                final, tmp, attr_cols=tuple(attr_cols), **pq
+            ),
+            "IVF index",
+        )
     finally:
         vecs.unpersist()
 
@@ -2059,7 +2031,7 @@ def _term_buckets(
     evaluating the SAME Catalyst expression the writer used (Spark's
     xxhash64 has no public driver-side twin). Built with
     range+explode(array(lit...)), not createDataFrame — the
-    claim_offline_batch 1-row rule: python-list local relations pay
+    _totals_row JVM-literal rule: python-list local relations pay
     a multi-second RDD round-trip per job on this runtime."""
     from pyspark.sql import functions as F
 
@@ -2106,7 +2078,7 @@ def _pruned_postings(
     never written) the result is an empty frame of the same schema
     that costs no Spark job: a JVM-literal row filtered by lit(false),
     which the optimizer folds to an empty local relation (not
-    createDataFrame — the claim_offline_batch rule)."""
+    createDataFrame — the _totals_row JVM-literal rule)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -2573,7 +2545,6 @@ def _pivot_live_positions(
     identical no-union single-exchange fast-path plan."""
     from pyspark.sql import functions as F
 
-    recover_compacting(spark, out_dir)
     # ONE collect: bucket modulus + commit rows + term bucket ids
     st = _committed_state(spark, out_dir, "batches", ("meta",), terms)
     hw = st["hw"]
@@ -2635,6 +2606,33 @@ def _pivot_live_positions(
     )
 
 
+def _phrase_starts(spark: SparkSession, out_dir: str, phrase: tuple):
+    """(live pivot, start set) of a phrase query — shared by
+    phrase_from_postings and phrase_matches_from_postings: after term
+    i, the start set holds every position s where tokens s..s+i match
+    the phrase prefix, folded row-locally as
+    array_intersect(starts, pos_i - i) over the pivoted arrays
+    (_pivot_live_positions). A doc missing ANY term folds to NULL."""
+    from pyspark.sql import functions as F
+
+    if len(phrase) < 2:
+        raise ValueError("a phrase needs at least two terms")
+    byd = _pivot_live_positions(spark, out_dir, phrase)
+
+    def _shifted(col_name: str, k: int):
+        # NB: the lambda must stay SINGLE-argument — F.transform
+        # dispatches on lambda arity, and a second parameter (even a
+        # defaulted one) makes it the ARRAY INDEX, silently replacing
+        # the intended shift (found the hard way: `lambda x, _i=k`
+        # computed x - position_in_array)
+        return F.transform(F.col(col_name), lambda x: x - F.lit(k))
+
+    starts = F.col("p0")
+    for i in range(1, len(phrase)):
+        starts = F.array_intersect(starts, _shifted(f"p{i}", i))
+    return byd, starts
+
+
 def phrase_from_postings(
     spark: SparkSession,
     out_dir: str,
@@ -2654,20 +2652,7 @@ def phrase_from_postings(
     touched at serve time."""
     from pyspark.sql import functions as F
 
-    if len(phrase) < 2:
-        raise ValueError("a phrase needs at least two terms")
-    byd = _pivot_live_positions(spark, out_dir, phrase)
-    def _shifted(col_name: str, k: int):
-        # NB: the lambda must stay SINGLE-argument — F.transform
-        # dispatches on lambda arity, and a second parameter (even a
-        # defaulted one) makes it the ARRAY INDEX, silently replacing
-        # the intended shift (found the hard way: `lambda x, _i=k`
-        # computed x - position_in_array)
-        return F.transform(F.col(col_name), lambda x: x - F.lit(k))
-
-    starts = F.col("p0")
-    for i in range(1, len(phrase)):
-        starts = F.array_intersect(starts, _shifted(f"p{i}", i))
+    byd, starts = _phrase_starts(spark, out_dir, phrase)
     hits = byd.select(
         "doc_id",
         F.coalesce(F.size(starts), F.lit(0)).alias("n_hits"),
@@ -2697,22 +2682,53 @@ def phrase_matches_from_postings(
     token index of the phrase's first occurrence."""
     from pyspark.sql import functions as F
 
-    if len(phrase) < 2:
-        raise ValueError("a phrase needs at least two terms")
-    byd = _pivot_live_positions(spark, out_dir, phrase)
-
-    def _shifted(col_name: str, k: int):
-        # single-argument lambda (the F.transform arity rule)
-        return F.transform(F.col(col_name), lambda x: x - F.lit(k))
-
-    starts = F.col("p0")
-    for i in range(1, len(phrase)):
-        starts = F.array_intersect(starts, _shifted(f"p{i}", i))
+    byd, starts = _phrase_starts(spark, out_dir, phrase)
     return (
         byd.select(
             "doc_id",
             F.coalesce(F.size(starts), F.lit(0)).alias("n_hits"),
             F.array_min(starts).alias("first_pos"),
+        )
+        .filter(F.col("n_hits") > 0)
+        .orderBy(F.desc("n_hits"), F.asc("doc_id"))
+        .limit(limit)
+    )
+
+
+def _pair_window_hits(
+    spark: SparkSession,
+    out_dir: str,
+    t1: str,
+    t2: str,
+    k: int,
+    limit: int,
+    same_terms: str,
+    within: Callable,
+) -> DataFrame:
+    """The pruned two-term read, one pivot and the row-local window
+    fold shared by proximity_from_postings and
+    ordered_near_from_postings: for each position x of t1, count the
+    positions y of t2 with ``within(x, y, k)`` — per-doc work bounded
+    by |p0|·|p1| of the TWO terms' lists, never the document or the
+    corpus — and rank docs by that count. ``same_terms`` is the
+    caller's refusal of t1 == t2."""
+    from pyspark.sql import functions as F
+
+    if t1 == t2:
+        raise ValueError(same_terms)
+    if k < 1:
+        raise ValueError("window k must be >= 1")
+    byd = _pivot_live_positions(spark, out_dir, (t1, t2))
+    n_hits = F.aggregate(
+        F.col("p0"),
+        F.lit(0),
+        lambda acc, x: acc
+        + F.size(F.filter(F.col("p1"), lambda y: within(x, y, F.lit(int(k))))),
+    )
+    return (
+        byd.select(
+            "doc_id",
+            F.coalesce(n_hits, F.lit(0)).alias("n_hits"),
         )
         .filter(F.col("n_hits") > 0)
         .orderBy(F.desc("n_hits"), F.asc("doc_id"))
@@ -2734,39 +2750,19 @@ def proximity_from_postings(
     pairs (x ∈ positions(t1), y ∈ positions(t2)) with
     |y − x| <= k (and x != y, so a shared position of identical
     terms never self-matches). Two-bucket pruned read, one pivot,
-    then a row-local fold: for each x, count p1's positions within
-    the window — per-doc work bounded by |p0|·|p1| of the TWO terms'
-    lists, never the document or the corpus."""
+    then a row-local fold (_pair_window_hits)."""
     from pyspark.sql import functions as F
 
-    if t1 == t2:
-        raise ValueError(
-            "proximity needs two distinct terms (a single term's "
-            "self-distances are not a retrieval signal)"
-        )
-    if k < 1:
-        raise ValueError("window k must be >= 1")
-    byd = _pivot_live_positions(spark, out_dir, (t1, t2))
-    n_hits = F.aggregate(
-        F.col("p0"),
-        F.lit(0),
-        lambda acc, x: acc
-        + F.size(
-            F.filter(
-                F.col("p1"),
-                lambda y: (F.abs(y - x) <= F.lit(int(k)))
-                & (y != x),
-            )
-        ),
-    )
-    return (
-        byd.select(
-            "doc_id",
-            F.coalesce(n_hits, F.lit(0)).alias("n_hits"),
-        )
-        .filter(F.col("n_hits") > 0)
-        .orderBy(F.desc("n_hits"), F.asc("doc_id"))
-        .limit(limit)
+    return _pair_window_hits(
+        spark,
+        out_dir,
+        t1,
+        t2,
+        k,
+        limit,
+        "proximity needs two distinct terms (a single term's "
+        "self-distances are not a retrieval signal)",
+        lambda x, y, kk: (F.abs(y - x) <= kk) & (y != x),
     )
 
 
@@ -2785,36 +2781,18 @@ def ordered_near_from_postings(
     proximity_from_postings). This is Lucene's ordered SpanNear /
     the IIR positional-intersect with a one-sided window; "new york"
     style queries where order carries meaning but adjacency is too
-    strict. Identical pruned-read + pivot machinery; only the
-    row-local window predicate differs."""
-    from pyspark.sql import functions as F
-
-    if t1 == t2:
-        raise ValueError(
-            "ordered proximity needs two distinct terms"
-        )
-    if k < 1:
-        raise ValueError("window k must be >= 1")
-    byd = _pivot_live_positions(spark, out_dir, (t1, t2))
-    n_hits = F.aggregate(
-        F.col("p0"),
-        F.lit(0),
-        lambda acc, x: acc
-        + F.size(
-            F.filter(
-                F.col("p1"),
-                lambda y: (y > x) & (y - x <= F.lit(int(k))),
-            )
-        ),
-    )
-    return (
-        byd.select(
-            "doc_id",
-            F.coalesce(n_hits, F.lit(0)).alias("n_hits"),
-        )
-        .filter(F.col("n_hits") > 0)
-        .orderBy(F.desc("n_hits"), F.asc("doc_id"))
-        .limit(limit)
+    strict. Identical pruned-read + pivot machinery
+    (_pair_window_hits); only the row-local window predicate
+    differs."""
+    return _pair_window_hits(
+        spark,
+        out_dir,
+        t1,
+        t2,
+        k,
+        limit,
+        "ordered proximity needs two distinct terms",
+        lambda x, y, kk: (y > x) & (y - x <= kk),
     )
 
 
@@ -3142,6 +3120,8 @@ def bm25_from_postings(
     deltas, kept as a Spark division of the two long literals, which
     is bit-identical to the inline query's AVG(size(split(text)))
     (Spark's AVG is the same long-sum / long-count double divide).
+    A store with no live document (n_docs 0: empty, or every document
+    deleted) serves no row.
     Works unchanged on a batch-built store (one batch_id=-1
     partition) and a stream-maintained one (many deltas): postings
     rows are unique per (doc, term) by the append-only-unique-docs
@@ -3152,10 +3132,6 @@ def bm25_from_postings(
 
     k1 = BM25_K1 if k1 is None else k1
     b = BM25_B if b is None else b
-    # a compact_posting_lists swap may have died between delete and
-    # rename — finish it before the meta read raises (same entry
-    # protocol as refresh_ivf_index)
-    recover_compacting(spark, out_dir)
     # ONE collect: bucket modulus + totals rows + term bucket ids.
     # totals is every writer's LAST write, so its rows are exactly the
     # committed batches: the high-water mark and the
@@ -3182,7 +3158,11 @@ def bm25_from_postings(
         F.count(F.lit(1)).alias("df")
     )
     n_docs = F.lit(st["n_docs"]).cast("long")
-    avgdl = F.lit(st["n_tokens"]).cast("long") / n_docs
+    # a store whose every document was deleted folds to n_docs = 0:
+    # its avgdl is NULL, as an empty corpus's (n_tokens NULL), so no
+    # 0/0 is ever evaluated and nothing live scores
+    n_tokens = st["n_tokens"] if st["n_docs"] else None
+    avgdl = F.lit(n_tokens).cast("long") / n_docs
     idf = F.log(
         1
         + (n_docs - F.col("df") + F.lit(0.5))

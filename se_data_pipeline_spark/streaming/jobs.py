@@ -39,6 +39,7 @@ from se_data_pipeline_spark.sources.layout import (
     _totals_row,
     _write_postings_meta,
     guard_stream_batch,
+    recover_compacting,
 )
 from se_data_pipeline_spark.sources.publish import CheckpointedPublisher
 
@@ -1016,7 +1017,7 @@ def maintain_term_stats(
         "term-stats store",
         "term_stats/batch_id=-1",
         "corpus_totals",
-        lambda spark, batch, batch_id: _term_stats_deltas(
+        lambda: lambda spark, batch, batch_id: _term_stats_deltas(
             out_dir, n_buckets, batch_id, *_term_stats_frames(batch)
         ),
     )
@@ -1102,37 +1103,46 @@ def _maintain_store(
     label: str,
     base: str,
     commit: str,
-    write_batch,
+    writer,
 ):
     """The foreachBatch skeleton of every store maintainer (posting,
     positional, shingle, MinHash, IVF, BQ and term stats), started as
-    an availableNow query. Per micro-batch: localCheckpoint the batch
-    (decoupled from the stream), skip it when empty, fail LOUDLY when
-    its checkpoint-scoped id collides with an offline-claimed fence id
-    (layout.guard_stream_batch — resuming an old checkpoint after an
-    offline revision would reuse its id and clobber its partitions),
-    then ``write_batch(spark, batch, batch_id)`` writes the
-    batch's non-commit deltas and returns its commit write, which runs
-    LAST — the batch's commit point, the offline writers' crash
-    order. Exactly-once by LAYOUT: a replayed micro-batch overwrites
-    ITS OWN batch_id partitions (dynamic partition overwrite) and
-    nothing else, so a batch that died before its commit is invisible
-    to every reader until the restart from its checkpoint replays and
-    commits it.
+    an availableNow query.
 
-    A store holding build rows (``base``: the glob of its
-    ``batch_id=-1`` dirs under out_dir) without its ``commit`` table
-    is a crashed build, and the maintainer refuses to start with the
-    shared missing-commit error: its first commit would otherwise
-    make the build's rows serve. The check is a driver-side glob, no
-    Spark job; the maintainer's own uncommitted batches (ids >= 0)
-    are its checkpoint replay's to overwrite and never block it."""
-    import os
+    At job start, in this order: finish a compaction swap that died
+    between its delete and its rename (layout.recover_compacting —
+    before any other check, or the maintainer would find no store,
+    create a fresh one beside the orphaned ``.compacting`` sibling
+    and lose the real one for good); refuse a crashed build; then
+    ``writer()`` resolves the store's frozen state and returns the
+    per-batch writer. A store holding build rows (``base``: the glob
+    of its ``batch_id=-1`` dirs under out_dir) without its ``commit``
+    table is a crashed build, refused with the shared missing-commit
+    error: its first commit would otherwise make the build's rows
+    serve. Both checks are driver-side filesystem calls, no Spark
+    job; the maintainer's own uncommitted batches (ids >= 0) are its
+    checkpoint replay's to overwrite and never block it.
 
-    fs, built = _hadoop_path(docs_stream.sparkSession, f"{out_dir}/{base}")
-    _, committed = _hadoop_path(docs_stream.sparkSession, f"{out_dir}/{commit}")
+    Per micro-batch: localCheckpoint the batch (decoupled from the
+    stream), skip it when empty, fail LOUDLY when its
+    checkpoint-scoped id collides with an offline-claimed fence id
+    (layout.guard_stream_batch, one directory listing — resuming an
+    old checkpoint after an offline revision would reuse its id and
+    clobber its partitions), then ``write_batch(spark, batch,
+    batch_id)`` writes the batch's non-commit deltas and returns its
+    commit write, which runs LAST — the batch's commit point, the
+    offline writers' crash order. Exactly-once by LAYOUT: a replayed
+    micro-batch overwrites ITS OWN batch_id partitions (dynamic
+    partition overwrite) and nothing else, so a batch that died
+    before its commit is invisible to every reader until the restart
+    from its checkpoint replays and commits it."""
+    spark = docs_stream.sparkSession
+    recover_compacting(spark, out_dir)
+    fs, built = _hadoop_path(spark, f"{out_dir}/{base}")
+    _, committed = _hadoop_path(spark, f"{out_dir}/{commit}")
     if list(fs.globStatus(built) or []) and not fs.exists(committed):
         raise _no_commit(out_dir, commit)
+    write_batch = writer()
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.localCheckpoint()  # decouple from the stream
@@ -1141,7 +1151,7 @@ def _maintain_store(
         spark = batch.sparkSession
         guard_stream_batch(
             spark,
-            os.path.join(out_dir, "offline_fence"),
+            f"{out_dir}/offline_fence",
             batch_id,
             f"{label} at {out_dir}",
         )
@@ -1174,7 +1184,8 @@ def _maintain_doc_store(
     (a changed document changes its rows); the default keeps the
     append-only-unique-ids contract.
 
-    The frozen layout state is resolved once, at job start (it is
+    The frozen layout state is resolved once, at job start, after the
+    skeleton's swap recovery and crashed-build check (it is
     immutable, and offline ops are fenced out while the stream runs):
     a store's side tables through layout._committed_state — the IVF
     quantizers, or a bucketed store's modulus once its meta table
@@ -1186,21 +1197,25 @@ def _maintain_doc_store(
     concurrent serve reads 'has no meta table'."""
     spark = docs_stream.sparkSession
     fs, meta = _hadoop_path(spark, f"{out_dir}/meta")
-    if spec.bucketed and not fs.exists(meta):
-        frozen = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
-    elif spec.side:
-        st = _committed_state(spark, out_dir, None, spec.side)
-        frozen = st["n_buckets"] if spec.bucketed else st
-    else:
-        frozen = None
 
-    def write_batch(spark, batch, batch_id):
-        commit = _store_deltas(
-            spec, batch, out_dir, batch_id, frozen, allow_revisions
-        )
+    def writer():
         if spec.bucketed and not fs.exists(meta):
-            _write_postings_meta(spark, out_dir, frozen)
-        return commit
+            frozen = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
+        elif spec.side:
+            st = _committed_state(spark, out_dir, None, spec.side)
+            frozen = st["n_buckets"] if spec.bucketed else st
+        else:
+            frozen = None
+
+        def write_batch(spark, batch, batch_id):
+            commit = _store_deltas(
+                spec, batch, out_dir, batch_id, frozen, allow_revisions
+            )
+            if spec.bucketed and not fs.exists(meta):
+                _write_postings_meta(spark, out_dir, frozen)
+            return commit
+
+        return write_batch
 
     return _maintain_store(
         docs_stream,
@@ -1209,7 +1224,7 @@ def _maintain_doc_store(
         spec.label,
         f"{spec.rows}/{'*/' if spec.nested else ''}batch_id=-1",
         spec.commit,
-        write_batch,
+        writer,
     )
 
 
@@ -1334,13 +1349,9 @@ def read_term_stats(spark: SparkSession, out_dir: str):
     inference job; empty-delta dirs fold as empty). Terms whose
     folded doc_freq reaches 0 (every containing document revised away
     via revise_term_stats' negative deltas) leave the vocabulary,
-    matching a rebuild."""
-    from se_data_pipeline_spark.sources.layout import recover_compacting
-
-    # a compact_term_stats swap may have died between delete and
-    # rename — finish it before the reads raise (the swappable-store
-    # entry protocol, ADVICE r10)
-    recover_compacting(spark, out_dir)
+    matching a rebuild. A compact_term_stats swap that died between
+    its delete and its rename is finished by that committed-state
+    read, before anything else is read."""
     st = _committed_state(spark, out_dir, "corpus_totals")
     terms = (
         spark.read.schema(_TERM_STATS_SCHEMA)
@@ -1388,12 +1399,8 @@ def revise_term_stats(
     against the stream resuming its old checkpoint (run while the
     stream is stopped); the corpus_totals row is the commit, LAST.
     Returns the batch id used."""
-    from se_data_pipeline_spark.sources.layout import (
-        _offline_begin,
-        recover_compacting,
-    )
+    from se_data_pipeline_spark.sources.layout import _offline_begin
 
-    recover_compacting(spark, out_dir)
     next_b = _committed_state(spark, out_dir, "corpus_totals")["hw"]
     _offline_begin(
         spark,

@@ -494,6 +494,15 @@ def test_refresh_ivf_index_recovers_from_interrupted_swap(
     refresh_ivf_index(spark, idx, n_iters=1)
     got = ivf_candidates(spark, idx, [10.0, 0.0], nprobe=1)
     assert got.count() > 0, "recovered + refreshed index must serve"
+    # an index that was never built: the state read, which now runs
+    # before refresh's own cells check, names the missing table
+    missing = str(tmp_path / "never_built")
+    for call in (
+        lambda: refresh_ivf_index(spark, missing),
+        lambda: ivf_candidates(spark, missing, [10.0, 0.0]),
+    ):
+        with pytest.raises(ValueError, match="has no centroids table"):
+            call()
 
 
 def test_swap_compacted_missing_store_raises_value_error(

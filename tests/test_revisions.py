@@ -1135,3 +1135,28 @@ def test_minhash_index_lifecycle_and_stream_parity(
     assert [os.path.basename(d) for d in batch_dirs] == ["batch_id=-1"]
     assert not os.path.isdir(os.path.join(store, "tombstones"))
     assert _pairs(store) == want
+
+
+def test_bm25_serves_nothing_once_every_doc_is_deleted(spark, tmp_path):
+    """A posting store whose every document was deleted folds its
+    totals to n_docs = n_tokens = 0. A BM25 serve of terms whose
+    postings are all tombstoned returns no row, as a rebuilt empty
+    corpus does, instead of evaluating avgdl = 0 / 0."""
+    from se_data_pipeline_spark.sources.layout import (
+        bm25_from_postings,
+        delete_posting_docs,
+        write_posting_lists,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma gamma"), (3, "delta")],
+        "doc_id bigint, text string",
+    )
+    out = str(tmp_path / "store")
+    write_posting_lists(docs, out, n_buckets=8)
+    assert bm25_from_postings(spark, out, ("beta", "delta")).collect()
+    delete_posting_docs(spark, docs.select("doc_id"), out)
+    assert bm25_from_postings(spark, out, ("beta", "delta")).collect() == []
+    empty = str(tmp_path / "empty")
+    write_posting_lists(docs.limit(0), empty, n_buckets=8)
+    assert bm25_from_postings(spark, empty, ("beta",)).collect() == []

@@ -903,3 +903,160 @@ def test_maintainer_refuses_crashed_build(spark, tmp_path):
     assert not os.path.exists(os.path.join(out, "batches"))
     with pytest.raises(ValueError, match="no 'batches' commit table"):
         L.near_dups_from_index(spark, out, docs, 0.5)
+
+
+@pytest.mark.parametrize("family", ["frequency", "shingle"])
+def test_maintainer_recovers_crashed_swap(spark, tmp_path, family):
+    """A compaction that died between its delete and its rename leaves
+    the store ONLY at <out>.compacting. A maintainer started then must
+    finish the swap before anything else: otherwise it finds no store,
+    creates a fresh one holding only the new batch (a posting store
+    under the default modulus) and orphans the real one for good. The
+    serve after the micro-batch equals an offline build of the old and
+    new documents, a bucketed store keeps its modulus, and no sibling
+    remains."""
+    from se_data_pipeline_spark.streaming import jobs as J
+
+    maintain, build, _, _, serve, _, _, _ = _crash_family(family)
+    if family == "frequency":
+        # no n_buckets: the modulus must come from the recovered meta
+        maintain = J.maintain_posting_lists
+    docs = spark.createDataFrame(
+        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    )
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 100)
+    out = str(tmp_path / "store")
+    build(docs.filter("doc_id < 2"), out)
+    os.rename(out, out + ".compacting")
+
+    src = str(tmp_path / "src")
+    docs.filter("doc_id = 2").coalesce(1).write.parquet(src)
+    q = maintain(
+        spark.readStream.schema(docs.schema).parquet(src),
+        out,
+        str(tmp_path / "chk"),
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    truth = str(tmp_path / "truth")
+    build(docs, truth)
+    want = serve(spark, truth, probe)
+    assert want
+    assert serve(spark, out, probe) == want
+    assert not os.path.exists(out + ".compacting")
+    if family == "frequency":
+        meta = spark.read.parquet(os.path.join(out, "meta")).collect()
+        assert [r["n_buckets"] for r in meta] == [8]
+
+
+def _group_jobs(spark, group: str, fn) -> list:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fence_steps_start_no_spark_job(spark, tmp_path):
+    """A claim is one mkdirs and a fence read one directory listing:
+    claim_offline_batch, offline_claimed_ids and guard_stream_batch
+    (on a free and on a claimed id) start no Spark job, and the claim
+    is a ``batch_id=N`` directory like every data partition."""
+    from se_data_pipeline_spark.sources.layout import (
+        claim_offline_batch,
+        guard_stream_batch,
+        offline_claimed_ids,
+    )
+
+    fence = str(tmp_path / "store" / "offline_fence")
+    got = {}
+
+    def guard_claimed():
+        with pytest.raises(RuntimeError, match="collides with an offline"):
+            guard_stream_batch(spark, fence, 3, "store")
+
+    cases = [
+        ("read-absent", lambda: got.update(absent=offline_claimed_ids(spark, fence))),
+        ("claim", lambda: claim_offline_batch(spark, fence, 3)),
+        ("claim-again", lambda: claim_offline_batch(spark, fence, 3)),
+        ("claim-next", lambda: claim_offline_batch(spark, fence, 5)),
+        ("read", lambda: got.update(ids=offline_claimed_ids(spark, fence))),
+        ("guard-free", lambda: guard_stream_batch(spark, fence, 4, "store")),
+        ("guard-claimed", guard_claimed),
+    ]
+    for name, fn in cases:
+        jobs = _group_jobs(spark, f"fence-{name}", fn)
+        assert jobs == [], f"{name}: {len(jobs)} Spark jobs"
+    assert got["absent"] == frozenset()
+    assert got["ids"] == {3, 5}
+    assert sorted(os.listdir(fence)) == ["batch_id=3", "batch_id=5"]
+
+
+def test_older_format_fence_refused_until_compaction(spark, tmp_path):
+    """A fence written by older code is a parquet table, whose claimed
+    ids a directory listing cannot see. An offline revision, a delete
+    and the maintainer each refuse it, with the store's files
+    unchanged; a compaction drops it without reading it, after which
+    the offline writers and a fresh-checkpoint stream run again."""
+    from se_data_pipeline_spark.sources.layout import (
+        compact_positional_postings,
+        delete_positional_docs,
+        phrase_from_postings,
+        revise_positional_postings,
+        write_positional_postings,
+    )
+    from se_data_pipeline_spark.streaming.jobs import (
+        maintain_positional_postings,
+    )
+
+    docs = _tiny_docs(spark)
+    out = str(tmp_path / "pos_store")
+    write_positional_postings(docs.filter("doc_id < 4"), out, n_buckets=8)
+    fence = os.path.join(out, "offline_fence")
+    spark.range(1).select(
+        F.lit(0).cast("int").alias("batch_id")
+    ).write.parquet(fence)
+    src = str(tmp_path / "src")
+    docs.filter("doc_id >= 4").coalesce(1).write.parquet(src)
+
+    def stream(chk: str):
+        return maintain_positional_postings(
+            spark.readStream.schema(docs.schema).parquet(src),
+            out,
+            str(tmp_path / chk),
+        )
+
+    before = _files(out)
+    for call in (
+        lambda: revise_positional_postings(
+            spark, docs.filter("doc_id = 1"), out
+        ),
+        lambda: delete_positional_docs(
+            spark, docs.filter("doc_id = 2").select("doc_id"), out
+        ),
+    ):
+        with pytest.raises(ValueError, match="older format"):
+            call()
+    q = stream("chk")
+    with pytest.raises(Exception, match="older format"):
+        q.awaitTermination(120)
+    assert _files(out) == before
+
+    compact_positional_postings(spark, out)
+    assert not os.path.exists(fence)
+    q = stream("fresh_chk")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert delete_positional_docs(
+        spark, docs.filter("doc_id = 2").select("doc_id"), out
+    ) == 1
+    served = {
+        r["doc_id"]
+        for r in phrase_from_postings(
+            spark, out, ("alpha", "beta"), limit=None
+        ).collect()
+    }
+    assert served == {0, 1, 3, 4, 5}
