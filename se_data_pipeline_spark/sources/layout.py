@@ -117,25 +117,34 @@ def swap_compacted(
 # collision cannot be renumbered away without breaking crash
 # convergence; instead every offline writer CLAIMS its batch id before
 # touching the store, as an empty ``offline_fence/batch_id=N``
-# directory — the representation of every data partition, listed by
-# the same _physical_batch_ids — and every maintainer checks its
-# micro-batch id against the fence and fails LOUDLY on a claimed id,
-# with the remedy in the message (compact — which folds the claimed
-# batches into the base and drops the fence with the swap — then
-# restart from a fresh checkpoint). No fence step runs a Spark job.
+# directory — the representation of every data partition and of the
+# store's commit markers (``batches/batch_id=N``), made by the same
+# _mark_batch and listed by the same _physical_batch_ids — and every
+# maintainer checks its micro-batch id against the fence and fails
+# LOUDLY on a claimed id, with the remedy in the message (compact —
+# which folds the claimed batches into the base and drops the fence
+# with the swap — then restart from a fresh checkpoint). No fence
+# step runs a Spark job.
+
+
+def _mark_batch(spark: SparkSession, batch_dir: str, batch_id: int) -> None:
+    """One Hadoop mkdirs of ``batch_dir/batch_id=N``: an offline fence
+    claim (``offline_fence``) or a batch's commit marker
+    (``batches``). Marking an id already marked is a no-op."""
+    fs, p = _hadoop_path(spark, f"{batch_dir}/batch_id={int(batch_id)}")
+    if not fs.mkdirs(p):
+        raise IOError(f"could not mark batch {batch_id} in {batch_dir}")
 
 
 def claim_offline_batch(
     spark: SparkSession, fence_dir: str, batch_id: int
 ) -> None:
-    """Record an offline revision/delete's claim on `batch_id` — one
-    Hadoop mkdirs of ``fence_dir/batch_id=N``, made BEFORE any other
-    write of that batch, so even a crashed (uncommitted) revision's
-    id stays fenced against a resumed maintenance stream. A re-run's
-    claim of the same id is a no-op."""
-    fs, p = _hadoop_path(spark, f"{fence_dir}/batch_id={int(batch_id)}")
-    if not fs.mkdirs(p):
-        raise IOError(f"could not claim batch {batch_id} in {fence_dir}")
+    """Record an offline revision/delete's claim on `batch_id` in
+    ``fence_dir`` (_mark_batch), made BEFORE any other write of that
+    batch, so even a crashed (uncommitted) revision's id stays fenced
+    against a resumed maintenance stream. A re-run's claim of the same
+    id is a no-op."""
+    _mark_batch(spark, fence_dir, batch_id)
 
 
 def offline_claimed_ids(
@@ -188,10 +197,10 @@ def _physical_batch_ids(
     """Batch ids PHYSICALLY present in a store directory's partition
     layout — a filesystem listing (one listStatus per directory
     level), never a data read. ``nested=False`` for stores
-    partitioned by batch_id first (postings/doclens/tombstones, the
-    offline fence); ``nested=True`` for the IVF cells layout
-    (cell=C/batch_id=N — bounded by n_cells directories). Empty set
-    when the path does not exist."""
+    partitioned by batch_id first (postings/doclens/tombstones/totals,
+    the offline fence, the commit markers); ``nested=True`` for the
+    IVF cells layout (cell=C/batch_id=N — bounded by n_cells
+    directories). Empty set when the path does not exist."""
     fs, p = _hadoop_path(spark, path)
     if not fs.exists(p):
         return set()
@@ -219,53 +228,60 @@ def _physical_batch_ids(
 # --------------------------------------------------------------------
 # Shared store-lifecycle machinery: every materialized store runs the
 # same commit-point protocol — read the committed state (high-water
-# mark, summed totals, frozen side tables and any per-query legs) in
-# one collect through the one reader of commit and side tables
-# (_committed_state, which first finishes a crashed compaction swap,
-# so no entry point can skip the recovery; a maintainer recovers at
-# its start), refuse unclaimed partials and claim the fence
-# (_offline_begin: directory listings and one mkdirs), write the
-# non-commit deltas (overlapped) and the commit row LAST, serve
-# committed tombstone-live rows, compact by whole-dir swap (side
-# tables that never change between builds — bucket meta, IVF
-# centroids and PQ — copied, not rewritten). The frequency-postings,
-# positional, shingle, MinHash, IVF and BQ stores run it through ONE
+# mark: one listing of the commit markers; summed totals, frozen side
+# tables and any per-query legs: one collect, none when the caller
+# needs none) through _committed_state, which first finishes a crashed
+# compaction swap, so no entry point can skip the recovery (a
+# maintainer recovers at its start); refuse unclaimed partials and
+# claim the fence (_offline_begin: directory listings and one mkdirs);
+# write the batch's deltas (overlapped), then its totals row where the
+# family keeps corpus statistics, and LAST its commit marker — one
+# mkdirs of ``batches/batch_id=N`` (_mark_batch); serve committed
+# tombstone-live rows; compact by whole-dir swap (side tables that
+# never change between builds — bucket meta, IVF centroids and PQ —
+# copied, not rewritten). The frequency-postings, positional,
+# shingle, MinHash, IVF and BQ stores run it through ONE
 # implementation driven by a _DocStore spec (build, revise/delete,
 # live view, compaction; the foreachBatch maintainer skeleton is
 # streaming/jobs._maintain_store, shared with the term-stats store,
-# which reads, revises and compacts behind its corpus_totals commit
-# point with the same pieces).
+# which reads, revises and compacts behind the same markers with the
+# same pieces).
 #
-# Fail-loud contract: every writer writes its commit table, so a
-# store without one never committed (or crashed before its first
-# commit). Serves, revisions and compactions of such a store raise
-# the shared missing-commit ValueError instead of serving rows no
-# commit point covers.
+# Fail-loud contract: every writer marks its batch last, so a store
+# without a ``batches`` dir never committed (or crashed before its
+# first commit, or was written by older code whose frequency or
+# term-stats commit point was its totals table). Serves, revisions and
+# compactions of such a store raise the shared missing-commit
+# ValueError instead of serving rows no commit point covers.
 
 
-def _dyn_overwrite(df: DataFrame, cols: list, path: str) -> None:
-    """Dynamic partition overwrite: a re-run replaces only ITS OWN
-    partitions — the idempotence every batch writer relies on. The
-    engine's one per-writer dynamic-mode write (the writer option
-    overrides the session conf without mutating it)."""
+def _dyn_overwrite(
+    df: DataFrame, cols: list, path: str, mode: str = "dynamic"
+) -> None:
+    """Partition overwrite under an explicit partitionOverwriteMode
+    (the writer option overrides the session conf without mutating
+    it). ``dynamic``: a re-run replaces only ITS OWN partitions — the
+    idempotence every batch writer relies on. ``static`` (a build):
+    the whole table is replaced, so no partition of a previous store
+    survives whatever the session conf says."""
     (
         df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .option("partitionOverwriteMode", mode)
         .partitionBy(*cols)
         .parquet(path)
     )
 
 
 def _overlap_writes(*thunks) -> list:
-    """Run independent thunks — NON-COMMIT store writes, or whole
+    """Run independent thunks — a batch's delta writes, or whole
     independent store builds — from driver threads so concurrent jobs
     back-fill each other's stragglers and the driver round-trips
     overlap (guide §2.6); returns the thunks' results in order.
-    Callers must keep the commit-point write (ledger/totals) OUT of
-    the pool and issue it only after this returns — crash semantics
-    are then unchanged: any subset of these writes may exist without
-    the commit row, exactly as under the sequential order, and the
-    re-run's overwrite replaces them. Each write is wrapped by
+    Callers issue the writes computed from these (a totals row) and
+    the commit marker only after this returns — crash semantics are
+    then unchanged: any subset of these writes may exist without the
+    marker, exactly as under the sequential order, and the re-run's
+    overwrite replaces them. Each write is wrapped by
     pyspark's inheritable_thread_target (InheritableThread's form for
     executor pools), so its jobs carry the caller's job group, job
     tags and local properties: cancellable and attributable with the
@@ -280,13 +296,15 @@ def _overlap_writes(*thunks) -> list:
         return [f.result() for f in futures]
 
 
-def _no_commit(out_dir: str, table: str) -> ValueError:
-    """The shared missing-commit error of a store without its commit
-    table."""
+def _no_commit(out_dir: str) -> ValueError:
+    """The shared missing-commit error of a store without its
+    ``batches`` commit markers."""
     return ValueError(
-        f"store at {out_dir} has no '{table}' commit table: it never "
+        f"store at {out_dir} has no 'batches' commit table: it never "
         "committed, or its writer crashed before its first commit, so "
-        "no row in it is committed. Remedy: rebuild the store, or "
+        "no row in it is committed (a frequency or term-stats store "
+        "written by older code, whose totals table was its commit "
+        "point, has none either). Remedy: rebuild the store, or "
         "restart its maintainer from the checkpoint (the replay "
         "commits the batch)."
     )
@@ -295,26 +313,40 @@ def _no_commit(out_dir: str, table: str) -> ValueError:
 def _committed_state(
     spark: SparkSession,
     out_dir: str,
-    commit: str | None,
     side: tuple = (),
     terms: list | None = None,
     q_vec: list | None = None,
+    totals: str | None = None,
+    mark: bool = True,
 ) -> dict:
-    """The store's committed state in ONE collect: the only reader of
-    a commit table and of the frozen side tables. Its legs are raw
-    rows UNIONED under a ``kind`` tag — never cross-joined, so an
-    empty leg cannot annihilate the others, and never aggregated, so
-    no shuffle splits the read into a second job:
+    """The store's committed state: the only reader of its commit
+    markers, its totals and its frozen side tables.
 
-    - ``commit``: the commit table's rows as they are on disk —
-      ``batches`` (the ledger stores), ``totals`` (the frequency
-      store) or ``corpus_totals`` (term stats), one row per batch
-      since the last compaction. None reads the side tables alone (a
-      maintainer resolving its frozen state, which may precede the
-      store's first commit);
+    - ``mark``: the high-water mark, one past the newest committed
+      batch id (0 for an empty ``batches`` dir), from ONE directory
+      listing of the ``batches/batch_id=N`` commit markers — no Spark
+      job. Every writer marks its batch LAST, so batches at or above
+      the mark are a crashed operation's partials, excluded from every
+      read and overwritten when the operation re-runs with the SAME
+      id. False skips it (a maintainer resolving its frozen state,
+      which may precede the store's first commit). A missing
+      ``batches`` dir raises the shared missing-commit error. Ledger
+      markers written by older code hold parquet rows; only their
+      names are read.
+
+    The rest are raw rows read in ONE collect, UNIONED under a
+    ``kind`` tag — never cross-joined, so an empty leg cannot
+    annihilate the others, and never aggregated, so no shuffle splits
+    the read into a second job. A caller that names none of them
+    starts no Spark job:
+
     - ``side``: the frozen side tables among ``meta`` (the bucket
       modulus), ``centroids`` and ``pq`` (the IVF quantizers; the PQ
       tables only when the store carries them);
+    - ``totals``: the rows of a totals table (``totals`` of the
+      frequency store, ``corpus_totals`` of term stats) below the
+      mark, summed driver-side — a sum skips NULLs and is None when no
+      row has a value (SQL SUM);
     - ``terms``: query terms, as RAW xxhash64 values whose pmod lands
       driver-side — for int64 h and positive modulus n, Python's
       ``h % n`` equals Spark's ``pmod(h, n)``, so the bucket ids are
@@ -322,26 +354,21 @@ def _committed_state(
     - ``q_vec``: a query vector, packed to its sign code by the SAME
       pack_sign_bits expression the writers use.
 
-    The commit row is every writer's LAST write, so every commit row
-    is committed: the high-water mark (one past the newest batch id,
-    0 for an empty table — batches at or above it are a crashed
-    operation's partials, excluded from every read and overwritten
-    when the operation re-runs with the SAME id) and the summed
-    totals come from one consistent snapshot. A sum skips NULLs and
-    is None when no row has a value (SQL SUM). A missing commit table
-    raises the shared missing-commit error, a missing meta or
-    centroid table its own no-table error: the path check is the
-    read's own (no extra probe, no job). No state is cached across calls.
+    The side tables are opened before the markers are listed, so a
+    store missing both raises the side table's no-table error; the
+    path checks are the reads' own (no extra probe, no job). No state
+    is cached across calls.
 
     Before anything is read, a compaction swap that died between its
     delete and its rename is finished (recover_compacting): every
     serve, offline write and compaction reads the store through here
     first, so none of them can miss the recovery.
 
-    Returns {"hw", "n_docs", "n_tokens"} (None without ``commit``),
-    "n_buckets", "cents" ([(cell, centroid)...] sorted by cell), "pq"
-    ((m, sub, k) or None), "cb" (codebook rows by codeword id),
-    "buckets" (sorted term bucket ids) and "qcode"."""
+    Returns {"hw" (None without ``mark``), "n_docs", "n_tokens"
+    (None without ``totals``), "n_buckets", "cents" ([(cell,
+    centroid)...] sorted by cell), "pq" ((m, sub, k) or None), "cb"
+    (codebook rows by codeword id), "buckets" (sorted term bucket
+    ids), "qcode"}."""
     from functools import reduce
 
     from pyspark.errors import AnalysisException
@@ -392,14 +419,23 @@ def _committed_state(
                 _leg(pq_meta, "pq", *[F.col(c) for c in ("m", "sub", "k")]),
                 _leg(cb, "cb", F.col("k"), vec=F.col("e")),
             ]
-    if commit is not None:
-        # one schema for every commit table: a ledger's rows read
-        # n_tokens as NULL
-        rows = _read(
-            commit, _POSTINGS_TOTALS_SCHEMA, _no_commit(out_dir, commit)
+    hw = None
+    if mark:
+        fs, batches = _hadoop_path(spark, f"{out_dir}/batches")
+        if not fs.exists(batches):
+            raise _no_commit(out_dir)
+        ids = _physical_batch_ids(spark, f"{out_dir}/batches")
+        hw = max(ids, default=-1) + 1
+    if totals is not None:
+        rows = _read(totals, _POSTINGS_TOTALS_SCHEMA)
+        legs.append(
+            _leg(
+                rows.filter(F.col("batch_id") < hw),
+                "totals",
+                F.col("n_docs"),
+                F.col("n_tokens"),
+            )
         )
-        cols = ("batch_id", "n_docs", "n_tokens")
-        legs.append(_leg(rows, "commit", *[F.col(c) for c in cols]))
     if terms is not None:
         uniq = sorted({str(t) for t in terms})
         if not uniq:
@@ -416,12 +452,11 @@ def _committed_state(
         legs.append(_leg(spark.range(1), "qcode", pack_sign_bits(qlit)))
 
     by: dict[str, list] = {}
-    for r in reduce(DataFrame.unionByName, legs).collect():
+    for r in reduce(DataFrame.unionByName, legs).collect() if legs else []:
         by.setdefault(r["kind"], []).append(r)
-    commits = by.get("commit", [])
 
     def _sum(col: str):
-        vals = [r[col] for r in commits if r[col] is not None]
+        vals = [r[col] for r in by.get("totals", []) if r[col] is not None]
         return sum(vals) if vals else None
 
     if "meta" in side and "meta" not in by:
@@ -429,11 +464,9 @@ def _committed_state(
     nb = int(by["meta"][0]["a"]) if "meta" in by else None
     pq = by["pq"][0] if "pq" in by else None
     return {
-        "hw": None
-        if commit is None
-        else max((int(r["a"]) for r in commits), default=-1) + 1,
-        "n_docs": _sum("b"),
-        "n_tokens": _sum("c"),
+        "hw": hw,
+        "n_docs": _sum("a"),
+        "n_tokens": _sum("b"),
         "n_buckets": nb,
         "cents": sorted(
             (int(r["a"]), [float(x) for x in r["vec"]])
@@ -459,7 +492,7 @@ def _totals_row(spark: SparkSession, st: dict) -> DataFrame:
     a python-list local relation pays a 5-7 s RDD-serialization
     round-trip PER WRITE on this runtime (measured r11), while the
     JVM-literal frame writes in ~0.3 s — the JVM-literal rule every
-    1-row commit or meta write follows."""
+    1-row totals or meta write follows."""
     from pyspark.sql import functions as F
 
     return spark.range(1).select(
@@ -502,7 +535,7 @@ def _offline_begin(
     and one mkdirs: no Spark job.
 
     Unclaimed ids at or above the mark are a maintenance stream's
-    crashed micro-batch (rows written, commit row not; ADVICE r11,
+    crashed micro-batch (rows written, commit marker not; ADVICE r11,
     medium). The revision's dynamic overwrite replaces only ITS OWN
     partitions, so that batch's rows in other partitions would
     survive, and the revision's commit would make them COMMITTED
@@ -525,7 +558,7 @@ def _offline_begin(
             f"{sorted(stray)}, at or above the committed high-water "
             f"mark {next_b}, and no offline operation claimed them — a "
             "maintenance stream crashed mid-batch (rows written, "
-            "commit row not). An offline batch committed now would "
+            "commit marker not). An offline batch committed now would "
             "make those partial rows serve WITHOUT their tombstones "
             "(silent stale/duplicate documents). Remedy: restart the "
             "maintenance stream from its checkpoint (its replay "
@@ -586,59 +619,40 @@ def _kill_tombstoned(
     )
 
 
-def _ledger_commit(
-    spark: SparkSession, out_dir: str, batch_id: int, docs, ids
-) -> DataFrame:
-    """A ledger store's commit row: the batch's document count — a
-    JVM-literal 0 for a delete (``docs`` None; the _totals_row
-    JVM-literal rule)."""
-    from pyspark.sql import functions as F
-
-    if docs is None:
-        row = spark.range(1).select(F.lit(0).cast("long").alias("n_docs"))
-    else:
-        row = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    return row.withColumn("batch_id", F.lit(int(batch_id)))
-
-
 @dataclass(frozen=True)
 class _DocStore:
     """One store family on the shared lifecycle: rows under
-    ``out_dir/<rows>`` partitioned by ``parts``, the commit table
-    ``commit``, ``tombstones`` keyed by ``id_col``, ``offline_fence``.
-    ``frames(docs, batch_id, state)`` is the family's row builder for
-    one document (or vector) set under the store's frozen layout
-    ``state``: the bucket modulus of a bucketed store, else the
+    ``out_dir/<rows>`` partitioned by ``parts``, ``tombstones`` keyed
+    by ``id_col``, ``offline_fence`` and the ``batches`` commit
+    markers. ``frames(docs, batch_id, state)`` is the family's row
+    builder for one document (or vector) set under the store's frozen
+    layout ``state``: the bucket modulus of a bucketed store, else the
     _committed_state snapshot of its ``side`` tables (the IVF
-    quantizers). ``schema`` is the rows' explicit read
-    schema, or None when it is inferred (IVF: its attribute columns
-    and vector element type vary per store); a ``batch_id`` below
-    another partition column (IVF's ``cell=C/batch_id=N``) nests the
-    batch dirs. ``deltas`` lists extra per-batch tables as (name,
-    frame(docs, batch_id), live(spark, out_dir, before_batch)):
-    written with the rows, and folded by compaction from their
-    committed live view. ``side`` names the tables that never change
+    quantizers). ``schema`` is the rows' explicit read schema, or None
+    when it is inferred (IVF: its attribute columns and vector element
+    type vary per store); a ``batch_id`` below another partition
+    column (IVF's ``cell=C/batch_id=N``) nests the batch dirs.
+    ``deltas`` lists extra per-batch tables as (name, frame(docs,
+    batch_id), live(spark, out_dir, before_batch)): written with the
+    rows, and folded by compaction from their committed live view.
+    ``totals(spark, out_dir, batch_id, docs, ids)``, when set, builds
+    a batch's row of additive corpus statistics in the ``totals``
+    table once its other deltas have landed (``docs`` None for a
+    delete, ``ids`` the tombstoned ids or None); compaction folds it
+    to its committed sums. ``side`` names the tables that never change
     between builds (bucket meta, IVF centroids and PQ): the frozen
-    layout state, read with the commit rows in one collect
-    (_committed_state) and copied by compaction.
-    ``commit_row(spark, out_dir, batch_id, docs, ids)``
-    builds a batch's commit row once its deltas have landed (``docs``
-    None for a delete, ``ids`` the tombstoned ids or None). A
-    ``totals`` commit table holds additive corpus statistics, which
-    compaction folds to their committed sums; a ledger's informational
-    n_docs is recounted from the compacted rows. A store whose parts
-    include ``tok_bucket`` is bucketed: it records its modulus in a
-    ``meta`` table. Compacted rows are repartitioned by the first
-    partition column other than batch_id, so each leaf dir holds one
-    file."""
+    layout state, read in one collect (_committed_state) and copied by
+    compaction. A store whose parts include ``tok_bucket`` is
+    bucketed: it records its modulus in a ``meta`` table. Compacted
+    rows are repartitioned by the first partition column other than
+    batch_id, so each leaf dir holds one file."""
 
     label: str
     schema: str | None
     parts: tuple
     frames: Callable
-    commit: str = "batches"
     deltas: tuple = ()
-    commit_row: Callable = _ledger_commit
+    totals: Callable | None = None
     rows: str = "postings"
     id_col: str = "doc_id"
     side: tuple = ()
@@ -660,35 +674,27 @@ def _store_build(
     side: tuple = (),
 ) -> None:
     """Batch build: ``batch_id=-1`` rows, extra deltas and the
-    ``side`` table writes (IVF centroids and PQ) overlapped -> meta
-    (bucketed stores) -> commit row, in that order. Meta existing
-    implies the rows landed, so a crash mid-rows leaves a store every
-    serve refuses ("no meta table"), and the commit row LAST makes the
-    build the store's first commit."""
+    ``side`` table writes (IVF centroids and PQ) overlapped -> totals
+    -> meta (bucketed stores) -> commit marker, in that order, every
+    table replaced whole (static overwrite, whatever the session's
+    partitionOverwriteMode). Meta existing implies the rows landed, so
+    a crash mid-rows leaves a store every serve refuses ("no meta
+    table"). The commit deletes the tables a build does not write — a
+    previous store's ``batches`` markers would keep its newer batches
+    committed, and its tombstones would kill the rebuilt rows once a
+    new stream's ids reach theirs (its fence claims batches that are
+    gone) — and then marks -1, making the build the store's first
+    commit."""
     spark = docs.sparkSession
-
-    def _write(df: DataFrame, parts, name: str) -> None:
-        df.write.mode("overwrite").partitionBy(*parts).parquet(
-            f"{out_dir}/{name}"
-        )
-
-    _overlap_writes(
-        lambda: _write(spec.frames(docs, -1, state), spec.parts, spec.rows),
-        *[
-            lambda name=name, frame=frame: _write(
-                frame(docs, -1), ["batch_id"], name
-            )
-            for name, frame, _ in spec.deltas
-        ],
-        *side,
+    _store_deltas(
+        spec, docs, out_dir, -1, state, False, side=side, mode="static"
     )
     if spec.bucketed:
         _write_postings_meta(spark, out_dir, state)
-    _write(
-        spec.commit_row(spark, out_dir, -1, docs, None).coalesce(1),
-        ["batch_id"],
-        spec.commit,
-    )
+    for name in ("batches", "tombstones", "offline_fence"):
+        fs, p = _hadoop_path(spark, f"{out_dir}/{name}")
+        fs.delete(p, True)
+    _mark_batch(spark, f"{out_dir}/batches", -1)
 
 
 def _store_deltas(
@@ -699,28 +705,32 @@ def _store_deltas(
     state,
     tombstone: bool,
     rows: bool = True,
-) -> Callable[[], None]:
-    """Write one batch's NON-COMMIT deltas — the rows and extra deltas
-    of `docs` at `batch_id` (unless ``rows`` is False: a delete), plus
+    side: tuple = (),
+    mode: str = "dynamic",
+) -> None:
+    """Write one batch's deltas — the rows and extra deltas of `docs`
+    at `batch_id` (unless ``rows`` is False: a delete), plus
     (``tombstone``) a tombstone per id killing its rows from older
-    batches — overlapped (_overlap_writes), and return the batch's
-    commit: the commit-row write, which the caller runs LAST and which
-    builds the row only then, over the landed deltas. Any subset of
-    the deltas may exist without the commit row; readers only see
-    batches below the committed high-water mark, and a re-run's
+    batches, plus the ``side`` thunks — overlapped (_overlap_writes),
+    then the batch's totals row (``spec.totals``), built over the
+    landed deltas. The caller marks the batch committed LAST. Any
+    subset of the deltas may exist without the marker; readers only
+    see batches below the committed high-water mark, and a re-run's
     dynamic overwrite replaces them."""
-    writes = []
+
+    def _write(df: DataFrame, parts, name: str) -> None:
+        _dyn_overwrite(df, list(parts), f"{out_dir}/{name}", mode)
+
+    writes = list(side)
     if rows:
         writes.append(
-            lambda: _dyn_overwrite(
-                spec.frames(docs, batch_id, state),
-                list(spec.parts),
-                f"{out_dir}/{spec.rows}",
+            lambda: _write(
+                spec.frames(docs, batch_id, state), spec.parts, spec.rows
             )
         )
         writes += [
-            lambda name=name, frame=frame: _dyn_overwrite(
-                frame(docs, batch_id), ["batch_id"], f"{out_dir}/{name}"
+            lambda name=name, frame=frame: _write(
+                frame(docs, batch_id), ["batch_id"], name
             )
             for name, frame, _ in spec.deltas
         ]
@@ -731,14 +741,12 @@ def _store_deltas(
             )
         )
     _overlap_writes(*writes)
-    ids = docs.select(spec.id_col).distinct() if tombstone else None
-    return lambda: _dyn_overwrite(
-        spec.commit_row(
+    if spec.totals is not None:
+        ids = docs.select(spec.id_col).distinct() if tombstone else None
+        totals = spec.totals(
             docs.sparkSession, out_dir, batch_id, docs if rows else None, ids
-        ).coalesce(1),
-        ["batch_id"],
-        f"{out_dir}/{spec.commit}",
-    )
+        )
+        _write(totals.coalesce(1), ["batch_id"], "totals")
 
 
 def _store_offline(
@@ -762,30 +770,30 @@ def _store_offline(
     a maintenance stream resuming its old checkpoint afterwards fails
     loudly instead of clobbering this batch (run while the stream is
     stopped). N and, for a revision, the frozen layout state its
-    rows are built under come from one _committed_state collect,
-    which first finishes a crashed compaction swap. The prologue is
-    that one job; the fence steps are directory listings and one
-    mkdirs. Rows, extra deltas and tombstones are written
-    concurrently; the commit row follows them LAST as the commit
-    point."""
-    st = _committed_state(
-        spark, out_dir, spec.commit, () if delete else spec.side
-    )
+    rows are built under come from _committed_state, which first
+    finishes a crashed compaction swap: a listing, plus one collect
+    when the revision needs side tables (a delete never does). The
+    fence steps are directory listings and one mkdirs. Rows, extra
+    deltas and tombstones are written concurrently, then the totals
+    row, and the commit marker LAST."""
+    st = _committed_state(spark, out_dir, () if delete else spec.side)
     next_b = st["hw"]
     state = st["n_buckets"] if spec.bucketed else st
     rows = [f"{out_dir}/{spec.rows}"]
+    tables = [d[0] for d in spec.deltas] + ["tombstones"]
+    if spec.totals is not None:
+        tables.append("totals")
     _offline_begin(
         spark,
         out_dir,
         f"{'delete' if delete else 'revision'} of the {spec.label} "
         f"at {out_dir}",
         next_b,
-        [f"{out_dir}/{d[0]}" for d in spec.deltas]
-        + [f"{out_dir}/tombstones"]
-        + ([] if spec.nested else rows),
+        [f"{out_dir}/{t}" for t in tables] + ([] if spec.nested else rows),
         rows if spec.nested else [],
     )
-    _store_deltas(spec, docs, out_dir, next_b, state, True, rows=not delete)()
+    _store_deltas(spec, docs, out_dir, next_b, state, True, rows=not delete)
+    _mark_batch(spark, f"{out_dir}/batches", next_b)
     return next_b
 
 
@@ -795,11 +803,11 @@ def _store_live(
     """The store's committed, tombstone-live rows — the one view its
     serves and its compactor read. Batches at or above the committed
     high-water mark are a crashed operation's partials and never
-    serve. Without ``hw`` the view reads the mark itself."""
+    serve. Without ``hw`` the view lists the mark itself (no job)."""
     from pyspark.sql import functions as F
 
     if hw is None:
-        hw = _committed_state(spark, out_dir, spec.commit)["hw"]
+        hw = _committed_state(spark, out_dir)["hw"]
     read = spark.read if spec.schema is None else spark.read.schema(spec.schema)
     rows = read.parquet(f"{out_dir}/{spec.rows}").filter(
         F.col("batch_id") < hw
@@ -830,29 +838,29 @@ def _store_compact(
 ) -> None:
     """Fold the store's per-batch deltas into one ``batch_id=-1`` base
     and fold its TOMBSTONES OUT — rows killed by a newer tombstone are
-    physically dropped, the commit table folds to one row, and the
-    rewritten store carries no tombstones or fence, so serves are
-    back on the no-join fast path and a fresh-checkpoint stream
-    legitimately restarts at id 0. Folds the COMMITTED state only.
+    physically dropped, a totals table folds to one row, the commit
+    markers to ``batch_id=-1``, and the rewritten store carries no
+    tombstones or fence, so serves are back on the no-join fast path
+    and a fresh-checkpoint stream legitimately restarts at id 0. Folds
+    the COMMITTED state only.
 
     The WHOLE store directory is rewritten to a temp sibling and
     swapped by ONE swap_compacted call: folding rows to -1 while live
     tombstones survive would kill the entire base (-1 < any tombstone
-    batch). The high-water mark and a totals commit table's sums come
-    from one _committed_state collect, which also refuses a bucketed
-    store without its meta table; the folded totals row is written
-    from those sums as literals. A ledger's informational n_docs is
-    counted by reading back the compacted rows just written (one
-    column-pruned read with an explicit schema — a zero-row fold
-    writes no data files) instead of evaluating the live view a
-    second time. Side tables are copied, not rewritten. Run while the
-    maintenance stream is stopped."""
+    batch). The high-water mark and the totals sums come from one
+    _committed_state read, which also refuses a bucketed store
+    without its meta table (no job for a store with neither side
+    tables nor totals); the folded totals row is written from those
+    sums as literals. Side tables are copied, not rewritten. Run while
+    the maintenance stream is stopped."""
     from pyspark.sql import functions as F
 
     leaf = [p for p in spec.parts if p != "batch_id"][:1]
 
     def _write(tmp: str) -> None:
-        st = _committed_state(spark, out_dir, spec.commit, spec.side)
+        st = _committed_state(
+            spark, out_dir, spec.side, totals="totals" if spec.totals else None
+        )
         hw = st["hw"]
         rows = _store_live(spec, spark, out_dir, hw)
 
@@ -864,18 +872,10 @@ def _store_compact(
         _fold(rows.repartition(*leaf) if leaf else rows, spec.parts, spec.rows)
         for name, _, live in spec.deltas:
             _fold(live(spark, out_dir, hw), ["batch_id"], name)
-        if spec.commit == "totals":
-            commit = _totals_row(spark, st)
-        else:
-            commit = (
-                spark.read.schema(f"{spec.id_col} bigint")
-                .parquet(f"{tmp}/{spec.rows}")
-                .select(spec.id_col)
-                .distinct()
-                .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-            )
-        _fold(commit.coalesce(1), ["batch_id"], spec.commit)
+        if spec.totals is not None:
+            _fold(_totals_row(spark, st).coalesce(1), ["batch_id"], "totals")
         _copy_tables(spark, out_dir, tmp, spec.side)
+        _mark_batch(spark, f"{tmp}/batches", -1)
 
     swap_compacted(spark, out_dir, _write, spec.label)
 
@@ -1049,8 +1049,8 @@ def write_bq_index(
 
     Layout: ``out_path/codes`` (vec_id, code) rows under a
     ``batch_id=-1`` base — the shape maintain_bq_index appends to and
-    delete_bq_vectors tombstones — and the ``batches`` commit row,
-    written LAST (_store_build). NULL vectors are excluded."""
+    delete_bq_vectors tombstones — and the ``batches/batch_id=-1``
+    commit marker, made LAST (_store_build). NULL vectors are excluded."""
     from pyspark.sql import functions as F
 
     _store_build(
@@ -1220,8 +1220,8 @@ def write_ivf_index(
     bytes/row inside the probed cells and never touches the float
     column, r11 ivf_bq_funnel). NULL vectors are excluded
     (unsearchable). One grouped pass for the centroids + one
-    cell-partitioned write, then the ``batches`` commit row LAST (the
-    shared build, _store_build).
+    cell-partitioned write, then the ``batches/batch_id=-1`` commit
+    marker LAST (the shared build, _store_build).
 
     ``attr_cols`` carries metadata columns (label, source, date, …)
     into the cells rows for filtered ANN (ivf_filtered_topk): the
@@ -1247,7 +1247,7 @@ def write_ivf_index(
     pro = {"pq": None, "cb": None}
     # the centroid table and the pq tables are side tables of the
     # shared build: written concurrently with the cells rows, before
-    # the batches commit row
+    # the commit marker
     side = []
     if pq:
         seeds = (
@@ -1309,11 +1309,11 @@ def ivf_serve_state(spark: SparkSession, index_path: str) -> dict:
     """Pre-read serve-time state for SEVERAL probes of the same
     committed store inside one query body: the bounded centroid table
     ("cents") and the committed high-water mark ("hw") in one
-    _committed_state collect. A recall report probes the same store
-    three times (brute + nprobe=1,2); without this each
-    ivf_candidates call re-ran the read. The state is a SNAPSHOT —
-    never reuse it across writes to the store."""
-    return _committed_state(spark, index_path, "batches", ("centroids",))
+    _committed_state read (a listing and one collect). A recall
+    report probes the same store three times (brute + nprobe=1,2);
+    without this each ivf_candidates call re-ran the read. The state
+    is a SNAPSHOT — never reuse it across writes to the store."""
+    return _committed_state(spark, index_path, ("centroids",))
 
 
 def _cos_sim_expr(q_vec: list):
@@ -1346,23 +1346,6 @@ def _cos_sim_expr(q_vec: list):
     )
     denom = vnorm * F.lit(qn)
     return F.when(denom != 0, dot / denom)
-
-
-def _vec_commit(
-    spark: SparkSession, out_dir: str, batch_id: int, vecs, ids
-) -> DataFrame:
-    """The IVF and BQ stores' commit row: a build records its
-    searchable (non-NULL) vector count, the rows it wrote; a delta
-    batch records n_docs 0, so a micro-batch or revision commits with
-    one literal write (compaction recounts the folded rows)."""
-    from pyspark.sql import functions as F
-
-    built = (
-        vecs.filter(F.col("embedding").isNotNull())
-        if vecs is not None and batch_id < 0
-        else None
-    )
-    return _ledger_commit(spark, out_dir, batch_id, built, ids)
 
 
 def _ivf_frames(vecs: DataFrame, batch_id: int, pro: dict) -> DataFrame:
@@ -1410,7 +1393,6 @@ _IVF = _DocStore(
     None,
     ("cell", "batch_id"),
     _ivf_frames,
-    commit_row=_vec_commit,
     rows="cells",
     id_col="vec_id",
     side=("centroids", "pq"),
@@ -1439,9 +1421,8 @@ def revise_ivf_vectors(
 
     The shared offline revision (_store_offline): the quantizers and
     the committed high-water mark come from one _committed_state
-    collect;
-    rows and tombstones are written concurrently and the batches
-    commit row LAST. A re-run after any partial write reuses the SAME
+    read; rows and tombstones are written concurrently and the commit
+    marker LAST. A re-run after any partial write reuses the SAME
     id and overwrites its own partitions (cell assignment is
     deterministic under the frozen quantizer). Run while the
     maintenance stream is stopped — the claimed id is FENCED, so a
@@ -1548,14 +1529,12 @@ def ivf_bq_funnel(
     The query's code is evaluated with the SAME Catalyst expression
     the writers use (pack_sign_bits has no public driver-side twin)
     — riding a 1-row leg of the _committed_state collect instead of
-    its own, alongside the centroid table and the commit rows."""
+    its own, alongside the centroid table."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.vectors import hamming_codes
 
-    pro = _committed_state(
-        spark, index_path, "batches", ("centroids",), q_vec=q_vec
-    )
+    pro = _committed_state(spark, index_path, ("centroids",), q_vec=q_vec)
     q_code = pro["qcode"]
 
     probed = _probed_rows(spark, index_path, q_vec, nprobe, pro)
@@ -1620,8 +1599,8 @@ def ivf_pq_funnel(
     (write_ivf_index(pq=True))."""
     from pyspark.sql import functions as F
 
-    # one collect: pq meta + frozen codebook + centroids + commit rows
-    pro = _committed_state(spark, index_path, "batches", _IVF.side)
+    # one collect: pq meta + frozen codebook + centroids
+    pro = _committed_state(spark, index_path, _IVF.side)
     if pro["pq"] is None:
         raise ValueError(
             f"IVF index at {index_path} carries no PQ codes — build "
@@ -1786,11 +1765,11 @@ def refresh_ivf_index(
        cell assignments."""
     from pyspark.sql import functions as F
 
-    # centroids, PQ meta and the commit rows in one collect, which
-    # first finishes a prior refresh's swap that died between its
-    # delete and rename (the whole index then sits at
-    # <index_path>.compacting) — so it runs BEFORE the cells check
-    pro = _committed_state(spark, index_path, "batches", _IVF.side)
+    # centroids, PQ meta and the commit mark in one read, which first
+    # finishes a prior refresh's swap that died between its delete and
+    # rename (the whole index then sits at <index_path>.compacting) —
+    # so it runs BEFORE the cells check
+    pro = _committed_state(spark, index_path, _IVF.side)
     hw, cents = pro["hw"], pro["cents"]
     fs, live_cells = _hadoop_path(spark, f"{index_path}/cells")
     if not fs.exists(live_cells):
@@ -1919,14 +1898,13 @@ def _bq_frames(vecs: DataFrame, batch_id: int, _state=None) -> DataFrame:
 
 
 # The BQ store on the shared lifecycle: (vec_id, code) rows under
-# codes/batch_id=N, tombstones keyed by vec_id, the batches ledger as
-# its commit point.
+# codes/batch_id=N, tombstones keyed by vec_id, the batches markers
+# as its commit point.
 _BQ = _DocStore(
     "BQ index",
     _BQ_CODES_SCHEMA,
     ("batch_id",),
     _bq_frames,
-    commit_row=_vec_commit,
     rows="codes",
     id_col="vec_id",
 )
@@ -1936,7 +1914,7 @@ def delete_bq_vectors(
     spark: SparkSession, ids: DataFrame, index_path: str
 ) -> int:
     """Remove vectors from a BQ index: tombstones for the ids (`ids`
-    carries vec_id) plus the batches commit row, at the committed
+    carries vec_id) plus the commit marker, at the committed
     high-water mark (_store_offline). Returns the batch id used."""
     return _store_offline(_BQ, spark, ids, index_path, delete=True)
 
@@ -2215,15 +2193,15 @@ def _totals_from_doclens(
 ) -> DataFrame:
     """The (n_docs, n_tokens, batch_id) totals row for one batch,
     aggregated from that batch's doclens partition instead of a
-    second tokenize pass over the input corpus (r13; the
-    compact-count readback precedent): the ledger carries one row
-    per document of the batch with dl = size(split(text)) — the
-    exact expression the totals aggregate used — so COUNT(*) and
-    SUM(dl) reproduce the old values bit-for-bit (integer sums are
-    order-independent; SUM skips the NULL dl a NULL-text document
-    writes, exactly as SUM(size(split(NULL))) did). Callers must
-    have written the batch's doclens partition first; a batch
-    without one (a delete) reads back (0, NULL)."""
+    second tokenize pass over the input corpus (r13): the ledger
+    carries one row per document of the batch with dl =
+    size(split(text)) — the exact expression the totals aggregate
+    used — so COUNT(*) and SUM(dl) reproduce the old values
+    bit-for-bit (integer sums are order-independent; SUM skips the
+    NULL dl a NULL-text document writes, exactly as
+    SUM(size(split(NULL))) did). Callers must have written the
+    batch's doclens partition first; a batch without one (a delete)
+    reads back (0, NULL)."""
     from pyspark.sql import functions as F
 
     fs, p = _hadoop_path(spark, f"{out_dir}/doclens")
@@ -2294,10 +2272,10 @@ def _corrected_totals(
     )
 
 
-def _totals_commit(
+def _batch_totals(
     spark: SparkSession, out_dir: str, batch_id: int, docs, ids
 ) -> DataFrame:
-    """The frequency store's commit row: the batch's totals read back
+    """The frequency store's totals row: the batch's totals read back
     from the doclens partition it just wrote (none for a delete),
     corrected by the replaced versions' counts when the batch writes
     tombstones (``ids``) — so n_docs/avgdl fold additively to exactly
@@ -2319,9 +2297,8 @@ _FREQUENCY = _DocStore(
     _POSTINGS_SCHEMA,
     ("batch_id", "tok_bucket"),
     lambda docs, b, nb: _posting_frames(docs, b, nb),
-    commit="totals",
     deltas=(("doclens", _doclens_frame, _live_doclens),),
-    commit_row=_totals_commit,
+    totals=_batch_totals,
     side=("meta",),
 )
 
@@ -2338,7 +2315,8 @@ def write_posting_lists(
     a ``batch_id=-1`` base partition, plus a doclens ledger, a
     one-row meta table recording the bucket modulus and the
     corpus-totals table (n_docs, n_tokens) in the same delta layout,
-    written LAST (_store_build). A query for K terms prunes to at most
+    written after the other tables and before the commit marker
+    (_store_build). A query for K terms prunes to at most
     K bucket directories per batch partition (parquet partition
     pruning — executed-plan-asserted in the test) and filters tok
     WITHIN them (parquet data-filter pushdown); document frequency per
@@ -2366,8 +2344,8 @@ def revise_posting_lists(
     once; doc_ids new to the store are plain inserts. The shared
     tombstone revision (_store_offline): postings and doclens rows at
     batch N plus a tombstone per revised id, then the totals
-    CORRECTION as the commit row — new counts minus the replaced
-    versions' counts, old dl from the O(n_docs) doclens ledger (the
+    CORRECTION row and the commit marker — new counts minus the
+    replaced versions' counts, old dl from the O(n_docs) doclens ledger (the
     postings themselves are never scanned). Run while any maintenance
     stream on this store is stopped. Returns the batch id used."""
     return _store_offline(_FREQUENCY, spark, docs_v2, out_dir)
@@ -2378,7 +2356,7 @@ def delete_posting_docs(
 ) -> int:
     """Remove documents from a posting-list store: tombstones for the
     ids (killing ALL their prior rows — no replacement rows follow)
-    plus the negative totals correction as the commit row
+    plus the negative totals correction, then the commit marker
     (_store_offline). Ids absent from the store are no-ops (their
     tombstone kills nothing and contributes nothing to the
     correction)."""
@@ -2387,8 +2365,8 @@ def delete_posting_docs(
 
 # positional postings: the phrase/proximity-query layout (positions
 # array kept per (doc, term); same bucket-sharded partition scheme).
-# Full lifecycle since r11: revise/delete tombstones, a `batches`
-# commit ledger, a streaming maintainer
+# Full lifecycle since r11: revise/delete tombstones, `batches`
+# commit markers, a streaming maintainer
 # (streaming/jobs.maintain_positional_postings) and whole-store
 # compaction — the reference's re-ingest semantics
 # (data_pipeline.py:559-577) apply to phrase indexes exactly as they
@@ -2398,11 +2376,6 @@ _POS_POSTINGS_SCHEMA = (
     "doc_id bigint, pos array<int>, tok string, "
     "batch_id int, tok_bucket bigint"
 )
-# commit ledger (``batches``): one row per committed batch, written
-# LAST — the totals-table commit-point role for stores that need no
-# corpus statistics (positional postings, shingle index); the ledger
-# carries only the commit marker + an informational doc count, read
-# by _committed_state with the totals schema (n_tokens NULL)
 
 
 def _positional_frames(
@@ -2456,10 +2429,10 @@ def write_positional_postings(
     K-term phrase prunes to <=K bucket dirs and directory count is
     O(buckets), never O(vocabulary). Positions are a separate
     parquet column: frequency-style readers that prune columns never
-    pay for them. The ``batches`` commit ledger (one row per batch,
-    written last) is what revision/serve paths derive the committed
-    high-water mark from — the totals table's role in the frequency
-    store, without corpus statistics phrase scoring doesn't need."""
+    pay for them. The ``batches/batch_id=N`` commit markers (one
+    empty directory per batch, made last) are what revision/serve
+    paths list the committed high-water mark from; phrase scoring
+    needs no corpus statistics, so the store keeps no totals."""
     _store_build(_POSITIONAL, docs, out_dir, n_buckets)
 
 
@@ -2480,7 +2453,7 @@ def delete_positional_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
     """Remove documents from a positional posting store: tombstones
-    for the ids + the commit-ledger row (_store_offline)."""
+    for the ids + the commit marker (_store_offline)."""
     return _store_offline(_POSITIONAL, spark, doc_ids, out_dir, delete=True)
 
 
@@ -2513,8 +2486,8 @@ def _pivot_live_positions(
     array in its own column (p0..pK-1) — shared by phrase / proximity
     / ordered-near / AND-ranked so the lifecycle semantics cannot
     drift between query classes. Committed batches only (high-water
-    mark from the batches ledger; a store without it raises the
-    shared missing-commit error), <=K bucket-dir partition filter +
+    mark listed from the batches markers; a store without them raises
+    the shared missing-commit error), <=K bucket-dir partition filter +
     in-bucket term cut. The scan is built from those bucket
     dirs alone (_pruned_postings): listing is O(K x committed
     batches), a driver-side glob, never a listing job over the whole
@@ -2545,8 +2518,9 @@ def _pivot_live_positions(
     identical no-union single-exchange fast-path plan."""
     from pyspark.sql import functions as F
 
-    # ONE collect: bucket modulus + commit rows + term bucket ids
-    st = _committed_state(spark, out_dir, "batches", ("meta",), terms)
+    # ONE collect: bucket modulus + term bucket ids, below the listed
+    # commit mark
+    st = _committed_state(spark, out_dir, ("meta",), terms)
     hw = st["hw"]
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)
@@ -2847,7 +2821,7 @@ def compact_positional_postings(
 # Arrow shingle pass over the whole corpus per screen (at 100 TB the
 # corpus-side shingle recompute IS the cost; the index read is 8-byte
 # hashes + two ints). Same lifecycle contracts as the other stores:
-# batches commit ledger, tombstone kill rule, offline fence,
+# batches commit markers, tombstone kill rule, offline fence,
 # whole-dir compaction swaps.
 _SHINGLE_INDEX_SCHEMA = "doc_id bigint, m int, h bigint, batch_id int"
 
@@ -2859,7 +2833,7 @@ def _shingle_frames(docs: DataFrame, batch_id: int):
     join back to the documents — the queries/text._shingle_index
     convention). Shared by the batch builder, the revision path, the
     probe side, and the streaming maintainer. Short docs (no
-    shingles) contribute no rows but still count in the ledger."""
+    shingles) contribute no rows."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.functions.text import word_shingles_udf
@@ -2893,9 +2867,9 @@ _SHINGLE = _DocStore(
 def write_shingle_index(docs: DataFrame, out_dir: str) -> None:
     """Materialize the near-dup screening index: one (doc_id, m, h)
     row per distinct 5-token shingle hash, ``batch_id=-1`` base +
-    the batches commit ledger. The 8-byte hash column is the join
-    key (never the ~40-byte shingle string — the _shingle_index
-    rationale); the shingle pass over the corpus text runs ONCE
+    the ``batches/batch_id=-1`` commit marker. The 8-byte hash
+    column is the join key (never the ~40-byte shingle string — the
+    _shingle_index rationale); the shingle pass over the corpus text runs ONCE
     here, and every later ingest screen reads this instead."""
     _store_build(_SHINGLE, docs, out_dir)
 
@@ -2914,7 +2888,7 @@ def delete_shingle_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
     """Remove documents from the shingle index: tombstones + the
-    commit-ledger row (_store_offline)."""
+    commit marker (_store_offline)."""
     return _store_offline(_SHINGLE, spark, doc_ids, out_dir, delete=True)
 
 
@@ -3003,7 +2977,7 @@ def _minhash_frames(docs: DataFrame, batch_id: int):
     Arrow-batched signature pass (the minhash_lsh_candidates kernel),
     shared by the batch builder, the revision path, the probe side,
     and the streaming maintainer. Docs with <5 tokens contribute no
-    band rows but still count in the ledger."""
+    band rows."""
     from pyspark.sql import functions as F
 
     from se_data_pipeline_spark.queries.text import _mh_band_rows
@@ -3023,7 +2997,7 @@ _MINHASH = _DocStore(
 
 def write_minhash_index(docs: DataFrame, out_dir: str) -> None:
     """Materialize the LSH band index: ``batch_id=-1`` base + the
-    batches commit ledger (written LAST)."""
+    ``batches/batch_id=-1`` commit marker (made LAST)."""
     _store_build(_MINHASH, docs, out_dir)
 
 
@@ -3040,7 +3014,7 @@ def revise_minhash_docs(
 def delete_minhash_docs(
     spark: SparkSession, doc_ids: DataFrame, out_dir: str
 ) -> int:
-    """Remove documents: tombstones + the ledger commit row
+    """Remove documents: tombstones + the commit marker
     (_store_offline)."""
     return _store_offline(_MINHASH, spark, doc_ids, out_dir, delete=True)
 
@@ -3132,15 +3106,15 @@ def bm25_from_postings(
 
     k1 = BM25_K1 if k1 is None else k1
     b = BM25_B if b is None else b
-    # ONE collect: bucket modulus + totals rows + term bucket ids.
-    # totals is every writer's LAST write, so its rows are exactly the
-    # committed batches: the high-water mark and the
-    # summed totals are one consistent snapshot — a revision that
-    # crashed after its tombstone write but before its totals
-    # correction stays invisible until its re-run lands the commit
-    # point, and a micro-batch committing mid-serve can never pair
-    # batch-N totals with batch-<N postings.
-    st = _committed_state(spark, out_dir, "totals", ("meta",), terms)
+    # ONE collect: bucket modulus + term bucket ids + the totals rows
+    # below the commit mark, listed first. Every writer marks its
+    # batch LAST, so the high-water mark and the summed totals are one
+    # consistent snapshot — a revision that crashed after its
+    # tombstone write (or its totals correction) but before its marker
+    # stays invisible until its re-run commits, and a micro-batch
+    # committing mid-serve can never pair batch-N totals with
+    # batch-<N postings.
+    st = _committed_state(spark, out_dir, ("meta",), terms, totals="totals")
     hw = st["hw"]
     # <=K bucket dirs of the committed batches, then the exact-term
     # cut within them (pushed data filter)

@@ -34,6 +34,7 @@ from se_data_pipeline_spark.sources.layout import (
     _committed_state,
     _dyn_overwrite,
     _hadoop_path,
+    _mark_batch,
     _no_commit,
     _store_deltas,
     _totals_row,
@@ -254,9 +255,9 @@ def maintain_bq_index(
     maintainer skeleton (_maintain_doc_store, layout._BQ). Each
     micro-batch packs its vectors' 64-bit sign codes
     (functions/vectors.pack_sign_bits — one Catalyst expression, no
-    UDF) into ``out_dir/codes/batch_id=N`` and writes the batches
-    commit row LAST: a replayed micro-batch overwrites ITS OWN
-    partitions, and a batch that died before its commit row serves
+    UDF) into ``out_dir/codes/batch_id=N`` and marks the batch
+    committed LAST: a replayed micro-batch overwrites ITS OWN
+    partitions, and a batch that died before its commit marker serves
     nothing until the replay commits it.
 
     The index stores (vec_id, code) ONLY — 8 bytes of searchable
@@ -296,7 +297,7 @@ def maintain_ivf_index(
     vectors are assigned to their nearest coarse-quantizer cell and
     appended to ``index_path/cells`` under a ``cell=C/batch_id=N``
     partition via per-writer dynamic partition overwrite, then the
-    batches commit row LAST — a replayed micro-batch overwrites ITS
+    commit marker LAST — a replayed micro-batch overwrites ITS
     OWN partitions, so restarts never duplicate rows, and
     ivf_candidates' cell-IN(...) partition pruning is oblivious to
     the batch_id split below the cell directories.
@@ -996,11 +997,11 @@ def maintain_term_stats(
 
     Exactly-once by LAYOUT on the shared maintainer skeleton
     (_maintain_store): the terms delta lands in a `batch_id=N`
-    partition first and the corpus_totals row — the store's commit
-    point — LAST, both via dynamic partition overwrite, so a replayed
-    micro-batch overwrites ITS OWN partitions and nothing else, and a
-    batch that died before its totals row is invisible to
-    read_term_stats until the replay commits it. A periodic
+    partition first, then the corpus_totals row computed beside it,
+    both via dynamic partition overwrite, and the commit marker LAST,
+    so a replayed micro-batch overwrites ITS OWN partitions and
+    nothing else, and a batch that died before its marker is
+    invisible to read_term_stats until the replay commits it. A periodic
     compact_term_stats bounds the partition count. The idempotence
     assumes the SAME checkpoint directory across restarts (batch ids
     are checkpoint-scoped); re-pointing an existing store at a fresh
@@ -1016,7 +1017,6 @@ def maintain_term_stats(
         checkpoint_dir,
         "term-stats store",
         "term_stats/batch_id=-1",
-        "corpus_totals",
         lambda: lambda spark, batch, batch_id: _term_stats_deltas(
             out_dir, n_buckets, batch_id, *_term_stats_frames(batch)
         ),
@@ -1024,8 +1024,8 @@ def maintain_term_stats(
 
 
 # Explicit store schema (data columns + the batch_id/bucket partition
-# columns; corpus_totals is a commit table, read by
-# layout._committed_state): passing it to the reader avoids the footer-
+# columns; corpus_totals is read by layout._committed_state): passing
+# it to the reader avoids the footer-
 # inference job on a many-partition store AND keeps a zero-data-file
 # directory readable as an empty frame — a first micro-batch of
 # token-less documents legitimately writes a zero-row terms delta
@@ -1075,9 +1075,9 @@ def _term_stats_deltas(
     per_term: DataFrame,
     totals: DataFrame,
 ):
-    """Write one term-stats batch's terms delta — the non-commit step,
-    through layout._overlap_writes like every store writer's — and
-    return its commit: the corpus_totals row write, run LAST."""
+    """Write one term-stats batch's deltas: the terms delta, through
+    layout._overlap_writes like every store writer's, then the
+    corpus_totals row. The caller marks the batch committed LAST."""
     # resolved per call, not at import: layout's one overlap point
     # (and a fault injected there) covers this writer too
     from se_data_pipeline_spark.sources.layout import _overlap_writes
@@ -1089,7 +1089,7 @@ def _term_stats_deltas(
             f"{out_dir}/term_stats",
         )
     )
-    return lambda: _dyn_overwrite(
+    _dyn_overwrite(
         totals.withColumn("batch_id", F.lit(batch_id)).coalesce(1),
         ["batch_id"],
         f"{out_dir}/corpus_totals",
@@ -1102,7 +1102,6 @@ def _maintain_store(
     checkpoint_dir: str,
     label: str,
     base: str,
-    commit: str,
     writer,
 ):
     """The foreachBatch skeleton of every store maintainer (posting,
@@ -1116,12 +1115,13 @@ def _maintain_store(
     and lose the real one for good); refuse a crashed build; then
     ``writer()`` resolves the store's frozen state and returns the
     per-batch writer. A store holding build rows (``base``: the glob
-    of its ``batch_id=-1`` dirs under out_dir) without its ``commit``
-    table is a crashed build, refused with the shared missing-commit
-    error: its first commit would otherwise make the build's rows
-    serve. Both checks are driver-side filesystem calls, no Spark
-    job; the maintainer's own uncommitted batches (ids >= 0) are its
-    checkpoint replay's to overwrite and never block it.
+    of its ``batch_id=-1`` dirs under out_dir) without its
+    ``batches`` commit markers is a crashed build, refused with the
+    shared missing-commit error: its first commit would otherwise make
+    the build's rows serve. Both checks are driver-side filesystem
+    calls, no Spark job; the maintainer's own uncommitted batches
+    (ids >= 0) are its checkpoint replay's to overwrite and never
+    block it.
 
     Per micro-batch: localCheckpoint the batch (decoupled from the
     stream), skip it when empty, fail LOUDLY when its
@@ -1129,19 +1129,19 @@ def _maintain_store(
     (layout.guard_stream_batch, one directory listing — resuming an
     old checkpoint after an offline revision would reuse its id and
     clobber its partitions), then ``write_batch(spark, batch,
-    batch_id)`` writes the batch's non-commit deltas and returns its
-    commit write, which runs LAST — the batch's commit point, the
-    offline writers' crash order. Exactly-once by LAYOUT: a replayed
-    micro-batch overwrites ITS OWN batch_id partitions (dynamic
-    partition overwrite) and nothing else, so a batch that died
-    before its commit is invisible to every reader until the restart
-    from its checkpoint replays and commits it."""
+    batch_id)`` writes the batch's deltas, and the batch is marked
+    committed LAST (layout._mark_batch of ``batches/batch_id=N``, no
+    Spark job) — the offline writers' crash order. Exactly-once by
+    LAYOUT: a replayed micro-batch overwrites ITS OWN batch_id
+    partitions (dynamic partition overwrite) and nothing else, so a
+    batch that died before its marker is invisible to every reader
+    until the restart from its checkpoint replays and commits it."""
     spark = docs_stream.sparkSession
     recover_compacting(spark, out_dir)
     fs, built = _hadoop_path(spark, f"{out_dir}/{base}")
-    _, committed = _hadoop_path(spark, f"{out_dir}/{commit}")
+    _, committed = _hadoop_path(spark, f"{out_dir}/batches")
     if list(fs.globStatus(built) or []) and not fs.exists(committed):
-        raise _no_commit(out_dir, commit)
+        raise _no_commit(out_dir)
     write_batch = writer()
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -1155,7 +1155,8 @@ def _maintain_store(
             batch_id,
             f"{label} at {out_dir}",
         )
-        write_batch(spark, batch, batch_id)()
+        write_batch(spark, batch, batch_id)
+        _mark_batch(spark, f"{out_dir}/batches", batch_id)
 
     return (
         docs_stream.writeStream.outputMode("append")
@@ -1178,7 +1179,8 @@ def _maintain_doc_store(
     appends its rows under ``batch_id=N`` through the family's frame
     builder (layout._store_deltas — the builder the batch writer and
     the offline revision use, so batch-built and stream-maintained
-    stores serve through the same readers) plus the commit row, LAST.
+    stores serve through the same readers), then the skeleton's
+    commit marker, LAST.
     ``allow_revisions=True`` also tombstones every batch id at N, so a
     re-emitted document's or vector's stale rows die for every reader
     (a changed document changes its rows); the default keeps the
@@ -1192,7 +1194,7 @@ def _maintain_doc_store(
     exists, so a restart with a different ``n_buckets`` cannot fork
     the layout mid-store. Otherwise the store-creating batch uses
     ``n_buckets`` (default POSTINGS_TOK_BUCKETS) and writes meta ONCE,
-    after its rows and before its commit row: a per-batch
+    after its rows and before its commit marker: a per-batch
     delete+write of the one-row table would open a window where a
     concurrent serve reads 'has no meta table'."""
     spark = docs_stream.sparkSession
@@ -1202,18 +1204,17 @@ def _maintain_doc_store(
         if spec.bucketed and not fs.exists(meta):
             frozen = POSTINGS_TOK_BUCKETS if n_buckets is None else n_buckets
         elif spec.side:
-            st = _committed_state(spark, out_dir, None, spec.side)
+            st = _committed_state(spark, out_dir, spec.side, mark=False)
             frozen = st["n_buckets"] if spec.bucketed else st
         else:
             frozen = None
 
         def write_batch(spark, batch, batch_id):
-            commit = _store_deltas(
+            _store_deltas(
                 spec, batch, out_dir, batch_id, frozen, allow_revisions
             )
             if spec.bucketed and not fs.exists(meta):
                 _write_postings_meta(spark, out_dir, frozen)
-            return commit
 
         return write_batch
 
@@ -1223,7 +1224,6 @@ def _maintain_doc_store(
         checkpoint_dir,
         spec.label,
         f"{spec.rows}/{'*/' if spec.nested else ''}batch_id=-1",
-        spec.commit,
         writer,
     )
 
@@ -1238,11 +1238,11 @@ def maintain_posting_lists(
     """Incremental BM25 posting-list maintenance: each micro-batch of
     documents appends its (term, doc_id, tf, dl) rows under a
     ``batch_id=N/tok_bucket=...`` partition plus a doclens-ledger
-    delta, then its one-row totals delta LAST (_maintain_doc_store —
-    the SAME spec as the batch builder, layout._FREQUENCY), so a
-    stream-maintained store serves through bm25_from_postings
-    unchanged and a periodic compact_posting_lists folds the deltas
-    back to the base. The bucket modulus follows the _maintain_store
+    delta, then its one-row totals delta and the commit marker LAST
+    (_maintain_doc_store — the SAME spec as the batch builder,
+    layout._FREQUENCY), so a stream-maintained store serves through
+    bm25_from_postings unchanged and a periodic compact_posting_lists
+    folds the deltas back to the base. The bucket modulus follows the _maintain_store
     meta protocol (default POSTINGS_TOK_BUCKETS).
 
     ``allow_revisions=False`` (default) keeps the append-only-unique-
@@ -1277,7 +1277,7 @@ def maintain_positional_postings(
     streaming twin of sources/layout.write_positional_postings /
     revise_positional_postings: each micro-batch appends its
     (doc, term, positions) rows under ``batch_id=N/tok_bucket=...``
-    plus the commit-ledger row, LAST (_maintain_doc_store); the
+    plus the commit marker, LAST (_maintain_doc_store); the
     bucket modulus follows the _maintain_store meta protocol.
     ``allow_revisions=True`` tombstones every re-emitted doc_id — a
     changed document CHANGES ITS POSITIONS, which under append-only
@@ -1301,7 +1301,7 @@ def maintain_shingle_index(
     """Incremental shingle-index maintenance — the streaming twin of
     sources/layout.write_shingle_index / revise_shingle_docs: each
     micro-batch of ingested documents appends its (doc_id, m, h)
-    rows under ``batch_id=N`` plus the commit-ledger row, LAST
+    rows under ``batch_id=N`` plus the commit marker, LAST
     (_maintain_doc_store). This is the continuous-ingest dedup loop
     closed: a batch is screened via near_dups_from_index, the
     survivors are ingested, and THIS stream adds their shingles to
@@ -1324,7 +1324,7 @@ def maintain_minhash_index(
     """Incremental MinHash-band-index maintenance — the streaming
     twin of sources/layout.write_minhash_index / revise_minhash_docs:
     each micro-batch appends its 4 (band, sig) rows per doc under
-    ``batch_id=N`` plus the commit-ledger row, LAST
+    ``batch_id=N`` plus the commit marker, LAST
     (_maintain_doc_store). ``allow_revisions=True`` tombstones
     re-emitted doc_ids."""
     return _maintain_doc_store(
@@ -1336,15 +1336,14 @@ def maintain_minhash_index(
 def read_term_stats(spark: SparkSession, out_dir: str):
     """Fold the COMMITTED term-stats deltas into current statistics:
     returns (term_stats_df with one row per term, totals row with
-    n_docs/n_tokens). corpus_totals is the store's commit table (every
-    writer's LAST write), so its rows are the committed batches and
-    the terms delta of a batch at or above their high-water mark is a
-    crashed write's partial, never read. The commit rows — one per
-    batch since the last compaction — are read in the store's one
-    committed-state collect (layout._committed_state; a store without
-    them raises the shared missing-commit error), which yields both
-    the mark and the summed totals, returned as a 1-row literal
-    frame; the terms fold is one additive groupBy over
+    n_docs/n_tokens). Every writer marks its batch LAST, so the
+    deltas of a batch at or above the high-water mark listed from the
+    ``batches`` markers are a crashed write's partials, never read.
+    The mark and the corpus_totals rows below it — one per batch
+    since the last compaction — come from the store's committed-state
+    read (layout._committed_state; a store without markers raises the
+    shared missing-commit error), which sums them into a 1-row
+    literal frame; the terms fold is one additive groupBy over
     vocabulary-sized deltas, read with the explicit schema (no
     inference job; empty-delta dirs fold as empty). Terms whose
     folded doc_freq reaches 0 (every containing document revised away
@@ -1352,7 +1351,7 @@ def read_term_stats(spark: SparkSession, out_dir: str):
     matching a rebuild. A compact_term_stats swap that died between
     its delete and its rename is finished by that committed-state
     read, before anything else is read."""
-    st = _committed_state(spark, out_dir, "corpus_totals")
+    st = _committed_state(spark, out_dir, totals="corpus_totals")
     terms = (
         spark.read.schema(_TERM_STATS_SCHEMA)
         .parquet(f"{out_dir}/term_stats")
@@ -1393,21 +1392,22 @@ def revise_term_stats(
     of an O(vocabulary) store; the posting-list store keeps a
     doclens ledger and needs no old text. `n_buckets` must match the
     store's modulus (maintain_term_stats default 64). The batch id is
-    the committed high-water mark of corpus_totals; the shared
-    offline prologue (layout._offline_begin) refuses a crashed
-    micro-batch's unclaimed terms delta at that id and FENCES the id
-    against the stream resuming its old checkpoint (run while the
-    stream is stopped); the corpus_totals row is the commit, LAST.
-    Returns the batch id used."""
+    the committed high-water mark, one listing of the commit markers
+    (no Spark job); the shared offline prologue
+    (layout._offline_begin) refuses a crashed micro-batch's unclaimed
+    terms or totals delta at that id and FENCES the id against the
+    stream resuming its old checkpoint (run while the stream is
+    stopped); the deltas follow, and the commit marker LAST. Returns
+    the batch id used."""
     from se_data_pipeline_spark.sources.layout import _offline_begin
 
-    next_b = _committed_state(spark, out_dir, "corpus_totals")["hw"]
+    next_b = _committed_state(spark, out_dir)["hw"]
     _offline_begin(
         spark,
         out_dir,
         f"revise_term_stats at {out_dir}",
         next_b,
-        [f"{out_dir}/term_stats"],
+        [f"{out_dir}/term_stats", f"{out_dir}/corpus_totals"],
     )
     new_t, new_tot = _term_stats_frames(new_docs, 1)
     old_t, old_tot = _term_stats_frames(old_docs, -1)
@@ -1426,7 +1426,8 @@ def revise_term_stats(
         F.sum("n_docs").cast("long").alias("n_docs"),
         F.sum("n_tokens").cast("long").alias("n_tokens"),
     )
-    _term_stats_deltas(out_dir, n_buckets, next_b, delta, totals)()
+    _term_stats_deltas(out_dir, n_buckets, next_b, delta, totals)
+    _mark_batch(spark, f"{out_dir}/batches", next_b)
     return next_b
 
 
@@ -1434,8 +1435,9 @@ def compact_term_stats(
     spark: SparkSession, out_dir: str, n_buckets: int = 64
 ) -> None:
     """Fold the committed term-stats deltas into a single
-    `batch_id=-1` base partition (totals likewise), bounding the
-    partition count that accrues one-per-micro-batch. Run ONLY while
+    `batch_id=-1` base partition (totals and the commit markers
+    likewise), bounding the partition count that accrues
+    one-per-micro-batch. Run ONLY while
     the stream is stopped: committed batches never replay (their ids
     live in the stream's checkpoint), so folding them into the base
     cannot double-count, and a restarted stream keeps appending fresh
@@ -1446,11 +1448,12 @@ def compact_term_stats(
 
     The WHOLE store directory is written to a temp sibling and
     swapped into place by ONE sources/layout.swap_compacted call, so
-    both tables change together and the offline fence (not copied)
-    goes with the swap; a crashed uncommitted delta is dropped, never
-    folded. The temp dir starts empty, so the static-vs-dynamic
-    partitionOverwriteMode hazard of an in-place overwrite is moot:
-    no stale delta partition can survive the write."""
+    both tables and the markers change together and the offline fence
+    (not copied) goes with the swap; a crashed uncommitted delta is
+    dropped, never folded. The temp dir starts empty, so the
+    static-vs-dynamic partitionOverwriteMode hazard of an in-place
+    overwrite is moot: no stale delta partition can survive the
+    write."""
     from se_data_pipeline_spark.sources.layout import swap_compacted
 
     terms, totals = read_term_stats(spark, out_dir)
@@ -1462,5 +1465,6 @@ def compact_term_stats(
         totals.withColumn("batch_id", F.lit(-1)).coalesce(1).write.mode(
             "overwrite"
         ).partitionBy("batch_id").parquet(f"{tmp}/corpus_totals")
+        _mark_batch(spark, f"{tmp}/batches", -1)
 
     swap_compacted(spark, out_dir, _write, "term-stats store")

@@ -857,16 +857,22 @@ def test_positional_meta_absent_when_rows_write_fails(
         L.phrase_from_postings(spark, out, ("alpha", "beta"))
 
 
-def test_ivf_rebuild_n_docs_counts_only_its_partition(
+def test_ivf_rebuild_replaces_store_under_dynamic_overwrite(
     spark, sf_dir, tmp_path
 ):
-    """Under partitionOverwriteMode=dynamic a rebuild over a
-    stream-maintained IVF store leaves the maintainer's batch_id >= 0
-    cells in place; the ledger's n_docs must still count only the
-    batch_id = -1 rows the rebuild wrote."""
+    """A rebuild replaces the store whatever the session's
+    partitionOverwriteMode: under ``dynamic`` a plain overwrite would
+    keep a stream-maintained IVF store's batch_id >= 0 cells and their
+    commit markers, and the old vectors would still serve. After the
+    rebuild the high-water mark is 0, no cells dir holds a
+    batch_id >= 0 partition, and a streamed vector is not served."""
+    import glob
     import os
 
-    from se_data_pipeline_spark.sources.layout import write_ivf_index
+    from se_data_pipeline_spark.sources.layout import (
+        ivf_candidates,
+        write_ivf_index,
+    )
     from se_data_pipeline_spark.streaming.jobs import maintain_ivf_index
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
@@ -896,10 +902,27 @@ def test_ivf_rebuild_n_docs_counts_only_its_partition(
         .count()
     )
     assert rebuilt == a.filter(F.col("embedding").isNotNull()).count()
-    ledger = spark.read.parquet(f"{idx}/batches").filter(
-        F.col("batch_id") == -1
+    # the high-water mark is 0: the build's marker is the only one
+    assert [
+        d for d in os.listdir(f"{idx}/batches") if d.startswith("batch_id=")
+    ] == ["batch_id=-1"]
+    assert not [
+        d
+        for d in glob.glob(f"{idx}/cells/*/batch_id=*")
+        if d.rsplit("=", 1)[1] != "-1"
+    ]
+    odd = (
+        emb.filter(F.col("embedding").isNotNull())
+        .filter(F.col("vec_id") % 2 == 1)
+        .orderBy("vec_id")
+        .first()
     )
-    assert [r["n_docs"] for r in ledger.collect()] == [rebuilt]
+    n_cells = len(os.listdir(f"{idx}/cells"))
+    served = ivf_candidates(
+        spark, idx, list(odd["embedding"]), nprobe=n_cells, n=5
+    ).collect()
+    assert served
+    assert odd["vec_id"] not in {r["vec_id"] for r in served}
 
 
 def test_overlapped_writes_keep_callers_job_group(spark, tmp_path):

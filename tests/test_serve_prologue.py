@@ -34,31 +34,31 @@ def docs(spark):
     )
 
 
-def _serve_state(spark, store, terms, commit):
-    st = L._committed_state(spark, store, commit, ("meta",), terms)
+def _serve_state(spark, store, terms, totals=None):
+    st = L._committed_state(spark, store, ("meta",), terms, totals=totals)
     return st["n_buckets"], st["hw"], st["buckets"]
 
 
-def _old_triple(spark, store, terms, commit):
+def _old_triple(spark, store, terms):
     nb = spark.read.parquet(f"{store}/meta").collect()[0]["n_buckets"]
-    mx = spark.read.parquet(f"{store}/{commit}").agg(F.max("batch_id"))
-    hw = mx.collect()[0][0] + 1
+    marks = os.listdir(f"{store}/batches")
+    hw = max(int(d.split("=", 1)[1]) for d in marks) + 1
     return nb, hw, L._term_buckets(spark, sorted(set(terms)), nb)
 
 
 def test_fused_equals_triple_positional(spark, docs, tmp_path):
     store = str(tmp_path / "pos_store")
     L.write_positional_postings(docs, store)
-    assert _serve_state(spark, store, TERMS, "batches") == _old_triple(
-        spark, store, TERMS, "batches"
+    assert _serve_state(spark, store, TERMS) == _old_triple(
+        spark, store, TERMS
     )
     # after a revision the ledger high-water mark moves — the fused
     # read must see the new commit point, not a cached one
     L.revise_positional_postings(
         spark, docs.filter(F.col("doc_id") == 2), store
     )
-    got = _serve_state(spark, store, TERMS, "batches")
-    assert got == _old_triple(spark, store, TERMS, "batches")
+    got = _serve_state(spark, store, TERMS)
+    assert got == _old_triple(spark, store, TERMS)
     # the batch build writes at batch_id=-1; the revision claims 0,
     # so the committed high-water mark is 1
     assert got[1] == 1
@@ -68,7 +68,7 @@ def test_fused_equals_triple_frequency(spark, docs, tmp_path):
     store = str(tmp_path / "freq_store")
     L.write_posting_lists(docs, store)
     assert _serve_state(spark, store, TERMS, "totals") == _old_triple(
-        spark, store, TERMS, "totals"
+        spark, store, TERMS
     )
 
 
@@ -92,7 +92,7 @@ def test_fused_store_without_ledger_raises(spark, docs, tmp_path):
     shutil.rmtree(f"{store}/batches")
     before = _files(store)
     calls = [
-        lambda: _serve_state(spark, store, TERMS, "batches"),
+        lambda: _serve_state(spark, store, TERMS),
         lambda: L.phrase_from_postings(spark, store, ("the", "pipeline")),
         lambda: L.revise_positional_postings(
             spark, docs.filter(F.col("doc_id") == 2), store
@@ -107,7 +107,7 @@ def test_fused_store_without_ledger_raises(spark, docs, tmp_path):
 
 def test_fused_missing_meta_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no meta table"):
-        _serve_state(spark, str(tmp_path / "absent"), TERMS, "batches")
+        _serve_state(spark, str(tmp_path / "absent"), TERMS)
 
 
 def test_driver_pmod_matches_catalyst_on_negative_hashes(spark):

@@ -213,15 +213,15 @@ def test_serve_frame_costs_only_prologue_jobs(spark, stores):
             L.phrase_from_postings,
             pos,
             PHRASES[0],
-            "batches",
+            None,
         ),
     ]
-    for i, (serve, store, terms, commit) in enumerate(cases):
+    for i, (serve, store, terms, totals) in enumerate(cases):
         pro = _group_jobs(
             spark,
             f"scan-pro-{i}",
             lambda: L._committed_state(
-                spark, store, commit, ("meta",), list(terms)
+                spark, store, ("meta",), list(terms), totals=totals
             ),
         )
         assert len(pro) == 1, "the committed-state read is one job"
@@ -270,10 +270,10 @@ def test_uncommitted_partial_batch_is_invisible(
     # rows every query would match, were the partial batch visible
     text = " ".join(sum(BM25_Q + PHRASES, ()))
     edocs = _frame(spark, {1000 + i: text for i in range(5)})
-    hw = L._committed_state(spark, freq, "totals")["hw"]
+    hw = L._committed_state(spark, freq)["hw"]
     tf = L._posting_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(tf, ["batch_id", "tok_bucket"], f"{freq}/postings")
-    hw = L._committed_state(spark, pos, "batches")["hw"]
+    hw = L._committed_state(spark, pos)["hw"]
     rows = L._positional_frames(edocs, hw, N_BUCKETS)
     L._dyn_overwrite(rows, ["batch_id", "tok_bucket"], f"{pos}/postings")
     _serve_all(monkeypatch, spark, freq, pos, corpus)
@@ -321,7 +321,7 @@ def test_query_bucket_without_directory(monkeypatch, spark, stores):
         monkeypatch, _phrase, _duck_phrase, spark, pos, corpus, absent
     ) == {}
     # the empty frame costs no Spark job, neither built nor collected
-    st = L._committed_state(spark, pos, "batches", ("meta",), absent)
+    st = L._committed_state(spark, pos, ("meta",), absent)
     empty = []
     assert not _group_jobs(
         spark,

@@ -46,16 +46,27 @@ def _staggered_files(docs, src: str, n: int) -> None:
             os.utime(f, (t, t))
 
 
-def _committed_n_docs(spark, store: str) -> int:
-    """The committed document count — totals rows exist only for
-    committed batches (totals IS the commit point), so a plain sum
-    is itself a committed read."""
-    p = os.path.join(store, "totals")
+def _committed_hw(store: str) -> int:
+    """The committed high-water mark: one past the newest
+    ``batches/batch_id=N`` commit marker (every writer marks its batch
+    LAST), 0 before the first commit."""
+    p = os.path.join(store, "batches")
     if not os.path.isdir(p):
+        return 0
+    ids = [int(d.split("=", 1)[1]) for d in os.listdir(p)]
+    return max(ids, default=-1) + 1
+
+
+def _committed_n_docs(spark, store: str) -> int:
+    """The committed document count — the totals rows of the batches
+    below the committed high-water mark."""
+    hw = _committed_hw(store)
+    if hw == 0:
         return 0
     rows = (
         spark.read.schema("n_docs long, n_tokens long, batch_id int")
-        .parquet(p)
+        .parquet(os.path.join(store, "totals"))
+        .filter(F.col("batch_id") < hw)
         .agg(F.sum("n_docs").alias("n"))
         .collect()
     )
@@ -106,7 +117,7 @@ def test_bm25_serves_committed_prefixes_under_running_maintainer(
     observed: set[int] = set()
     try:
         while q.isActive:
-            if not os.path.isdir(os.path.join(store, "totals")):
+            if not os.path.isdir(os.path.join(store, "batches")):
                 _time.sleep(0.2)
                 continue
             n1 = _committed_n_docs(spark, store)
@@ -175,16 +186,21 @@ def test_phrase_serves_committed_prefixes_under_running_maintainer(
     phrase = ("table", "hash")
 
     def _ledger_n(store: str) -> int:
-        p = os.path.join(store, "batches")
-        if not os.path.isdir(p):
+        # the committed document count: distinct ids of the postings
+        # below the committed high-water mark
+        hw = _committed_hw(store)
+        if hw == 0:
             return 0
-        rows = (
-            spark.read.schema("n_docs long, batch_id int")
-            .parquet(p)
-            .agg(F.sum("n_docs").alias("n"))
-            .collect()
+        return (
+            spark.read.schema(
+                "doc_id bigint, tok string, batch_id int, tok_bucket bigint"
+            )
+            .parquet(os.path.join(store, "postings"))
+            .filter(F.col("batch_id") < hw)
+            .select("doc_id")
+            .distinct()
+            .count()
         )
-        return int(rows[0]["n"] or 0)
 
     expected: dict[int, list] = {}
     for p in range(1, _N_FILES + 1):
@@ -309,16 +325,7 @@ def test_ivf_probe_serves_committed_prefixes_under_running_maintainer(
         expected[p] = _probe(st)
 
     def _ledger_max(st: str) -> int:
-        p = os.path.join(st, "batches")
-        if not os.path.isdir(p):
-            return -1
-        rows = (
-            spark.read.schema("n_docs long, batch_id int")
-            .parquet(p)
-            .agg(F.max("batch_id").alias("b"))
-            .collect()
-        )
-        return int(rows[0]["b"] if rows[0]["b"] is not None else -1)
+        return _committed_hw(st) - 1
 
     src = str(tmp_path / "src")
     os.makedirs(src, exist_ok=True)

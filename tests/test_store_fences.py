@@ -396,6 +396,7 @@ def test_bq_and_term_stats_fences_claimed(spark, tmp_path):
         .partitionBy("batch_id", "bucket")
         .parquet(os.path.join(ts, "term_stats"))
     )
+    os.makedirs(os.path.join(ts, "batches", "batch_id=0"))
     b2 = revise_term_stats(
         spark, ts, old_docs=empty, new_docs=docs.filter("doc_id = 9")
     )
@@ -632,7 +633,7 @@ def _crash_family(name: str):
                     spark, o, ("alpha", "beta", "mu")
                 ).collect()
             ),
-            "totals",
+            "batches",
             "postings",
             None,
         )
@@ -658,7 +659,7 @@ def _crash_family(name: str):
             lambda spark, d, o: J.revise_term_stats(spark, o, d.limit(0), d),
             J.compact_term_stats,
             fold,
-            "corpus_totals",
+            "batches",
             "term_stats",
             None,
         )
@@ -1060,3 +1061,137 @@ def test_older_format_fence_refused_until_compaction(spark, tmp_path):
         ).collect()
     }
     assert served == {0, 1, 3, 4, 5}
+
+
+def test_commit_steps_start_no_spark_job(spark, tmp_path):
+    """A commit is one mkdirs and the high-water mark one listing of
+    the ``batches/batch_id=N`` markers: marking a batch committed and
+    a mark-only committed-state read start no Spark job, on a BQ store
+    and on a frequency store alike, and a BQ serve is its collect's
+    one job."""
+    from se_data_pipeline_spark.sources import layout as L
+
+    bq = str(tmp_path / "bq")
+    L.write_bq_index(
+        spark.createDataFrame(
+            [(i, [float(i) - 3.5, 1.0]) for i in range(8)],
+            "vec_id long, embedding array<float>",
+        ),
+        bq,
+    )
+    freq = str(tmp_path / "freq")
+    L.write_posting_lists(_tiny_docs(spark), freq, n_buckets=8)
+    got = {}
+    cases = [
+        ("mark", lambda: L._mark_batch(spark, f"{bq}/batches", 0), 0),
+        ("state-bq", lambda: got.update(bq=L._committed_state(spark, bq)), 0),
+        (
+            "state-freq",
+            lambda: got.update(freq=L._committed_state(spark, freq)),
+            0,
+        ),
+        (
+            "serve-bq",
+            lambda: got.update(rows=L.bq_candidates(spark, bq, 0).collect()),
+            1,
+        ),
+    ]
+    for name, fn, want in cases:
+        jobs = _group_jobs(spark, f"commit-{name}", fn)
+        assert len(jobs) == want, f"{name}: {len(jobs)} Spark jobs"
+    assert sorted(os.listdir(os.path.join(bq, "batches"))) == [
+        "batch_id=-1",
+        "batch_id=0",
+    ]
+    assert got["bq"]["hw"] == 1
+    assert got["freq"]["hw"] == 0
+    assert len(got["rows"]) == 8
+
+
+def test_older_format_stores(spark, tmp_path):
+    """A ledger store written by older code holds a parquet row in
+    each ``batches/batch_id=N`` dir; the listing reads only the names,
+    so it keeps serving the same rows. A frequency store written by
+    older code has its ``totals`` table but no ``batches`` markers: a
+    serve, a revision and a compaction raise the shared missing-commit
+    error, with the store's files unchanged."""
+    import shutil
+
+    from se_data_pipeline_spark.sources import layout as L
+
+    docs = spark.createDataFrame(
+        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    )
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 100)
+    shingle = str(tmp_path / "shingle")
+    L.write_shingle_index(docs, shingle)
+
+    def screen():
+        return sorted(
+            tuple(r)
+            for r in L.near_dups_from_index(spark, shingle, probe, 0.5).collect()
+        )
+
+    want = screen()
+    assert want
+    shutil.rmtree(os.path.join(shingle, "batches"))
+    spark.range(1).select(
+        F.lit(3).cast("long").alias("n_docs"), F.lit(-1).alias("batch_id")
+    ).write.partitionBy("batch_id").parquet(os.path.join(shingle, "batches"))
+    assert glob.glob(os.path.join(shingle, "batches", "batch_id=-1", "*.parquet"))
+    assert screen() == want
+
+    freq = str(tmp_path / "freq")
+    L.write_posting_lists(docs, freq, n_buckets=8)
+    shutil.rmtree(os.path.join(freq, "batches"))
+    assert os.path.isdir(os.path.join(freq, "totals"))
+    before = _files(freq)
+    for call in (
+        lambda: L.bm25_from_postings(spark, freq, ("alpha", "beta")),
+        lambda: L.revise_posting_lists(spark, docs.filter("doc_id = 0"), freq),
+        lambda: L.compact_posting_lists(spark, freq),
+    ):
+        with pytest.raises(ValueError, match="no 'batches' commit table"):
+            call()
+    assert _files(freq) == before
+
+
+def test_rebuild_drops_previous_tombstones(spark, tmp_path):
+    """A rebuild replaces the whole store, tombstones included: a
+    stream's tombstone at batch 0 left beside the rebuilt base would
+    become committed once a fresh-checkpoint stream commits its own
+    batch 0, and kill the rebuilt rows of that document."""
+    from se_data_pipeline_spark.sources import layout as L
+    from se_data_pipeline_spark.streaming import jobs as J
+
+    docs = spark.createDataFrame(
+        list(enumerate(_CRASH_TEXTS)), "doc_id bigint, text string"
+    )
+    probe = docs.withColumn("doc_id", F.col("doc_id") + 100)
+    out = str(tmp_path / "store")
+    L.write_shingle_index(docs, out)
+    want = sorted(
+        tuple(r) for r in L.near_dups_from_index(spark, out, probe).collect()
+    )
+    assert want
+
+    def stream(rows, name, revisions):
+        src = str(tmp_path / f"src_{name}")
+        spark.createDataFrame(rows, docs.schema).coalesce(1).write.parquet(src)
+        q = J.maintain_shingle_index(
+            spark.readStream.schema(docs.schema).parquet(src),
+            out,
+            str(tmp_path / f"chk_{name}"),
+            allow_revisions=revisions,
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    stream([(1, "a changed second document text here")], "old", True)
+    L.write_shingle_index(docs, out)
+    assert not os.path.exists(os.path.join(out, "tombstones"))
+    stream([(50, "omega psi chi phi upsilon tau sigma")], "new", False)
+    got = sorted(
+        tuple(r) for r in L.near_dups_from_index(spark, out, probe).collect()
+    )
+    assert got == want
