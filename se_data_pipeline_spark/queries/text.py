@@ -866,9 +866,11 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the candidate join shuffles tiny rows; the quadratic blowup of
     the naive shingle self-join never happens. This is the 100 TB
     front-end for ngram_jaccard_pairs' exact verification. The
-    signature stage appears on both self-join sides in the STATIC
-    plan, but AQE plans a ReusedExchange at runtime (verified on the
-    executed plan), so the Python kernel physically runs once; for a
+    signature kernel runs on BOTH self-join sides: in the executed
+    plan (sf0.1) AQE's ReusedExchange sits below MapInPandas and
+    reuses only the round-robin input, so every document is signed
+    twice. Running it once per row needs a banding shape without
+    the self-join (groupBy(band, sig) → doc-id lists → pairs); for a
     multi-query dedup campaign, materialize the band table once and
     share it.
 
@@ -1788,15 +1790,16 @@ def doc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to sub-document rewriting, the form LLM corpora need (Lee et al.
     2022; C4/MassiveText span dedup).
 
-    Scale shape (100 TB-safe, no pair blowup, ONE scan of the fact):
+    Scale shape (100 TB-safe, no pair blowup):
       1. chunking is row-local (sequence + slice + array_join HOFs,
          whole-stage codegen, zero Python);
-      2. the exploded occurrence frame is explicitly repartitioned on
-         the chunk's xxhash64 ONCE — the winner aggregate consumes
-         that exchange and the occurrence side of the join REUSES it
-         (ReusedExchange), so the scan+explode subtree is evaluated
-         once, not per join side. Only the 8-byte hash is the
-         shuffle/group key, never the chunk string;
+      2. the exploded occurrence frame is repartitioned on the
+         chunk's xxhash64. The scan+explode subtree still runs once
+         per join side: the winner side prunes the chunk text, so
+         its exchange differs from the occurrence side's and the
+         executed plan (sf0.1) has no ReusedExchange. Only the
+         8-byte hash is the shuffle/group key, never the chunk
+         string;
       3. the winner per chunk is min(struct(doc_id, cidx)) — partial
          map-side aggregation applies (never a window over a hot
          key); occurrences join the 1-row-per-chunk winner table
@@ -1816,7 +1819,7 @@ def doc_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     c = _span_chunk_frame(docs).repartition(
         "ck"
-    )  # shared by the winner agg AND the join
+    )  # the winner agg and the join each shuffle their own copy
     winners = c.groupBy("ck").agg(
         F.min(F.struct("doc_id", "cidx")).alias("w")
     )
@@ -4152,8 +4155,9 @@ def doc_source_semantic_dispersion(
     Scale: the hashed featurizer is the same one-Arrow-pass kernel
     as doc_hashed_embeddings; the distance join keys on
     (source, dim) — dims are a 64-bucket constant, so the source
-    vector side is tiny and broadcastable; one (doc, dim) aggregate
-    and one source rollup are the only data-sized shuffles."""
+    vector side is tiny and broadcastable; the (doc, dim) aggregate
+    (shuffled once per consumer, see below) and one source rollup
+    are the only data-sized shuffles."""
     from se_data_pipeline_spark.functions.text import token_hash_dims_udf
 
     docs = load_table(spark, sf_dir, "documents")
@@ -4170,14 +4174,14 @@ def doc_source_semantic_dispersion(
             F.explode("ds").alias("dim"),
         )
     )
-    # ONE (doc_id, dim) aggregate feeds every downstream view: the
-    # previous three direct consumers of `base` (doc_vec, src_tot,
-    # src_vec) each re-evaluated the scan + Arrow featurizer — six
-    # ArrowEvalPython nodes in the plan. Deriving the source rollups
-    # from doc_dim makes all consumers share ONE identical exchange,
-    # which Spark dedups via ReusedExchange: the UDF now runs once.
-    # Same values: c/n ≡ the old per-row count ratios, Σc ≡ the old
-    # per-source row counts.
+    # ONE (doc_id, dim) aggregate feeds every downstream view
+    # (doc_vec, src_tot, src_vec). Their (doc_id, dim) exchanges are
+    # NOT reused: the consumers prune columns (`n`) and push filters
+    # (isnotnull(dim)) into them differently, so the executed plan
+    # (sf0.1) has three scans, each with two ArrowEvalPython nodes
+    # (the explode's non-empty filter and the projection): the
+    # featurizer runs six times per document.
+    # c/n is the per-doc dim share, Σc the per-source token count.
     doc_dim = base.groupBy("doc_id", "dim").agg(
         F.any_value(F.col("source")).alias("source"),
         F.count(F.lit(1)).alias("c"),

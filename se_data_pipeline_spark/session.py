@@ -11,6 +11,12 @@ entry point (tests, bench, driver harness) gets the same tuned session:
   toPandas, createDataFrame).
 - Session timezone pinned to UTC so timestamp semantics are stable and
   oracle-comparable (parquet timestamps are naive/UTC).
+- Python workers fork from the engine's worker daemon
+  (``_worker_daemon``): stock pyspark workers re-read
+  ``pyspark.zip``'s whole central directory, once per zip importer,
+  after the cache invalidation at the start of every task (about
+  0.2 s of CPU); the engine daemon's importers re-read an archive only
+  when it changed.
 """
 
 from __future__ import annotations
@@ -67,7 +73,10 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (all cores if
     unset). On a real cluster, pass ``master=None`` and submit with
-    spark-submit — every config here is cluster-safe.
+    spark-submit — every config here is cluster-safe, provided the
+    engine is importable on the executors when their worker daemon
+    starts (installed, or on ``spark.executorEnv.PYTHONPATH``; files
+    shipped with ``--py-files`` arrive only per task).
 
     ``streaming=True`` applies STREAMING_STATE_CONF — the RocksDB
     state-store + changelog-checkpointing profile that the stateful
@@ -77,9 +86,14 @@ def get_spark(
     ``extra_conf=STREAMING_STATE_CONF``.
     """
     # Must run before the JVM launches: workers inherit PYTHONPATH,
+    # import the engine (its worker daemon first) from any driver cwd,
     # and transformWithStateInPandas imports google.protobuf in-worker.
-    from se_data_pipeline_spark.compat import ensure_protobuf
+    from se_data_pipeline_spark.compat import (
+        ensure_engine_importable,
+        ensure_protobuf,
+    )
 
+    ensure_engine_importable()
     ensure_protobuf()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
@@ -98,6 +112,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "se_data_pipeline_spark._worker_daemon")
         # Arrow batch cap: default 10k records/batch is ~14 GB for
         # 1.4 MB audio-segment rows (SURVEY §7.4 large-binary-rows).
         # 2048 keeps worst-case batches ~3 GB while costing nothing
